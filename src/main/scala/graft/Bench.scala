@@ -85,20 +85,6 @@ object Bench {
     (peak / (1024 * 1024), max / (1024 * 1024))
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Timed repetitions per query AFTER the untimed warm-up run. The
     * recorded per-query number is the MIN across reps: steady-state plan
     * cost is the min by definition — external host contention (another
@@ -270,7 +256,7 @@ object Bench {
     val Array(i, n) = shardSpec.split("/").map(_.toInt)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS",
       DEFAULT_REPS.toString).toInt
-    val spark = newSession(cpus)
+    val spark = graft.core.GraftSession.local(cpus.toInt)
     warmup(spark, sfDir)
     val loadStart = loadAvg()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
@@ -384,7 +370,7 @@ object Bench {
     if (nShards <= 1) {
       val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS",
         DEFAULT_REPS.toString).toInt
-      val spark = newSession(cpus)
+      val spark = graft.core.GraftSession.local(cpus.toInt)
       warmup(spark, sfDir)
       val loadStart = loadAvg()
       val selected = SparkEntry.queries.toSeq.sortBy(_._1)

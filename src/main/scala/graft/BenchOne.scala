@@ -1,8 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time a single catalog query (N timed runs after one warm-up),
-  * mirroring Bench's session config exactly, so per-query optimization work
+  * on the session factory Bench and Verify use, so per-query optimization work
   * measures what the driver's bench will see.
   *
   * Usage: runMain graft.BenchOne <queryName> [sfDir] [runs]
@@ -13,16 +12,7 @@ object BenchOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(cpus.toInt)
     val fn = SparkEntry.queries(name)
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
       println(fn(spark, sfDir).queryExecution.executedPlan.toString)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -25,26 +24,12 @@ import java.nio.file.{Files, Paths}
   *    instead of an empty record.
   */
 object Verify {
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Run this JVM's share of the queries (every `idx % n == i`-th of the
     * sorted list, Bench.shardOf) into `outDir`. */
   private def runShard(sfDir: String, outDir: String, cpus: String,
                        i: Int, n: Int,
                        only: Option[Set[String]]): Unit = {
-    val spark = newSession(cpus)
+    val spark = graft.core.GraftSession.local(cpus.toInt)
     SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
       .collect { case ((name, fn), idx) if Bench.shardOf(idx, n) == i => (name, fn) }
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -237,41 +237,44 @@ object Runner {
       val path = s"$outDir/$name"
       val checkpoint = s"$outDir/_checkpoints/$name"
       val resolved = streamReg.resolve(name)
-      val q = defs(name).map(_.writeMode).getOrElse(WriteMode.Overwrite) match {
-        case WriteMode.Upsert(keys, seqCol, tie) =>
-          // §2.10 streaming apply_changes as a sink: update-mode batches
-          // carry the changed keys' latest rows; each micro-batch MERGEs
-          // into the table (foreachBatch = the OSS seam where DLT calls
-          // Delta MERGE, zetaflex-pipeline.py:138–151). Replay-safe: the
-          // merge is idempotent, so at-least-once foreachBatch delivery
-          // still converges to exactly the batch apply_changes result.
-          val parts = defs(name).map(_.partitionCols).getOrElse(Nil)
-          resolved.writeStream
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              if (parts.nonEmpty)
-                ManifestStore.upsert(path, keys, seqCol, tie, parts)(batch)
-              else upsertParquet(path, keys, seqCol, tie)(batch)
-            }
-            .trigger(Trigger.AvailableNow())
-            .start()
-        case _ =>
-          // parquet file sink: append-only with an exactly-once sink log
-          resolved.writeStream
-            .format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .trigger(Trigger.AvailableNow())
-            .start()
+      if (!resolved.isStreaming) {
+        // a boundary over static sources only has no stream to start
+        // (writeStream would throw WRITE_STREAM_NOT_ALLOWED): materialize
+        // it like runBatch does, shadowing a stateful table for its
+        // streaming consumers too
+        if (writeTable(resolved, defs(name), path))
+          streamReg.source(name, shadowLoader(spark, defs(name), path, resolved.schema))
+      } else {
+        val q = defs(name).map(_.writeMode).getOrElse(WriteMode.Overwrite) match {
+          case WriteMode.Upsert(keys, seqCol, tie) =>
+            // §2.10 streaming apply_changes as a sink: update-mode batches
+            // carry the changed keys' latest rows; each micro-batch MERGEs
+            // into the table (foreachBatch = the OSS seam where DLT calls
+            // Delta MERGE, zetaflex-pipeline.py:138–151). Replay-safe: the
+            // merge is idempotent, so at-least-once foreachBatch delivery
+            // still converges to exactly the batch apply_changes result.
+            val parts = defs(name).map(_.partitionCols).getOrElse(Nil)
+            resolved.writeStream
+              .outputMode("update")
+              .option("checkpointLocation", checkpoint)
+              .foreachBatch { (batch: DataFrame, _: Long) =>
+                if (parts.nonEmpty)
+                  ManifestStore.upsert(path, keys, seqCol, tie, parts)(batch)
+                else upsertParquet(path, keys, seqCol, tie)(batch)
+              }
+              .trigger(Trigger.AvailableNow())
+              .start()
+          case _ =>
+            // parquet file sink: append-only with an exactly-once sink log
+            resolved.writeStream
+              .format("parquet")
+              .option("path", path)
+              .option("checkpointLocation", checkpoint)
+              .trigger(Trigger.AvailableNow())
+              .start()
+        }
+        q.awaitTermination()
       }
-      q.awaitTermination()
-      // opt-in measurement probe (guide §1: attribute before optimizing):
-      // per-micro-batch duration breakdown on stderr, never in query paths
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROBE"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream-probe] $name batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durations=${p.durationMs}"))
       // the boundary's PLAN schema, for the same reason as runBatch:
       // consumers must not see directory-inference re-typing
       name -> (path, resolved.schema)

@@ -31,8 +31,7 @@ object CatalogQueries {
   private def freshCatalog(s: SparkSession, tag: String): String = {
     val cat = s"graftcat_${tag}_" +
       java.util.UUID.randomUUID().toString.take(8)
-    val root = java.nio.file.Files
-      .createTempDirectory(s"graft_cat_${tag}_").toString
+    val root = graft.core.ScratchDirs.create(s"cat_${tag}_")
     s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     s.conf.set(s"spark.sql.catalog.$cat.root", root)
     s.sql(s"CREATE NAMESPACE $cat.lab")
@@ -278,12 +277,8 @@ object CatalogQueries {
         val cat = freshCatalog(s, "sw")
         s.sql(s"CREATE TABLE $cat.lab.ev (event_id BIGINT, " +
           "event_type STRING, d DATE, value DOUBLE)")
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val ck = java.nio.file.Files
-          .createTempDirectory("graft_q310_ck_").toString
-        val q = graft.tables.Tables.normalize("events",
-            s.readStream.schema(schema)
-              .option("pathGlobFilter", "events.parquet").parquet(d))
+        val ck = graft.core.ScratchDirs.create("q310_ck_")
+        val q = StreamRig.eventsFeed(s, d)()
           .select(col("event_id"), col("event_type"),
             to_date(col("ts")).as("d"), col("value"))
           .writeStream

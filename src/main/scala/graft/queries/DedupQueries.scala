@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import QH._
@@ -13,7 +12,7 @@ import QH._
 object DedupQueries {
 
   /** q105's per-JVM staging cache, keyed by sfDir (see the in-body
-    * comment; same device as StreamingQueries.stagedOnce). */
+    * comment; same device as StreamRig.stageSlices). */
   private val q105Stage =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -473,10 +472,10 @@ object DedupQueries {
         // test-rig scaffolding (slice the corpus into a replayable
         // feed), not the operator under test — re-writing it per timed
         // rep is the exact measurement pollution the r12 round removed
-        // from q104 (StreamingQueries.stagedOnce); Verify runs each
+        // from q104 (StreamRig.stageSlices); Verify runs each
         // query once, so correctness runs see no change
         val staged = q105Stage.computeIfAbsent(d, _ => {
-          val sd = Files.createTempDirectory("graft_q105_src_").toString
+          val sd = graft.core.ScratchDirs.create("q105_src_")
           incr.write.mode("overwrite").parquet(sd)
           sd
         })
@@ -531,7 +530,7 @@ object DedupQueries {
         reg.register(graft.graph.TableDef("incr_neardups",
           Seq("incr_band_matches"),
           { case Seq(m) => m.distinct() }, mode = graft.graph.Mode.Full))
-        val out = Files.createTempDirectory("graft_q105_").toString
+        val out = graft.core.ScratchDirs.create("q105_")
         graft.graph.Runner.runStreamingThenFull(s, reg,
           Map("incr_feed" -> (() =>
             s.readStream.schema(schema).parquet(staged))),

@@ -27,8 +27,7 @@ object FormatQueries {
     // formatting, which the decimal-sum hash compare proves.
     Q("q248_csv_quarantine",
       (s, d) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_q248_").toString
+        val out = graft.core.ScratchDirs.create("q248_")
         t(s, d, "events")
           .select(concat_ws(",",
             col("event_id"), col("event_type"),
@@ -69,8 +68,7 @@ object FormatQueries {
     // entity encode/decode, pinned by the length sum.
     Q("q249_xml_ingest",
       (s, d) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_q249_").toString
+        val out = graft.core.ScratchDirs.create("q249_")
         t(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
             col("source"), col("n_chars").cast("long").as("n_chars"))
@@ -100,8 +98,7 @@ object FormatQueries {
     // encoding detail, never a semantics change.
     Q("q250_orc_roundtrip",
       (s, d) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_q250_").toString
+        val out = graft.core.ScratchDirs.create("q250_")
         t(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"),
             col("l_quantity"), col("l_extendedprice"))
@@ -136,8 +133,7 @@ object FormatQueries {
     // zone hits before any table format exists.)
     Q("q252_schema_evolution",
       (s, d) => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_q252_").toString
+        val out = graft.core.ScratchDirs.create("q252_")
         val ev = t(s, d, "events")
           .select(col("event_id"), col("event_type"), col("value"),
             to_date(col("ts")).as("d_"))

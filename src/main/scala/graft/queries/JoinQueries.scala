@@ -479,8 +479,7 @@ object JoinQueries {
     Q("q267_dynamic_partition_pruning",
       (s, d) => {
         val dir = dppStaged.computeIfAbsent(d, _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft_q267_").toString
+          val out = graft.core.ScratchDirs.create("q267_")
           t(s, d, "lineitem")
             .select(col("l_orderkey"), col("l_extendedprice"),
               col("l_discount"),
@@ -517,7 +516,7 @@ object JoinQueries {
   )
 
   /** q267's one-time partitioned layout, per (sfDir) and JVM — same
-    * rationale as StreamingQueries.stagedOnce: the layout is rig, the
+    * rationale as StreamRig.stageSlices: the layout is rig, the
     * pruned join is the operator under test. */
   private val dppStaged =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -28,7 +28,7 @@ import QH._
 object MultimodalQueries {
 
   /** q240's per-JVM staging cache, keyed by sfDir (same device as
-    * StreamingQueries.stagedOnce / DedupQueries.q105Stage). */
+    * StreamRig.stageSlices / DedupQueries.q105Stage). */
   private val q240Stage =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -1221,10 +1221,9 @@ object MultimodalQueries {
         // into a replayable feed), not the operator under test, so the
         // bench's warm-up stages it and timed reps measure the streaming
         // plan, not a repeated parquet dump (the q104/q105 rule —
-        // StreamingQueries.stagedOnce). Verify runs each query once.
+        // StreamRig.stageSlices). Verify runs each query once.
         val staged = q240Stage.computeIfAbsent(d, _ => {
-          val sd = java.nio.file.Files
-            .createTempDirectory("graft_q240_src_").toString
+          val sd = graft.core.ScratchDirs.create("q240_src_")
           incrDocs.write.mode("overwrite").parquet(sd)
           sd
         })
@@ -1262,8 +1261,7 @@ object MultimodalQueries {
         reg.register(graft.graph.TableDef("video_incr_dups",
           Seq("video_incr_matches"),
           { case Seq(m) => m.distinct() }, mode = graft.graph.Mode.Full))
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_q240_").toString
+        val out = graft.core.ScratchDirs.create("q240_")
         graft.graph.Runner.runStreamingThenFull(s, reg,
           Map("video_feed" -> (() =>
             s.readStream.schema(schema).parquet(staged))),

@@ -1797,8 +1797,7 @@ object ScaleOpsQueries {
     // pinned by ManifestStoreSpec (resurrection, clearing, GC).
     Q("q242_vector_delete_read",
       (s, d) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q242_").toString
+        val root = graft.core.ScratchDirs.create("q242_")
         val docs = t(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
             col("n_chars").cast("long").as("n_chars"), lit(1L).as("seq"))
@@ -1840,8 +1839,7 @@ object ScaleOpsQueries {
     // oracle pins, alongside the per-class row accounting.
     Q("q245_change_data_feed",
       (s, d) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q245_").toString
+        val root = graft.core.ScratchDirs.create("q245_")
         val docs = t(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
             col("n_chars").cast("long").as("n_chars"), lit(1L).as("seq"))
@@ -1889,8 +1887,7 @@ object ScaleOpsQueries {
     // double-counted delta class hash-fails.
     Q("q254_incremental_view_maintenance",
       (s, d) => {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q254_").toString
+        val root = graft.core.ScratchDirs.create("q254_")
         val M = graft.graph.ManifestStore
         val docs = t(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"), col("lang"),

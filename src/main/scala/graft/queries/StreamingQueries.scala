@@ -1,9 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.graph.{Mode, Registry, TableDef, WriteMode}
 import QH._
+import StreamRig._
 
 /** Streaming semantics under the hard gate (SURVEY.md §2.11): the query
   * actually RUNS a Structured Streaming job — events streamed through the
@@ -27,16 +27,6 @@ import QH._
   */
 object StreamingQueries {
 
-  /** Run `body` with the session's shuffle-partition count (= streaming
-    * state-store cardinality) temporarily set to `n`, restoring after.
-    * A catch-up AvailableNow job over a bounded backlog wants FEW state
-    * partitions — each one is a checkpointed state store with its own
-    * directory, commit and snapshot overhead, and at 32 partitions on a
-    * 100k-row backlog that machinery dominates the actual aggregation.
-    * This is the deployment knob the reference tunes per pipeline
-    * cluster; a long-lived production stream over a large keyspace would
-    * size it up, which changes no semantics (state is hash-partitioned
-    * by group key either way). */
   /** q298's two-stateful-operator plan, shared with StreamingSpec's
     * progress pin: watermarked click/purchase feeds → stream×stream
     * inner range join → hourly purchase-time window aggregation. One
@@ -59,60 +49,33 @@ object StreamingQueries {
         col("total_value"))
   }
 
-  private def withStatePartitions[A](s: org.apache.spark.sql.SparkSession,
-                                     n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  /** q70's node, which q243 reruns on the RocksDB provider: events
+    * aggregated per closed event-hour window and event type. */
+  private val eventsHourly = TableDef("events_hourly", Seq("events_feed"), {
+    case Seq(ev) =>
+      ev.withWatermark("ts", "5 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), decSum(col("value")).as("total_value"))
+        .select(col("window.start").as("hour_ts"), col("event_type"),
+          col("n"), col("total_value"))
+  }, mode = Mode.Incremental)
 
-  /** Per-JVM staging cache. A staged source layout depends only on
-    * (tag, sfDir) — it is test-rig scaffolding (slice the events feed
-    * into replayable files), not the operator under test — so the
-    * bench's untimed warm-up stages it once and every timed rep reuses
-    * the directory. The timed region then measures the streaming plan
-    * (micro-batch execution, state store, watermark machinery), not a
-    * global-sort + partitioned-parquet write + mtime stamping repeated
-    * per rep (round-12's q104 was 2.3× inflated by exactly that).
-    * Verify runs each query once, so correctness runs see no change. */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private def stagedOnce(tag: String, d: String)(build: => String): String =
-    stagedCache.computeIfAbsent((tag, d), _ => build)
-
-  /** Stage the events feed as three TIME-RANGE parquet slices with
-    * explicitly stamped, strictly increasing mtimes — FileStreamSource
-    * replays in (mtime, path) order, so this makes `maxFilesPerTrigger
-    * = 1` deliver genuinely time-ordered micro-batches (the
-    * order-sensitive operators q229/q233 depend on it; same-ms writes
-    * would leave slice order unstable). Returns the staged dir. */
-  private def stageTimeSliced(s: org.apache.spark.sql.SparkSession,
-                              d: String, prefix: String): String =
-    stagedOnce(prefix, d) {
-    val staged = Files.createTempDirectory(prefix).toString
-    graft.tables.Tables.events(s, d)
-      .withColumn("batch_", least(lit(2), greatest(lit(0),
-        floor(datediff(to_date(col("ts")),
-          lit("2024-01-01").cast("date")) / 10))).cast("int"))
-      .repartition(1)
-      .write.mode("overwrite").partitionBy("batch_").parquet(staged)
-    for (b <- 0 to 2) {
-      val dir = java.nio.file.Paths.get(staged, s"batch_=$b")
-      if (java.nio.file.Files.isDirectory(dir)) {
-        val ls = java.nio.file.Files.list(dir)
-        try {
-          ls.iterator().forEachRemaining { p =>
-            if (p.toString.endsWith(".parquet"))
-              java.nio.file.Files.setLastModifiedTime(p,
-                java.nio.file.attribute.FileTime
-                  .fromMillis(1700000000000L + b * 60000L))
-          }
-        } finally ls.close()
-      }
-    }
-    staged
-  }
+  /** The oracle of q70 and q243: same node, same answer. */
+  private val hourlyOracle = """
+        WITH hourly AS (
+          SELECT CAST(DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
+              AS hour_ts,
+            event_type, COUNT(*) AS n,
+            CAST(CAST(SUM(CAST(value AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE)
+              AS total_value
+          FROM events GROUP BY 1, 2),
+        wm AS (
+          SELECT MAX(CAST(ts AS TIMESTAMP)) - INTERVAL 5 MINUTE AS w
+          FROM events)
+        SELECT hour_ts, event_type, n, total_value
+        FROM hourly, wm
+        WHERE hour_ts + INTERVAL 1 HOUR <= w
+        ORDER BY hour_ts, event_type"""
 
   /** ONE oracle for BOTH sessionizers — q87 (`session_window`) and q91
     * (`flatMapGroupsWithState`): the whole point of the twin gate is
@@ -154,46 +117,9 @@ object StreamingQueries {
 
   val qs: Seq[Q] = Seq(
     Q("q70_streaming_hourly",
-      (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("events_hourly", Seq("events_feed"), {
-          case Seq(ev) =>
-            ev.withWatermark("ts", "5 minutes")
-              .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-              .agg(count(lit(1)).as("n"),
-                decSum(col("value")).as("total_value"))
-              .select(col("window.start").as("hour_ts"), col("event_type"),
-                col("n"), col("total_value"))
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q70_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() => graft.tables.Tables.normalize("events",
-              s.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet") // file source needs a dir
-                .parquet(d)))),
-            out)
-        }
-        s.read.parquet(s"$out/events_hourly")
-          .orderBy("hour_ts", "event_type")
-      },
-      Some("""
-        WITH hourly AS (
-          SELECT CAST(DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
-              AS hour_ts,
-            event_type, COUNT(*) AS n,
-            CAST(CAST(SUM(CAST(value AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE)
-              AS total_value
-          FROM events GROUP BY 1, 2),
-        wm AS (
-          SELECT MAX(CAST(ts AS TIMESTAMP)) - INTERVAL 5 MINUTE AS w
-          FROM events)
-        SELECT hour_ts, event_type, n, total_value
-        FROM hourly, wm
-        WHERE hour_ts + INTERVAL 1 HOUR <= w
-        ORDER BY hour_ts, event_type""")),
+      (s, d) => runOverEvents(s, d, eventsHourly, eventsFeed(s, d))
+        .orderBy("hour_ts", "event_type"),
+      Some(hourlyOracle)),
 
     // ROCKSDB STATE STORE — q70's stateful aggregation with its state
     // moved OFF the JVM heap onto Spark's RocksDB provider (the ships-
@@ -213,56 +139,9 @@ object StreamingQueries {
     // tooling) — which is why it is a deploy-time decision, not a
     // runtime toggle.
     Q("q243_rocksdb_state_hourly",
-      (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("events_hourly_rocks", Seq("events_feed"), {
-          case Seq(ev) =>
-            ev.withWatermark("ts", "5 minutes")
-              .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-              .agg(count(lit(1)).as("n"),
-                decSum(col("value")).as("total_value"))
-              .select(col("window.start").as("hour_ts"), col("event_type"),
-                col("n"), col("total_value"))
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q243_").toString
-        val PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(PROVIDER_KEY)
-        s.conf.set(PROVIDER_KEY,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try
-          withStatePartitions(s, 4) {
-            graft.graph.Runner.runStreamingThenFull(s, reg,
-              Map("events_feed" -> (() => graft.tables.Tables.normalize(
-                "events",
-                s.readStream.schema(schema)
-                  .option("pathGlobFilter", "events.parquet")
-                  .parquet(d)))),
-              out)
-          }
-        finally prevProvider match {
-          case Some(v) => s.conf.set(PROVIDER_KEY, v)
-          case None => s.conf.unset(PROVIDER_KEY)
-        }
-        s.read.parquet(s"$out/events_hourly_rocks")
-          .orderBy("hour_ts", "event_type")
-      },
-      Some("""
-        WITH hourly AS (
-          SELECT CAST(DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
-              AS hour_ts,
-            event_type, COUNT(*) AS n,
-            CAST(CAST(SUM(CAST(value AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE)
-              AS total_value
-          FROM events GROUP BY 1, 2),
-        wm AS (
-          SELECT MAX(CAST(ts AS TIMESTAMP)) - INTERVAL 5 MINUTE AS w
-          FROM events)
-        SELECT hour_ts, event_type, n, total_value
-        FROM hourly, wm
-        WHERE hour_ts + INTERVAL 1 HOUR <= w
-        ORDER BY hour_ts, event_type""")),
+      (s, d) => runOverEvents(s, d, eventsHourly, eventsFeed(s, d),
+        rocksDb = true).orderBy("hour_ts", "event_type"),
+      Some(hourlyOracle)),
 
     // S1 JSON landing-zone ingest under the hard gate: the events feed
     // is staged as hive-partitioned JSON (the bronze landing layout,
@@ -274,7 +153,7 @@ object StreamingQueries {
     // codec at full precision, which the bit-exact compare verifies.
     Q("q74_json_ingest",
       (s, d) => {
-        val out = Files.createTempDirectory("graft_q74_").toString
+        val out = graft.core.ScratchDirs.create("q74_")
         graft.tables.Tables.events(s, d)
           .withColumn("date_", to_date(col("ts")))
           .write.mode("overwrite").partitionBy("date_").json(out)
@@ -305,7 +184,6 @@ object StreamingQueries {
     // one checkpointed AvailableNow query by the graph Runner.
     Q("q76_streaming_union",
       (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
         val reg = new Registry(s)
         reg.source("bids_feed", () =>
           graft.tables.Tables.events(s, d)
@@ -328,19 +206,10 @@ object StreamingQueries {
               .select(col("window.start").as("hour_ts"), col("side"),
                 col("n"), col("total_value"))
         }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q76_").toString
-        def feed(tp: String) = () => graft.tables.Tables.normalize("events",
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(d))
-          .filter(col("event_type") === tp)
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("bids_feed" -> feed("click"), "asks_feed" -> feed("view")),
-            out)
-        }
-        s.read.parquet(s"$out/agg_orderbook_union_hourly")
-          .orderBy("hour_ts", "side")
+        val events = eventsFeed(s, d)
+        def feed(tp: String) = () => events().filter(col("event_type") === tp)
+        run(s, reg, Map("bids_feed" -> feed("click"), "asks_feed" -> feed("view")),
+          "agg_orderbook_union_hourly").orderBy("hour_ts", "side")
       },
       Some("""
         WITH sided AS (
@@ -378,11 +247,7 @@ object StreamingQueries {
     // (max event time − 5 min) are emitted in append mode — the oracle
     // applies the same cutoff, verifying the watermark semantics.
     Q("q87_streaming_sessions",
-      (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("user_sessions", Seq("events_feed"), {
+      (s, d) => runOverEvents(s, d, TableDef("user_sessions", Seq("events_feed"), {
           case Seq(ev) =>
             ev.withWatermark("ts", "5 minutes")
               .groupBy(col("user_id"),
@@ -393,19 +258,8 @@ object StreamingQueries {
                 col("session_window.start").as("session_start"),
                 col("session_window.end").as("session_end"),
                 col("n_events"), col("total_value"))
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q87_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() => graft.tables.Tables.normalize("events",
-              s.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(d)))),
-            out)
-        }
-        s.read.parquet(s"$out/user_sessions")
-          .orderBy("user_id", "session_start")
-      },
+        }, mode = Mode.Incremental), eventsFeed(s, d))
+        .orderBy("user_id", "session_start"),
       Some(sessionOracle)),
 
     // §2.10 streaming CDC upsert under the hard gate (zetaflex-pipeline
@@ -422,43 +276,22 @@ object StreamingQueries {
     Q("q88_streaming_apply_changes",
       (s, d) => {
         val cols = Seq("user_id", "event_type", "event_id", "ts", "value")
-        val staged = stagedOnce("graft_q88_src_", d) {
-          val dir = Files.createTempDirectory("graft_q88_src_").toString
-          // exactly 2 staged files (hash on event_id, so every upsert key
-          // spans batches) — micro-batch count is bounded and deterministic,
-          // not a function of the corpus's date range. Two batches are the
-          // MINIMUM that makes the upserts genuinely cross a batch
-          // boundary, and each extra batch costs a full O(table)
-          // foreachBatch MERGE rewrite (r16 fixed-cost diet; the merge
-          // result is batch-count-invariant — max-(ts,event_id) per key).
-          graft.tables.Tables.events(s, d)
-            .withColumn("batch_", pmod(col("event_id"), lit(2)).cast("int"))
-            .repartition(2, col("batch_"))
-            .write.mode("overwrite").partitionBy("batch_").parquet(dir)
-          dir
-        }
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () =>
-          graft.tables.Tables.events(s, d))
-        reg.register(TableDef("latest_events", Seq("events_feed"), {
+        // exactly 2 staged files (hash on event_id, so every upsert key
+        // spans batches) — micro-batch count is bounded and deterministic,
+        // not a function of the corpus's date range. Two batches are the
+        // MINIMUM that makes the upserts genuinely cross a batch
+        // boundary, and each extra batch costs a full O(table)
+        // foreachBatch MERGE rewrite (r16 fixed-cost diet; the merge
+        // result is batch-count-invariant — max-(ts,event_id) per key).
+        val staged = stageSlices(s, d, "q88", 2)(pmod(col("event_id"), lit(2)))
+        runOverEvents(s, d, TableDef("latest_events", Seq("events_feed"), {
           case Seq(ev) =>
             graft.streaming.StreamingOps.applyChangesStream(
               Seq("user_id", "event_type"), col("ts"), Seq(col("event_id")))(
               ev.select(cols.map(col): _*))
         }, mode = Mode.Incremental,
           writeMode = WriteMode.Upsert(Seq("user_id", "event_type"), "ts",
-            Seq("event_id"))))
-        val out = Files.createTempDirectory("graft_q88_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() =>
-              s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(staged))),
-            out)
-        }
-        s.read.parquet(s"$out/latest_events")
+            Seq("event_id"))), slicesFeed(s, staged))
           .select(cols.map(col): _*)
           .orderBy("user_id", "event_type")
       },
@@ -469,16 +302,6 @@ object StreamingQueries {
           ORDER BY ts DESC, event_id DESC) = 1
         ORDER BY user_id, event_type""")),
 
-    // The CUSTOM-STATE sessionizer under the hard gate — q87's twin
-    // through `flatMapGroupsWithState` instead of the declarative
-    // `session_window` (StreamingOps.statefulSessions: interval-merging
-    // per-key state, event-time timeouts, watermark eviction). Running
-    // BOTH through the same oracle pins that the hand-rolled state
-    // machine and Spark's native session operator implement identical
-    // semantics on real data — the seam a user needs the moment a
-    // session payload outgrows count/sum (capped sessions, per-session
-    // sketches). Session sums accumulate as exact decimals in the state
-    // store, so the result is bit-stable under any micro-batch order.
     // STREAM×STREAM join under the hard gate — the one §2.11 join family
     // the reference never exercises (its streaming joins are all
     // stream-static dims, J1/J2) but any real-time engine needs:
@@ -510,37 +333,13 @@ object StreamingQueries {
     Q("q97_stream_stream_join",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val staged = stagedOnce("graft_q97_src_", d) {
-          val sd = Files.createTempDirectory("graft_q97_src_").toString
-          // staging scaffolding (not the operator): ntile's global sort is
-          // test-rig-only
-          graft.tables.Tables.events(s, d)
-            .withColumn("batch_",
-              when(col("event_type") === "purchase", 2)
-                .otherwise(
-                  ntile(2).over(Window.orderBy(col("ts"), col("event_id"))) - 1))
-            .repartition(3, col("batch_"))
-            .write.mode("overwrite").partitionBy("batch_").parquet(sd)
-          // FileStreamSource replays oldest-modified first; same-ms writes
-          // would leave slice order unstable, so stamp mtimes explicitly
-          for (b <- 0 to 2) {
-            val dir = java.nio.file.Paths.get(sd, s"batch_=$b")
-            val t0 = java.nio.file.attribute.FileTime
-              .fromMillis(1700000000000L + b * 60000L)
-            val ls = Files.list(dir)
-            try ls.forEach(p => Files.setLastModifiedTime(p, t0))
-            finally ls.close()
-          }
-          sd
-        }
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("clicks_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "click"))
-        reg.source("purchases_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "purchase"))
+        // clicks in slices 0–1 by time, purchases all in slice 2 (staging
+        // scaffolding, not the operator: ntile's global sort is
+        // test-rig-only)
+        val staged = stageSlices(s, d, "q97", 3)(
+          when(col("event_type") === "purchase", 2).otherwise(
+            ntile(2).over(Window.orderBy(col("ts"), col("event_id"))) - 1))
+        val reg = clicksAndPurchases(s, d)
         reg.register(TableDef("click_purchases",
           Seq("clicks_feed", "purchases_feed"), {
             case Seq(c, p) =>
@@ -560,20 +359,7 @@ object StreamingQueries {
                   col("purchase_id"), col("purchase_ts"),
                   col("purchase_value"))
           }, mode = Mode.Incremental))
-        def feed(tp: String) = () =>
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-            .filter(col("event_type") === tp)
-            .drop("batch_")
-        val out = Files.createTempDirectory("graft_q97_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("clicks_feed" -> feed("click"),
-              "purchases_feed" -> feed("purchase")),
-            out)
-        }
-        s.read.parquet(s"$out/click_purchases")
+        run(s, reg, clickPurchaseFeeds(s, staged), "click_purchases")
           .orderBy("click_id", "purchase_id")
       },
       Some("""
@@ -615,49 +401,14 @@ object StreamingQueries {
         // windows through BOTH stateful operators, and the oracle's
         // global-watermark cutoff is slice-count-invariant. Three-slice
         // multi-batch click accumulation remains q97's gate.
-        val staged = stagedOnce("graft_q275_src_", d) {
-          val sd = Files.createTempDirectory("graft_q275_src_").toString
-          graft.tables.Tables.events(s, d)
-            .withColumn("batch_",
-              when(col("event_type") === "purchase", 1).otherwise(0))
-            .repartition(2, col("batch_"))
-            .write.mode("overwrite").partitionBy("batch_").parquet(sd)
-          for (b <- 0 to 1) {
-            val dir = java.nio.file.Paths.get(sd, s"batch_=$b")
-            val t0 = java.nio.file.attribute.FileTime
-              .fromMillis(1700000000000L + b * 60000L)
-            val ls = Files.list(dir)
-            try ls.forEach(p => Files.setLastModifiedTime(p, t0))
-            finally ls.close()
-          }
-          sd
-        }
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("clicks_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "click"))
-        reg.source("purchases_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "purchase"))
-        reg.register(TableDef("attributed_hourly",
-          Seq("clicks_feed", "purchases_feed"), {
-            case Seq(c, p) => chainedJoinAgg(c, p)
-          }, mode = Mode.Incremental))
-        def feed(tp: String) = () =>
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-            .filter(col("event_type") === tp)
-            .drop("batch_")
-        val out = Files.createTempDirectory("graft_q298_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("clicks_feed" -> feed("click"),
-              "purchases_feed" -> feed("purchase")),
-            out)
-        }
-        s.read.parquet(s"$out/attributed_hourly")
+        val staged = stageSlices(s, d, "q275", 2)(
+          when(col("event_type") === "purchase", 1).otherwise(0))
+        val reg = clicksAndPurchases(s, d)
+          .register(TableDef("attributed_hourly",
+            Seq("clicks_feed", "purchases_feed"), {
+              case Seq(c, p) => chainedJoinAgg(c, p)
+            }, mode = Mode.Incremental))
+        run(s, reg, clickPurchaseFeeds(s, staged), "attributed_hourly")
           .orderBy("hour_ts")
       },
       Some("""
@@ -711,31 +462,9 @@ object StreamingQueries {
         // advance for a full micro-batch of fixed cost. Cross-batch
         // handoff coverage is q97's; the oracle cutoff is global and
         // slice-count-invariant.
-        val staged = stagedOnce("graft_q104_src_", d) {
-          val sd = Files.createTempDirectory("graft_q104_src_").toString
-          graft.tables.Tables.events(s, d)
-            .withColumn("batch_",
-              ntile(2).over(Window.orderBy(col("ts"), col("event_id"))) - 1)
-            .repartition(2, col("batch_"))
-            .write.mode("overwrite").partitionBy("batch_").parquet(sd)
-          for (b <- 0 to 1) {
-            val dir = java.nio.file.Paths.get(sd, s"batch_=$b")
-            val t0 = java.nio.file.attribute.FileTime
-              .fromMillis(1700000000000L + b * 60000L)
-            val ls = Files.list(dir)
-            try ls.forEach(p => Files.setLastModifiedTime(p, t0))
-            finally ls.close()
-          }
-          sd
-        }
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("clicks_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "click"))
-        reg.source("purchases_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "purchase"))
+        val staged = stageSlices(s, d, "q104", 2)(
+          ntile(2).over(Window.orderBy(col("ts"), col("event_id"))) - 1)
+        val reg = clicksAndPurchases(s, d)
         reg.register(TableDef("click_outcomes",
           Seq("clicks_feed", "purchases_feed"), {
             case Seq(c, p) =>
@@ -756,20 +485,7 @@ object StreamingQueries {
                   col("purchase_id"), col("purchase_ts"),
                   col("purchase_value"))
           }, mode = Mode.Incremental))
-        def feed(tp: String) = () =>
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-            .filter(col("event_type") === tp)
-            .drop("batch_")
-        val out = Files.createTempDirectory("graft_q104_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("clicks_feed" -> feed("click"),
-              "purchases_feed" -> feed("purchase")),
-            out)
-        }
-        s.read.parquet(s"$out/click_outcomes")
+        run(s, reg, clickPurchaseFeeds(s, staged), "click_outcomes")
           .orderBy("click_id", "purchase_id")
       },
       Some("""
@@ -799,29 +515,26 @@ object StreamingQueries {
           AND c.click_ts + INTERVAL 30 MINUTE < wm.w
         ORDER BY click_id, purchase_id""")),
 
+    // The CUSTOM-STATE sessionizer under the hard gate — q87's twin
+    // through `flatMapGroupsWithState` instead of the declarative
+    // `session_window` (StreamingOps.statefulSessions: interval-merging
+    // per-key state, event-time timeouts, watermark eviction). Running
+    // BOTH through the same oracle pins that the hand-rolled state
+    // machine and Spark's native session operator implement identical
+    // semantics on real data — the seam a user needs the moment a
+    // session payload outgrows count/sum (capped sessions, per-session
+    // sketches). Session sums accumulate as exact decimals in the state
+    // store, so the result is bit-stable under any micro-batch order.
     Q("q91_stateful_sessions",
       (s, d) => {
         import s.implicits._
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("user_sessions_custom", Seq("events_feed"), {
+        runOverEvents(s, d, TableDef("user_sessions_custom", Seq("events_feed"), {
           case Seq(ev) =>
             graft.streaming.StreamingOps.statefulSessions(
               gapMinutes = 30, lateness = "5 minutes")(
               ev.select(col("user_id"), col("ts"), col("value"))
                 .as[graft.streaming.SessionEvent]).toDF()
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q91_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() => graft.tables.Tables.normalize("events",
-              s.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(d)))),
-            out)
-        }
-        s.read.parquet(s"$out/user_sessions_custom")
+        }, mode = Mode.Incremental), eventsFeed(s, d))
           .orderBy("user_id", "session_start")
       },
       Some(sessionOracle)),
@@ -842,36 +555,13 @@ object StreamingQueries {
     Q("q251_tws_sessions",
       (s, d) => {
         import s.implicits._
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("user_sessions_tws", Seq("events_feed"), {
+        runOverEvents(s, d, TableDef("user_sessions_tws", Seq("events_feed"), {
           case Seq(ev) =>
             graft.streaming.StreamingOps.sessionsViaTransformWithState(
               gapMinutes = 30, lateness = "5 minutes")(
               ev.select(col("user_id"), col("ts"), col("value"))
                 .as[graft.streaming.SessionEvent]).toDF()
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q251_").toString
-        val PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(PROVIDER_KEY)
-        s.conf.set(PROVIDER_KEY,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try
-          withStatePartitions(s, 4) {
-            graft.graph.Runner.runStreamingThenFull(s, reg,
-              Map("events_feed" -> (() => graft.tables.Tables.normalize(
-                "events",
-                s.readStream.schema(schema)
-                  .option("pathGlobFilter", "events.parquet")
-                  .parquet(d)))),
-              out)
-          }
-        finally prevProvider match {
-          case Some(v) => s.conf.set(PROVIDER_KEY, v)
-          case None => s.conf.unset(PROVIDER_KEY)
-        }
-        s.read.parquet(s"$out/user_sessions_tws")
+        }, mode = Mode.Incremental), eventsFeed(s, d), rocksDb = true)
           .orderBy("user_id", "session_start")
       },
       Some(sessionOracle)),
@@ -888,11 +578,8 @@ object StreamingQueries {
     // windows themselves. Oracle = the batch recomputation under the
     // same watermark cutoff (batch ≡ final-state).
     Q("q149_streaming_expectations",
-      (s, d) => {
-        val schema = s.read.parquet(s"$d/events.parquet").schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("events_quality_hourly", Seq("events_feed"), {
+      (s, d) =>
+        runOverEvents(s, d, TableDef("events_quality_hourly", Seq("events_feed"), {
           case Seq(ev) =>
             ev.withWatermark("ts", "5 minutes")
               .groupBy(window(col("ts"), "1 hour"))
@@ -907,18 +594,7 @@ object StreamingQueries {
               .select(col("window.start").as("hour_ts"), col("n"),
                 col("range_violations"), col("null_props_violations"),
                 col("null_user_violations"))
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q149_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() => graft.tables.Tables.normalize("events",
-              s.readStream.schema(schema)
-                .option("pathGlobFilter", "events.parquet")
-                .parquet(d)))),
-            out)
-        }
-        s.read.parquet(s"$out/events_quality_hourly").orderBy("hour_ts")
-      },
+        }, mode = Mode.Incremental), eventsFeed(s, d)).orderBy("hour_ts"),
       Some("""
         WITH hourly AS (
           SELECT CAST(DATE_TRUNC('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)
@@ -960,11 +636,12 @@ object StreamingQueries {
     // grouped; the recursive form matches a hand fold exactly).
     Q("q229_streaming_rate_limit",
       (s, d) => {
-        val staged = stageTimeSliced(s, d, "graft_q229_src_")
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("admission_log", Seq("events_feed"), {
+        // three TIME-RANGE slices (10-day bands from 2024-01-01, the
+        // last open-ended), so the order-sensitive operator sees
+        // genuinely time-ordered micro-batches
+        val staged = stageSlices(s, d, "q229", 3)(least(lit(2), greatest(lit(0),
+          floor(datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) / 10))))
+        runOverEvents(s, d, TableDef("admission_log", Seq("events_feed"), {
           case Seq(ev) =>
             import s.implicits._
             graft.streaming.StreamingOps.rateLimit(
@@ -972,15 +649,7 @@ object StreamingQueries {
               lateness = "5 minutes")(
               ev.select(col("user_id"), col("ts"), col("event_id"))
                 .as[graft.streaming.RateEvent]).toDF()
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q229_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() => s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(staged))),
-            out)
-        }
-        s.read.parquet(s"$out/admission_log")
+        }, mode = Mode.Incremental), slicesFeed(s, staged))
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_events"),
             sum(col("admitted").cast("long")).as("n_admitted"),
@@ -1036,26 +705,18 @@ object StreamingQueries {
     // the batch device runs, decimal-rounded on emission.
     Q("q233_streaming_pattern",
       (s, d) => {
-        val staged = stageTimeSliced(s, d, "graft_q233_src_")
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("events_feed", () => graft.tables.Tables.events(s, d))
-        reg.register(TableDef("vshape_matches", Seq("events_feed"), {
+        // q229's three time-range slices: the run automaton is
+        // order-sensitive too
+        val staged = stageSlices(s, d, "q233", 3)(least(lit(2), greatest(lit(0),
+          floor(datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) / 10))))
+        runOverEvents(s, d, TableDef("vshape_matches", Seq("events_feed"), {
           case Seq(ev) =>
             import s.implicits._
             graft.streaming.StreamingOps.streamingVshape(
               minDrop = 100, lateness = "5 minutes")(
               ev.select(col("user_id"), col("ts"), col("event_id"),
                 col("value")).as[graft.streaming.RateEvent2]).toDF()
-        }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q233_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("events_feed" -> (() => s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(staged))),
-            out)
-        }
-        s.read.parquet(s"$out/vshape_matches")
+        }, mode = Mode.Incremental), slicesFeed(s, staged))
           .select(col("user_id"),
             round(col("drop").cast(DEC), 6).as("drop"),
             round(col("rise").cast(DEC), 6).as("rise"))
@@ -1141,31 +802,9 @@ object StreamingQueries {
         // (~0.6–1 s measured: planning + state commits + sink commit).
         // Result is slice-count-invariant: the semi join emits exactly
         // the batch EXISTS rows, which is what the oracle replays.
-        val staged = stagedOnce("graft_q275_src_", d) {
-          val sd = Files.createTempDirectory("graft_q275_src_").toString
-          graft.tables.Tables.events(s, d)
-            .withColumn("batch_",
-              when(col("event_type") === "purchase", 1).otherwise(0))
-            .repartition(2, col("batch_"))
-            .write.mode("overwrite").partitionBy("batch_").parquet(sd)
-          for (b <- 0 to 1) {
-            val dir = java.nio.file.Paths.get(sd, s"batch_=$b")
-            val t0 = java.nio.file.attribute.FileTime
-              .fromMillis(1700000000000L + b * 60000L)
-            val ls = Files.list(dir)
-            try ls.forEach(p => Files.setLastModifiedTime(p, t0))
-            finally ls.close()
-          }
-          sd
-        }
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("clicks_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "click"))
-        reg.source("purchases_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "purchase"))
+        val staged = stageSlices(s, d, "q275", 2)(
+          when(col("event_type") === "purchase", 1).otherwise(0))
+        val reg = clicksAndPurchases(s, d)
         reg.register(TableDef("converted_clicks",
           Seq("clicks_feed", "purchases_feed"), {
             case Seq(c, p) =>
@@ -1181,20 +820,7 @@ object StreamingQueries {
                     expr("INTERVAL 30 MINUTES"),
                 "left_semi")
           }, mode = Mode.Incremental))
-        def feed(tp: String) = () =>
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-            .filter(col("event_type") === tp)
-            .drop("batch_")
-        val out = Files.createTempDirectory("graft_q275_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("clicks_feed" -> feed("click"),
-              "purchases_feed" -> feed("purchase")),
-            out)
-        }
-        s.read.parquet(s"$out/converted_clicks")
+        run(s, reg, clickPurchaseFeeds(s, staged), "converted_clicks")
           .orderBy("click_id")
       },
       Some("""
@@ -1224,34 +850,11 @@ object StreamingQueries {
     Q("q282_stream_full_outer",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        // two aligned slices — identical rig to q104 (shared staging
-        // tag, bodies must stay byte-equivalent); see q104 for the
-        // slice-count rationale
-        val staged = stagedOnce("graft_q104_src_", d) {
-          val sd = Files.createTempDirectory("graft_q104_src_").toString
-          graft.tables.Tables.events(s, d)
-            .withColumn("batch_",
-              ntile(2).over(Window.orderBy(col("ts"), col("event_id"))) - 1)
-            .repartition(2, col("batch_"))
-            .write.mode("overwrite").partitionBy("batch_").parquet(sd)
-          for (b <- 0 to 1) {
-            val dir = java.nio.file.Paths.get(sd, s"batch_=$b")
-            val t0 = java.nio.file.attribute.FileTime
-              .fromMillis(1700000000000L + b * 60000L)
-            val ls = Files.list(dir)
-            try ls.forEach(p => Files.setLastModifiedTime(p, t0))
-            finally ls.close()
-          }
-          sd
-        }
-        val schema = s.read.parquet(staged).schema
-        val reg = new Registry(s)
-        reg.source("clicks_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "click"))
-        reg.source("purchases_feed", () =>
-          graft.tables.Tables.events(s, d)
-            .filter(col("event_type") === "purchase"))
+        // two aligned slices — the same staging as q104; see q104 for
+        // the slice-count rationale
+        val staged = stageSlices(s, d, "q104", 2)(
+          ntile(2).over(Window.orderBy(col("ts"), col("event_id"))) - 1)
+        val reg = clicksAndPurchases(s, d)
         reg.register(TableDef("click_purchase_ledger",
           Seq("clicks_feed", "purchases_feed"), {
             case Seq(c, p) =>
@@ -1274,20 +877,7 @@ object StreamingQueries {
                   col("purchase_id"), col("purchase_ts"),
                   col("purchase_value"))
           }, mode = Mode.Incremental))
-        def feed(tp: String) = () =>
-          s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-            .filter(col("event_type") === tp)
-            .drop("batch_")
-        val out = Files.createTempDirectory("graft_q282_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("clicks_feed" -> feed("click"),
-              "purchases_feed" -> feed("purchase")),
-            out)
-        }
-        s.read.parquet(s"$out/click_purchase_ledger")
+        run(s, reg, clickPurchaseFeeds(s, staged), "click_purchase_ledger")
           .orderBy("click_id", "purchase_id")
       },
       Some("""
@@ -1349,16 +939,9 @@ object StreamingQueries {
               .select(col("window.start").cast("long").as("hour_sec"),
                 col("symbol"), col("n"), col("notional_cents"))
         }, mode = Mode.Incremental))
-        val out = Files.createTempDirectory("graft_q289_").toString
-        withStatePartitions(s, 4) {
-          graft.graph.Runner.runStreamingThenFull(s, reg,
-            Map("ticks_feed" -> (() =>
-              s.readStream.format("graft-ticks")
-                .option("rows", 200000L)
-                .option("ratePerBatch", 80000L).load())),
-            out)
-        }
-        s.read.parquet(s"$out/ticks_hourly")
+        run(s, reg, Map("ticks_feed" -> (() =>
+          s.readStream.format("graft-ticks").option("rows", 200000L)
+            .option("ratePerBatch", 80000L).load())), "ticks_hourly")
           .orderBy("hour_sec", "symbol")
       },
       Some("""

@@ -5,17 +5,14 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.column.ColumnReader
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.column.page.PageReadStore
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -203,63 +200,6 @@ object GraftParquetIO {
     }
   }
 
-  /** Projected file reader: emits [[InternalRow]]s of `projection`
-    * (a subset of the table schema, possibly empty — a COUNT(*) scan
-    * reads the narrowest physical column and emits empty rows), plus
-    * the file's path as a trailing `_file` column when `filePath` is
-    * set (the metadata column the row-level runtime group filter
-    * joins on). */
-  final class Reader(path: String, fileSchema: StructType,
-                     projection: StructType, conf: Configuration,
-                     filePath: Option[String]) {
-    // empty projection still has to DRIVE the read: request the
-    // narrowest column to count rows, emit nothing from it
-    private val phys: StructType =
-      if (projection.nonEmpty) projection
-      else StructType(Seq(fileSchema.fields.minBy(_.dataType match {
-        case BooleanType => 0
-        case IntegerType | DateType => 1
-        case LongType | DoubleType => 2
-        case _ => 3
-      })))
-    private val c = new Configuration(conf)
-    c.set(ReadSupport.PARQUET_READ_SCHEMA, messageType(phys).toString)
-    private val r: ParquetReader[Group] =
-      ParquetReader.builder(new GroupReadSupport(), new HPath(path))
-        .withConf(c).build()
-    private val fileUtF8 = filePath.map(UTF8String.fromString).orNull
-    private val width =
-      projection.length + (if (filePath.isDefined) 1 else 0)
-
-    /** Next row or null at EOF. The returned row is FRESH per call
-      * (no buffer reuse) — partitions are small by the format's
-      * file-size discipline, and correctness beats a row-buffer pool. */
-    def next(): InternalRow = {
-      val g = r.read()
-      if (g == null) return null
-      val row = new GenericInternalRow(width)
-      var i = 0
-      while (i < projection.length) {
-        val name = projection.fields(i).name
-        // field index in the REQUESTED schema = i (same order)
-        if (g.getFieldRepetitionCount(i) == 0) row.update(i, null)
-        else projection.fields(i).dataType match {
-          case LongType => row.setLong(i, g.getLong(i, 0))
-          case IntegerType => row.setInt(i, g.getInteger(i, 0))
-          case DoubleType => row.setDouble(i, g.getDouble(i, 0))
-          case BooleanType => row.setBoolean(i, g.getBoolean(i, 0))
-          case StringType => row.update(i, UTF8String.fromString(g.getString(i, 0)))
-          case DateType => row.setInt(i, g.getInteger(i, 0))
-          case dt => throw new IllegalStateException(s"unreachable $dt at $name")
-        }
-        i += 1
-      }
-      if (fileUtF8 != null) row.update(projection.length, fileUtF8)
-      row
-    }
-    def close(): Unit = r.close()
-  }
-
   /** No-op converter tree: [[ColumnReadStoreImpl]] requires a record
     * converter, but the columnar reader pulls values straight off the
     * [[ColumnReader]]s (`getLong`/`getBinary`/…), so the converter is
@@ -278,10 +218,9 @@ object GraftParquetIO {
     * column-reader API (ParquetFileReader → PageReadStore →
     * ColumnReadStoreImpl → ColumnReader per column).
     *
-    * Why this replaces the row reader on the scan path: the example
-    * Group API materializes a fresh heap Group per ROW plus a
-    * java.lang.String per string cell, a recorded 5–10× constant over
-    * a native scan (ADVICE r15). Here each column decodes in a tight
+    * Why columnar: the example Group API materializes a fresh heap
+    * Group per ROW plus a java.lang.String per string cell, a recorded
+    * 5–10× constant over a native scan (ADVICE r15). Here each column decodes in a tight
     * per-type loop into a reused vector, Spark consumes the batch
     * through codegen's columnar path, and strings move bytes-to-bytes.
     * The type surface is the catalog's flat-optional six (max
@@ -290,8 +229,7 @@ object GraftParquetIO {
     *
     * An EMPTY projection (COUNT(*), or `_file`-only scans) never
     * decodes a value at all: row counts come from the row-group
-    * metadata ([[PageReadStore.getRowCount]]), so the narrowest-column
-    * read the row reader paid for counting disappears entirely. */
+    * metadata ([[PageReadStore.getRowCount]]). */
   final class ColumnarReader(path: String, fileSchema: StructType,
                              projection: StructType, conf: Configuration,
                              filePath: Option[String],

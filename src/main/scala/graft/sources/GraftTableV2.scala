@@ -354,16 +354,9 @@ class GraftScan(root: String, tableSchema: StructType,
 
 class GraftReaderFactory(conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
-  // the catalog scan is COLUMNAR (GraftParquetIO.ColumnarReader): each
-  // column decodes in a tight per-type loop into reused Spark vectors
-  // and the plan consumes batches through codegen's columnar path —
-  // replacing the example-Group row reader's fresh-Group-per-row +
-  // String-per-cell constant (ADVICE r15's recorded 5–10×). The row
-  // reader remains below as the non-columnar fallback contract.
-  // measurement escape hatch: SPARK_GRAFT_ROW_READER=1 forces the old
-  // row-at-a-time path so the columnar gain stays A/B-able in place
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !sys.env.contains("SPARK_GRAFT_ROW_READER")
+  // the catalog scan is columnar only (GraftParquetIO.ColumnarReader
+  // says why)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -381,19 +374,8 @@ class GraftReaderFactory(conf: SerializableHadoopConf)
   }
 
   override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftFilePartition]
-    val proj = DataType.fromJson(p.projJson).asInstanceOf[StructType]
-    val table = DataType.fromJson(p.tableJson).asInstanceOf[StructType]
-    new PartitionReader[InternalRow] {
-      private val reader = new GraftParquetIO.Reader(p.absPath, table, proj,
-        conf.value, if (p.emitFile) Some(p.relPath) else None)
-      private var cur: InternalRow = _
-      override def next(): Boolean = { cur = reader.next(); cur != null }
-      override def get(): InternalRow = cur
-      override def close(): Unit = reader.close()
-    }
-  }
+      : PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft catalog scans are columnar")
 }
 
 // =====================================================================

@@ -41,6 +41,35 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
+  // An Incremental boundary fed only by static sources (the
+  // transactions DAG's agg_compressed_nft_burn_events_hourly) has no
+  // stream to start; the streaming runner materializes it batch-style
+  // next to the streamed boundaries, and its Full consumer reads it.
+  test("runStreamingThenFull materializes a static-only Incremental boundary") {
+    val sp = spark
+    import sp.implicits._
+    val in = Files.createTempDirectory("runner_static_in").toString
+    val out = Files.createTempDirectory("runner_static_out").toString
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "v").write.mode("overwrite").parquet(in)
+    val r = new Registry(sp)
+    r.source("feed", () => sp.read.parquet(in))
+    r.source("dim", () => Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "name"))
+    r.register(TableDef("streamed", Seq("feed"), { case Seq(f) => f },
+      mode = Mode.Incremental))
+    r.register(TableDef("static_agg", Seq("dim"), { case Seq(dm) =>
+      dm.agg(count(lit(1)).as("n"))
+    }, mode = Mode.Incremental))
+    r.register(TableDef("summary", Seq("static_agg"), { case Seq(a) =>
+      a.select((col("n") * 10).as("n10"))
+    }, mode = Mode.Full))
+    val schema = sp.read.parquet(in).schema
+    val paths = Runner.runStreamingThenFull(sp, r,
+      Map("feed" -> (() => sp.readStream.schema(schema).parquet(in))), out)
+    assert(sp.read.parquet(paths("streamed")).count() === 2L)
+    assert(sp.read.parquet(paths("static_agg")).head().getLong(0) === 3L)
+    assert(sp.read.parquet(paths("summary")).head().getLong(0) === 30L)
+  }
+
   // K3 (zetadex-mm-uptime-pipeline-v3.sql:151–157): the hourly
   // `mode("append").saveAsTable` cadence, as idempotent dynamic partition
   // overwrite — a retried run must NOT double rows.

@@ -543,11 +543,8 @@ class StreamingSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    val KEY = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = sp.conf.getOption(KEY)
-    sp.conf.set(KEY,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    val rig = graft.queries.StreamRig
+    rig.withConfs(sp, rig.ProviderKey -> rig.RocksDbProvider) {
       val mem = MemoryStream[SessionEvent]
       val out = StreamingOps.statefulSessions(
         gapMinutes = 30, lateness = "10 minutes")(mem.toDS())
@@ -585,9 +582,18 @@ class StreamingSpec extends AnyFunSuite {
         assert(emitted >= 4L * activeKeys,
           "sessions must close and emit under RocksDB too")
       } finally q.stop()
-    } finally prevProvider match {
-      case Some(v) => sp.conf.set(KEY, v)
-      case None => sp.conf.unset(KEY)
     }
+    // the rig's rocksDb flag (q243): the run checkpoints under the
+    // RocksDB provider, and the session's own provider is restored
+    val before = sp.conf.getOption(rig.ProviderKey)
+    val q243 = SparkEntry.queries("q243_rocksdb_state_hourly")(sp, TestSpark.sf0001)
+    val table = java.nio.file.Paths.get(new java.net.URI(q243.inputFiles.head))
+      .getParent
+    val offsets = table.getParent.resolve(
+      s"_checkpoints/${table.getFileName}/offsets/0")
+    assert(new String(java.nio.file.Files.readAllBytes(offsets), "UTF-8")
+      .contains(rig.RocksDbProvider), "q243's checkpoint must name RocksDB")
+    assert(sp.conf.getOption(rig.ProviderKey) === before,
+      "the provider conf is restored after the run")
   }
 }
