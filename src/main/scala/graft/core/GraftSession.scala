@@ -33,6 +33,12 @@ object GraftSession {
       // rows explode to span/width + 1 bin copies
       .config(graft.plans.RangeJoinRule.WIDTH_KEY, "1024")
       .config("spark.ui.enabled", "false")
+      // generated classes are cached per JVM, 100 by default; one run of
+      // the transactions DAG compiles about 280 classes and one pass of
+      // the benchmark's 12-query mix about 200, so a default-sized cache
+      // evicts each class before its next use and every run recompiles
+      // them all. 2000 holds either working set with over 2x headroom.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Local session for tests and ad-hoc runs. */
   def local(threads: Int = 4): SparkSession = {

@@ -44,10 +44,13 @@ object WriteMode {
 
 /** A named node in the dataflow DAG: the Spark-native re-expression of a
   * `@dlt.table` / `@dlt.view` function (SURVEY.md §1.1). `transform`
-  * receives the resolved dependency DataFrames in `deps` order and returns
-  * an unresolved logical plan (a DataFrame) — Catalyst owns all
-  * optimization across node boundaries because composition is plan-level,
-  * not materialization-level.
+  * receives the dependency DataFrames in `deps` order and returns an
+  * unresolved logical plan (a DataFrame). Composition is plan-level inside
+  * a table — Catalyst optimizes the whole transform as one plan — and
+  * materialized between tables: [[Runner.runBatch]] writes each table
+  * once, its consumers read the written table, and independent tables run
+  * concurrently. (The streaming runner fuses streamed Incremental tables
+  * into one streaming query per materialized boundary.)
   */
 final case class TableDef(
     name: String,
@@ -61,17 +64,18 @@ final case class TableDef(
   * (`dlt.read`/`dlt.read_stream` edges, zetadex-transactions-helius
   * -pipeline.py:179–181, :351).
   *
-  * `resolve` is memoized per run so a node shared by several consumers is
-  * planned once; within a run everything stays one fused Catalyst plan —
-  * materialization happens only at [[Runner]] table boundaries, per each
-  * table's [[WriteMode]].
+  * `resolve` plans a node together with its whole upstream lineage as one
+  * fused Catalyst plan, memoized per call so a node shared by several
+  * consumers is planned once. It serves ad-hoc reads of a table and the
+  * streaming runner's streamed tables; [[Runner.runBatch]] instead plans
+  * each table from its deps' materialized outputs.
   */
 final class Registry(spark: SparkSession) {
   private val defs = mutable.LinkedHashMap.empty[String, TableDef]
   private val sources = mutable.LinkedHashMap.empty[String, () => DataFrame]
 
-  /** The session this registry plans against — runners use it to shadow
-    * stateful tables with reads of their materialized paths. */
+  /** The session this registry plans against — the batch runner plans,
+    * writes and reads back its tables with it. */
   private[graph] def session: SparkSession = spark
 
   def register(t: TableDef): this.type = { defs(t.name) = t; this }
@@ -86,8 +90,8 @@ final class Registry(spark: SparkSession) {
     * tableNames ∪ sourceNames. */
   def sourceNames: Seq[String] = sources.keys.toSeq
 
-  /** The registered source loaders — so a runner can carry static
-    * (non-streamed) sources into a derived registry: the stream-static
+  /** The registered source loaders — the inputs a runner plans tables
+    * from, and the static (non-streamed) side of the stream-static
     * pattern, where an incremental table joins a batch dim. */
   private[graph] def sourceLoaders: Map[String, () => DataFrame] =
     sources.toMap

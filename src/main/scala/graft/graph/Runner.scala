@@ -1,14 +1,21 @@
 package graft.graph
 
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** DAG executors — the engine's stand-in for the DLT runtime's two
   * update modes (SURVEY.md §1.1, §2.11).
   *
-  * Batch: topological materialization of every registered table.
+  * Batch: every registered table is materialized once; its consumers read
+  * the written table back, and tables whose dependencies are written run
+  * at the same time.
   *
   * Streaming: tables flagged [[Mode.Incremental]] run as one fused
   * Structured Streaming query per leaf (micro-batch, Trigger.AvailableNow
@@ -20,20 +27,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object Runner {
 
-  /** Write one resolved table per its [[WriteMode]]. Returns true when
-    * the on-disk table now carries state BEYOND this run's plan (Append
-    * accumulates partitions, Upsert merges history) — the signal that
-    * downstream consumers must READ the materialized table rather than
-    * re-derive its plan, or they would compute from this run's partial
-    * view of an accumulating table. */
-  private def writeTable(df: DataFrame, t: Option[TableDef],
-                         path: String): Boolean = {
-    val parts = t.map(_.partitionCols).getOrElse(Nil)
-    t.map(_.writeMode).getOrElse(WriteMode.Overwrite) match {
+  /** Write one resolved table per its [[WriteMode]]. */
+  private def writeTable(df: DataFrame, t: TableDef, path: String): Unit = {
+    val parts = t.partitionCols
+    t.writeMode match {
       case WriteMode.Overwrite =>
         val w = df.write.mode("overwrite")
         (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
-        false
       case WriteMode.Append =>
         // K3 idempotent append: overwrite ONLY the partitions this run
         // produced (mm-uptime's hourly cadence); a re-run of the same
@@ -43,7 +43,6 @@ object Runner {
         df.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(parts: _*).parquet(path)
-        true
       case WriteMode.Upsert(keys, seqCol, tie) =>
         // checkEmpty=false: a batch-mode plan is essentially never empty
         // and the emptiness probe would execute the full plan once more
@@ -51,51 +50,89 @@ object Runner {
           ManifestStore.upsert(path, keys, seqCol, tie, parts,
             checkEmpty = false)(df)
         else upsertParquet(path, keys, seqCol, tie, checkEmpty = false)(df)
-        true
     }
   }
 
-  /** How downstream consumers read a STATEFUL table back: partitioned
-    * upsert tables live behind a [[ManifestStore]] manifest (readers
-    * must resolve the committed generation — a raw path read would see
-    * no data, by design); everything else is a plain parquet read. Both
-    * pin the PLAN's schema, not directory inference — a read without it
+  /** How consumers read a materialized table back: partitioned upsert
+    * tables live behind a [[ManifestStore]] manifest (readers must
+    * resolve the committed generation — a raw path read would see no
+    * data, by design); everything else is a plain parquet read. Both pin
+    * the PLAN's schema, not directory inference — a read without it
     * re-types partition columns from directory names (string "00" →
     * int 0) and reorders them to the end, silently changing what
-    * downstream consumers see. */
-  private def shadowLoader(spark: SparkSession, t: Option[TableDef],
-                           path: String,
-                           planSchema: org.apache.spark.sql.types.StructType)
-      : () => DataFrame =
-    t match {
-      case Some(td) if td.partitionCols.nonEmpty &&
-          td.writeMode.isInstanceOf[WriteMode.Upsert] =>
+    * consumers see. An Append or Upsert table on disk also holds state
+    * beyond this run's plan (earlier partitions, merged history), which
+    * is exactly what its consumers must see. */
+  private def shadowLoader(spark: SparkSession, t: TableDef, path: String,
+                           planSchema: StructType): () => DataFrame =
+    t.writeMode match {
+      case _: WriteMode.Upsert if t.partitionCols.nonEmpty =>
         () => ManifestStore.read(spark, path, Some(planSchema))
       case _ => () => spark.read.schema(planSchema).parquet(path)
     }
 
-  /** Materialize every table batch-style under `outDir`, in topo order,
-    * honoring each table's partition columns (the reference's
+  /** Materialize `tables` (in topological order) under `outDir`. Each
+    * table is planned from its inputs — a dep in `tables` is read back
+    * from its written path, any other dep is loaded from `inputs` — and
+    * written once per its [[WriteMode]]. So a table's plan never holds
+    * another table's lineage, and every source is scanned once per
+    * consumer table, not once per downstream path.
+    *
+    * Each table is one future that starts when its deps' futures finish,
+    * on a pool of `defaultParallelism` threads: independent tables run
+    * at the same time. A failed table's consumers are never written; the
+    * other tables finish, then the first failure in `tables` order — the
+    * failed table's own exception — is rethrown. Returns each written
+    * table's read-back loader. */
+  private def materialize(spark: SparkSession, tables: Seq[TableDef],
+                          inputs: Map[String, () => DataFrame],
+                          outDir: String): Map[String, () => DataFrame] = {
+    val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    def write(t: TableDef, deps: Seq[() => DataFrame]): () => DataFrame = {
+      val df = t.transform(deps.map(_()))
+      val path = s"$outDir/${t.name}"
+      writeTable(df, t, path)
+      shadowLoader(spark, t, path, df.schema)
+    }
+    try {
+      val done = tables.foldLeft(Map.empty[String, Future[() => DataFrame]]) {
+        (done, t) =>
+          val deps = t.deps.map(d => done.getOrElse(d, Future.fromTry(Try(
+            inputs.getOrElse(d, throw new NoSuchElementException(s"unknown table $d"))))))
+          // a Promise, not Future.map: map leaves its future incomplete
+          // on a fatal error (a StackOverflowError planning a deep tree),
+          // which would hang the wait below
+          val p = Promise[() => DataFrame]()
+          Future.sequence(deps).onComplete {
+            case Success(loaders) =>
+              p.complete(try Success(write(t, loaders)) catch {
+                case e: Throwable => Failure(e)
+              })
+            case Failure(e) => p.failure(e)
+          }
+          done + (t.name -> p.future)
+      }
+      tables.foreach(t => Await.ready(done(t.name), Duration.Inf))
+      tables.map(t => t.name -> done(t.name).value.get.get).toMap
+    } finally pool.shutdown()
+  }
+
+  /** Materialize every registered table under `outDir/<name>`, honoring
+    * each table's partition columns (the reference's
     * `partition_cols=["date_"]` convention, transactions:996) and write
-    * mode. After a STATEFUL table (Append/Upsert) is written, its name is
-    * shadowed by a read of the materialized path, so downstream consumers
-    * see the full accumulated table — matching how the streaming runner's
-    * Full tables read materialized boundaries. Returns the materialized
-    * paths. */
+    * mode, and return the paths.
+    *
+    * Composition is plan-level inside a table and materialized between
+    * tables: a consumer reads what its deps wrote, with the deps' plan
+    * schemas — for Append/Upsert tables that is the full accumulated
+    * table, matching how the streaming runner's Full tables read
+    * materialized boundaries. Independent tables run concurrently; see
+    * [[materialize]] for the failure contract. */
   def runBatch(reg: Registry, outDir: String): Map[String, String] = {
-    val spark = reg.session
-    val work = new Registry(spark)
-    reg.sourceLoaders.foreach { case (n, f) => work.source(n, f) }
-    reg.topoOrder.flatMap(reg.describe).foreach(work.register)
-    reg.topoOrder.map { name =>
-      val path = s"$outDir/$name"
-      val df = work.resolve(name)
-      val planSchema = df.schema
-      val stateful = writeTable(df, work.describe(name), path)
-      if (stateful)
-        work.source(name, shadowLoader(spark, work.describe(name), path, planSchema))
-      name -> path
-    }.toMap
+    val tables = reg.topoOrder.flatMap(reg.describe)
+    materialize(reg.session, tables, reg.sourceLoaders, outDir)
+    tables.map(t => t.name -> s"$outDir/${t.name}").toMap
   }
 
   /** Merge `batch` into the parquet table at `path`, keeping the
@@ -197,11 +234,15 @@ object Runner {
     last
   }
 
-  /** Run the DAG with streaming sources: every Incremental table whose
-    * consumers include a Full table (or which has no registered consumer)
-    * is a streaming MATERIALIZATION BOUNDARY — it runs as one
-    * `writeStream` job (checkpointed under `outDir/_checkpoints`), and
-    * Full tables then batch-read the materialized parquet.
+  /** Run the DAG with streaming sources: every Incremental table fed by
+    * a stream whose consumers include a Full table (or which has no
+    * registered consumer) is a streaming MATERIALIZATION BOUNDARY — it
+    * runs as one `writeStream` job (checkpointed under
+    * `outDir/_checkpoints`), and Full tables then batch-read the
+    * materialized parquet. Tables with no streamed input have no stream
+    * to start (writeStream would throw WRITE_STREAM_NOT_ALLOWED): they
+    * are materialized first, batch-style like [[runBatch]], and the
+    * streamed tables read them back — the stream-static join pattern.
     *
     * `streamSources` must map every source name to a streaming DataFrame
     * factory; transforms are reused untouched — the engine's transforms
@@ -210,74 +251,63 @@ object Runner {
   def runStreamingThenFull(spark: SparkSession, reg: Registry,
                            streamSources: Map[String, () => DataFrame],
                            outDir: String): Map[String, String] = {
-    val defs = reg.topoOrder.map(n => n -> reg.describe(n)).toMap
-    val incremental = reg.topoOrder.filter(n => defs(n).exists(_.mode == Mode.Incremental))
-    val full = reg.topoOrder.filter(n => defs(n).exists(_.mode == Mode.Full))
-
-    // boundaries: incremental tables consumed by a Full table, or by nothing
-    val consumers: Map[String, Seq[TableDef]] =
-      reg.topoOrder.flatMap(n => defs(n)).flatMap(t => t.deps.map(_ -> t))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val boundaries = incremental.filter { n =>
-      consumers.get(n).forall(_.isEmpty) ||
-        consumers.getOrElse(n, Seq.empty).exists(_.mode == Mode.Full)
+    val defs = reg.topoOrder.flatMap(reg.describe)
+    // a table is streamed when any of its inputs is
+    val streamedNames = defs.foldLeft(streamSources.keySet) { (s, t) =>
+      if (t.deps.exists(s)) s + t.name else s
     }
+    val (streamed, static) = defs.partition(t => streamedNames(t.name))
+    val staticOut = materialize(spark, static, reg.sourceLoaders, outDir)
+
+    // boundaries: streamed incremental tables consumed by a Full table,
+    // or by nothing (a streamed table's consumers are streamed too)
+    val consumers = streamed.flatMap(t => t.deps.map(_ -> t)).groupMap(_._1)(_._2)
+    val boundaries = streamed.filter(t => t.mode == Mode.Incremental &&
+      consumers.get(t.name).forall(_.exists(_.mode == Mode.Full)))
 
     // one streaming resolver whose sources are the streaming frames;
-    // sources NOT being streamed stay batch loaders — the stream-static
-    // join pattern (a streaming table may read a dim batch-style)
+    // sources NOT being streamed stay batch loaders
     val streamReg = new Registry(spark)
-    reg.sourceLoaders.foreach { case (n, f) =>
-      if (!streamSources.contains(n)) streamReg.source(n, f)
+    (reg.sourceLoaders ++ staticOut ++ streamSources).foreach {
+      case (n, f) => streamReg.source(n, f)
     }
-    streamSources.foreach { case (n, f) => streamReg.source(n, f) }
-    reg.topoOrder.flatMap(defs(_)).foreach(streamReg.register)
+    streamed.foreach(streamReg.register)
 
-    val written = boundaries.map { name =>
-      val path = s"$outDir/$name"
-      val checkpoint = s"$outDir/_checkpoints/$name"
-      val resolved = streamReg.resolve(name)
-      if (!resolved.isStreaming) {
-        // a boundary over static sources only has no stream to start
-        // (writeStream would throw WRITE_STREAM_NOT_ALLOWED): materialize
-        // it like runBatch does, shadowing a stateful table for its
-        // streaming consumers too
-        if (writeTable(resolved, defs(name), path))
-          streamReg.source(name, shadowLoader(spark, defs(name), path, resolved.schema))
-      } else {
-        val q = defs(name).map(_.writeMode).getOrElse(WriteMode.Overwrite) match {
-          case WriteMode.Upsert(keys, seqCol, tie) =>
-            // §2.10 streaming apply_changes as a sink: update-mode batches
-            // carry the changed keys' latest rows; each micro-batch MERGEs
-            // into the table (foreachBatch = the OSS seam where DLT calls
-            // Delta MERGE, zetaflex-pipeline.py:138–151). Replay-safe: the
-            // merge is idempotent, so at-least-once foreachBatch delivery
-            // still converges to exactly the batch apply_changes result.
-            val parts = defs(name).map(_.partitionCols).getOrElse(Nil)
-            resolved.writeStream
-              .outputMode("update")
-              .option("checkpointLocation", checkpoint)
-              .foreachBatch { (batch: DataFrame, _: Long) =>
-                if (parts.nonEmpty)
-                  ManifestStore.upsert(path, keys, seqCol, tie, parts)(batch)
-                else upsertParquet(path, keys, seqCol, tie)(batch)
-              }
-              .trigger(Trigger.AvailableNow())
-              .start()
-          case _ =>
-            // parquet file sink: append-only with an exactly-once sink log
-            resolved.writeStream
-              .format("parquet")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .trigger(Trigger.AvailableNow())
-              .start()
-        }
-        q.awaitTermination()
+    val streamedOut = boundaries.map { t =>
+      val path = s"$outDir/${t.name}"
+      val checkpoint = s"$outDir/_checkpoints/${t.name}"
+      val resolved = streamReg.resolve(t.name)
+      val q = t.writeMode match {
+        case WriteMode.Upsert(keys, seqCol, tie) =>
+          // §2.10 streaming apply_changes as a sink: update-mode batches
+          // carry the changed keys' latest rows; each micro-batch MERGEs
+          // into the table (foreachBatch = the OSS seam where DLT calls
+          // Delta MERGE, zetaflex-pipeline.py:138–151). Replay-safe: the
+          // merge is idempotent, so at-least-once foreachBatch delivery
+          // still converges to exactly the batch apply_changes result.
+          resolved.writeStream
+            .outputMode("update")
+            .option("checkpointLocation", checkpoint)
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              if (t.partitionCols.nonEmpty)
+                ManifestStore.upsert(path, keys, seqCol, tie, t.partitionCols)(batch)
+              else upsertParquet(path, keys, seqCol, tie)(batch)
+            }
+            .trigger(Trigger.AvailableNow())
+            .start()
+        case _ =>
+          // parquet file sink: append-only with an exactly-once sink log
+          resolved.writeStream
+            .format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .trigger(Trigger.AvailableNow())
+            .start()
       }
+      q.awaitTermination()
       // the boundary's PLAN schema, for the same reason as runBatch:
       // consumers must not see directory-inference re-typing
-      name -> (path, resolved.schema)
+      t.name -> shadowLoader(spark, t, path, resolved.schema)
     }.toMap
     // A terminated query's state-store providers stay loaded in the
     // executor cache (in-memory version maps + a maintenance thread
@@ -292,29 +322,10 @@ object Runner {
       cls.getMethod("unloadAll").invoke(cls.getField("MODULE$").get(null))
     } catch { case _: Throwable => () }
 
-    // Full tables batch-read the materialized boundaries; static
-    // sources (never streamed, never a boundary) keep their loaders
-    val batchReg = new Registry(spark)
-    reg.sourceLoaders.foreach { case (n, f) =>
-      if (!written.contains(n)) batchReg.source(n, f)
-    }
-    written.foreach { case (n, (p, schema)) =>
-      batchReg.source(n, shadowLoader(spark, defs(n), p, schema))
-    }
-    full.flatMap(defs(_)).foreach(batchReg.register)
-    val fullOut = full.map { name =>
-      val path = s"$outDir/$name"
-      // same write dispatch and stateful-shadowing as runBatch: a Full
-      // table with Append/Upsert semantics accumulates across runs, and
-      // its consumers must read the accumulated table (with the plan's
-      // schema — see runBatch)
-      val df = batchReg.resolve(name)
-      val planSchema = df.schema
-      val stateful = writeTable(df, defs(name), path)
-      if (stateful)
-        batchReg.source(name, shadowLoader(spark, defs(name), path, planSchema))
-      name -> path
-    }.toMap
-    written.view.mapValues(_._1).toMap ++ fullOut
+    // Full tables batch-read the materialized tables; sources keep their
+    // batch loaders
+    val full = streamed.filter(_.mode == Mode.Full)
+    materialize(spark, full, reg.sourceLoaders ++ staticOut ++ streamedOut, outDir)
+    (static ++ boundaries ++ full).map(t => t.name -> s"$outDir/${t.name}").toMap
   }
 }

@@ -14,8 +14,8 @@ import graft.ops.Relational
   * (cleaned_events), gold hourly aggregates (agg_events_1h) and a
   * densified 24h rolling table (agg_events_24h_rolling,
   * transactions:821–855), and a serving projection (serving_events).
-  * Every node is a pure `Seq[DataFrame] => DataFrame`, so Catalyst
-  * optimizes across node boundaries and the same transforms run
+  * Every node is a pure `Seq[DataFrame] => DataFrame`, so the same
+  * transforms run batch, each table materialized by the runner, and
   * incrementally under streaming sources.
   */
 object EventsPipeline {

@@ -50,6 +50,19 @@ object QH {
   /** Exact average built from decSum / count. */
   def decAvg(c: Column): Column = decSum(c) / count(lit(1))
 
+  /** Round a double to `digits` decimals the way the oracle's
+    * `ROUND(DOUBLE, d)` does: scale by 10^d, round half away from zero,
+    * scale back. Spark's `round(c, d)` rounds the double's decimal string
+    * instead, and the two split on ties: 32.2283335 is stored just below
+    * the tie, so ×1e6 gives 32228333.499999996 and the oracle rounds
+    * down, while the string "32.2283335" rounds up. At scale 0 the string
+    * and the double lie on the same side of any .5, so both engines round
+    * the same scaled value. */
+  def roundScaled(c: Column, digits: Int): Column = {
+    val m = math.pow(10, digits)
+    round(c * m) / m
+  }
+
   /** Spread a CPU-heavy projection over the configured shuffle
     * parallelism. The count is EXPLICIT (the session's shuffle-partition
     * setting, so it follows deployment tuning) because an unnumbered

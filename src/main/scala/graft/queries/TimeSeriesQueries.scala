@@ -29,7 +29,8 @@ object TimeSeriesQueries {
     // nearest earlier and later observations (edges clamp to the
     // nearest observed value). The interpolation arithmetic runs on
     // 6-dp-rounded endpoints in an op order mirrored exactly by the
-    // oracle, so the filled doubles hash-compare bit-identically.
+    // oracle, and both roundings are the oracle's own (roundScaled), so
+    // the filled doubles hash-compare bit-identically, ties included.
     Q("q117_gap_fill",
       (s, d) => {
         val ev = t(s, d, "events")
@@ -41,7 +42,7 @@ object TimeSeriesQueries {
           // runs twice instead of reusing one exchange
           .filter(col("event_type").isNotNull && col("h").isNotNull)
         val obs = ev.groupBy("event_type", "h")
-          .agg(round(decAvg(col("value")), 6).as("v_obs"))
+          .agg(roundScaled(decAvg(col("value")), 6).as("v_obs"))
         // bounds reference the non-key v_obs (always non-null, so the
         // when() is the identity): plain min(h)/max(h) would let the
         // optimizer drop the inner aggregate (h is one of its keys) and
@@ -74,7 +75,7 @@ object TimeSeriesQueries {
             when(col("v_obs").isNotNull, col("v_obs"))
               .when(prevV.isNull, nextV)
               .when(nextV.isNull, prevV)
-              .otherwise(round(prevV + (nextV - prevV) * (dh / dtot), 6))
+              .otherwise(roundScaled(prevV + (nextV - prevV) * (dh / dtot), 6))
               .as("v_fill"),
             col("v_obs").isNull.as("is_gap"))
           .orderBy("event_type", "h")

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 import graft.pipelines.CorpusPipeline
+import graft.core.ScratchDirs
 
 /** Hand-computed expectations over a small curation corpus: a quality
   * reject, an exact-dup pair, a near-dup pair, and clean keepers. */
@@ -99,7 +100,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("corpus products serve through the KV layer like the trading gold") {
-    val out = java.nio.file.Files.createTempDirectory("corpus_kv").toString
+    val out = ScratchDirs.create("corpus_kv")
     val reg = CorpusPipeline.build(spark, () => fixture)
     val (packed, sample) =
       CorpusPipeline.serve(reg, new graft.serving.ParquetKVSink(out))
@@ -120,8 +121,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("the corpus DAG materializes end-to-end through Runner.runBatch") {
-    val out = java.nio.file.Files
-      .createTempDirectory("corpus_dag").toString
+    val out = ScratchDirs.create("corpus_dag")
     val reg = CorpusPipeline.build(spark, () => fixture)
     val paths = graft.graph.Runner.runBatch(reg, out)
     assert(paths.keySet.contains("packed") && paths.keySet.contains(
@@ -133,7 +133,7 @@ class CorpusPipelineSpec extends AnyFunSuite {
   test("streaming run with a static benchmark dim equals the batch run") {
     val sp = spark
     import sp.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("corpus_src").toString
+    val srcDir = ScratchDirs.create("corpus_src")
     fixture.write.mode("overwrite").parquet(s"$srcDir/docs")
     val bench = Seq((1000L,
       "plus further unrelated trailing content stretching the shingle " +
@@ -143,14 +143,14 @@ class CorpusPipelineSpec extends AnyFunSuite {
     val batchOut = graft.graph.Runner.runBatch(
       CorpusPipeline.build(spark,
         () => spark.read.parquet(s"$srcDir/docs"), () => bench),
-      java.nio.file.Files.createTempDirectory("corpus_b").toString)
+      ScratchDirs.create("corpus_b"))
     // documents streams; benchmark stays a static batch dim
     val streamOut = graft.graph.Runner.runStreamingThenFull(spark,
       CorpusPipeline.build(spark,
         () => spark.read.parquet(s"$srcDir/docs"), () => bench),
       Map("documents" -> (() =>
         spark.readStream.schema(fixture.schema).parquet(s"$srcDir/docs"))),
-      java.nio.file.Files.createTempDirectory("corpus_s").toString)
+      ScratchDirs.create("corpus_s"))
 
     for (tbl <- Seq("train_ready", "packed")) {
       val b = spark.read.parquet(batchOut(tbl))

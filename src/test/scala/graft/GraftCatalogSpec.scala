@@ -7,6 +7,7 @@ import graft.graph.ManifestStore
 import graft.sources.{GraftParquetIO, GraftPrune}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import graft.core.ScratchDirs
 
 /** The SQL catalog over the graft table format (GraftCatalog /
   * GraftTable): DDL/DML round trips, the metadata-vs-rewrite DELETE
@@ -19,8 +20,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   /** Fresh uniquely-named catalog (CatalogManager caches per name). */
   private def fresh(tag: String): (String, String) = {
     val cat = s"spec_${tag}_" + java.util.UUID.randomUUID().toString.take(8)
-    val root = java.nio.file.Files
-      .createTempDirectory(s"graft_catspec_$tag").toString
+    val root = ScratchDirs.create(s"graft_catspec_$tag")
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.root", root)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -265,12 +265,10 @@ class GraftCatalogSpec extends AnyFunSuite {
       "epoch marker, and a REPLAYED epoch commit is a no-op") {
     val (cat, root) = fresh("sw")
     spark.sql(s"CREATE TABLE $cat.ns.s (k BIGINT, v DOUBLE)")
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_catspec_swsrc").toString
+    val src = ScratchDirs.create("graft_catspec_swsrc")
     spark.range(1, 101).select(col("id").as("k"), (col("id") * 2.0).as("v"))
       .coalesce(1).write.mode("overwrite").parquet(src)
-    val ck = java.nio.file.Files
-      .createTempDirectory("graft_catspec_swck").toString
+    val ck = ScratchDirs.create("graft_catspec_swck")
     val q = spark.readStream
       .schema("k BIGINT, v DOUBLE").parquet(src)
       .writeStream.option("checkpointLocation", ck)

@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.{Path => HPath}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{ManifestStore, Mode, Registry, Runner, TableDef, WriteMode}
+import graft.core.ScratchDirs
 
 /** Crash-safety contract of the manifest-last publish: readers must see
   * ONE complete generation at every possible writer crash point — never
@@ -36,7 +36,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("upsert round trip: pruned merge, cross-generation reads, key rules") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_rt").toString
+    val root = ScratchDirs.create("mstore_rt")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 0), (3L, 1L, "c", 1))
         .toDF("k", "seq", "v", "bucket"))
@@ -58,7 +58,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     "rewrites and deletes") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_zm").toString
+    val root = ScratchDirs.create("mstore_zm")
     // bucket 0 holds seq 1-2, bucket 1 holds seq 10-11
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
       statsCols = Seq("seq"))(
@@ -114,7 +114,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("mstore_fzm").toString
+    val root = ScratchDirs.create("mstore_fzm")
     // one partition, 30 keys, range-clustered into 3 files of ~10 seqs
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
       statsCols = Seq("seq"),
@@ -164,7 +164,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("mstore_uri").toString
+    val root = ScratchDirs.create("mstore_uri")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
       statsCols = Seq("seq"))(
       Seq((1L, 1L, "a b"), (2L, 9L, "a b"), (3L, 5L, "plain"))
@@ -187,7 +187,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     // drop stats silently or misattribute file lists across partitions
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_pin").toString
+    val root = ScratchDirs.create("mstore_pin")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
       statsCols = Seq("seq"))(
       Seq((1L, 10L, "0"), (2L, 20L, "00")).toDF("k", "seq", "bucket"))
@@ -204,7 +204,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("mstore_sch").toString
+    val root = ScratchDirs.create("mstore_sch")
     // batch 1 writes dirs bucket=00/bucket=7; batch 2 TOUCHES bucket=00,
     // so the merge re-reads the old generation — unpinned inference
     // would re-type '00' to int 0 and the staged-key drift check would
@@ -239,7 +239,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     "the recorded schema") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_sw").toString
+    val root = ScratchDirs.create("mstore_sw")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "val1", 0)).toDF("k", "seq", "v", "bucket"))
     // batch without column v, landing ONLY in new bucket 1 — the merge
@@ -262,7 +262,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("readWhere prunes at the manifest: only kept directories are opened") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_rw").toString
+    val root = ScratchDirs.create("mstore_rw")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1), (3L, 1L, "c", 2), (4L, 1L, "d", 2))
         .toDF("k", "seq", "v", "bucket"))
@@ -306,7 +306,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("writer killed between partition writes and commit: readers see the old snapshot") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_crash").toString
+    val root = ScratchDirs.create("mstore_crash")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1), (3L, 1L, "c", 2))
         .toDF("k", "seq", "v", "bucket"))
@@ -344,7 +344,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("publish is the single atomic flip: old state before, new state after") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_flip").toString
+    val root = ScratchDirs.create("mstore_flip")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)).toDF("k", "seq", "v", "bucket"))
     val prev = ManifestStore.readManifest(fs(root), root)
@@ -362,7 +362,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "loser throws, no mixed state") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_occ").toString
+    val root = ScratchDirs.create("mstore_occ")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)).toDF("k", "seq", "v", "bucket"))
     // writers A and B both read head v1 and stage their own v2 — the
@@ -408,7 +408,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "rebases and BOTH writes land") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_rebase").toString
+    val root = ScratchDirs.create("mstore_rebase")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)).toDF("k", "seq", "v", "bucket"))
     // writer A stages against head v1 touching ONLY bucket 0; the hook
@@ -441,7 +441,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "conflict — fail loudly, keep the winner") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_conflict").toString
+    val root = ScratchDirs.create("mstore_conflict")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)).toDF("k", "seq", "v", "bucket"))
     val e = intercept[java.util.ConcurrentModificationException] {
@@ -463,7 +463,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "both commit") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_race2").toString
+    val root = ScratchDirs.create("mstore_race2")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)).toDF("k", "seq", "v", "bucket"))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -486,7 +486,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "rebases and BOTH effects land") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_delrebase").toString
+    val root = ScratchDirs.create("mstore_delrebase")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 0), (3L, 1L, "c", 1))
         .toDF("k", "seq", "v", "bucket"))
@@ -512,7 +512,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "true conflict — fail loudly, keep the winner") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_delconf").toString
+    val root = ScratchDirs.create("mstore_delconf")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)).toDF("k", "seq", "v", "bucket"))
     val e = intercept[java.util.ConcurrentModificationException] {
@@ -533,7 +533,7 @@ class ManifestStoreSpec extends AnyFunSuite {
 
   test("commitRename is exclusive: an existing destination loses the " +
       "race loudly and keeps the winner's bytes") {
-    val root = Files.createTempDirectory("mstore_cr").toString
+    val root = ScratchDirs.create("mstore_cr")
     val f = fs(root)
     def write(p: HPath, s: String): Unit = {
       val o = f.create(p, true); try o.write(s.getBytes("UTF-8")) finally o.close()
@@ -583,7 +583,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     val sp = spark
     import sp.implicits._
     import graft.graph.BloomSkip
-    val root = Files.createTempDirectory("mstore_bloom").toString
+    val root = ScratchDirs.create("mstore_bloom")
     // 8 partitions × 40 distinct keys each, keys globally unique —
     // range stats CANNOT skip (every partition spans the key range by
     // bucket construction k%8), only the bloom can
@@ -646,7 +646,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "blooms instead of skipping with stale-typed hashes") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_bloom_evo").toString
+    val root = ScratchDirs.create("mstore_bloom_evo")
     // k recorded as INT, blooms built from int-hashed positions
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
       bloomCols = Seq("k"))(
@@ -672,7 +672,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("foreign files in _manifest/ are ignored, not fatal") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_foreign").toString
+    val root = ScratchDirs.create("mstore_foreign")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0)).toDF("k", "seq", "v", "bucket"))
     // a stray non-conforming file (backup, editor dropping) must not
@@ -690,7 +690,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("GC keeps the previous generation as reader grace, then collects it") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_gc").toString
+    val root = ScratchDirs.create("mstore_gc")
     def gens(): Set[String] = {
       val p = new HPath(s"$root/_gen")
       fs(root).listStatus(p).map(_.getPath.getName).toSet
@@ -711,7 +711,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("readVersion time-travels within the GC grace window") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_tt").toString
+    val root = ScratchDirs.create("mstore_tt")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "old", 0)).toDF("k", "seq", "v", "bucket"))
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
@@ -733,7 +733,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("deleteKeys rewrites only touched partitions and drops emptied ones") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_del").toString
+    val root = ScratchDirs.create("mstore_del")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 0), (3L, 1L, "c", 1),
         (4L, 1L, "d", 2)).toDF("k", "seq", "v", "bucket"))
@@ -765,7 +765,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "accumulates, and every rewrite materializes + clears") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_dv").toString
+    val root = ScratchDirs.create("mstore_dv")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 0), (3L, 1L, "c", 1),
         (4L, 1L, "d", 2)).toDF("k", "seq", "v", "bucket"))
@@ -830,7 +830,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "for unchanged rows, and reads only moved entries") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_cdf").toString
+    val root = ScratchDirs.create("mstore_cdf")
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", 0), (2L, 1L, "b", 0), (3L, 1L, "c", 1),
         (4L, 1L, "d", 2)).toDF("k", "seq", "v", "bucket"))
@@ -862,7 +862,7 @@ class ManifestStoreSpec extends AnyFunSuite {
       "partition values; vector deletes escape keys like the writer") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_cdf2").toString
+    val root = ScratchDirs.create("mstore_cdf2")
     // partition values with spaces/equals — the hive-escaping edge
     ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", "has space"), (2L, 1L, "b", "has space"),
@@ -894,7 +894,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("compact folds a scattered snapshot into one generation, atomically") {
     val sp = spark
     import sp.implicits._
-    val root = Files.createTempDirectory("mstore_compact").toString
+    val root = ScratchDirs.create("mstore_compact")
     // three upserts each touching ONE bucket → snapshot scattered
     // across three generations
     for ((b, seq) <- Seq((0, 1L), (1, 2L), (2, 3L)))
@@ -926,11 +926,11 @@ class ManifestStoreSpec extends AnyFunSuite {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.col
     val sp = spark
-    val staged = JFiles.createTempDirectory("mstore_stream_src").toString
-    val out = JFiles.createTempDirectory("mstore_stream_out").toString
+    val staged = ScratchDirs.create("mstore_stream_src")
+    val out = ScratchDirs.create("mstore_stream_out")
     var mtime = 1700000000000L
     def land(rows: Seq[(Long, Long, String, Int)], name: String): Unit = {
-      val tmp = JFiles.createTempDirectory("mstore_slice").toString
+      val tmp = ScratchDirs.create("mstore_slice")
       sp.createDataFrame(rows).toDF("k", "seq", "v", "bucket")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = JFiles.list(Paths.get(tmp)).toArray.map(_.toString)
@@ -978,7 +978,7 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("Runner materializes partitioned upsert tables behind the manifest") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("mstore_runner").toString
+    val out = ScratchDirs.create("mstore_runner")
     val r = new Registry(sp)
     r.source("feed", () =>
       Seq((1L, 2L, "new", 0), (1L, 1L, "old", 0), (2L, 1L, "b", 1))

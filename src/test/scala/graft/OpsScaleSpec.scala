@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Multimodal, Relational}
+import graft.core.ScratchDirs
 
 class OpsScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -214,7 +215,7 @@ class OpsScaleSpec extends AnyFunSuite {
     val rows = dims.map { case (id, w, h) =>
       (id, ImageCodec.encodeBmp(w, h, ImageCodec.content(id, w, h)))
     }
-    val dir = java.nio.file.Files.createTempDirectory("mm_mb").toString
+    val dir = ScratchDirs.create("mm_mb")
     rows.toDF("id", "payload").repartition(3).write.mode("overwrite")
       .parquet(dir)
     val back = sp.read.parquet(dir)

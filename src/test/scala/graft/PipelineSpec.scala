@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipelines.EventsPipeline
 import graft.serving.ParquetKVSink
 import graft.sources.JsonSource
+import graft.core.ScratchDirs
 
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,7 +27,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("serving_events writes through the parquet KV sink with unix timestamps") {
-    val out = Files.createTempDirectory("kvsink").toString
+    val out = ScratchDirs.create("kvsink")
     val served = EventsPipeline.serve(spark, d, new ParquetKVSink(out))
     assert(served.columns.contains("sortKey"))
     val back = spark.read.parquet(s"$out/serving_events")
@@ -38,7 +39,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("JsonSource discovers hive-partitioned landing-zone columns") {
-    val dir = Files.createTempDirectory("jsonhive").toString
+    val dir = ScratchDirs.create("jsonhive")
     val part = java.nio.file.Path.of(s"$dir/year=2024/month=01/day=05/hour=09")
     Files.createDirectories(part)
     Files.writeString(part.resolve("batch1.json"),
@@ -52,7 +53,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("JsonSource round-trips a fixed-schema landing zone, batch and stream") {
-    val dir = Files.createTempDirectory("jsonsrc").toString
+    val dir = ScratchDirs.create("jsonsrc")
     Files.writeString(java.nio.file.Path.of(s"$dir/part1.json"),
       """{"id":1,"ts":"2024-01-01T10:00:00Z","v":1.5}
         |{"id":2,"ts":"2024-01-01T11:00:00Z","v":2.5}""".stripMargin)
@@ -81,7 +82,7 @@ class PipelineSpec extends AnyFunSuite {
   // surface only in production.
   test("JsonSource ingests gzip-compressed nested landing zones, batch and stream") {
     import java.util.zip.GZIPOutputStream
-    val dir = Files.createTempDirectory("jsongz").toString
+    val dir = ScratchDirs.create("jsongz")
     def writeGz(rel: String, lines: String): Unit = {
       val p = java.nio.file.Path.of(s"$dir/$rel")
       Files.createDirectories(p.getParent)
@@ -110,7 +111,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("JsonSource quarantines malformed records with the raw line intact") {
-    val dir = Files.createTempDirectory("jsonbad").toString
+    val dir = ScratchDirs.create("jsonbad")
     // BROKEN and "not json" set the corrupt-record slot; the blank line
     // and the literal `null` parse to a NULL struct with NO _cr flag —
     // they must quarantine too, not land as all-null clean rows
@@ -134,7 +135,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("JsonSource rescues undeclared fields instead of dropping them") {
-    val dir = Files.createTempDirectory("jsonrescue").toString
+    val dir = ScratchDirs.create("jsonrescue")
     // producer starts emitting `extra` (scalar) and `meta` (object) fields
     // the declared DDL knows nothing about
     Files.writeString(java.nio.file.Path.of(s"$dir/evolved.json"),
@@ -162,7 +163,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("JsonSource rescues declared-field type mismatches and raw lines") {
-    val dir = Files.createTempDirectory("jsonrescue2").toString
+    val dir = ScratchDirs.create("jsonrescue2")
     // row 2: declared `v double` arrives as a non-numeric string —
     // PERMISSIVE parsing nulls the field; the raw text must survive in
     // the rescue map instead of vanishing. row 3: legitimate JSON null
@@ -190,7 +191,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("IncrementalIngest processes each landing-zone file exactly once") {
     import graft.sources.{DirectoryListing, IncrementalIngest, NotifiedFiles}
-    val zone = Files.createTempDirectory("ingestzone").toString
+    val zone = ScratchDirs.create("ingestzone")
     val ledger = s"$zone/_ledger/processed.txt"
     Files.writeString(java.nio.file.Path.of(s"$zone/a.json"), """{"id":1}""")
     Files.writeString(java.nio.file.Path.of(s"$zone/b.json"), """{"id":2}""")
@@ -225,7 +226,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("IncrementalIngest re-delivers a notified batch whose write crashed") {
     import graft.sources.{IncrementalIngest, NotifiedFiles}
-    val zone = Files.createTempDirectory("ingestcrash").toString
+    val zone = ScratchDirs.create("ingestcrash")
     val ledger = s"$zone/_ledger/processed.txt"
     Files.writeString(java.nio.file.Path.of(s"$zone/a.json"), """{"id":1}""")
     Files.writeString(java.nio.file.Path.of(s"$zone/b.json"), """{"id":2}""")

@@ -1,23 +1,32 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.ScratchDirs
 import graft.graph.{ManifestStore, Mode, Registry, Runner, TableDef, WriteMode}
 import graft.pipelines.EventsPipeline
 
 /** Streaming-vs-batch equivalence of the whole medallion DAG: the same
   * transforms produce identical gold tables whether the bronze source is
   * a batch scan or a micro-batched file stream. */
-class RunnerSpec extends AnyFunSuite {
+class RunnerSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.sf0001
 
   test("streaming run (AvailableNow) equals batch run for the events DAG") {
     val reg = EventsPipeline.build(spark, d)
-    val batchDir = Files.createTempDirectory("runner_batch").toString
-    val streamDir = Files.createTempDirectory("runner_stream").toString
+    val batchDir = ScratchDirs.create("runner_batch")
+    val streamDir = ScratchDirs.create("runner_stream")
 
     val batchOut = Runner.runBatch(reg, batchDir)
 
@@ -48,8 +57,8 @@ class RunnerSpec extends AnyFunSuite {
   test("runStreamingThenFull materializes a static-only Incremental boundary") {
     val sp = spark
     import sp.implicits._
-    val in = Files.createTempDirectory("runner_static_in").toString
-    val out = Files.createTempDirectory("runner_static_out").toString
+    val in = ScratchDirs.create("runner_static_in")
+    val out = ScratchDirs.create("runner_static_out")
     Seq((1L, 10L), (2L, 20L)).toDF("k", "v").write.mode("overwrite").parquet(in)
     val r = new Registry(sp)
     r.source("feed", () => sp.read.parquet(in))
@@ -70,13 +79,108 @@ class RunnerSpec extends AnyFunSuite {
     assert(sp.read.parquet(paths("summary")).head().getLong(0) === 30L)
   }
 
+  // Each table is materialized once and its consumers read it back: a
+  // run scans each source once, and a consumer's plan scans only the
+  // written outputs of its deps, never their lineage.
+  test("runBatch scans each source once; consumers plan from written deps") {
+    val sp = spark
+    import sp.implicits._
+    val facts = ScratchDirs.create("runner_scan_facts")
+    val dim = ScratchDirs.create("runner_scan_dim")
+    val out = ScratchDirs.create("runner_scan_out")
+    (1L to 100L).map(k => (k, k % 3)).toDF("k", "g")
+      .write.mode("overwrite").parquet(facts)
+    Seq((0L, "zero"), (1L, "one"), (2L, "two")).toDF("g", "label")
+      .write.mode("overwrite").parquet(dim)
+    val r = new Registry(sp)
+    r.source("facts", () => sp.read.parquet(facts))
+    r.source("dim", () => sp.read.parquet(dim))
+    r.register(TableDef("base", Seq("facts"), { case Seq(f) =>
+      f.filter(col("k") > 10) }))
+    r.register(TableDef("by_g", Seq("base"), { case Seq(b) =>
+      b.groupBy("g").agg(count(lit(1)).as("n")) }))
+    r.register(TableDef("labeled", Seq("base", "dim"), { case Seq(b, d) =>
+      b.join(d, "g") }))
+
+    def dir(p: String) = new Path(p).toUri.getPath
+    // (written table, the directories its plan scanned)
+    val writes = new ConcurrentLinkedQueue[(String, Seq[String])]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+          c.outputPath.getName
+        }.foreach { table =>
+          writes.add(table -> collectWithSubqueries(qe.executedPlan) {
+            case s: FileSourceScanExec => s.relation.location.rootPaths.map(p => dir(p.toString))
+          }.flatten)
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(sp.sparkContext)
+    sp.listenerManager.register(listener)
+    try {
+      Runner.runBatch(r, out)
+      ListenerBusDrain(sp.sparkContext)
+    } finally sp.listenerManager.unregister(listener)
+
+    val scanned = writes.asScala.toMap
+    assert(scanned.keySet === Set("base", "by_g", "labeled"))
+    val all = scanned.values.flatten.toSeq
+    assert(all.count(_ == dir(facts)) === 1, "facts scanned once per run")
+    assert(all.count(_ == dir(dim)) === 1, "dim scanned once per run")
+    assert(scanned("by_g") === Seq(dir(s"$out/base")),
+      "by_g reads base's output, not base's lineage")
+    assert(scanned("labeled").toSet === Set(dir(s"$out/base"), dir(dim)))
+  }
+
+  // Each transform waits for the other to have started: a runner that
+  // runs independent tables one after another fails after 30 s.
+  test("runBatch runs independent tables concurrently") {
+    val sp = spark
+    import sp.implicits._
+    val out = ScratchDirs.create("runner_concurrent")
+    val aStarted, bStarted = new CountDownLatch(1)
+    def meets(mine: CountDownLatch, other: CountDownLatch)
+        : Seq[DataFrame] => DataFrame = { case Seq(f) =>
+      mine.countDown()
+      assert(other.await(30, TimeUnit.SECONDS),
+        "the other table did not start while this one ran")
+      f
+    }
+    val r = new Registry(sp)
+    r.source("feed", () => Seq(1L, 2L).toDF("k"))
+    r.register(TableDef("a", Seq("feed"), meets(aStarted, bStarted)))
+    r.register(TableDef("b", Seq("feed"), meets(bStarted, aStarted)))
+    val paths = Runner.runBatch(r, out)
+    assert(sp.read.parquet(paths("a")).count() === 2L)
+    assert(sp.read.parquet(paths("b")).count() === 2L)
+  }
+
+  test("a failing table rethrows its own exception and leaves its consumers unwritten") {
+    val sp = spark
+    import sp.implicits._
+    val out = ScratchDirs.create("runner_failure")
+    val boom = new IllegalStateException("boom")
+    val r = new Registry(sp)
+    r.source("feed", () => Seq(1L, 2L).toDF("k"))
+    r.register(TableDef("bad", Seq("feed"), _ => throw boom))
+    r.register(TableDef("after_bad", Seq("bad"), { case Seq(b) => b }))
+    r.register(TableDef("good", Seq("feed"), { case Seq(f) => f }))
+    val e = intercept[IllegalStateException](Runner.runBatch(r, out))
+    assert(e eq boom)
+    assert(!Files.exists(Paths.get(out, "bad")))
+    assert(!Files.exists(Paths.get(out, "after_bad")))
+    assert(sp.read.parquet(s"$out/good").count() === 2L,
+      "an independent table still completes")
+  }
+
   // K3 (zetadex-mm-uptime-pipeline-v3.sql:151–157): the hourly
   // `mode("append").saveAsTable` cadence, as idempotent dynamic partition
   // overwrite — a retried run must NOT double rows.
   test("WriteMode.Append: re-running the same batch does not double rows") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("runner_append").toString
+    val out = ScratchDirs.create("runner_append")
     def reg(hours: Seq[(String, Long)]): Registry = {
       val r = new Registry(sp)
       r.source("uptime_feed", () => hours.toDF("hour_", "seconds_up"))
@@ -99,7 +203,7 @@ class RunnerSpec extends AnyFunSuite {
   test("WriteMode.Upsert: batch runs merge into the existing table by key") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("runner_upsert").toString
+    val out = ScratchDirs.create("runner_upsert")
     def reg(rows: Seq[(Long, Long, String)]): Registry = {
       val r = new Registry(sp)
       r.source("cdc_feed", () => rows.toDF("k", "seq", "v"))
@@ -123,7 +227,7 @@ class RunnerSpec extends AnyFunSuite {
   test("WriteMode.Upsert with partitionCols leaves untouched partitions' files intact") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("runner_upsert_pruned").toString
+    val out = ScratchDirs.create("runner_upsert_pruned")
     // bucket is a stable function of the key — the precondition for
     // partition-pruned merging
     def reg(rows: Seq[(Long, Long, String)]): Registry = {
@@ -169,7 +273,7 @@ class RunnerSpec extends AnyFunSuite {
   test("downstream of an Upsert table reads merged history, not the run's plan") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("runner_upsert_dag").toString
+    val out = ScratchDirs.create("runner_upsert_dag")
     def reg(rows: Seq[(Long, Long, String)]): Registry = {
       val r = new Registry(sp)
       r.source("cdc_feed", () => rows.toDF("k", "seq", "v"))
@@ -192,7 +296,7 @@ class RunnerSpec extends AnyFunSuite {
   test("upsertParquet recovers the backup generation after a crashed swap") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("runner_upsert_crash").toString
+    val out = ScratchDirs.create("runner_upsert_crash")
     val path = s"$out/latest"
     Runner.upsertParquet(path, Seq("k"), "seq")(
       Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("k", "seq", "v"))
@@ -214,7 +318,7 @@ class RunnerSpec extends AnyFunSuite {
   test("pruned upsert keeps on-disk columns absent from the batch") {
     val sp = spark
     import sp.implicits._
-    val out = Files.createTempDirectory("runner_upsert_evo").toString
+    val out = ScratchDirs.create("runner_upsert_evo")
     val path = s"$out/latest"
     ManifestStore.upsert(path, Seq("k"), "seq", Nil, Seq("bucket"))(
       Seq((1L, 1L, "a", "x1", 0), (3L, 1L, "c", "x3", 0))

@@ -48,7 +48,7 @@ class ScratchDirsSpec extends AnyFunSuite {
   }
 
   test("the shutdown hook deletes the root when the JVM exits") {
-    val tmp = Files.createTempDirectory("scratch_child_tmp")
+    val tmp = Paths.get(ScratchDirs.create("scratch_child_tmp"))
     val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val p = new ProcessBuilder(java, "-cp", System.getProperty("java.class.path"),
         s"-Djava.io.tmpdir=$tmp", "graft.ScratchDirsChild")

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Conf
+import graft.core.{Conf, ScratchDirs}
 import graft.serving.{ParquetKVSink, ServingJobs}
 
 class ServingJobsSpec extends AnyFunSuite {
@@ -20,7 +19,7 @@ class ServingJobsSpec extends AnyFunSuite {
       (ts("2024-01-30 09:00:00"), "SOL", 999.0, 99.0)) // wrong hour, dropped
       .toDF("timestamp", "asset", "volume", "fees")
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = Files.createTempDirectory("servejobs").toString
+    val out = ScratchDirs.create("servejobs")
     val served = ServingJobs.serveSnapshot(gold, "timestamp", "asset",
       Seq("volume", "fees"), conf, new ParquetKVSink(out), "leaderboard")
     val rows = served.collect()
@@ -46,7 +45,7 @@ class ServingJobsSpec extends AnyFunSuite {
       (ts("2024-01-30 09:00:00"), "SOL", "authA", 9.9)) // wrong hour
       .toDF("timestamp", "asset", "authority", "balance_change")
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = Files.createTempDirectory("servefund").toString
+    val out = ScratchDirs.create("servefund")
     val served = ServingJobs.serveFunding(gold, conf,
       new ParquetKVSink(out), "funding")
     val rows = served.collect()
@@ -92,7 +91,7 @@ class ServingJobsSpec extends AnyFunSuite {
     val gold = sp.createDataFrame(
       java.util.List.of(org.apache.spark.sql.Row(row: _*)), schema)
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = Files.createTempDirectory("serveleader").toString
+    val out = ScratchDirs.create("serveleader")
     val served = ServingJobs.serveLeaderboard(gold, conf,
       new ParquetKVSink(out), "leaderboard_v2")
     val rows = served.collect()
@@ -123,7 +122,7 @@ class ServingJobsSpec extends AnyFunSuite {
       .toDF("timestamp", "authority", "balance", "unrealized_pnl",
         "equity", "cumulative_pnl")
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = Files.createTempDirectory("servepnl").toString
+    val out = ScratchDirs.create("servepnl")
     val served = ServingJobs.servePnlSnapshots(pnl, conf,
       new ParquetKVSink(out), "cleaned_pnl")
     // snapshot = the as-of hour only
@@ -151,7 +150,7 @@ class ServingJobsSpec extends AnyFunSuite {
     import sp.implicits._
     val tiers = Seq(("authA", ts("2024-01-30 10:00:00"), 123456.0, 1))
       .toDF("authority", "block_time", "volume_30d", "fee_tier")
-    val out = Files.createTempDirectory("servetable").toString
+    val out = ScratchDirs.create("servetable")
     val served = ServingJobs.serveTable(tiers, new ParquetKVSink(out),
       "fee_tiers", hashKey = "authority", rangeKey = Some("blockTime"))
     assert(served.columns.toSeq ===
@@ -167,7 +166,7 @@ class ServingJobsSpec extends AnyFunSuite {
     import sp.implicits._
     val hourly = Seq(("SOL", 10.0, 2L), ("ETH", 5.0, 1L))
       .toDF("asset", "volume", "trade_count")
-    val out = Files.createTempDirectory("servestats").toString
+    val out = ScratchDirs.create("servestats")
     val served = ServingJobs.serveAllTimeStats(hourly, "volume",
       "trade_count", baseVolume = 455316870.8536678, baseCount = 200322L,
       new ParquetKVSink(out), "stats")
@@ -243,7 +242,7 @@ class ServingJobsSpec extends AnyFunSuite {
     import sp.implicits._
     import graft.serving.KVTableSpec
     import graft.serving.KVTableSpec._
-    val base = Files.createTempDirectory("kvspec").toString
+    val base = ScratchDirs.create("kvspec")
     val df = Seq(
       (1L, 10L, "us", 5L, 1.5), (1L, 20L, "eu", 3L, 2.5),
       (2L, 10L, "us", 9L, 3.5)).toDF("id", "timestamp", "region", "score", "v")

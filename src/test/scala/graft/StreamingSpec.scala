@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
+import graft.core.ScratchDirs
 
 case class Ev(k: String, seq: Long, v: String)
 case class TsEv(ts: Timestamp, user: String, value: Double)
@@ -239,12 +240,12 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import graft.graph.{Mode, Registry, TableDef}
     val sp = spark
-    val staged = JFiles.createTempDirectory("ssj_restart_src_").toString
-    val out = JFiles.createTempDirectory("ssj_restart_out_").toString
+    val staged = ScratchDirs.create("ssj_restart_src_")
+    val out = ScratchDirs.create("ssj_restart_out_")
 
     def writeSlice(rows: Seq[(String, Long, String, Long, Double)],
                    name: String, mtime: Long): Unit = {
-      val tmp = JFiles.createTempDirectory("ssj_slice_").toString
+      val tmp = ScratchDirs.create("ssj_slice_")
       sp.createDataFrame(rows).toDF("ts0", "user_id", "event_type",
           "event_id", "value")
         .select(col("ts0").cast("timestamp").as("ts"), col("user_id"),
@@ -319,12 +320,12 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import graft.graph.{Mode, Registry, TableDef}
     val sp = spark
-    val staged = JFiles.createTempDirectory("rl_restart_src_").toString
-    val out = JFiles.createTempDirectory("rl_restart_out_").toString
+    val staged = ScratchDirs.create("rl_restart_src_")
+    val out = ScratchDirs.create("rl_restart_out_")
 
     def writeSlice(rows: Seq[(String, Long, Long)], name: String,
                    mtime: Long): Unit = {
-      val tmp = JFiles.createTempDirectory("rl_slice_").toString
+      val tmp = ScratchDirs.create("rl_slice_")
       sp.createDataFrame(rows).toDF("ts0", "user_id", "event_id")
         .select(col("ts0").cast("timestamp").as("ts"), col("user_id"),
           col("event_id"))
@@ -386,11 +387,11 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
     import graft.graph.{Mode, Registry, Runner, TableDef, WriteMode}
     val sp = spark
-    val staged = JFiles.createTempDirectory("sched_src_").toString
-    val out = JFiles.createTempDirectory("sched_out_").toString
+    val staged = ScratchDirs.create("sched_src_")
+    val out = ScratchDirs.create("sched_out_")
     var mtime = 1700000000000L
     def land(rows: Seq[(String, Double)], name: String): Unit = {
-      val tmp = JFiles.createTempDirectory("sched_slice_").toString
+      val tmp = ScratchDirs.create("sched_slice_")
       sp.createDataFrame(rows).toDF("ts0", "value")
         .select(col("ts0").cast("timestamp").as("ts"), col("value"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -480,7 +481,7 @@ class StreamingSpec extends AnyFunSuite {
     val activeKeys = 4
     val out = StreamingOps.statefulSessions(
       gapMinutes = 30, lateness = "10 minutes")(mem.toDS())
-    val ckpt = java.nio.file.Files.createTempDirectory("soak_ckpt").toString
+    val ckpt = ScratchDirs.create("soak_ckpt")
     val q = out.writeStream.format("memory").queryName("soak_sessions")
       .outputMode("append")
       .option("checkpointLocation", ckpt)
@@ -548,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
       val mem = MemoryStream[SessionEvent]
       val out = StreamingOps.statefulSessions(
         gapMinutes = 30, lateness = "10 minutes")(mem.toDS())
-      val ckpt = java.nio.file.Files.createTempDirectory("rocks_ckpt").toString
+      val ckpt = ScratchDirs.create("rocks_ckpt")
       val q = out.writeStream.format("memory").queryName("rocks_sessions")
         .outputMode("append")
         .option("checkpointLocation", ckpt)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.ScratchDirs
 
 /** Contract pins for the custom DataSourceV2 connector
   * (graft.sources.TicksProvider): pushdown REALLY narrows generation,
@@ -99,10 +100,8 @@ class TicksSourceSpec extends AnyFunSuite {
 
   test("checkpoint restart resumes from the committed offset, no dup/loss") {
     val sp = spark
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ticks_ckpt_").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_ticks_out_").toString
+    val ckpt = ScratchDirs.create("graft_ticks_ckpt_")
+    val out = ScratchDirs.create("graft_ticks_out_")
     def run(): Unit = {
       val q = sp.readStream.format("graft-ticks")
         .option("rows", 3000L).option("ratePerBatch", 700L)

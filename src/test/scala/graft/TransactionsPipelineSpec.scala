@@ -2,7 +2,10 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.col
+import graft.core.ScratchDirs
+import graft.graph.Runner
 import graft.pipelines.TransactionsPipeline
 
 case class TxEvent(name: String, event: Map[String, String])
@@ -294,5 +297,22 @@ class TransactionsPipelineSpec extends AnyFunSuite {
     assert(roll.length === 2)
     val sol = roll.find(_.getAs[String]("asset") === "SOL").get
     assert(sol.getAs[Double]("volume_24h") === 8.4)
+  }
+
+  // Spark's generated-class cache must hold the DAG's working set: the
+  // hourly cadence re-runs the same plans, so a second run recompiles only
+  // classes whose inlined literals changed. With Spark's default 100-entry
+  // cache the DAG evicts its own classes and recompiles nearly all of them.
+  test("a second runBatch of the DAG reuses the first run's generated classes") {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = ScratchDirs.create("tx_codegen")
+    val c0 = compiles
+    Runner.runBatch(registry, out)
+    val first = compiles - c0
+    val c1 = compiles
+    Runner.runBatch(registry, out)
+    val second = compiles - c1
+    assert(second < 0.1 * first,
+      s"first run compiled $first classes, the second $second")
   }
 }

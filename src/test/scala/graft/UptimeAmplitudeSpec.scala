@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipelines.{AmplitudePipeline, MMUptimePipeline}
+import graft.core.ScratchDirs
 
 class UptimeAmplitudeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,7 +44,7 @@ class UptimeAmplitudeSpec extends AnyFunSuite {
       (ts("2024-01-05 10:00:00"), "mm1", "SOL", "bid", 99.0, 1.0),
       (ts("2024-01-05 10:00:00"), "mm1", "SOL", "ask", 101.0, 1.0))
       .toDF("timestamp", "authority", "asset", "side", "price", "size")
-    val out = java.nio.file.Files.createTempDirectory("mm_k3").toString
+    val out = ScratchDirs.create("mm_k3")
     val reg = MMUptimePipeline.build(sp, () => quotes.toDF())
     graft.graph.Runner.runBatch(reg, out)
     val once = sp.read.parquet(s"$out/cleaned_mm_uptime").count()
