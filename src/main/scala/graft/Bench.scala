@@ -1,5 +1,11 @@
 package graft
+
+import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
+import graft.QueryRun._
 
 /** Round bench. The driver runs `runMain graft.Bench` once per round at
   * sf0.1 and reads the ONE printed JSON line.
@@ -10,45 +16,21 @@ import org.apache.spark.sql.SparkSession
   * early ones ran clean, gc 13.9 s — classic post-CodeCacheFull
   * interpreted-mode pattern). The fix is structural, not a bigger knob:
   * the suite is split round-robin across N sequential child JVMs
-  * (default 4 → ~100 executions each, the budget the original 512m
-  * cache was sized for; the cache is now 1g on top). Each child writes
-  * its full per-query record to a file; the parent merges, prints the
-  * bounded headline line, and writes the full record. Per-JVM JIT
-  * code-cache peak occupancy is recorded so exhaustion is a measurement
-  * (`code_cache_peak_mb` ~= `code_cache_max_mb` means the cache filled)
-  * rather than a hypothesis.
+  * (`SPARK_GRAFT_BENCH_SHARDS`, default 4; 1 runs the one shard in this
+  * JVM). Each shard writes its full per-query record; the parent merges
+  * them, prints the bounded headline line, and writes the full record.
+  * Per-JVM JIT code-cache peak occupancy is recorded so exhaustion is a
+  * measurement (`code_cache_peak_mb` ~= `code_cache_max_mb` means the
+  * cache filled) rather than a hypothesis.
   *
-  * Contention-robust timing (round-12): each query is timed
-  * min-of-`reps` (default 3) after the untimed warm-up — round-11's
-  * time-once protocol let a single host-load spike (load_avg 14 on a
-  * 32-cpu multi-tenant box) permanently record an 87× straggler on a
-  * 0.24 s broadcast anti join. The min across reps is the steady-state
-  * plan cost by definition (contention only ever adds time); the
-  * discarded wall-clock and the per-shard load_avg start/end brackets
-  * go into the record so residual environmental noise is attributable,
-  * not mysterious.
+  * Contention-robust timing (round-12): each query's full output is
+  * timed min-of-`reps` after the untimed warm-up ([[QueryRun.time]]).
+  * The discarded wall-clock and the per-shard load_avg start/end
+  * brackets go into the record so residual environmental noise is
+  * attributable, not mysterious. A query whose every rep failed has no
+  * cost: it is named in `failed` instead of `queries`.
   */
 object Bench {
-  /** Names that run a real checkpointed Structured Streaming query (temp
-    * checkpoint dirs are created fresh per invocation, so a re-run can
-    * never silently reuse state — but a measurement below this floor
-    * still means the streaming machinery did NOT run, e.g. a harness
-    * change broke the query into a no-op, and the number would be
-    * measurement fiction). Flagged in the emitted record rather than
-    * dropped, so a bad round is visible instead of quietly wrong. */
-  private[graft] val STREAMING_FLOOR_SEC = 0.25
-  private[graft] def streamingNames: Set[String] =
-    graft.queries.StreamingQueries.qs.map(_.name).toSet +
-      "q105_incremental_neardup" + "q310_catalog_streaming_write"
-
-  /** Streaming queries whose measured time is physically impossible for
-    * a real checkpointed run — named, not dropped, so a broken round is
-    * loud instead of quietly flattering. */
-  private[graft] def streamingSuspects(results: Seq[(String, Double)],
-                                       streaming: Set[String],
-                                       floor: Double): Seq[String] =
-    results.collect { case (n, dt) if streaming(n) && dt < floor => n }
-
   /** Headline subset for the PRINTED one-line record: the driver captures
     * only a bounded stdout tail, and a 140-query line (~8 KB) truncates
     * past it — round 9's BENCH record was unparseable for exactly that
@@ -63,165 +45,23 @@ object Bench {
   private[graft] def isHeadline(name: String): Boolean =
     HEADLINE(name.takeWhile(_ != '_'))
 
-  /** Round-robin shard assignment over the SORTED query list, so heavy
-    * late-alphabet families (similarity, streaming, text) spread evenly
-    * instead of landing in one child. */
-  private[graft] def shardOf(idx: Int, nShards: Int): Int = idx % nShards
-
-  private def jitPools() = {
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("CodeCache"))
-  }
-
-  /** (peakUsedMb, maxMb) summed across the segmented code-cache pools.
-    * peak ≈ max means the JIT cache filled and compilation stopped —
-    * the silent failure mode this bench is instrumented against. */
-  private[graft] def codeCacheMb(): (Long, Long) = {
-    val pools = jitPools()
-    val peak = pools.map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L)).sum
-    val max = pools.map(p => Option(p.getUsage).map(_.getMax).getOrElse(0L)).sum
-    (peak / (1024 * 1024), max / (1024 * 1024))
-  }
-
-  /** Timed repetitions per query AFTER the untimed warm-up run. The
-    * recorded per-query number is the MIN across reps: steady-state plan
-    * cost is the min by definition — external host contention (another
-    * tenant's load spike, a GC storm elsewhere on the box) only ever
-    * ADDS time, so one polluted rep cannot pollute the record the way
-    * the round-9..11 time-once protocol let it (r11 forensics: an anti
-    * join that costs 0.24 s clean was recorded at 20.7 s because the one
-    * timed run landed on a load_avg-14 host spike). Overridable via
-    * SPARK_GRAFT_BENCH_REPS for dev iteration. */
-  private[graft] val DEFAULT_REPS = 3
-
-  /** Adaptive rep policy (round-16, VERDICT r15 Next #1): min-of-N only
-    * protects SUB-SECOND queries from contention spikes (a 50 ms spike
-    * on a 0.3 s query is a 17% distortion; on a 4 s query it is noise),
-    * while repeating multi-second queries is where the suite's wall
-    * cost lives — the r15 top-20 queries were 80.9 s of min-sum but
-    * ~325 s of bench wall under warm+3. So: queries whose WARM-UP run
-    * took >= this threshold get MIN-OF-TWO timed reps; everything below
-    * keeps min-of-`reps`. The warm-up duration (not the timed one)
-    * makes the decision, so the policy is known before the first timed
-    * rep and a query cannot straddle policies mid-measurement.
-    *
-    * Why 2 and not 1 above the floor (r16 in-round evidence): a
-    * single-rep protocol run recorded q305 at 3.13 s where min-of-3
-    * standalone gives 1.51 s — one polluted rep DOUBLED the recorded
-    * value with nothing to reject it. min-of-2 rejects the common
-    * one-spike case for ~70 s of extra wall across the whole suite
-    * (the >2 s queries sum ~70 s), keeping the bench inside the
-    * r14-proven driver budget while never leaving a multi-second query
-    * unprotected. */
-  private[graft] val ADAPTIVE_REP_FLOOR_SEC = 2.0
-  private[graft] val HEAVY_REPS = 2
-
-  private[graft] def repsFor(warmSec: Double, reps: Int): Int =
-    if (warmSec >= ADAPTIVE_REP_FLOOR_SEC) math.min(HEAVY_REPS, reps)
-    else reps
-
-  /** min-of-N with contention accounting: returns the per-query min plus
-    * suite-level straggler stats (how much time the min discarded), so a
-    * run on a loaded host shows HOW loaded in the record itself. */
-  private[graft] def minOfReps(times: Seq[Double]): Double = times.min
-
-  /** Contention gauge for one query, over SUCCEEDED reps only: a
-    * fast-failing rep (50 ms exception) is neither steady-state nor
-    * contention, and `allTimes.sum - best*n` would let it push the
-    * product past the sum and SUBTRACT from the suite-level gauge.
-    * Clamped at 0 for the all-failed fallback (best is then a failure
-    * min and no rep was discardable contention). */
-  private[graft] def repDiscard(succeeded: Seq[Double], best: Double): Double =
-    math.max(0.0, succeeded.sum - best * succeeded.size)
-
-  /** Warm+timed protocol for one query set, in THIS JVM. Per-query
-    * warm-up (JIT, codegen compile, parquet footer/page caches), clear
-    * cached plans, then time `reps` further runs and keep the MIN —
-    * steady-state numbers are what a long-lived cluster sees, and the
-    * min is robust to host-contention spikes that inflate any single
-    * run (see DEFAULT_REPS). Also returns the total wall-clock the min
-    * discarded (`sum(rep) - sum(min)`), a direct contention gauge. */
-  private def runSuite(spark: SparkSession, sfDir: String,
-                       selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                       reps: Int,
-                       onProgress: Seq[(String, Double)] => Unit = _ => ())
-      : (Seq[(String, Double)], Double) = {
-    var discarded = 0.0
-    var done = List.empty[(String, Double)]
-    val results = selected.map { case (name, fn) =>
-      def sweep(): Unit = {
-        spark.catalog.clearCache() // don't let cached barriers leak memory
-        // sweep blocks pinned by the query's FINAL localCheckpoint (the
-        // iterative ops release their intermediates themselves, but the
-        // returned table's checkpoint outlives the query) — across 200+
-        // query runs in one JVM these otherwise stack into memory
-        // pressure that inflates later queries' times with eviction and
-        // GC, which is measurement pollution, not plan cost
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-      // the warm-up run is untimed in the record but its duration drives
-      // the adaptive rep policy (see repsFor); a FAILED warm-up keeps the
-      // full rep count (its fast failure says nothing about plan cost)
-      val w0 = System.nanoTime()
-      val warmOk =
-        try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val warmSec = (System.nanoTime() - w0) / 1e9
-      sweep()
-      val nReps = if (warmOk) repsFor(warmSec, reps) else reps
-      // a FAILED rep must not enter the min: an exception that fires
-      // fast (transient OOM, temp-dir churn) would otherwise record its
-      // 50 ms as the query's "steady-state plan cost" and silently
-      // flatter the gate — min-of-N selects the fastest failure by
-      // construction. Failed reps are timed but excluded; if EVERY rep
-      // failed, fall back to the min of the failures (the pre-r12
-      // behavior: a broken query still shows a duration, and its
-      // brokenness shows up in the correctness gate, not here).
-      val timed = (1 to math.max(1, nReps)).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        sweep()
-        (dt, ok)
-      }
-      val succeeded = timed.collect { case (dt, true) => dt }
-      val best =
-        if (succeeded.nonEmpty) minOfReps(succeeded)
-        else minOfReps(timed.map(_._1))
-      discarded += repDiscard(succeeded, best)
-      done = (name -> best) :: done
-      // incremental record: a killed run (driver timeout) leaves every
-      // completed query's number on disk instead of nothing (r15's
-      // BENCH record was rc=124 + parsed:null for want of exactly this)
-      onProgress(done.reverse)
-      name -> best
-    }
-    (results, discarded)
-  }
-
   private def qJson(rs: Seq[(String, Double)]): String =
     rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
 
+  private def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   /** Measurement conditions, embedded so every recorded bench line is
     * self-documenting (BASELINE.md "Bench method"): the per-query values
-    * are min-of-`reps` (plan cost), `load_avg_start`/`load_avg_end`
-    * bracket the run so a contended host is visible in the record, and
-    * `discarded_sec` is the wall-clock the min rejected — a direct
-    * measure of how much contention the protocol absorbed. */
-  private def envJson(cpus: String, gcSec: Double,
+    * are min-of-`reps` of the timed `action`, `load_avg_start`/
+    * `load_avg_end` bracket the run so a contended host is visible in the
+    * record, and `discarded_sec` is the wall-clock the min rejected. */
+  private def envJson(cpus: Int, gcSec: Double,
                       loadStart: Double, loadEnd: Double,
                       suspect: Seq[String], shards: Int,
                       cachePeakMb: Long, cacheMaxMb: Long,
-                      reps: Int, discardedSec: Double): String = {
-    import java.lang.management.ManagementFactory
-    val os = ManagementFactory.getOperatingSystemMXBean
-    val suspectJson = suspect.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s""""cpus":$cpus,"host_cpus":${os.getAvailableProcessors},""" +
+                      reps: Int, discardedSec: Double,
+                      failed: Seq[String]): String =
+    s""""cpus":$cpus,"host_cpus":${ManagementFactory.getOperatingSystemMXBean.getAvailableProcessors},""" +
       s""""load_avg":$loadStart,""" +
       s""""load_avg_start":$loadStart,"load_avg_end":$loadEnd,""" +
       // Locale.ROOT: a comma-decimal default locale (fr_FR) would
@@ -233,50 +73,13 @@ object Bench {
       s""""shards":$shards,""" +
       s""""code_cache_peak_mb":$cachePeakMb,""" +
       s""""code_cache_max_mb":$cacheMaxMb,""" +
-      s""""streaming_suspect":$suspectJson"""
-  }
+      s""""streaming_suspect":${names(suspect)},""" +
+      s""""action":"noop","failed":${names(failed)}"""
 
-  private def gcSec(): Double = {
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum / 1e3
-  }
+  private def gcSec(): Double =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
 
-  private def loadAvg(): Double = {
-    import java.lang.management.ManagementFactory
-    ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-  }
-
-  /** Child-JVM entry: run the shard's queries, write the full record
-    * line to SPARK_GRAFT_BENCH_OUT, print nothing on stdout (the parent
-    * owns the one-line stdout contract). */
-  private def runShardChild(shardSpec: String, sfDir: String, cpus: String,
-                            out: String): Unit = {
-    val Array(i, n) = shardSpec.split("/").map(_.toInt)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS",
-      DEFAULT_REPS.toString).toInt
-    val spark = graft.core.GraftSession.local(cpus.toInt)
-    warmup(spark, sfDir)
-    val loadStart = loadAvg()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
-      .collect { case ((name, fn), idx) if shardOf(idx, n) == i => (name, fn) }
-    def partial(rs: Seq[(String, Double)]): Unit =
-      java.nio.file.Files.writeString(java.nio.file.Path.of(out),
-        s"""{"metric":"shard","shard":$i,"partial":true,""" +
-          s""""value":${rs.map(_._2).sum},"unit":"sec",""" +
-          s""""n_queries":${rs.size},"queries":${qJson(rs)},"sf":"$sfDir"}\n""")
-    val (results, discarded) = runSuite(spark, sfDir, selected, reps, partial)
-    val (ccPeak, ccMax) = codeCacheMb()
-    val suspect = streamingSuspects(results, streamingNames, STREAMING_FLOOR_SEC)
-    val env = envJson(cpus, gcSec(), loadStart, loadAvg(), suspect, 1,
-      ccPeak, ccMax, reps, discarded)
-    val line =
-      s"""{"metric":"shard","shard":$i,"value":${results.map(_._2).sum},"unit":"sec","n_queries":${results.size},""" +
-        s""""queries":${qJson(results)},"sf":"$sfDir",$env}"""
-    java.nio.file.Files.writeString(java.nio.file.Path.of(out), line + "\n")
-    spark.stop()
-  }
+  private def loadAvg(): Double = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
   private def warmup(spark: SparkSession, sfDir: String): Unit =
     // untimed warmup: JIT/codegen/parquet-footer caches, so the first
@@ -288,146 +91,86 @@ object Bench {
       spark.range(1000000L).select(sum(col("id"))).count()
     } catch { case _: Throwable => () }
 
-  /** Fork one child JVM per shard and run them SEQUENTIALLY (parallel
-    * shards would contend for the same 32 cores and time each other's
-    * stragglers). VM options (add-opens, Xmx, code cache) and classpath
-    * are inherited from this JVM so the child measures the same world. */
-  private def runSharded(nShards: Int, sfDir: String, cpus: String,
-                         finalOut: String): Seq[(Int, com.fasterxml.jackson.databind.JsonNode)] = {
-    import java.lang.management.ManagementFactory
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Path.of(
-      System.getProperty("java.home"), "bin", "java").toString
-    val vmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filterNot(_.startsWith("-agentlib")) // debugger port would clash
-      .toSeq
-    val cp = System.getProperty("java.class.path")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    var complete = List.empty[(Int, com.fasterxml.jackson.databind.JsonNode)]
-    (0 until nShards).map { i =>
-      val out = java.nio.file.Files.createTempFile(s"bench_shard_$i", ".json")
-      val log = java.nio.file.Files.createTempFile(s"bench_shard_$i", ".log")
-      val cmd = (Seq(javaBin) ++ vmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_SHARD", s"$i/$nShards")
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", out.toString)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      // child stdout/stderr go to a log file: the parent's stdout must
-      // stay one parseable JSON line for the driver's tail capture
-      pb.redirectOutput(log.toFile)
-      pb.redirectErrorStream(true)
-      System.err.println(s"[bench] shard $i/$nShards starting (log: $log)")
-      val rc = pb.start().waitFor()
-      // a crashed shard must fail the WHOLE bench loudly (rc + log
-      // path), not surface later as a cryptic parse error on a missing
-      // record file — a partial merge would under-report the suite
-      // total and silently flatter the round
-      if (rc != 0 || !java.nio.file.Files.exists(out))
-        throw new IllegalStateException(
-          s"bench shard $i/$nShards failed (rc=$rc) — log: $log")
-      val rec = mapper.readTree(java.nio.file.Files.readString(out))
-      if (rec.has("partial"))
-        throw new IllegalStateException(
-          s"bench shard $i/$nShards exited 0 with a partial record — log: $log")
-      complete = (i -> rec) :: complete
-      // incremental merged record (r16): a driver-timeout kill mid-suite
-      // leaves the completed shards' full per-query numbers in the
-      // record file, loudly marked partial, instead of r15's `{}` —
-      // stdout stays silent until the real one-line record at the end
-      val soFar = complete.reverse.flatMap { case (_, r) =>
-        import scala.jdk.CollectionConverters._
-        r.get("queries").fields().asScala
-          .map(e => e.getKey -> e.getValue.asDouble()).toSeq
-      }.sortBy(_._1)
-      java.nio.file.Files.writeString(java.nio.file.Path.of(finalOut),
-        s"""{"metric":"total","partial":true,"shards_done":${complete.size},""" +
-          s""""shards":$nShards,"value":${soFar.map(_._2).sum},"unit":"sec",""" +
-          s""""n_queries":${soFar.size},"queries":${qJson(soFar)},"sf":"$sfDir"}\n""")
-      i -> rec
+  /** Times one shard's queries in this JVM and writes the shard record to
+    * `out`: after each query a record marked partial (a killed run keeps
+    * every number it measured), at the end the complete one. */
+  private[graft] def runShard(spark: SparkSession, sfDir: String, shard: Int,
+                              queries: Seq[(String, Query)], reps: Int, out: Path): Unit = {
+    warmup(spark, sfDir)
+    val loadStart = loadAvg()
+    var results = Vector.empty[(String, Double)]
+    var failed = Vector.empty[String]
+    var discarded = 0.0
+    def head = s"""{"metric":"shard","shard":$shard,"value":${results.map(_._2).sum},"unit":"sec",""" +
+      s""""n_queries":${results.size},"queries":${qJson(results)},"sf":"$sfDir""""
+    queries.foreach { case (name, fn) =>
+      val succeeded = QueryRun.time(spark, () => fn(spark, sfDir), reps).flatten
+      if (succeeded.isEmpty) failed :+= name
+      else {
+        val best = minOfReps(succeeded)
+        discarded += repDiscard(succeeded, best)
+        results :+= name -> best
+      }
+      Files.writeString(out, s"""$head,"partial":true}""" + "\n")
     }
+    val (ccPeak, ccMax) = codeCacheMb()
+    val suspect = streamingSuspects(results, streamingNames, STREAMING_FLOOR_SEC)
+    Files.writeString(out, s"$head," + envJson(spark.sparkContext.defaultParallelism,
+      gcSec(), loadStart, loadAvg(), suspect, 1, ccPeak, ccMax, reps, discarded, failed) + "}\n")
+  }
+
+  /** The merged record of the shard records: one line with every query,
+    * or only the headline subset (the printed line). Each shard's load
+    * brackets are kept, so a contention spike is attributable to the
+    * slice of wall-clock it hit. */
+  private def merged(shards: Seq[JsonNode], sfDir: String, headline: Boolean): String = {
+    def all(k: String) = shards.map(_.get(k))
+    def texts(k: String) = all(k).flatMap(_.elements().asScala.map(_.asText()))
+    val results = all("queries").flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()))
+      .sortBy(_._1)
+    val loads = shards.map(s => (s.get("load_avg_start").asDouble(), s.get("load_avg_end").asDouble()))
+    val env = envJson(shards.head.get("cpus").asInt(), all("gc_total_sec").map(_.asDouble()).sum,
+      loads.head._1, loads.last._2, texts("streaming_suspect"), shards.size,
+      all("code_cache_peak_mb").map(_.asLong()).max, all("code_cache_max_mb").map(_.asLong()).max,
+      all("reps").map(_.asInt()).max, all("discarded_sec").map(_.asDouble()).sum,
+      texts("failed").sorted)
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec","n_queries":${results.size},""" +
+      s""""queries":${qJson(results.filter(r => !headline || isHeadline(r._1)))},"sf":"$sfDir",""" +
+      s""""shard_loads":${loads.map { case (s, e) => s"[$s,$e]" }.mkString("[", ",", "]")},$env}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/bench_full_latest.json")
-
-    sys.env.get("SPARK_GRAFT_SHARD") match {
-      case Some(spec) => runShardChild(spec, sfDir, cpus, out); return
-      case None => ()
-    }
-
-    // SPARK_GRAFT_ONLY=q78,q93 times a subset in-process (dev iteration;
-    // the recorded rounds always run the full sharded suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val nShards =
-      if (only.isDefined) 1
-      else sys.env.getOrElse("SPARK_GRAFT_BENCH_SHARDS", "4").toInt
-
-    if (nShards <= 1) {
-      val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS",
-        DEFAULT_REPS.toString).toInt
-      val spark = graft.core.GraftSession.local(cpus.toInt)
-      warmup(spark, sfDir)
-      val loadStart = loadAvg()
-      val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      def partial(rs: Seq[(String, Double)]): Unit =
-        java.nio.file.Files.writeString(java.nio.file.Path.of(out),
-          s"""{"metric":"total","partial":true,"value":${rs.map(_._2).sum},""" +
-            s""""unit":"sec","n_queries":${rs.size},""" +
-            s""""queries":${qJson(rs)},"sf":"$sfDir"}\n""")
-      val (results, discarded) = runSuite(spark, sfDir, selected, reps, partial)
-      val (ccPeak, ccMax) = codeCacheMb()
-      val suspect = streamingSuspects(results, streamingNames, STREAMING_FLOOR_SEC)
-      val env = envJson(cpus, gcSec(), loadStart, loadAvg(), suspect, 1,
-        ccPeak, ccMax, reps, discarded)
-      val total = results.map(_._2).sum
-      def line(rs: Seq[(String, Double)]) =
-        s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-          s""""queries":${qJson(rs)},"sf":"$sfDir",$env}"""
-      println(line(results.filter { case (n, _) => isHeadline(n) }))
-      java.nio.file.Files.writeString(
-        java.nio.file.Path.of(out), line(results) + "\n")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val out = Path.of(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full_latest.json"))
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", DEFAULT_REPS.toString).toInt
+    def inThisJvm(i: Int, n: Int): Unit = {
+      val spark = QueryRun.session(cpus)
+      runShard(spark, sfDir, i, shard(i, n), reps, out)
       spark.stop()
-      return
     }
-
-    val shardRecords = runSharded(nShards, sfDir, cpus, out)
-    import scala.jdk.CollectionConverters._
-    val results: Seq[(String, Double)] = shardRecords.flatMap { case (_, rec) =>
-      val q = rec.get("queries")
-      q.fields().asScala.map(e => e.getKey -> e.getValue.asDouble()).toSeq
-    }.sortBy(_._1)
-    val total = results.map(_._2).sum
-    val gcTotal = shardRecords.map(_._2.get("gc_total_sec").asDouble()).sum
-    val loadStarts = shardRecords.map(_._2.get("load_avg_start").asDouble())
-    val loadEnds = shardRecords.map(_._2.get("load_avg_end").asDouble())
-    val ccPeak = shardRecords.map(_._2.get("code_cache_peak_mb").asLong()).max
-    val ccMax = shardRecords.map(_._2.get("code_cache_max_mb").asLong()).max
-    val reps = shardRecords.map(_._2.get("reps").asInt()).max
-    val discarded = shardRecords.map(_._2.get("discarded_sec").asDouble()).sum
-    val suspect = shardRecords.flatMap(
-      _._2.get("streaming_suspect").elements().asScala.map(_.asText()).toSeq)
-    val env = envJson(cpus, gcTotal, loadStarts.head, loadEnds.last, suspect,
-      nShards, ccPeak, ccMax, reps, discarded)
-    // per-shard load brackets so a contention spike is attributable to
-    // the specific slice of wall-clock it hit
-    val shardLoads = loadStarts.zip(loadEnds)
-      .map { case (s, e) => s"[$s,$e]" }.mkString("[", ",", "]")
-    def line(rs: Seq[(String, Double)]) =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
-        s""""queries":${qJson(rs)},"sf":"$sfDir","shard_loads":$shardLoads,$env}"""
-    // printed record: headline subset only — MUST fit the driver's
-    // bounded stdout-tail capture in one parseable line
-    println(line(results.filter { case (n, _) => isHeadline(n) }))
-    // full per-query record as a file artifact (committed per round as
-    // bench_full_r{N}.json); default path is in-repo so the driver's
-    // end-of-round commit always preserves it
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(out), line(results) + "\n")
+    val mapper = new ObjectMapper()
+    childShard match {
+      case Some((i, n)) => inThisJvm(i, n)
+      case None =>
+        val n = shardCount(sys.env.getOrElse("SPARK_GRAFT_BENCH_SHARDS", "4").toInt)
+        val records =
+          if (n == 1) { inThisJvm(0, 1); Seq(mapper.readTree(Files.readString(out))) }
+          else {
+            var done = Vector.empty[JsonNode]
+            forkShards("graft.Bench", Nil, n, sequential = true) { rec =>
+              done :+= mapper.readTree(rec)
+              // a timeout kill mid-suite leaves the finished shards'
+              // numbers in the record file, marked partial
+              Files.writeString(out, merged(done, sfDir, headline = false).stripSuffix("}") +
+                s""","partial":true,"shards_planned":$n}""" + "\n")
+            }
+            done
+          }
+        // printed record: headline subset only — MUST fit a caller's
+        // bounded stdout-tail capture in one parseable line
+        println(merged(records, sfDir, headline = true))
+        Files.writeString(out, merged(records, sfDir, headline = false) + "\n")
+    }
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-/** Dev tool: time a single catalog query (N timed runs after one warm-up),
-  * on the session factory Bench and Verify use, so per-query optimization work
-  * measures what the driver's bench will see.
+/** Dev tool: time a single catalog query the way Bench does
+  * ([[QueryRun.time]]: an untimed warm-up, then min-of-`runs` full-output
+  * runs, min-of-2 for a warm-up of 2 s or more), on the session Bench and
+  * Verify use. The final adaptive plan of the warm-up run goes to stderr.
   *
   * Usage: runMain graft.BenchOne <queryName> [sfDir] [runs]
   */
@@ -11,22 +12,14 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.local(cpus.toInt)
+    val spark = QueryRun.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val fn = SparkEntry.queries(name)
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-      println(fn(spark, sfDir).queryExecution.executedPlan.toString)
-    fn(spark, sfDir).count() // warm-up
-    spark.catalog.clearCache()
-    val times = (1 to runs).map { _ =>
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      println(f"$name%s: $dt%.2f s ($n rows)")
-      dt
-    }
-    println(f"$name min=${times.min}%.2f median=${times.sorted.apply(runs / 2)}%.2f")
+    val reps = QueryRun.time(spark, () => fn(spark, sfDir), runs,
+      warmUp = df => System.err.println(QueryRun.finalPlan(df)))
+    reps.foreach(r => println(r.fold(s"$name: failed")(dt => f"$name%s: $dt%.2f s")))
+    val times = reps.flatten.sorted
+    if (times.nonEmpty)
+      println(f"$name min=${times.head}%.2f median=${times(times.size / 2)}%.2f")
     spark.stop()
   }
 }

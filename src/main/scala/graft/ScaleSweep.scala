@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * cannot see an O(n log n) → O(n²) cliff; one decade of scale can.
   * This main DERIVES an sf1 dataset from the driver's sf0.1 tables
   * (10 key-shifted shards — see [[deriveSf1]] for why content is
-  * perturbed, not cloned), times the most expensive clean-record
-  * queries at both scales in one JVM, and writes
+  * perturbed, not cloned), times the full output ([[QueryRun.time]]) of
+  * the most expensive clean-record queries at both scales in one JVM,
+  * and writes
   * `BENCH_sf1_subset.json` with per-query ratios. Gate: no query
   * super-linear beyond 12× (data is 10×; the 1.2 allows log factors
   * and fixed-cost noise on sub-second queries).
@@ -68,11 +69,7 @@ object ScaleSweep {
       val dst = java.nio.file.Path.of(s"$dstDir/$t.parquet")
       java.nio.file.Files.deleteIfExists(dst)
       java.nio.file.Files.move(found, dst)
-      // clean the temp dir (crc/_SUCCESS files)
-      val walk = java.nio.file.Files.walk(tmpDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
+      graft.core.ScratchDirs.deleteTree(tmpDir) // crc/_SUCCESS files
     }
 
     // one shard column crossed in, then per-table key shifts; all
@@ -177,10 +174,6 @@ object ScaleSweep {
         col("label")))
   }
 
-  private def time(fn: => Unit): Double = {
-    val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
-  }
-
   /** The pair-generating query families the sf10 probe adds to TOP15
     * (round-13 verdict item 2): the ones whose intermediate candidate
     * sets could hide a quadratic term the 10× gate's 1.2 residual is
@@ -204,8 +197,7 @@ object ScaleSweep {
       if (scale10) "/root/repo/BENCH_sf10_subset.json"
       else "/root/repo/BENCH_sf1_subset.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.local(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session(cpus.toInt)
 
     // the rebuild sentinel is the LAST table deriveSf1 writes — a
     // derivation killed mid-run must rebuild, not silently reuse the
@@ -235,15 +227,10 @@ object ScaleSweep {
       .getOrElse(if (scale10) (TOP15 ++ PairFamilies).distinct else TOP15)
 
     val results = names.flatMap { name =>
-      def sweepCaches(): Unit = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
       try {
         // inside the try: a renamed TOP15 entry must cost ONE record
         // row, not the whole sweep
-        //
+        val fn = SparkEntry.queries(name)
         // Bucketed queries (q131) split into LAYOUT and JOIN phases
         // (round-12 verdict item 5): the one-time bucketed write scales
         // with data rewritten by construction — folding it into the
@@ -251,49 +238,37 @@ object ScaleSweep {
         // exchange-free join the 12× gate actually watches. The layout
         // is timed ONCE per scale (it is a one-time cost by definition;
         // min-of-N would be dishonest for a write that in production
-        // happens exactly once), the join min-of-2 like every other
-        // query, and the gated ratio is the JOIN's.
-        val phased: Option[(String => Double, String => () => Unit)] =
-          if (name == "q131_bucketed_join")
-            Some((
-              (dir: String) => time { graft.queries.Q131.layout(spark, dir) },
-              (_: String) => () => { graft.queries.Q131.join(spark).count(); () }))
-          else None
-        val fn = SparkEntry.queries(name)
-        val outRows = scala.collection.mutable.Map.empty[String, Long]
-        def run(dir: String): Unit = { outRows(dir) = fn(spark, dir).count() }
-        val (sf01, sf1) = (baseDir, targetDir)
-        // SYMMETRIC protocol at both scales: untimed warm run (JIT,
+        // happens exactly once), the join like every other query, and
+        // the gated ratio is the JOIN's.
+        val bucketed = name == "q131_bucketed_join"
+        // SYMMETRIC protocol at both scales: the untimed warm-up (JIT,
         // codegen, parquet footers — a cold single sf1 run would fold
         // first-read noise into exactly the ratio this sweep gates on),
-        // then min-of-2 timed runs (the Bench min-of-reps rationale:
-        // contention only ever adds)
-        def minOf2Of(body: () => Unit): Double = {
-          body(); sweepCaches()
-          val a = time { body() }; sweepCaches()
-          val b = time { body() }; sweepCaches()
-          math.min(a, b)
+        // then min-of-2 full-output runs (contention only ever adds).
+        // The warm-up also counts the output rows, outside the timed
+        // runs: a query whose RESULT grows super-linearly
+        // (constant-duplication-density corpora make near-dup pair lists
+        // quadratic) is doing more WORK, not planning worse — the record
+        // carries the exoneration itself.
+        // Returns (seconds, output rows, layout seconds) at `dir`.
+        def at(dir: String): (Double, Long, Option[Double]) = {
+          val layout = Option.when(bucketed) {
+            val t0 = System.nanoTime()
+            graft.queries.Q131.layout(spark, dir)
+            (System.nanoTime() - t0) / 1e9
+          }
+          var rows = -1L
+          val query = if (bucketed) () => graft.queries.Q131.join(spark) else () => fn(spark, dir)
+          val reps = QueryRun.time(spark, query, 2,
+            warmUp = df => { QueryRun.fullOutput(df); rows = df.count() }).flatten
+          if (reps.isEmpty) throw new IllegalStateException(s"every timed run at $dir failed")
+          (reps.min, rows, layout)
         }
-        def minOf2(dir: String): Double = minOf2Of(() => run(dir))
-        val (t01, t1, layout01, layout1) = phased match {
-          case Some((layoutTime, joinBody)) =>
-            val l01 = layoutTime(sf01)
-            val j01 = minOf2Of(joinBody(sf01))
-            val l1 = layoutTime(sf1)
-            val j1 = minOf2Of(joinBody(sf1))
-            (j01, j1, Some(l01), Some(l1))
-          case None =>
-            (minOf2(sf01), minOf2(sf1), None, None)
-        }
+        val (t01, r01, layout01) = at(baseDir)
+        val (t1, r1, layout1) = at(targetDir)
         val ratio = t1 / t01
         val layoutNote = layout01.fold("")(l =>
           f" (layout sf0.1 $l%.2fs, sf1 ${layout1.get}%.2fs)")
-        // output row counts at both scales: a query whose RESULT grows
-        // super-linearly (constant-duplication-density corpora make
-        // near-dup pair lists quadratic) is doing more WORK, not
-        // planning worse — the record carries the exoneration itself
-        val r01 = outRows.getOrElse(sf01, -1L)
-        val r1 = outRows.getOrElse(sf1, -1L)
         System.err.println(f"[sweep] $name%-32s sf0.1 $t01%7.2fs  sf1 $t1%7.2fs  ratio ${ratio}%5.1f x$layoutNote rows $r01->$r1")
         Some((name, t01, t1, ratio, layout01, layout1, r01, r1))
       } catch {
@@ -336,7 +311,7 @@ object ScaleSweep {
         s""""sf01_total":${results.map(_._2).sum},"sf1_total":${results.map(_._3).sum},""" +
         s""""worst_ratio":${worst.fold("null")(w => num(w._4, 2))},""" +
         s""""worst_query":${worst.fold("null")(w => "\"" + w._1 + "\"")},""" +
-        s""""gate_max_ratio":$gate,"failed":$failedJson,"queries":$qJson}"""
+        s""""gate_max_ratio":$gate,"action":"noop","failed":$failedJson,"queries":$qJson}"""
     println(line)
     java.nio.file.Files.writeString(java.nio.file.Path.of(out), line + "\n")
     spark.stop()

@@ -638,7 +638,7 @@ object CurationQueries {
         // expensive derivation (corpus-wide regexp rewrite), so it is
         // cached per the q128 convention — this is what makes "one
         // corpus pass per round" a contract rather than a hope (the
-        // uncached plan re-ran the rewrite per consumer; PlanAudit)
+        // uncached plan re-ran the rewrite per consumer)
         val r1 = applyMerge(r0, p1).cache()
         val p2 = pairsOf(r1, "^[a-z_]+$")
         val r2 = applyMerge(r1, p2)

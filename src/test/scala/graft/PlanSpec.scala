@@ -858,7 +858,7 @@ class PlanSpec extends AnyFunSuite {
     // Streaming queries are excluded (their run() executes streams and
     // their result frame is a sink read-back, not the streaming plan).
     import org.apache.spark.sql.execution.window.WindowExec
-    val streaming = Bench.streamingNames
+    val streaming = QueryRun.streamingNames
     val offenders = Catalog.all
       .filterNot(q => streaming(q.name))
       .flatMap { q =>
