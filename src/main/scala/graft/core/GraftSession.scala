@@ -39,6 +39,11 @@ object GraftSession {
       // evicts each class before its next use and every run recompiles
       // them all. 2000 holds either working set with over 2x headroom.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // file:// through NIO instead of a forked chmod/readlink per file
+      // (core/NioLocalFs), for FileSystem and FileContext alike
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
 
   /** Local session for tests and ad-hoc runs. */
   def local(threads: Int = 4): SparkSession = {

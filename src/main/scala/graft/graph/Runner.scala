@@ -285,13 +285,20 @@ object Runner {
           // Delta MERGE, zetaflex-pipeline.py:138–151). Replay-safe: the
           // merge is idempotent, so at-least-once foreachBatch delivery
           // still converges to exactly the batch apply_changes result.
+          // The batch is persisted because each upsert runs several
+          // actions on it (the emptiness probe, the touched-partition
+          // collect, the merge), and every action would otherwise re-run
+          // the micro-batch's stateful plan and re-commit its state.
           resolved.writeStream
             .outputMode("update")
             .option("checkpointLocation", checkpoint)
             .foreachBatch { (batch: DataFrame, _: Long) =>
-              if (t.partitionCols.nonEmpty)
-                ManifestStore.upsert(path, keys, seqCol, tie, t.partitionCols)(batch)
-              else upsertParquet(path, keys, seqCol, tie)(batch)
+              batch.persist()
+              try {
+                if (t.partitionCols.nonEmpty)
+                  ManifestStore.upsert(path, keys, seqCol, tie, t.partitionCols)(batch)
+                else upsertParquet(path, keys, seqCol, tie)(batch)
+              } finally batch.unpersist()
             }
             .trigger(Trigger.AvailableNow())
             .start()

@@ -294,7 +294,9 @@ object GraphQueries {
     // so lineage stays O(1) instead of doubling. The oracle unrolls the
     // identical 6 peels as chained CTEs — two independent peeling
     // engines, compared row-for-row on the (survivor, residual-degree)
-    // frame.
+    // frame. Each eN is read twice (by kN+1 and eN+1), so every CTE is
+    // MATERIALIZED: inlined, the chain re-expands into exponentially
+    // many copies and DuckDB runs out of memory even at sf0.001.
     Q("q274_kcore",
       (s, d) => {
         // node ids are LONGS inside the loop (even = customer 2k, odd =
@@ -347,38 +349,38 @@ object GraphQueries {
           .orderBy("node")
       },
       Some("""
-        WITH pairs AS (
+        WITH pairs AS MATERIALIZED (
           SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        e0 AS (
+        e0 AS MATERIALIZED (
           SELECT 'c' || ck AS src, 's' || sk AS dst FROM pairs
           UNION ALL
           SELECT 's' || sk, 'c' || ck FROM pairs),
-        kth AS (
+        kth AS MATERIALIZED (
           SELECT COUNT(*) // (2 * COUNT(DISTINCT src)) AS k FROM e0),
-        k1 AS (SELECT src FROM e0 GROUP BY src
+        k1 AS MATERIALIZED (SELECT src FROM e0 GROUP BY src
           HAVING COUNT(*) >= (SELECT k FROM kth)),
-        e1 AS (SELECT e.src, e.dst FROM e0 e
+        e1 AS MATERIALIZED (SELECT e.src, e.dst FROM e0 e
           WHERE e.src IN (SELECT src FROM k1)
             AND e.dst IN (SELECT src FROM k1)),
-        k2 AS (SELECT src FROM e1 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
-        e2 AS (SELECT e.src, e.dst FROM e1 e
+        k2 AS MATERIALIZED (SELECT src FROM e1 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
+        e2 AS MATERIALIZED (SELECT e.src, e.dst FROM e1 e
           WHERE e.src IN (SELECT src FROM k2)
             AND e.dst IN (SELECT src FROM k2)),
-        k3 AS (SELECT src FROM e2 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
-        e3 AS (SELECT e.src, e.dst FROM e2 e
+        k3 AS MATERIALIZED (SELECT src FROM e2 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
+        e3 AS MATERIALIZED (SELECT e.src, e.dst FROM e2 e
           WHERE e.src IN (SELECT src FROM k3)
             AND e.dst IN (SELECT src FROM k3)),
-        k4 AS (SELECT src FROM e3 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
-        e4 AS (SELECT e.src, e.dst FROM e3 e
+        k4 AS MATERIALIZED (SELECT src FROM e3 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
+        e4 AS MATERIALIZED (SELECT e.src, e.dst FROM e3 e
           WHERE e.src IN (SELECT src FROM k4)
             AND e.dst IN (SELECT src FROM k4)),
-        k5 AS (SELECT src FROM e4 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
-        e5 AS (SELECT e.src, e.dst FROM e4 e
+        k5 AS MATERIALIZED (SELECT src FROM e4 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
+        e5 AS MATERIALIZED (SELECT e.src, e.dst FROM e4 e
           WHERE e.src IN (SELECT src FROM k5)
             AND e.dst IN (SELECT src FROM k5)),
-        k6 AS (SELECT src FROM e5 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
-        e6 AS (SELECT e.src, e.dst FROM e5 e
+        k6 AS MATERIALIZED (SELECT src FROM e5 GROUP BY src HAVING COUNT(*) >= (SELECT k FROM kth)),
+        e6 AS MATERIALIZED (SELECT e.src, e.dst FROM e5 e
           WHERE e.src IN (SELECT src FROM k6)
             AND e.dst IN (SELECT src FROM k6))
         SELECT src AS node, COUNT(*) AS deg

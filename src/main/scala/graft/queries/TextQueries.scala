@@ -1145,37 +1145,38 @@ object TextQueries {
     // at 12) a document repeats verbatim, the degenerate-generation /
     // boilerplate-loop symptom corpus filters threshold on. Entirely
     // ROW-LOCAL declarative array algebra — per n, the gram list is a
-    // transform over sequence offsets and duplication is
-    // size > size(array_distinct) — so the operator is a scan→project
-    // with zero joins, zero explodes, zero shuffles beyond the final
-    // sort: at 100 TB it costs one pass of per-row O(12·len) work that
-    // scales embarrassingly. The oracle rebuilds every gram with a
-    // lateral series and takes the same max.
+    // transform over sequence offsets and duplication is fewer distinct
+    // grams than the size(toks) − n + 1 grams there are — so the
+    // operator is a scan→project with zero joins, zero explodes, zero
+    // shuffles beyond the final sort. Repetition is monotone in n (a
+    // repeated n-gram's prefix is a repeated (n−1)-gram), so the
+    // when-chain probes n ascending and stops at the first n without a
+    // repeat: a document builds gram lists only up to that n, not all
+    // 12. Each n's list appears once in the plan (HOFs are
+    // CodegenFallback, so Spark would not share a second copy), and the
+    // token array is its own projection, never re-split inside a lambda
+    // (the q128 lesson). The oracle rebuilds every gram with a lateral
+    // series and takes the same max.
     Q("q253_max_repeated_ngram",
       (s, d) => {
         val maxN = 12
-        val toks = split(col("text"), " ")
-        def dupAt(n: Int) = {
+        val toks = col("__toks")
+        def repeats(n: Int) = {
           val grams = expr(
             s"transform(sequence(0, size(__toks) - $n), " +
               s"i -> concat_ws(' ', slice(__toks, i + 1, $n)))")
-          when(size(col("__toks")) >= n,
-            size(grams) > size(array_distinct(grams))).otherwise(lit(false))
+          when(size(toks) >= n,
+            size(array_distinct(grams)) < size(toks) - (n - 1))
+            .otherwise(lit(false))
         }
-        // ascending fold nests earlier ns deeper, so the OUTERMOST test
-        // is n=12 — the largest repeated length wins the when-chain
-        // (repetition is monotone in n, so any dup chain must be probed
-        // largest-first)
-        val maxRepN = (1 to maxN).foldLeft(lit(0): org.apache.spark.sql.Column) {
-          case (acc, n) => when(col(s"__dup$n"), lit(n)).otherwise(acc)
-        }
+        val maxRepN = (2 to maxN)
+          .foldLeft(when(!repeats(1), lit(0))) {
+            case (acc, n) => acc.when(!repeats(n), lit(n - 1))
+          }
+          .otherwise(lit(maxN))
         t(s, d, "documents")
-          .select(col("doc_id"), col("text"))
-          .withColumn("__toks", toks)
-          .select(Seq(col("doc_id"), size(col("__toks")).cast("long")
-            .as("n_tokens"), col("__toks")) ++
-            (1 to maxN).map(n => dupAt(n).as(s"__dup$n")): _*)
-          .select(col("doc_id"), col("n_tokens"),
+          .select(col("doc_id"), split(col("text"), " ").as("__toks"))
+          .select(col("doc_id"), size(toks).cast("long").as("n_tokens"),
             maxRepN.cast("long").as("max_rep_n"))
           .orderBy("doc_id")
       },

@@ -356,6 +356,19 @@ class PlanSpec extends AnyFunSuite {
       "q89 must stay a scan→project pipeline")
   }
 
+  test("q253: one gram list per n and one split per document") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, StringSplit}
+    val lp = Catalog.byName("q253_max_repeated_ngram").run(spark, d)
+      .queryExecution.optimizedPlan
+    def count(f: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Unit]) =
+      lp.collect { case n => n.expressions.map(_.collect(f).size).sum }.sum
+    // HOFs are CodegenFallback: a gram list written twice is built twice
+    assert(count { case _: ArrayTransform => () } === 12,
+      "each n's gram list must appear once (12 n, not 24)")
+    assert(count { case _: StringSplit => () } === 1,
+      "the token array must be projected once, not re-split per n")
+  }
+
   test("q90: n-gram novelty is a gram equi-join, no doc-pair blowup") {
     val p = plan("q90_ngram_novelty")
     assert(!p.contains("CartesianProduct") &&

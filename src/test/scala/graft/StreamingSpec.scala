@@ -463,6 +463,52 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === batch, "scheduled streaming ≡ watermark-aware batch")
   }
 
+  // An Upsert boundary's foreachBatch runs several actions per
+  // micro-batch (emptiness probe, touched-partition collect, merge).
+  // Each action over an unpersisted batch re-runs the stateful stage,
+  // and the operator's numRowsUpdated counts every key once per run.
+  // One run per micro-batch means numRowsUpdated = keys updated.
+  test("Upsert foreachBatch runs each micro-batch's stateful operator once") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    import graft.graph.{ManifestStore, Mode, Registry, Runner, TableDef,
+      WriteMode}
+    val sp = spark
+    import sp.implicits._
+    val dir = ScratchDirs.create("upsert_once_")
+    val rows = (1 to 40).map(i => (s"k${i % 5}", i % 2)).toDF("k", "p")
+    rows.write.parquet(s"$dir/feed")
+    val reg = new Registry(sp)
+    // 5 keys into an unpartitioned table, 10 into a partitioned one
+    reg.register(TableDef("plain", Seq("feed"), { case Seq(f) =>
+      f.groupBy("k").agg(count(lit(1)).as("n"))
+    }, mode = Mode.Incremental, writeMode = WriteMode.Upsert(Seq("k"), "n")))
+    reg.register(TableDef("parted", Seq("feed"), { case Seq(f) =>
+      f.groupBy("k", "p").agg(count(lit(1)).as("n"))
+    }, mode = Mode.Incremental, partitionCols = Seq("p"),
+      writeMode = WriteMode.Upsert(Seq("k", "p"), "n")))
+    val updated = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0)
+          e.progress.stateOperators.foreach(o => updated.add(o.numRowsUpdated))
+    }
+    sp.streams.addListener(listener)
+    try {
+      Runner.runStreamingThenFull(sp, reg, Map("feed" -> (() =>
+        sp.readStream.schema(rows.schema).parquet(s"$dir/feed"))), s"$dir/out")
+      // progress events reach listeners asynchronously
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (updated.size < 2 && System.nanoTime < deadline) Thread.sleep(50)
+    } finally sp.streams.removeListener(listener)
+    assert(updated.asScala.toSeq.sorted === Seq(5L, 10L))
+    assert(sp.read.parquet(s"$dir/out/plain").count() === 5)
+    assert(ManifestStore.read(sp, s"$dir/out/parted").count() === 10)
+  }
+
   // ---- round-12 soak: bounded state under a ProcessingTime trigger ----
   // AvailableNow proves catch-up semantics but not the claim a
   // PRODUCTION streaming deployment watches first: that state-store

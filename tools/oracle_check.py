@@ -5,9 +5,15 @@ the same parquet tables and compare (sorted columns, sorted rows, exact
 for non-floats, tiny tolerance for floats). Dev tool only — the shipped
 library has no Python dependency.
 
+Each line carries the oracle's DuckDB wall time. The summary counts the
+queries actually compared; the exit status is nonzero when any query
+fails OR was never compared (its output or its oracle could not be read
+or run), so an oracle that cannot finish turns the gate red instead of
+shrinking it.
+
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 """
-import json, math, sys
+import json, math, sys, time
 
 import duckdb
 
@@ -22,15 +28,18 @@ def main(sf_dir, out_dir):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    uncompared = []
     for name, sql in sorted(oracle.items()):
         try:
             got = con.execute(
                 f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
+            t0 = time.monotonic()
             want = con.execute(sql).df()
         except Exception as e:
-            print(f"FAIL {name}: exec error: {e}")
-            n_fail += 1
+            print(f"UNCOMPARED {name}: exec error: {e}")
+            uncompared.append(name)
             continue
+        oracle_s = time.monotonic() - t0
         ULP_NOTES.clear()
         TYPE_NOTES.clear()
         ok, msg = compare(got, want)
@@ -46,12 +55,15 @@ def main(sf_dir, out_dir):
                   f"values match but the driver gate will be red")
         if ok:
             n_pass += 1
-            print(f"PASS {name} ({len(got)} rows)")
+            print(f"PASS {name} ({len(got)} rows, oracle {oracle_s:.2f} s)")
         else:
             n_fail += 1
-            print(f"FAIL {name}: {msg}")
-    print(f"\n{n_pass} pass, {n_fail} fail")
-    return 1 if n_fail else 0
+            print(f"FAIL {name} (oracle {oracle_s:.2f} s): {msg}")
+    print(f"\n{n_pass} pass, {n_fail} fail, "
+          f"{n_pass + n_fail}/{len(oracle)} compared")
+    if uncompared:
+        print(f"uncompared: {', '.join(uncompared)}")
+    return 1 if n_fail or uncompared else 0
 
 
 ULP_NOTES = []
