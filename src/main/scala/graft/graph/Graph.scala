@@ -34,10 +34,12 @@ object WriteMode {
 
   /** CDC upsert (§2.10 streaming apply_changes as a SINK): keep the
     * max-`(seqCol, tieBreak)` row per `keys`. Batch runs merge into the
-    * existing table; streaming boundaries run each micro-batch through
-    * [[Runner.upsertParquet]] via `foreachBatch` — the parquet-native
-    * stand-in for a Delta `MERGE`. Idempotent under micro-batch replay
-    * (the merge keeps the max row regardless of duplicate delivery). */
+    * existing table; streaming boundaries merge each micro-batch via
+    * `foreachBatch`. Both commit through [[ManifestStore.upsert]] — the
+    * parquet-native stand-in for a Delta `MERGE` — so the table is read
+    * back through its manifest ([[Runner.read]]). Idempotent under
+    * micro-batch replay (the merge keeps the max row regardless of
+    * duplicate delivery). */
   final case class Upsert(keys: Seq[String], seqCol: String,
                           tieBreak: Seq[String] = Nil) extends WriteMode
 }

@@ -1,16 +1,18 @@
 package graft.graph
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.StructType
 
-/** Manifest-last atomic publish for partitioned upsert tables — the
+/** Manifest-last atomic publish for every Upsert table — the
   * crash-safety layer the round-10 verdict flagged on the old
   * dynamic-partition-overwrite upsert, whose per-partition commits
   * could leave a crash-interrupted table with SOME partitions on the
-  * new generation and some on the old.
+  * new generation and some on the old. An unpartitioned table is one
+  * partition keyed `""`, so it commits through the same protocol.
   *
   * Layout (all metadata dirs underscore-prefixed, so a stray
   * `spark.read.parquet(root)` finds no data rather than a mix):
@@ -38,15 +40,14 @@ import org.apache.spark.sql.types.StructType
   * Scale shape: per-batch work is O(touched partitions) — untouched
   * partitions are carried forward BY REFERENCE (their manifest entries
   * keep pointing at older generation dirs; no data is read, copied, or
-  * rewritten). Partition pruning happens at the MANIFEST (a driver-side
-  * map lookup), cheaper than file-index listing. The manifest itself is
-  * metadata-scale: one entry per partition tuple.
+  * rewritten). The manifest itself is metadata-scale: one entry per
+  * partition tuple.
   *
   * Supported partition value types are those whose `toString` matches
   * Spark's hive-dir encoding (string / integral / date — the layouts
-  * the engine uses); [[stageGeneration]] cross-checks the keys it
-  * computed against the directories Spark actually wrote and throws on
-  * any drift, so an unsupported type fails loudly at write time rather
+  * the engine uses); [[upsert]] cross-checks the keys it computed
+  * against the directories Spark actually wrote and throws on any
+  * drift, so an unsupported type fails loudly at write time rather
   * than silently stranding a partition.
   *
   * Single writer per table (the DAG runner's semantics — same as the
@@ -56,21 +57,17 @@ import org.apache.spark.sql.types.StructType
   */
 object ManifestStore {
 
-  /** `entries`: partition key → generation-relative directory.
-    * `stats`: partition key → column → (min, max) recorded at write
-    * time — the zone-map layer of the format (see [[readSkipping]]).
-    * Values are the column values' canonical string form; the reader's
-    * predicate parses them back with its knowledge of the schema.
-    * Partitions written before stats were requested simply have no
-    * entry — skipping predicates must treat absent stats as "keep". */
-  /** `fileStats`: partition key → generation-relative FILE path →
-    * column → (min, max) — the per-file zone maps beneath the
-    * per-partition `stats`. Present only for partitions whose latest
-    * stats-bearing write produced them; a rewrite without stats (or a
-    * delete/compact rewrite) drops them, because file lists change and
-    * stale file bounds — unlike stale-wide PARTITION bounds — point at
-    * files that no longer exist. */
-  /** `schemaJson`: the TABLE SCHEMA as of this commit (the merge
+  /** One committed version of a table.
+    *
+    * `entries`: partition key → generation-relative directory (for a
+    * catalog table: one entry per file).
+    *
+    * `fileStats`: entry key → generation-relative FILE path → column →
+    * (min, max) — the catalog's per-file zone maps, written by
+    * GraftTableV2 and read by GraftPrune. Stale file bounds point at
+    * files that no longer exist, so any rewrite of an entry drops them.
+    *
+    * `schemaJson`: the TABLE SCHEMA as of this commit (the merge
     * target's schema — a superset of every live generation's columns,
     * since evolution only ever widens via unionByName). Recording it in
     * the commit log is what lets every internal read PIN types instead
@@ -78,17 +75,9 @@ object ManifestStore {
     * trap), and what makes a fully-purged table still READABLE (an
     * empty manifest still knows its shape). Absent only on manifests
     * written before this field existed — readers then fall back to
-    * mergeSchema inference. */
-  /** `blooms`: partition key → column → packed bloom filter
-    * ("m:k:base64(bit words)") over the partition's DISTINCT values of
-    * that column — the point-lookup skipping layer ABOVE the (min, max)
-    * zone maps: a range can't exclude a needle that falls inside it,
-    * a bloom usually can (m=8192, k=4 → ~2% false keeps at 1k distinct
-    * values/partition). Recorded by `upsert(bloomCols = …)`; absent
-    * blooms must KEEP (same safety rule as stats). After deleteKeys the
-    * carried bloom is stale-WIDE (may still claim deleted keys —
-    * false positives are the bloom contract, so reads stay correct). */
-  /** `deletes`: partition key → generation-relative sidecar directory
+    * mergeSchema inference.
+    *
+    * `deletes`: partition key → generation-relative sidecar directory
     * holding that partition's DELETION VECTOR — the key tuples deleted
     * from it since its last rewrite (equality deletes, the
     * Delta-deletion-vector / Iceberg-equality-delete device). This is
@@ -97,25 +86,24 @@ object ManifestStore {
     * not O(touched partitions) like the copy-on-write [[deleteKeys]] —
     * and every read anti-joins the vectors of the partitions it
     * touches. Any operation that REWRITES a partition (upsert touch,
-    * COW delete, compact) applies its vector first and then clears it:
-    * the rewrite materializes the deletes. `deleteKeyCols` names the
-    * key tuple (one key set per table — the upsert key discipline). */
-  /** `props`: free-form table properties carried commit-to-commit — the
+    * COW delete) applies its vector first and then clears it: the
+    * rewrite materializes the deletes. `deleteKeyCols` names the key
+    * tuple (one key set per table — the upsert key discipline).
+    *
+    * `props`: free-form table properties carried commit-to-commit — the
     * extension point a commit log needs for writer protocols (the
     * Delta `txn` device): the streaming catalog sink records its
     * last-committed epoch per query id here, which is what makes a
     * replayed micro-batch commit a detectable no-op instead of a
-    * duplicate append. Every publisher carries the base manifest's
-    * props forward; manifests written before the field existed parse
-    * as empty. */
+    * duplicate append. Manifests written before the field existed parse
+    * as empty.
+    *
+    * Publishers derive the next manifest with `copy` from the one they
+    * staged against, so every field they do not touch carries forward. */
   final case class Manifest(version: Long, entries: Map[String, String],
-                            stats: Map[String, Map[String, (String, String)]]
-                              = Map.empty,
                             fileStats: Map[String, Map[String, Map[String, (String, String)]]]
                               = Map.empty,
                             schemaJson: Option[String] = None,
-                            blooms: Map[String, Map[String, String]]
-                              = Map.empty,
                             deletes: Map[String, String] = Map.empty,
                             deleteKeyCols: Seq[String] = Nil,
                             props: Map[String, String] = Map.empty) {
@@ -128,25 +116,27 @@ object ManifestStore {
   private val GDIR = "_gen"
   private val NULL_DIR = "__HIVE_DEFAULT_PARTITION__" // Spark's null-partition dir
   private val mapper = new ObjectMapper()
+  // strict `v<digits>.json` match: a foreign or corrupted file in
+  // _manifest/ (`vbackup.json`, editor droppings) must be IGNORED,
+  // not throw NumberFormatException and brick the whole table
+  private val ManifestFile = """v(\d+)\.json""".r
 
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Highest committed manifest version, if the table exists. */
-  def currentVersion(fs: FileSystem, root: String): Option[Long] = {
+  /** Every committed manifest version present under `root`, ascending;
+    * empty when the table does not exist. */
+  def versions(fs: FileSystem, root: String): Seq[Long] = {
     val dir = new HPath(s"$root/$MDIR")
-    if (!fs.exists(dir)) None
-    else {
-      // strict `v<digits>.json` match: a foreign or corrupted file in
-      // _manifest/ (`vbackup.json`, editor droppings) must be IGNORED,
-      // not throw NumberFormatException and brick the whole table
-      val vs = fs.listStatus(dir).map(_.getPath.getName).collect {
-        case n if n.matches("v\\d+\\.json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong
-      }
-      if (vs.isEmpty) None else Some(vs.max)
-    }
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
+      case ManifestFile(v) => v.toLong
+    }.sorted
   }
+
+  /** Highest committed manifest version, if the table exists. */
+  def currentVersion(fs: FileSystem, root: String): Option[Long] =
+    versions(fs, root).lastOption
 
   def readManifest(fs: FileSystem, root: String): Option[Manifest] =
     currentVersion(fs, root).flatMap(v => readManifestAt(fs, root, v))
@@ -161,67 +151,58 @@ object ManifestStore {
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      val tree = try mapper.readTree(in) finally in.close()
-      val entries = scala.collection.mutable.Map.empty[String, String]
-      tree.get("entries").fields().forEachRemaining { e =>
-        entries += e.getKey -> e.getValue.asText()
-      }
-      def colRanges(node: com.fasterxml.jackson.databind.JsonNode)
-          : Map[String, (String, String)] = {
-        val cols = scala.collection.mutable.Map.empty[String, (String, String)]
-        node.fields().forEachRemaining { c =>
-          cols += c.getKey ->
-            (c.getValue.get(0).asText(), c.getValue.get(1).asText())
-        }
-        cols.toMap
-      }
-      val stats =
-        scala.collection.mutable.Map.empty[String, Map[String, (String, String)]]
-      val statsNode = tree.get("stats")
-      if (statsNode != null) statsNode.fields().forEachRemaining { p =>
-        stats += p.getKey -> colRanges(p.getValue)
-      }
-      val fileStats = scala.collection.mutable
-        .Map.empty[String, Map[String, Map[String, (String, String)]]]
-      val fsNode = tree.get("fileStats")
-      if (fsNode != null) fsNode.fields().forEachRemaining { p =>
-        val files =
-          scala.collection.mutable.Map.empty[String, Map[String, (String, String)]]
-        p.getValue.fields().forEachRemaining { f =>
-          files += f.getKey -> colRanges(f.getValue)
-        }
-        fileStats += p.getKey -> files.toMap
-      }
-      val schemaJson = Option(tree.get("schema")).map(_.asText())
-      val blooms = scala.collection.mutable
-        .Map.empty[String, Map[String, String]]
-      val bloomNode = tree.get("blooms")
-      if (bloomNode != null) bloomNode.fields().forEachRemaining { p =>
-        val cols = scala.collection.mutable.Map.empty[String, String]
-        p.getValue.fields().forEachRemaining { c =>
-          cols += c.getKey -> c.getValue.asText()
-        }
-        blooms += p.getKey -> cols.toMap
-      }
-      val deletes = scala.collection.mutable.Map.empty[String, String]
-      val delNode = tree.get("deletes")
-      if (delNode != null) delNode.fields().forEachRemaining { p =>
-        deletes += p.getKey -> p.getValue.asText()
-      }
-      val deleteKeyCols = Option(tree.get("deleteKeyCols")).map { n =>
-        val b = Seq.newBuilder[String]
-        n.elements().forEachRemaining(e => b += e.asText())
-        b.result()
-      }.getOrElse(Nil)
-      val props = scala.collection.mutable.Map.empty[String, String]
-      val propsNode = tree.get("props")
-      if (propsNode != null) propsNode.fields().forEachRemaining { p =>
-        props += p.getKey -> p.getValue.asText()
-      }
-      Some(Manifest(tree.get("version").asLong(), entries.toMap, stats.toMap,
-        fileStats.toMap, schemaJson, blooms.toMap, deletes.toMap,
-        deleteKeyCols, props.toMap))
+      Some(decode(try mapper.readTree(in) finally in.close()))
     }
+  }
+
+  /** The manifest's JSON form. Maps are written key-sorted, and empty
+    * optional fields are left out, so old readers see the same shape. */
+  private def encode(m: Manifest): Array[Byte] = {
+    val node = mapper.createObjectNode()
+    node.put("version", m.version)
+    m.schemaJson.foreach(node.put("schema", _))
+    def obj[V](parent: ObjectNode, name: String, kv: Map[String, V])(
+        put: (ObjectNode, String, V) => Unit): Unit = {
+      val o = parent.putObject(name)
+      kv.toSeq.sortBy(_._1).foreach { case (k, v) => put(o, k, v) }
+    }
+    obj(node, "entries", m.entries)(_.put(_, _))
+    if (m.fileStats.nonEmpty) obj(node, "fileStats", m.fileStats) {
+      (o, key, files) => obj(o, key, files) { (fo, file, cols) =>
+        obj(fo, file, cols) { case (co, c, (lo, hi)) =>
+          co.putArray(c).add(lo).add(hi)
+        }
+      }
+    }
+    if (m.deletes.nonEmpty) obj(node, "deletes", m.deletes)(_.put(_, _))
+    if (m.deleteKeyCols.nonEmpty) {
+      val a = node.putArray("deleteKeyCols")
+      m.deleteKeyCols.foreach(a.add)
+    }
+    if (m.props.nonEmpty) obj(node, "props", m.props)(_.put(_, _))
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node)
+  }
+
+  /** Inverse of [[encode]]; an absent optional field reads as empty, and
+    * fields this build no longer writes are ignored. */
+  private def decode(tree: JsonNode): Manifest = {
+    def fields[V](n: JsonNode)(f: JsonNode => V): Map[String, V] = {
+      val b = Map.newBuilder[String, V]
+      if (n != null) n.fields().forEachRemaining(e => b += e.getKey -> f(e.getValue))
+      b.result()
+    }
+    val keyCols = Seq.newBuilder[String]
+    Option(tree.get("deleteKeyCols"))
+      .foreach(_.elements().forEachRemaining(e => keyCols += e.asText()))
+    Manifest(
+      version = tree.get("version").asLong(),
+      entries = fields(tree.get("entries"))(_.asText()),
+      fileStats = fields(tree.get("fileStats"))(fields(_)(fields(_)(r =>
+        (r.get(0).asText(), r.get(1).asText())))),
+      schemaJson = Option(tree.get("schema")).map(_.asText()),
+      deletes = fields(tree.get("deletes"))(_.asText()),
+      deleteKeyCols = keyCols.result(),
+      props = fields(tree.get("props"))(_.asText()))
   }
 
   /** Test seam: [[partKey]] for the decodeKey round-trip property. */
@@ -230,7 +211,8 @@ object ManifestStore {
     partKey(cols, values)
 
   /** Canonical partition key: `col=escapedValue/...`, identical to the
-    * hive directory path Spark writes for the tuple. */
+    * hive directory path Spark writes for the tuple (`""` for the one
+    * partition of an unpartitioned table). */
   private def partKey(cols: Seq[String], values: Seq[Any]): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     cols.zip(values).map { case (c, v) =>
@@ -241,9 +223,22 @@ object ManifestStore {
     }.mkString("/")
   }
 
+  /** Test seam: the inverse of [[partKey]] (null for the hive default
+    * dir). The round-trip property over it is what proves partKey
+    * injective — two distinct tuples can never share a manifest entry. */
+  private[graft] def decodeKey(key: String): Map[String, String] =
+    key.split('/').map { seg =>
+      val i = seg.indexOf('=')
+      val c = seg.substring(0, i)
+      val v = seg.substring(i + 1)
+      c -> (if (v == NULL_DIR) null
+            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+              .unescapePathName(v))
+    }.toMap
+
   /** Snapshot read: resolve the current manifest and read exactly its
     * listed directories. `schema` (the plan schema, in the Runner's
-    * shadow-read convention) pins partition-column types against
+    * read-back convention) pins partition-column types against
     * directory-name inference; entries are grouped per generation so
     * each group's `basePath` recovers its partition columns. */
   def read(spark: SparkSession, root: String,
@@ -281,10 +276,10 @@ object ManifestStore {
   /** Merge-on-read: anti-join away the deletion vectors of the
     * partitions a read touches. Vectors are deleted-KEY lists —
     * GDPR/compliance-sized, tiny relative to the table — so the anti
-    * join broadcasts; a table whose vectors have grown large should
-    * [[compact]] (which materializes and clears them). Sidecar reads
-    * PIN the key columns' types from the table schema (the
-    * directory-name inference trap). */
+    * join broadcasts; a table whose vectors have grown large should be
+    * rewritten with [[deleteKeys]] (which materializes and clears
+    * them). Sidecar reads PIN the key columns' types from the table
+    * schema (the directory-name inference trap). */
   private def applyDeletes(spark: SparkSession, root: String, m: Manifest,
                            df: DataFrame,
                            partKeys: Iterable[String]): DataFrame = {
@@ -301,10 +296,9 @@ object ManifestStore {
     df.join(broadcast(vectors), m.deleteKeyCols, "left_anti")
   }
 
-  /** Read a set of generation-relative paths — partition DIRECTORIES or
-    * individual FILES interchangeably (the file form is the zone-map
-    * read's file-skipping path). Paths are grouped per generation so
-    * each group's `basePath` recovers its partition columns. */
+  /** Read a set of generation-relative directories. Paths are grouped
+    * per generation so each group's `basePath` recovers its partition
+    * columns. */
   private def readPaths(spark: SparkSession, root: String,
                         rels: Seq[String],
                         schema: Option[StructType]): DataFrame = {
@@ -316,254 +310,6 @@ object ManifestStore {
       schema.fold(r)(r.schema)
         .parquet(paths.sorted.map(p => s"$root/$p"): _*)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Decode a manifest partition key (`col=escapedValue/...`) back into
-    * column → raw string value (null for the hive default dir) — the
-    * inverse of [[partKey]], used for manifest-level pruning. */
-  private[graft] def decodeKey(key: String): Map[String, String] =
-    key.split('/').map { seg =>
-      val i = seg.indexOf('=')
-      val c = seg.substring(0, i)
-      val v = seg.substring(i + 1)
-      c -> (if (v == NULL_DIR) null
-            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(v))
-    }.toMap
-
-  /** Partition-pruned snapshot read: `keep` filters on the DECODED
-    * partition values of each manifest entry, so pruning happens at the
-    * MANIFEST — a driver-side scan of |partitions| map entries — before
-    * any filesystem listing or file-index build. This is the read path a
-    * date-bounded consumer wants at 100 TB: a table with 10⁵ partitions
-    * resolves a one-day read to its handful of directories without
-    * listing the other 99.99 %. Catalyst partition pruning on the hive
-    * dirs still applies inside whatever is kept (basePath recovers the
-    * partition columns), so a residual predicate costs nothing extra.
-    * A `keep` that matches nothing returns an EMPTY frame with the
-    * plan schema (`schema` is required in that case — there are no
-    * files to infer one from). */
-  def readWhere(spark: SparkSession, root: String,
-                schema: Option[StructType] = None,
-                version: Option[Long] = None)
-               (keep: Map[String, String] => Boolean): DataFrame =
-    // the stats-blind special case of readSkipping: a value-only keep
-    // accepts every file of a kept partition, so the file-level pass is
-    // a no-op and whole directories are listed
-    readSkipping(spark, root, schema, version)((pv, _) => keep(pv))
-
-  /** Zone-map read: like [[readWhere]], but the keep predicate also
-    * sees the partition's recorded column stats (min, max as canonical
-    * strings — parse with your schema knowledge), so a read can skip
-    * partitions whose VALUE RANGE excludes the predicate even when the
-    * partition COLUMNS can't express it — the `WHERE ts BETWEEN …` read
-    * of a table partitioned by something else. This is the manifest's
-    * data-skipping layer (what Delta's per-file stats / parquet zone
-    * maps do), resolved driver-side before any file listing. Stats are
-    * recorded by `upsert(statsCols = …)`; partitions without stats
-    * arrive as an EMPTY map and a correct skipping predicate must KEEP
-    * them (bounds you don't have can't exclude anything). After
-    * [[deleteKeys]] the carried bounds may be stale-wide — a safe
-    * superset, so skipping stays correct, merely less sharp until the
-    * next stats-bearing rewrite. */
-  def readSkipping(spark: SparkSession, root: String,
-                   schema: Option[StructType] = None,
-                   version: Option[Long] = None)
-                  (keep: (Map[String, String],
-                          Map[String, (String, String)]) => Boolean)
-      : DataFrame = {
-    val fs = fsOf(spark, root)
-    val m = version match {
-      case Some(v) => readManifestAt(fs, root, v).getOrElse(
-        throw new IllegalStateException(
-          s"version $v of $root is not retained (GC keeps current + previous)"))
-      case None => readManifest(fs, root).getOrElse(
-        throw new IllegalStateException(s"no committed manifest under $root"))
-    }
-    val decoded = m.entries.keysIterator
-      .map(k => k -> decodeKey(k)).toMap
-    val kept = m.entries.filter { case (k, _) =>
-      keep(decoded(k), m.stats.getOrElse(k, Map.empty))
-    }
-    // file-level zone maps: within a kept partition that carries
-    // per-file bounds, the SAME predicate re-evaluates per file and the
-    // read lists only the surviving files — intra-partition skipping,
-    // the payoff of a range-clustered `layout` at write time. A kept
-    // partition without file stats contributes its whole directory.
-    val paths = kept.toSeq.flatMap { case (k, dir) =>
-      m.fileStats.get(k) match {
-        case Some(files) if files.nonEmpty =>
-          val pv = decoded(k)
-          files.toSeq.collect { case (f, st) if keep(pv, st) => f }
-        case _ => Seq(dir)
-      }
-    }
-    if (paths.isEmpty) {
-      val sch = schema.orElse(m.schema)
-        .getOrElse(throw new IllegalArgumentException(
-        s"readSkipping matched no partitions of $root and has no schema " +
-          "to shape the empty result"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-    } else applyDeletes(spark, root, m,
-      readPaths(spark, root, paths, schema.orElse(m.schema)), kept.keys)
-  }
-
-  /** Per-partition AND per-file (min, max) of `statsCols`, computed by
-    * reading BACK the just-staged generation's parquet (columnar scan
-    * of only the stats columns over only the new files — never a
-    * recompute of the merge plan). The read PINS `schema` (the write
-    * plan's schema, the Runner shadow-read convention) so partition-
-    * column type inference can never re-type directory names (string
-    * "00" → int 0) and produce keys that miss the manifest — the trap
-    * Runner.scala documents. Both grains come from Spark's own min/max
-    * (one aggregation each, file grain grouped by input_file_name), so
-    * their orderings agree with each other AND with what a Spark
-    * filter would compute; string bounds therefore follow Spark's
-    * UTF8 binary collation. All-null columns are omitted. */
-  private def collectStats(spark: SparkSession, root: String, genRel: String,
-                           partitionCols: Seq[String],
-                           statsCols: Seq[String], schema: StructType)
-      : (Map[String, Map[String, (String, String)]],
-         Map[String, Map[String, Map[String, (String, String)]]]) = {
-    import org.apache.spark.sql.functions.{input_file_name, max => smax, min => smin}
-    val staged = spark.read.option("basePath", s"$root/$genRel")
-      .schema(schema).parquet(s"$root/$genRel")
-    val aggs = statsCols.flatMap(c =>
-      Seq(smin(col(c)).as(s"__min_$c"), smax(col(c)).as(s"__max_$c")))
-    def ranges(r: org.apache.spark.sql.Row): Map[String, (String, String)] =
-      statsCols.flatMap { c =>
-        val lo = r.get(r.fieldIndex(s"__min_$c"))
-        val hi = r.get(r.fieldIndex(s"__max_$c"))
-        if (lo == null || hi == null) None
-        else Some(c -> (lo.toString, hi.toString))
-      }.toMap
-    def keyOf(r: org.apache.spark.sql.Row): String =
-      partKey(partitionCols, partitionCols.map(c => r.get(r.fieldIndex(c))))
-    // ONE data scan: the file-grain aggregate is cached (it is
-    // metadata-sized — one row per staged file) and the partition
-    // grain re-aggregates from it with Spark's own min/max, so both
-    // grains share one pass AND one ordering
-    val fileAgg = staged
-      .groupBy((partitionCols.map(col) :+ input_file_name().as("__file")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .persist()
-    val partAggs = statsCols.flatMap(c => Seq(
-      smin(col(s"__min_$c")).as(s"__min_$c"),
-      smax(col(s"__max_$c")).as(s"__max_$c")))
-    val partStats = fileAgg.groupBy(partitionCols.map(col): _*)
-      .agg(partAggs.head, partAggs.tail: _*)
-      .collect().map(r => keyOf(r) -> ranges(r)).toMap
-    val fileStats = fileAgg
-      .collect()
-      .map { r =>
-        // generation-relative file path: input_file_name() is a
-        // fully-qualified URI whose path segment is PERCENT-ENCODED —
-        // decode it back to the on-disk name before stripping the
-        // prefix, or a partition value with a space/escape would store
-        // a key that no filesystem read can resolve
-        val uri = r.getString(r.fieldIndex("__file"))
-        val decoded =
-          try new java.net.URI(uri).getPath
-          catch { case _: java.net.URISyntaxException => uri }
-        val at = decoded.indexOf(genRel)
-        if (at < 0) // exotic URI normalization: fail NAMING the path,
-          throw new IllegalStateException( // not mid-commit StringIndexOOB
-            s"staged file '$decoded' does not contain generation dir '$genRel'")
-        (keyOf(r), decoded.substring(at), ranges(r))
-      }
-      .groupBy(_._1).map { case (key, files) =>
-        key -> files.map { case (_, rel, cols) => rel -> cols }.toMap
-      }
-    fileAgg.unpersist()
-    (partStats, fileStats)
-  }
-
-  /** Compact per-partition bloom filter construction over the staged
-    * generation — the POINT-LOOKUP skipping layer above the (min, max)
-    * zone maps (a needle inside every partition's range is invisible to
-    * range skipping; a bloom excludes ~98% of non-containing partitions
-    * at the default sizing). Pure DataFrame job, same one-scan
-    * discipline as [[collectStats]]: the k bit positions per value are
-    * codegen'd xxhash64 expressions, `collect_set` caps each group's
-    * driver payload at the bloom WIDTH (8192 positions), never the
-    * value count — metadata-scale by construction. Null values carry no
-    * bits (an equality lookup is never null). */
-  private def collectBlooms(spark: SparkSession, root: String, genRel: String,
-                            partitionCols: Seq[String],
-                            bloomCols: Seq[String], schema: StructType)
-      : Map[String, Map[String, String]] = {
-    import org.apache.spark.sql.functions.{array, collect_set, explode,
-      flatten, lit, struct, when}
-    val staged = spark.read.option("basePath", s"$root/$genRel")
-      .schema(schema).parquet(s"$root/$genRel")
-    def keyOf(r: org.apache.spark.sql.Row): String =
-      partKey(partitionCols, partitionCols.map(c => r.get(r.fieldIndex(c))))
-    // ONE scan for every bloom column (the collectStats discipline):
-    // each row contributes (colIdx, position) structs for all non-null
-    // bloom columns, flattened and exploded together, then one grouped
-    // collect_set per (partition, column) — still capped at the bloom
-    // width, never the row count
-    val emptyPos = array().cast("array<struct<ci:int,p:int>>")
-    val perColPositions = bloomCols.zipWithIndex.map { case (c, i) =>
-      when(col(c).isNotNull,
-        array(BloomSkip.positionExprs(col(c)).map(p =>
-          struct(lit(i).as("ci"), p.as("p"))): _*))
-        .otherwise(emptyPos)
-    }
-    staged
-      .select((partitionCols.map(col) :+
-        explode(flatten(array(perColPositions: _*))).as("__cp")): _*)
-      .groupBy((partitionCols.map(col) :+ col("__cp.ci").as("__ci")): _*)
-      .agg(collect_set(col("__cp.p")).as("__ps"))
-      .collect()
-      .map { r =>
-        (keyOf(r), bloomCols(r.getInt(r.fieldIndex("__ci"))),
-          BloomSkip.pack(r.getSeq[Int](r.fieldIndex("__ps"))))
-      }
-      .groupBy(_._1)
-      .view.mapValues(_.map { case (_, c, enc) => c -> enc }.toMap).toMap
-  }
-
-  /** Bloom point-lookup read: keep only partitions whose bloom for
-    * `keyCol` might contain `value` (absent bloom = keep, the stats
-    * safety rule), then filter exactly. The lookup value is CAST to the
-    * recorded schema's column type before hashing — bit positions were
-    * computed from typed column values, and an int-vs-long literal
-    * would hash differently and miss everything. This is the
-    * needle-in-100TB read: partition pruning happens driver-side in the
-    * manifest map; only maybe-containing directories are listed. */
-  def readBloomEquals(spark: SparkSession, root: String, keyCol: String,
-                      value: Any, schema: Option[StructType] = None)
-      : DataFrame = {
-    val fs = fsOf(spark, root)
-    val m = readManifest(fs, root).getOrElse(
-      throw new IllegalStateException(s"no committed manifest under $root"))
-    import org.apache.spark.sql.functions.lit
-    val dt = m.schema.flatMap(_.fields.find(_.name == keyCol)).map(_.dataType)
-    val litv = dt.fold(lit(value))(t => lit(value).cast(t))
-    // hash parity with the build side: evaluate the SAME codegen'd
-    // expressions on a 1-row frame rather than reimplementing xxhash64
-    val posRow = spark.range(1)
-      .select(BloomSkip.positionExprs(litv): _*).head()
-    val positions = (0 until BloomSkip.HASHES).map(posRow.getInt)
-    val kept = m.entries.filter { case (k, _) =>
-      m.blooms.get(k).flatMap(_.get(keyCol)) match {
-        case Some(enc) => BloomSkip.mightContain(enc, positions)
-        case None => true // no bloom recorded: cannot exclude
-      }
-    }
-    val out =
-      if (kept.isEmpty) {
-        val sch = schema.orElse(m.schema).getOrElse(
-          throw new IllegalArgumentException(
-            s"bloom lookup matched no partitions of $root and has no " +
-              "schema to shape the empty result"))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      } else applyDeletes(spark, root, m,
-        readPaths(spark, root, kept.values.toSeq, schema.orElse(m.schema)),
-        kept.keys)
-    out.filter(col(keyCol) === litv)
   }
 
   /** Deletion propagation at the table-format level — the
@@ -579,8 +325,8 @@ object ManifestStore {
     * pre-delete snapshot, and the retry converges (anti join is
     * idempotent). Note the grace window: the PREVIOUS generation still
     * holds the deleted bytes until the next commit's GC — a compliance
-    * pipeline runs one follow-up commit (or [[compact]]) to physically
-    * drop them, then verifies with the q152 audit.
+    * pipeline runs one follow-up commit to physically drop them, then
+    * verifies with the q152 audit.
     *
     * Concurrency: deletes RETRY-AND-REBASE exactly like [[upsert]]
     * (round-14 verdict item 3) — a delete racing an upsert on DISJOINT
@@ -590,9 +336,7 @@ object ManifestStore {
     * same keys that a concurrent disjoint-partition writer lands are
     * NOT swept up (delete-then-write and write-then-delete remain
     * different tables; ordering against CONFLICTING writes is still
-    * the caller's to serialize). [[compact]] stays FAIL-FAST: it
-    * rewrites every partition, so any interleaved commit is a true
-    * conflict by definition. */
+    * the caller's to serialize). */
   def deleteKeys(root: String, keyCols: Seq[String],
                  partitionCols: Seq[String])(keys: DataFrame): Unit =
     deleteKeysHooked(root, keyCols, partitionCols)(keys)
@@ -621,37 +365,28 @@ object ManifestStore {
     val remaining = existing.join(
       broadcast(keys.select(keyCols.map(col): _*).distinct()),
       keyCols, "left_anti")
-    val version = prev.version + 1
-    val staged = stageGeneration(root, partitionCols, remaining, version)
+    val staged = stageGeneration(root, partitionCols, remaining,
+      prev.version + 1)
     // staged ⊆ touched: a fully-deleted partition writes no directory
     // and drops out of the manifest
     if (!staged.keySet.subsetOf(touchedKeys))
       throw new IllegalStateException(
         s"delete rewrite produced unexpected partitions at $root: " +
           s"${staged.keySet -- touchedKeys}")
-    // partition stats carry forward: bounds computed before the delete
-    // remain valid SUPERSETS of the surviving rows' range — skipping
-    // stays correct (conservative), and publish drops entries for
-    // partitions that vanished entirely. FILE stats for the rewritten
-    // partitions are dropped — their file lists changed. Blooms carry
-    // forward stale-WIDE (deletion only removes keys; false positives
-    // are within the bloom contract).
-    //
     // Published as a function of the BASE manifest so the shared
     // rebase loop can re-apply it on a newer head: the staged rewrite
     // only read `touchedKeys`, which the loop's disjointness check
     // proves no interleaved commit modified, so carrying the head's
-    // entries/stats for everything else is exactly a rebase.
-    def publishAgainst(baseOpt: Option[Manifest], ver: Long): Unit = {
+    // fields for everything else is exactly a rebase.
+    def publishAgainst(baseOpt: Option[Manifest]): Unit = {
       val base = baseOpt.getOrElse(prev)
-      publish(spark, root, ver,
-        (base.entries -- touchedKeys) ++ staged, baseOpt, base.stats,
-        base.fileStats -- touchedKeys, base.schemaJson, base.blooms,
-        base.deletes -- touchedKeys, base.deleteKeyCols, base.props)
+      publish(spark, root, base.copy(
+        entries = (base.entries -- touchedKeys) ++ staged,
+        fileStats = base.fileStats -- touchedKeys,
+        deletes = base.deletes -- touchedKeys), baseOpt)
     }
     beforePublish()
-    publishWithRebase(fs, root, Some(prev), version, touchedKeys,
-      publishAgainst)
+    publishWithRebase(fs, root, Some(prev), touchedKeys, publishAgainst)
   }
 
   /** CHANGE DATA FEED — row-level diff between two retained versions
@@ -730,14 +465,13 @@ object ManifestStore {
     * ([[applyDeletes]]); repeated vector deletes ACCUMULATE (the new
     * sidecar is unioned with the partition's previous vector, and the
     * old sidecar's generation is GC'd when unreferenced); any rewrite
-    * of a partition (upsert touch, COW delete, [[compact]]) applies
-    * its vector and clears it. Same caveats as COW delete, plus one:
-    * the deleted BYTES remain on storage until a rewrite — vector
-    * deletes hide rows, compaction forgets them; a compliance pipeline
-    * runs [[compact]] (or [[deleteKeys]]) on its purge deadline and
-    * verifies with the q152 audit. `keys` carries `keyCols` AND
-    * `partitionCols` (partition columns are functionally dependent on
-    * keys by the table contract). */
+    * of a partition (upsert touch, COW delete) applies its vector and
+    * clears it. Same caveats as COW delete, plus one: the deleted BYTES
+    * remain on storage until a rewrite — vector deletes hide rows,
+    * rewrites forget them; a compliance pipeline runs [[deleteKeys]] on
+    * its purge deadline and verifies with the q152 audit. `keys`
+    * carries `keyCols` AND `partitionCols` (partition columns are
+    * functionally dependent on keys by the table contract). */
   def deleteKeysVector(root: String, keyCols: Seq[String],
                        partitionCols: Seq[String])(keys: DataFrame): Unit = {
     require(partitionCols.nonEmpty, "deleteKeysVector needs partition columns")
@@ -770,63 +504,23 @@ object ManifestStore {
       else newKeys.unionByName(
         readPaths(spark, root, prevVecRels, Some(sidecarSchema)))
         .distinct()
-    val version = prev.version + 1
-    val staged = stageGeneration(root, partitionCols, allKeys, version)
+    val staged = stageGeneration(root, partitionCols, allKeys,
+      prev.version + 1)
     // keys for partitions the table doesn't hold stage harmlessly but
     // must not be recorded (publish's live filter would drop them
     // anyway; dropping here keeps the manifest an exact statement)
     val stagedLive = staged.view.filterKeys(touchedKeys).toMap
-    // data entries unchanged; stats/blooms carry stale-WIDE (bounds
-    // remain supersets, bloom false-keeps are the bloom contract)
-    publish(spark, root, version, prev.entries, Some(prev), prev.stats,
-      prev.fileStats, prev.schemaJson, prev.blooms,
-      prev.deletes ++ stagedLive, keyCols, prev.props)
-  }
-
-  /** Maintenance compaction — the OPTIMIZE of this mini table format:
-    * after many pruned upserts a snapshot's partitions are scattered
-    * across many old generations (each holding a few surviving
-    * partition dirs and their small files). Compaction rewrites the
-    * ENTIRE current snapshot into one fresh generation and publishes it
-    * with the same manifest-last atomic rename — readers flip from the
-    * scattered snapshot to the compact one in one commit, crash-safe at
-    * every point like any other write. O(table) by design (that is what
-    * compaction is); run it on maintenance cadence, not per batch. The
-    * next publish's GC then collects the scattered generations. */
-  def compact(root: String, partitionCols: Seq[String])(
-      spark: SparkSession): Unit = {
-    val fs = fsOf(spark, root)
-    val prev = readManifest(fs, root).getOrElse(
-      throw new IllegalStateException(s"nothing to compact under $root"))
-    val current = readSnapshot(spark, root, prev, None)
-    val version = prev.version + 1
-    val entries = stageGeneration(root, partitionCols, current, version)
-    // deletion vectors are MATERIALIZED by the rewrite (readSnapshot
-    // applied them), so they clear — and a partition whose vector
-    // deleted every row legitimately vanishes; absent vectors, the
-    // partition set must be exactly preserved
-    if (prev.deletes.isEmpty && entries.keySet != prev.entries.keySet)
-      throw new IllegalStateException(
-        s"compaction changed the partition set of $root: " +
-          s"${entries.keySet} vs ${prev.entries.keySet}")
-    if (!entries.keySet.subsetOf(prev.entries.keySet))
-      throw new IllegalStateException(
-        s"compaction invented partitions at $root: " +
-          s"${entries.keySet -- prev.entries.keySet}")
-    // same rows, same partitions — recorded PARTITION bounds stay
-    // exact when no vectors applied (stale-wide, still safe, when they
-    // did); file stats drop (every file was rewritten)
-    publish(spark, root, version, entries, Some(prev), prev.stats,
-      schemaJson = prev.schemaJson, blooms = prev.blooms,
-      props = prev.props)
+    publish(spark, root, prev.copy(deletes = prev.deletes ++ stagedLive,
+      deleteKeyCols = keyCols), Some(prev))
   }
 
   /** Stage generation `version`: write `merged` (which must contain
     * ONLY touched partitions) hive-partitioned under a fresh generation
     * dir, then return its manifest entries keyed by the directories
-    * Spark ACTUALLY wrote. Package-private so the crash spec can stage
-    * without publishing — the simulated kill between data write and
-    * commit. */
+    * Spark ACTUALLY wrote — for an unpartitioned table, the one entry
+    * `""` → the generation dir. Package-private so the crash spec can
+    * stage without publishing — the simulated kill between data write
+    * and commit. */
   private[graft] def stageGeneration(root: String, partitionCols: Seq[String],
                                      merged: DataFrame, version: Long)
       : Map[String, String] = {
@@ -843,6 +537,7 @@ object ManifestStore {
     val genDir = s"$root/$genRel"
     merged.write.mode("overwrite")
       .partitionBy(partitionCols: _*).parquet(genDir)
+    if (partitionCols.isEmpty) return Map(partKey(Nil, Nil) -> genRel)
     val fs = fsOf(merged.sparkSession, root)
     def walk(p: HPath, depth: Int): Seq[HPath] =
       if (depth == 0) Seq(p)
@@ -861,42 +556,6 @@ object ManifestStore {
       rel -> s"$genRel/$rel"
     }.toMap
   }
-
-  /** Commit: write manifest `version` under a temp name, rename into
-    * place (the atomic commit point), then GC generations and manifests
-    * no longer referenced by the current or previous version (previous
-    * retained as the concurrent-reader grace window).
-    *
-    * OCC lost-update DETECTION (round-12): the table is single-writer
-    * by design (one pipeline owns a table, matching the reference's
-    * ownership model), but an ACCIDENTAL second writer used to lose
-    * silently — both stage against the same head, last rename wins,
-    * first writer's rows vanish with no error anywhere. `publish` now
-    * re-reads the head version immediately before the commit rename and
-    * throws [[ConcurrentModificationException]] if it moved past the
-    * version this write staged against (`prev`), cleaning up its temp
-    * manifest. The commit itself is then made EXCLUSIVE (round-13):
-    * the rename goes through [[commitRename]] — `FileContext.rename`
-    * with `Options.Rename.NONE`, whose contract is fail-on-existing-
-    * destination — so two writers that both pass the head re-read
-    * inside the same window cannot both land; `FileSystem.rename` on
-    * RawLocalFileSystem would silently overwrite the first winner's
-    * manifest. The loser's failed rename surfaces as the same
-    * [[ConcurrentModificationException]] the head check throws. */
-  /** Drift guard shared by the zone-map-stats and bloom layers: keys
-    * computed by a collector (from batch partition tuples) must be a
-    * subset of the keys stageGeneration derived from the directories
-    * Spark actually wrote. A key-convention mismatch would otherwise be
-    * SILENTLY dropped by publish's live-keys filter — reads stay
-    * correct (absent stats/bloom = keep) but the skipping layer goes
-    * dark with no signal, so fail loudly at the upsert instead. */
-  private[graft] def requireKeysSubset(kind: String, got: Set[String],
-                                       staged: Set[String],
-                                       root: String): Unit =
-    if (!got.subsetOf(staged))
-      throw new IllegalStateException(
-        s"$kind keys drifted from staged partitions at $root: " +
-          s"${got -- staged}")
 
   /** The exclusive commit point: rename that FAILS if `dst` exists.
     * `FileSystem.rename` overwrites an existing destination on
@@ -921,73 +580,42 @@ object ManifestStore {
     }
   }
 
-  private[graft] def publish(spark: SparkSession, root: String, version: Long,
-                             entries: Map[String, String],
-                             prev: Option[Manifest],
-                             stats: Map[String, Map[String, (String, String)]]
-                               = Map.empty,
-                             fileStats: Map[String, Map[String, Map[String, (String, String)]]]
-                               = Map.empty,
-                             schemaJson: Option[String] = None,
-                             blooms: Map[String, Map[String, String]]
-                               = Map.empty,
-                             deletes: Map[String, String] = Map.empty,
-                             deleteKeyCols: Seq[String] = Nil,
-                             props: Map[String, String] = Map.empty): Unit = {
+  /** Commit `next` as the version after `prev` (`prev.version + 1`, or 1
+    * for a new table; `next.version` is ignored): write the manifest
+    * under a temp name, rename it into place (the atomic commit point),
+    * then GC generations and manifests no longer referenced by the
+    * current or previous version (previous retained as the
+    * concurrent-reader grace window). Per-partition metadata is kept
+    * only for live entries: a dropped entry's file stats and deletion
+    * vector die with it.
+    *
+    * OCC lost-update DETECTION (round-12): the table is single-writer
+    * by design (one pipeline owns a table, matching the reference's
+    * ownership model), but an ACCIDENTAL second writer used to lose
+    * silently — both stage against the same head, last rename wins,
+    * first writer's rows vanish with no error anywhere. `publish`
+    * re-reads the head version immediately before the commit rename and
+    * throws [[ConcurrentModificationException]] if it moved past the
+    * version this write staged against (`prev`), cleaning up its temp
+    * manifest. The commit itself is then made EXCLUSIVE (round-13):
+    * the rename goes through [[commitRename]] — `FileContext.rename`
+    * with `Options.Rename.NONE`, whose contract is fail-on-existing-
+    * destination — so two writers that both pass the head re-read
+    * inside the same window cannot both land; `FileSystem.rename` on
+    * RawLocalFileSystem would silently overwrite the first winner's
+    * manifest. The loser's failed rename surfaces as the same
+    * [[ConcurrentModificationException]] the head check throws. */
+  private[graft] def publish(spark: SparkSession, root: String,
+                             next: Manifest, prev: Option[Manifest]): Unit = {
     val fs = fsOf(spark, root)
-    val node = mapper.createObjectNode()
-    node.put("version", version)
-    schemaJson.foreach(node.put("schema", _))
-    val e = node.putObject("entries")
-    entries.toSeq.sortBy(_._1).foreach { case (k, v) => e.put(k, v) }
-    def writeRanges(into: com.fasterxml.jackson.databind.node.ObjectNode,
-                    cols: Map[String, (String, String)]): Unit =
-      cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-        val arr = into.putArray(c); arr.add(lo); arr.add(hi)
-      }
-    // invariant: stats only for live partitions (a dropped partition's
-    // stale bounds must not outlive its entry)
-    val liveStats = stats.view.filterKeys(entries.contains).toMap
-    if (liveStats.nonEmpty) {
-      val sn = node.putObject("stats")
-      liveStats.toSeq.sortBy(_._1).foreach { case (k, cols) =>
-        writeRanges(sn.putObject(k), cols)
-      }
-    }
-    val liveFileStats = fileStats.view.filterKeys(entries.contains).toMap
-    if (liveFileStats.nonEmpty) {
-      val fn = node.putObject("fileStats")
-      liveFileStats.toSeq.sortBy(_._1).foreach { case (k, files) =>
-        val pn = fn.putObject(k)
-        files.toSeq.sortBy(_._1).foreach { case (f, cols) =>
-          writeRanges(pn.putObject(f), cols)
-        }
-      }
-    }
-    // same liveness invariant as stats: blooms only for live partitions
-    val liveBlooms = blooms.view.filterKeys(entries.contains).toMap
-    if (liveBlooms.nonEmpty) {
-      val bn = node.putObject("blooms")
-      liveBlooms.toSeq.sortBy(_._1).foreach { case (k, cols) =>
-        val pn = bn.putObject(k)
-        cols.toSeq.sortBy(_._1).foreach { case (c, enc) => pn.put(c, enc) }
-      }
-    }
-    // deletion vectors follow the liveness invariant too: a dropped
-    // partition's vector dies with its entry
-    val liveDeletes = deletes.view.filterKeys(entries.contains).toMap
-    if (liveDeletes.nonEmpty) {
-      require(deleteKeyCols.nonEmpty,
-        s"deletion vectors without recorded key columns at $root")
-      val dn = node.putObject("deletes")
-      liveDeletes.toSeq.sortBy(_._1).foreach { case (k, p) => dn.put(k, p) }
-      val kn = node.putArray("deleteKeyCols")
-      deleteKeyCols.foreach(kn.add)
-    }
-    if (props.nonEmpty) {
-      val pn = node.putObject("props")
-      props.toSeq.sortBy(_._1).foreach { case (k, v) => pn.put(k, v) }
-    }
+    val version = prev.fold(1L)(_.version + 1)
+    val liveDeletes = next.deletes.view.filterKeys(next.entries.contains).toMap
+    require(liveDeletes.isEmpty || next.deleteKeyCols.nonEmpty,
+      s"deletion vectors without recorded key columns at $root")
+    val m = next.copy(version = version,
+      fileStats = next.fileStats.view.filterKeys(next.entries.contains).toMap,
+      deletes = liveDeletes,
+      deleteKeyCols = if (liveDeletes.isEmpty) Nil else next.deleteKeyCols)
     // writer-unique temp name (same rationale as the generation-dir
     // nonce): two racing writers both staging v$version must not share
     // one temp file, or the loser's rename consumes/fails on the
@@ -996,8 +624,7 @@ object ManifestStore {
       s"${java.util.UUID.randomUUID().toString.take(8)}.json")
     val out = fs.create(tmp, true)
     try {
-      out.write(mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(node))
+      out.write(encode(m))
       out.hsync() // manifest bytes durable BEFORE the commit rename
     } finally out.close()
     // OCC check-and-commit: the head must still be the version this
@@ -1018,7 +645,7 @@ object ManifestStore {
     // GC: keep generations referenced by this or the previous manifest —
     // through data entries OR deletion-vector sidecars (a generation dir
     // holding only live sidecars is still live)
-    val keep = (entries.values ++ liveDeletes.values ++
+    val keep = (m.entries.values ++ m.deletes.values ++
       prev.toSeq.flatMap(p => p.entries.values ++ p.deletes.values))
       .map(_.split('/').take(2).mkString("/")).toSet
     val genRoot = new HPath(s"$root/$GDIR")
@@ -1041,34 +668,30 @@ object ManifestStore {
     }
     // manifests older than the grace version
     val graceFloor = prev.map(_.version).getOrElse(version)
-    fs.listStatus(new HPath(s"$root/$MDIR")).map(_.getPath)
-      .filter { p =>
-        val n = p.getName // strict match — never parse foreign files
-        n.matches("v\\d+\\.json") &&
-          n.stripPrefix("v").stripSuffix(".json").toLong < graceFloor
-      }.foreach(fs.delete(_, false))
+    versions(fs, root).filter(_ < graceFloor)
+      .foreach(v => fs.delete(new HPath(s"$root/$MDIR/v$v.json"), false))
   }
 
-  /** Partition-pruned CDC upsert with manifest-last publish: merge
-    * `batch` into the table at `root`, keeping the max-`(seqCol,
-    * tieBreak)` row per `keys`. Only partitions present in the batch
-    * are read (resolved through the manifest) and rewritten into the
-    * new generation; everything else is carried forward by reference.
-    * Partition columns must be functionally dependent on the merge keys
-    * (a key never moves partitions), exactly as the old pruned upsert
-    * required. Idempotent under micro-batch replay: re-delivering a
+  /** CDC upsert with manifest-last publish: merge `batch` into the table
+    * at `root`, keeping the max-`(seqCol, tieBreak)` row per `keys`.
+    * Only partitions present in the batch are read (resolved through
+    * the manifest) and rewritten into the new generation; everything
+    * else is carried forward by reference. Partition columns must be
+    * functionally dependent on the merge keys (a key never moves
+    * partitions). With no `partitionCols` the table is the one
+    * partition `""`: every batch rewrites it, and finding it costs no
+    * Spark job. Idempotent under micro-batch replay: re-delivering a
     * batch cannot change the max row per key, and a crash anywhere
     * leaves the table on a complete generation for the replay to merge
-    * against.
+    * against. `checkEmpty` skips a batch with no rows (a
+    * watermark-advance trigger) before any rewrite; batch mode turns
+    * it off, since the probe would execute a plan that is essentially
+    * never empty once more.
     */
   def upsert(root: String, keys: Seq[String], seqCol: String,
              tieBreak: Seq[String], partitionCols: Seq[String],
-             checkEmpty: Boolean = true,
-             statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil,
-             layout: DataFrame => DataFrame = identity)(batch: DataFrame): Unit =
-    upsertHooked(root, keys, seqCol, tieBreak, partitionCols, checkEmpty,
-      statsCols, bloomCols, layout, () => ())(batch)
+             checkEmpty: Boolean = true)(batch: DataFrame): Unit =
+    upsertHooked(root, keys, seqCol, tieBreak, partitionCols, checkEmpty)(batch)
 
   /** [[upsert]] with a deterministic interleave point for the OCC
     * rebase spec: `beforePublish` runs after this write has staged its
@@ -1080,21 +703,17 @@ object ManifestStore {
              seqCol: String,
              tieBreak: Seq[String], partitionCols: Seq[String],
              checkEmpty: Boolean = true,
-             statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil,
-             layout: DataFrame => DataFrame = identity,
              beforePublish: () => Unit = () => ())(batch: DataFrame): Unit = {
-    require(partitionCols.nonEmpty,
-      "ManifestStore.upsert needs partition columns; use Runner.upsertParquet for unpartitioned tables")
     if (checkEmpty && batch.isEmpty) return
     val spark = batch.sparkSession
     val fs = fsOf(spark, root)
     val merge = graft.ops.Relational.applyChanges(
       keys, col(seqCol), tieBreak.map(col)) _
     val prev = readManifest(fs, root)
-    val touched = batch.select(partitionCols.map(col): _*).distinct().collect()
-    val touchedKeys = touched.map(r => partKey(partitionCols, r.toSeq)).toSet
-    val version = prev.map(_.version).getOrElse(0L) + 1
+    val touchedKeys =
+      if (partitionCols.isEmpty) Set(partKey(Nil, Nil))
+      else batch.select(partitionCols.map(col): _*).distinct().collect()
+        .map(r => partKey(partitionCols, r.toSeq)).toSet
     val merged = prev match {
       case None => merge(batch)
       case Some(m) =>
@@ -1107,11 +726,8 @@ object ManifestStore {
           readPaths(spark, root, oldTouched, m.schema), touchedKeys)
           .unionByName(batch, allowMissingColumns = true))
     }
-    // `layout` is the write-clustering hook (repartitionByRange +
-    // sortWithinPartitions on the stats column is the canonical one):
-    // it shapes how the merge result lands in FILES, which is what
-    // makes the per-file zone maps below sharp instead of vacuous
-    val newEntries = stageGeneration(root, partitionCols, layout(merged), version)
+    val newEntries = stageGeneration(root, partitionCols, merged,
+      prev.fold(0L)(_.version) + 1)
     // encoding cross-check: the keys computed from batch tuples must be
     // exactly the directories Spark wrote — any partition-value type
     // whose toString drifts from hive-dir encoding fails HERE, loudly,
@@ -1120,82 +736,29 @@ object ManifestStore {
       throw new IllegalStateException(
         s"partition key encoding drift at $root: staged=${newEntries.keySet} " +
           s"computed=$touchedKeys")
-    // zone-map stats for the rewritten partitions, read back off the
-    // staged files; untouched partitions keep their recorded bounds.
-    // An empty staged generation (checkEmpty=false path) has no files
-    // to scan — and nothing to record.
-    val (newStats, newFileStats) =
-      if (statsCols.isEmpty || newEntries.isEmpty)
-        (Map.empty[String, Map[String, (String, String)]],
-          Map.empty[String, Map[String, Map[String, (String, String)]]])
-      else collectStats(spark, root,
-        // the staged generation's ACTUAL dir (nonce included) — derive
-        // it from the entries stageGeneration returned, don't recompute
-        newEntries.values.head.split('/').take(2).mkString("/"),
-        partitionCols, statsCols, merged.schema)
-    requireKeysSubset("zone-map stats", newStats.keySet, newEntries.keySet,
-      root)
-    val newBlooms0 =
-      if (bloomCols.isEmpty || newEntries.isEmpty)
-        Map.empty[String, Map[String, String]]
-      else collectBlooms(spark, root,
-        newEntries.values.head.split('/').take(2).mkString("/"),
-        partitionCols, bloomCols, merged.schema)
-    // mirror the stats drift check for blooms: a partKey-convention
-    // mismatch between collectBlooms' keyOf and the staged directory
-    // keys would otherwise be silently dropped by publish's liveBlooms
-    // filter — reads stay correct (absent bloom = keep) but the whole
-    // point-lookup skipping layer goes dark with no signal. Fail loudly.
-    requireKeysSubset("bloom", newBlooms0.keySet, newEntries.keySet, root)
-    val newBlooms = newBlooms0
     // Assemble-and-publish as a function of the base manifest: the
     // retry-and-rebase loop below re-runs EXACTLY this with a newer
-    // head as the base (our staged generation and fresh stats/blooms
-    // stay valid — they only depend on our own merge inputs).
-    def publishAgainst(base: Option[Manifest], ver: Long): Unit = {
+    // head as the base (our staged generation stays valid — it only
+    // depends on our own merge inputs).
+    def publishAgainst(base: Option[Manifest]): Unit = {
+      val b = base.getOrElse(Manifest(0L, Map.empty))
       // the recorded schema must stay a SUPERSET of every live
       // generation's columns: a narrower batch that only touches NEW
       // partitions would otherwise narrow the log, and the next pinned
       // rewrite of an old partition would silently drop the missing
       // columns — union with the base record, batch types winning on
       // name collisions (the evolution convention)
-      val recordedSchema = unionSchema(base.flatMap(_.schema), merged.schema)
-      // touched partitions either get FRESH stats/blooms or none at all
-      // (stale-NARROW bounds or blooms would skip wrongly); carried
-      // blooms additionally drop per RE-TYPED column — positions hashed
-      // under the old type are stale-narrow in disguise (Spark xxhash64
-      // of Int ≠ of Long) and would silently lose rows
-      val retyped: Set[String] = base.flatMap(_.schema) match {
-        case None => Set.empty
-        case Some(old) =>
-          val newTypes =
-            recordedSchema.fields.map(f => f.name -> f.dataType).toMap
-          old.fields.collect {
-            case f if newTypes.get(f.name).exists(_ != f.dataType) => f.name
-          }.toSet
-      }
-      val carriedBlooms = {
-        val b = base.map(_.blooms).getOrElse(Map.empty) -- touchedKeys
-        if (retyped.isEmpty) b
-        else b.view
-          .mapValues(_.view.filterKeys(c => !retyped(c)).toMap)
-          .filter(_._2.nonEmpty).toMap
-      }
-      publish(spark, root, ver,
-        base.map(_.entries).getOrElse(Map.empty) ++ newEntries, base,
-        (base.map(_.stats).getOrElse(Map.empty) -- touchedKeys) ++ newStats,
-        (base.map(_.fileStats).getOrElse(Map.empty) -- touchedKeys) ++ newFileStats,
-        Some(recordedSchema.json),
-        carriedBlooms ++ newBlooms,
+      publish(spark, root, b.copy(
+        entries = b.entries ++ newEntries,
+        fileStats = b.fileStats -- touchedKeys,
+        schemaJson = Some(unionSchema(b.schema, merged.schema).json),
         // rewritten partitions materialized their vectors; untouched
         // ones keep theirs
-        base.map(_.deletes).getOrElse(Map.empty) -- touchedKeys,
-        base.map(_.deleteKeyCols).getOrElse(Nil),
-        base.map(_.props).getOrElse(Map.empty))
+        deletes = b.deletes -- touchedKeys), base)
     }
 
     beforePublish()
-    publishWithRebase(fs, root, prev, version, touchedKeys, publishAgainst)
+    publishWithRebase(fs, root, prev, touchedKeys, publishAgainst)
   }
 
   /** RETRY-AND-REBASE (round-13 verdict item 6, shared by [[upsert]]
@@ -1215,15 +778,14 @@ object ManifestStore {
     * else modified. True conflicts (overlapping touched sets) still
     * throw, as does exhausting the bounded retries. */
   private def publishWithRebase(fs: FileSystem, root: String,
-      prev: Option[Manifest], version: Long, touchedKeys: Set[String],
-      publishAgainst: (Option[Manifest], Long) => Unit): Unit = {
+      prev: Option[Manifest], touchedKeys: Set[String],
+      publishAgainst: Option[Manifest] => Unit): Unit = {
     var base = prev
-    var ver = version
     var committed = false
     var attempts = 0
     while (!committed) {
       try {
-        publishAgainst(base, ver)
+        publishAgainst(base)
         committed = true
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -1246,7 +808,6 @@ object ManifestStore {
                 "write also touches — rebase is impossible without " +
                 "losing one of the writes; serialize these pipelines")
           base = Some(head)
-          ver = head.version + 1
       }
     }
   }
@@ -1279,67 +840,4 @@ object ManifestStore {
         val have = next.fieldNames.toSet
         StructType(next.fields ++ p.fields.filterNot(f => have(f.name)))
     }
-}
-
-/** Bloom filter encoding shared by the manifest's build and lookup
-  * sides: m = 8192 bits (1 KiB per partition per column in the
-  * manifest, before base64), k = 4 xxhash64-derived positions. The
-  * positions are SPARK EXPRESSIONS (`pmod(xxhash64(v, i), m)`) on both
-  * sides, so build/lookup hash parity is by construction, not by a
-  * hand-rolled reimplementation that could drift. */
-object BloomSkip {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-
-  val BITS = 8192
-  val HASHES = 4
-
-  /** The k bit positions of one value, as codegen'd columns. */
-  def positionExprs(value: Column): Seq[Column] =
-    (0 until HASHES).map(i =>
-      pmod(xxhash64(value, lit(i)), lit(BITS.toLong)).cast("int"))
-
-  /** Pack set bit positions into the manifest encoding "m:k:base64". */
-  def pack(positions: Iterable[Int]): String = {
-    val words = new Array[Long](BITS / 64)
-    positions.foreach { p =>
-      require(p >= 0 && p < BITS, s"bit position $p out of range")
-      words(p >>> 6) |= 1L << (p & 63)
-    }
-    val bytes = java.nio.ByteBuffer.allocate(words.length * 8)
-    words.foreach(bytes.putLong)
-    s"$BITS:$HASHES:" +
-      java.util.Base64.getEncoder.encodeToString(bytes.array())
-  }
-
-  /** True unless some position's bit is unset (definite absence).
-    * ANY deviation from this build's sizing KEEPS: lookup positions are
-    * always computed mod the compiled-in BITS with HASHES probes, so a
-    * bloom recorded under different parameters (older build, foreign
-    * writer) is uncheckable — treating it as checkable would turn a
-    * parameter mismatch into silent row loss (`p < m` against a smaller
-    * recorded m fails every probe → definite-absence verdicts from
-    * garbage). Malformed encodings keep for the same reason — the
-    * stats safety direction throughout. */
-  def mightContain(encoded: String, positions: Seq[Int]): Boolean = {
-    val parts = encoded.split(":", 3)
-    if (parts.length != 3) return true
-    val sized =
-      try parts(0).toInt == BITS && parts(1).toInt == HASHES
-      catch { case _: NumberFormatException => false }
-    if (!sized) return true
-    val bits = try java.util.Base64.getDecoder.decode(parts(2))
-      catch { case _: IllegalArgumentException => return true }
-    if (bits.length * 8 != BITS) return true
-    val buf = java.nio.ByteBuffer.wrap(bits)
-    val words = new Array[Long](bits.length / 8)
-    var i = 0
-    while (i < words.length) { words(i) = buf.getLong(); i += 1 }
-    // an out-of-range probe position can only mean corruption upstream
-    // (real lookups compute mod BITS) — uncheckable, so KEEP rather
-    // than hand down a definite-absence verdict from garbage
-    positions.forall { p =>
-      p < 0 || p >= BITS || (words(p >>> 6) & (1L << (p & 63))) != 0
-    }
-  }
 }

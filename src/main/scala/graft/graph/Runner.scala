@@ -4,9 +4,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -44,31 +42,26 @@ object Runner {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(parts: _*).parquet(path)
       case WriteMode.Upsert(keys, seqCol, tie) =>
-        // checkEmpty=false: a batch-mode plan is essentially never empty
-        // and the emptiness probe would execute the full plan once more
-        if (parts.nonEmpty)
-          ManifestStore.upsert(path, keys, seqCol, tie, parts,
-            checkEmpty = false)(df)
-        else upsertParquet(path, keys, seqCol, tie, checkEmpty = false)(df)
+        ManifestStore.upsert(path, keys, seqCol, tie, parts,
+          checkEmpty = false)(df)
     }
   }
 
-  /** How consumers read a materialized table back: partitioned upsert
-    * tables live behind a [[ManifestStore]] manifest (readers must
-    * resolve the committed generation — a raw path read would see no
-    * data, by design); everything else is a plain parquet read. Both pin
-    * the PLAN's schema, not directory inference — a read without it
-    * re-types partition columns from directory names (string "00" →
-    * int 0) and reorders them to the end, silently changing what
-    * consumers see. An Append or Upsert table on disk also holds state
-    * beyond this run's plan (earlier partitions, merged history), which
-    * is exactly what its consumers must see. */
-  private def shadowLoader(spark: SparkSession, t: TableDef, path: String,
-                           planSchema: StructType): () => DataFrame =
+  /** Read back a table this runner wrote at `path`: an Upsert table
+    * lives behind a [[ManifestStore]] manifest (a reader must resolve
+    * the committed generation — a raw path read would see no data, by
+    * design); everything else is a plain parquet read. Consumers inside
+    * a run pass the PLAN's schema: a read without it re-types partition
+    * columns from directory names (string "00" → int 0) and reorders
+    * them to the end, silently changing what consumers see. An Append
+    * or Upsert table on disk also holds state beyond this run's plan
+    * (earlier partitions, merged history), which is exactly what its
+    * consumers must see. */
+  def read(spark: SparkSession, t: TableDef, path: String,
+           schema: Option[StructType] = None): DataFrame =
     t.writeMode match {
-      case _: WriteMode.Upsert if t.partitionCols.nonEmpty =>
-        () => ManifestStore.read(spark, path, Some(planSchema))
-      case _ => () => spark.read.schema(planSchema).parquet(path)
+      case _: WriteMode.Upsert => ManifestStore.read(spark, path, schema)
+      case _ => schema.fold(spark.read)(spark.read.schema).parquet(path)
     }
 
   /** Materialize `tables` (in topological order) under `outDir`. Each
@@ -93,7 +86,7 @@ object Runner {
       val df = t.transform(deps.map(_()))
       val path = s"$outDir/${t.name}"
       writeTable(df, t, path)
-      shadowLoader(spark, t, path, df.schema)
+      () => read(spark, t, path, Some(df.schema))
     }
     try {
       val done = tables.foldLeft(Map.empty[String, Future[() => DataFrame]]) {
@@ -121,7 +114,7 @@ object Runner {
   /** Materialize every registered table under `outDir/<name>`, honoring
     * each table's partition columns (the reference's
     * `partition_cols=["date_"]` convention, transactions:996) and write
-    * mode, and return the paths.
+    * mode, and return the paths ([[read]] reads a table back).
     *
     * Composition is plan-level inside a table and materialized between
     * tables: a consumer reads what its deps wrote, with the deps' plan
@@ -134,68 +127,6 @@ object Runner {
     materialize(reg.session, tables, reg.sourceLoaders, outDir)
     tables.map(t => t.name -> s"$outDir/${t.name}").toMap
   }
-
-  /** Merge `batch` into the parquet table at `path`, keeping the
-    * max-`(seqCol, tieBreak)` row per `keys` — the parquet-native
-    * `MERGE` used by [[WriteMode.Upsert]] tables and by the streaming
-    * `foreachBatch` upsert sink. Copy-on-write with a two-rename swap:
-    * the merged generation is staged, the old generation moves aside to
-    * `<path>.old`, the new one renames into place, and only then is the
-    * backup dropped — every crash point leaves either the old or the new
-    * complete generation recoverable (the `.old` restore on entry), so a
-    * replayed micro-batch merges against intact history. The rewrite is
-    * O(table) per batch — correct anywhere, and the right default for
-    * unpartitioned tables; a hive-partitioned table whose partition
-    * columns are stable per key should use [[ManifestStore.upsert]],
-    * which rewrites only touched partitions AND publishes them behind
-    * one atomic manifest commit. Idempotent: re-delivering a
-    * micro-batch cannot change the max row per key.
-    */
-  def upsertParquet(path: String, keys: Seq[String], seqCol: String,
-                    tieBreak: Seq[String] = Nil, checkEmpty: Boolean = true)(
-      batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val target = new HPath(path)
-    val backup = new HPath(path + ".old")
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    // recovery: a crash between the two swap renames below leaves no
-    // target but an intact backup — restore it before merging. The
-    // restore MUST succeed or stop the merge: proceeding would treat
-    // the table as empty and the later backup delete would destroy the
-    // only surviving generation.
-    if (!fs.exists(target) && fs.exists(backup) &&
-        !fs.rename(backup, target))
-      throw new java.io.IOException(s"upsert recovery rename failed for $path")
-    // no-data micro-batches (watermark-advance triggers) must not pay an
-    // O(table) rewrite — the merge result would be identical. Skipped in
-    // batch mode (checkEmpty=false), where the probe would re-execute a
-    // full plan that is essentially never empty.
-    if (checkEmpty && batch.isEmpty) return
-    val unioned =
-      if (fs.exists(target))
-        spark.read.parquet(path).unionByName(batch, allowMissingColumns = true)
-      else batch
-    val merged = graft.ops.Relational.applyChanges(
-      keys, col(seqCol), tieBreak.map(col))(unioned)
-    val staging = new HPath(path + ".staging")
-    // the staging write MATERIALIZES the merge before the old generation
-    // is touched — the read above is consumed entirely by this job
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(backup, true) // stale backup from a completed prior swap
-    if (fs.exists(target) && !fs.rename(target, backup))
-      throw new java.io.IOException(s"upsert swap: backup rename failed for $path")
-    if (!fs.rename(staging, target))
-      // old generation still intact at .old — recovered on next entry
-      throw new java.io.IOException(s"upsert swap failed for $path")
-    fs.delete(backup, true)
-  }
-
-  // The former `upsertParquetPruned` (dynamic-partition-overwrite merge)
-  // lived here through round 10. Its per-partition commits meant a crash
-  // mid-overwrite could expose a MIXED-generation table (its own
-  // docstring conceded as much); [[ManifestStore.upsert]] replaces it
-  // with the same O(touched partitions) pruned merge published behind a
-  // single atomic manifest rename.
 
   /** Scheduled-trigger orchestration — the reference's operational mode:
     * a cluster kicks off on a cadence (hourly, transactions:926), each
@@ -286,19 +217,17 @@ object Runner {
           // merge is idempotent, so at-least-once foreachBatch delivery
           // still converges to exactly the batch apply_changes result.
           // The batch is persisted because each upsert runs several
-          // actions on it (the emptiness probe, the touched-partition
-          // collect, the merge), and every action would otherwise re-run
-          // the micro-batch's stateful plan and re-commit its state.
+          // actions on it (the emptiness probe, a partitioned table's
+          // touched-partition collect, the merge), and every action would
+          // otherwise re-run the micro-batch's stateful plan and re-commit
+          // its state.
           resolved.writeStream
             .outputMode("update")
             .option("checkpointLocation", checkpoint)
             .foreachBatch { (batch: DataFrame, _: Long) =>
               batch.persist()
-              try {
-                if (t.partitionCols.nonEmpty)
-                  ManifestStore.upsert(path, keys, seqCol, tie, t.partitionCols)(batch)
-                else upsertParquet(path, keys, seqCol, tie)(batch)
-              } finally batch.unpersist()
+              try ManifestStore.upsert(path, keys, seqCol, tie, t.partitionCols)(batch)
+              finally batch.unpersist()
             }
             .trigger(Trigger.AvailableNow())
             .start()
@@ -314,7 +243,7 @@ object Runner {
       q.awaitTermination()
       // the boundary's PLAN schema, for the same reason as runBatch:
       // consumers must not see directory-inference re-typing
-      t.name -> shadowLoader(spark, t, path, resolved.schema)
+      t.name -> (() => read(spark, t, path, Some(resolved.schema)))
     }.toMap
     // A terminated query's state-store providers stay loaded in the
     // executor cache (in-memory version maps + a maintenance thread

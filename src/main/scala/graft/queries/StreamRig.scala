@@ -31,7 +31,8 @@ object StreamRig {
   }
 
   /** Run `reg` with `feeds` as its streamed sources into a fresh scratch
-    * directory and return the materialized `table`.
+    * directory and return the materialized `table`, read back with
+    * [[Runner.read]].
     *
     * The run uses 4 shuffle partitions (= state-store partitions). A
     * catch-up job over a bounded backlog wants FEW: each one is a
@@ -53,7 +54,7 @@ object StreamRig {
     val paths = withConfs(s, confs: _*) {
       Runner.runStreamingThenFull(s, reg, feeds, out)
     }
-    s.read.parquet(paths(table))
+    Runner.read(s, reg.describe(table).get, paths(table))
   }
 
   /** Run the one-node DAG `t` over `events_feed`, whose batch twin is the

@@ -270,7 +270,7 @@ object StreamingQueries {
     // `max_by` state aggregation (StreamingOps.applyChangesStream — one
     // row per key in the state store, update-mode emission); the sink is
     // WriteMode.Upsert, whose foreachBatch MERGE keeps the max-(ts,
-    // event_id) row per key across batches (Runner.upsertParquet). The
+    // event_id) row per key across batches (ManifestStore.upsert). The
     // final table must hash-equal the batch apply_changes oracle (q38's
     // QUALIFY form) — batch ≡ final streaming state, the §2.11 contract.
     Q("q88_streaming_apply_changes",

@@ -210,8 +210,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // commit an EMPTY v1 whose only content is the schema — the same
     // "empty table is readable" contract ManifestStore.readSnapshot
     // documents; publish's head-check makes concurrent CREATE lose
-    ManifestStore.publish(spark, path, 1L, Map.empty, None,
-      schemaJson = Some(schema.json))
+    ManifestStore.publish(spark, path,
+      ManifestStore.Manifest(1L, Map.empty, schemaJson = Some(schema.json)),
+      None)
     new GraftTable(
       s"$catName.${(ident.namespace() :+ ident.name()).mkString(".")}",
       path, schema)

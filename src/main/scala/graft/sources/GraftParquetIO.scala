@@ -75,8 +75,8 @@ object GraftParquetIO {
   /** One file's write-time statistics, exactly as they land in the
     * manifest: data columns' (min, max) plus the `__rows` /
     * `<col>:nulls` pseudo-entries. Columns that were all-null have no
-    * (min, max) entry — absent bounds must KEEP, the same rule as every
-    * other stats layer in ManifestStore. */
+    * (min, max) entry — absent bounds must KEEP (GraftPrune classifies
+    * such a column Mixed). */
   final class FileStats(schema: StructType) extends Serializable {
     private val n = schema.length
     private var rows = 0L

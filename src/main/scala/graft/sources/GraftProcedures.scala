@@ -129,9 +129,7 @@ class VacuumProcedure(root: String) extends UnboundProcedure {
         val spark = SparkSession.active
         val m = GraftTableOps.manifestOf(spark, path)
         val gensBefore = GraftProcedures.genDirs(spark, path)
-        ManifestStore.publish(spark, path, m.version + 1, m.entries,
-          Some(m), m.stats, m.fileStats, m.schemaJson, m.blooms,
-          m.deletes, m.deleteKeyCols, m.props)
+        ManifestStore.publish(spark, path, m, Some(m))
         val gensAfter = GraftProcedures.genDirs(spark, path)
         val row = new GenericInternalRow(Array[Any](gensBefore, gensAfter))
         scala.jdk.CollectionConverters.IteratorHasAsJava(
@@ -160,13 +158,9 @@ class SnapshotsProcedure(root: String) extends UnboundProcedure {
         val spark = SparkSession.active
         val fs = new HPath(path)
           .getFileSystem(spark.sessionState.newHadoopConf())
-        val mdir = new HPath(s"$path/_manifest")
-        require(fs.exists(mdir), s"no table at $path")
-        val versions = fs.listStatus(mdir).map(_.getPath.getName).collect {
-          case n if n.matches("v\\d+\\.json") =>
-            n.stripPrefix("v").stripSuffix(".json").toLong
-        }.sorted
-        val rows = versions.flatMap(v =>
+        val versions = ManifestStore.versions(fs, path)
+        require(versions.nonEmpty, s"no table at $path")
+        val rows = versions.toArray.flatMap(v =>
           ManifestStore.readManifestAt(fs, path, v)).map { m =>
           new GenericInternalRow(Array[Any](m.version,
             m.entries.size.toLong, GraftProcedures.rowsOf(m)))

@@ -95,8 +95,7 @@ class GraftTable(tableName: String, root: String, tableSchema: StructType,
   override def truncateTable(): Boolean = {
     requireWritable("TRUNCATE")
     val m = fsm
-    ManifestStore.publish(spark, root, m.version + 1, Map.empty, Some(m),
-      schemaJson = m.schemaJson, props = m.props)
+    ManifestStore.publish(spark, root, m.copy(entries = Map.empty), Some(m))
     true
   }
 
@@ -121,9 +120,8 @@ class GraftTable(tableName: String, root: String, tableSchema: StructType,
             "— canDeleteWhere must have returned false")
       }
     }
-    ManifestStore.publish(spark, root, m.version + 1, m.entries -- drop,
-      Some(m), fileStats = m.fileStats -- drop, schemaJson = m.schemaJson,
-      props = m.props)
+    ManifestStore.publish(spark, root, m.copy(entries = m.entries -- drop),
+      Some(m))
   }
 
   // ---- row-level operations (copy-on-write DELETE/UPDATE/MERGE) ------
@@ -195,11 +193,10 @@ object GraftTableOps {
     val newEntries = staged.map(f => s"file=$genRel/${f.name}" -> s"$genRel/${f.name}")
     val newFileStats = staged.map(f =>
       s"file=$genRel/${f.name}" -> Map(s"$genRel/${f.name}" -> f.stats)).toMap
-    ManifestStore.publish(spark, root, m.version + 1,
-      (m.entries -- replaced) ++ newEntries, Some(m),
+    ManifestStore.publish(spark, root, m.copy(
+      entries = (m.entries -- replaced) ++ newEntries,
       fileStats = (m.fileStats -- replaced) ++ newFileStats,
-      schemaJson = m.schemaJson,
-      props = m.props ++ extraProps)
+      props = m.props ++ extraProps), Some(m))
   }
 
   /** Best-effort removal of an uncommitted staging dir (abort path /

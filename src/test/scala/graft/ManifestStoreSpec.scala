@@ -54,151 +54,6 @@ class ManifestStoreSpec extends AnyFunSuite {
       "touched partition must point at the new generation")
   }
 
-  test("readSkipping: zone-map stats skip by value range, stay safe under " +
-    "rewrites and deletes") {
-    val sp = spark
-    import sp.implicits._
-    val root = ScratchDirs.create("mstore_zm")
-    // bucket 0 holds seq 1-2, bucket 1 holds seq 10-11
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      statsCols = Seq("seq"))(
-      Seq((1L, 1L, "a", 0), (2L, 2L, "b", 0), (3L, 10L, "c", 1),
-        (4L, 11L, "d", 1)).toDF("k", "seq", "v", "bucket"))
-    val m1 = ManifestStore.readManifest(fs(root), root).get
-    assert(m1.stats("bucket=0")("seq") === ("1", "2"))
-    assert(m1.stats("bucket=1")("seq") === ("10", "11"))
-    // a seq >= 5 read resolves to bucket 1 ONLY — driver-side, via the
-    // recorded bounds, though `bucket` itself says nothing about seq;
-    // the same predicate re-applies as the row-level residual (zone
-    // maps prune PARTITIONS, the engine still filters rows)
-    def bySeqAtLeast(lo: Long) =
-      ManifestStore.readSkipping(spark, root) { (_, st) =>
-        st.get("seq").forall { case (_, hi) => hi.toLong >= lo }
-      }.filter(org.apache.spark.sql.functions.col("seq") >= lo)
-    assert(bySeqAtLeast(5).select("k").collect().map(_.getLong(0)).toSet
-      === Set(3L, 4L))
-    assert(bySeqAtLeast(5).inputFiles.forall(_.contains("bucket=1")))
-    // rewriting bucket 0 with a row OUTSIDE its old bounds refreshes
-    // them — the skipping read must now include bucket 0
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      statsCols = Seq("seq"))(
-      Seq((1L, 99L, "A", 0)).toDF("k", "seq", "v", "bucket"))
-    val m2 = ManifestStore.readManifest(fs(root), root).get
-    assert(m2.stats("bucket=0")("seq") === ("2", "99"),
-      "rewritten partition must carry FRESH bounds")
-    assert(m2.stats("bucket=1")("seq") === ("10", "11"),
-      "untouched partition keeps its recorded bounds")
-    assert(bySeqAtLeast(50).select("k").collect().map(_.getLong(0)).toSet
-      === Set(1L))
-    // a stats-less rewrite DROPS the touched partition's bounds (stale-
-    // narrow bounds would skip wrongly); absent stats = always kept
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((5L, 1000L, "e", 1)).toDF("k", "seq", "v", "bucket"))
-    val m3 = ManifestStore.readManifest(fs(root), root).get
-    assert(!m3.stats.contains("bucket=1"),
-      "stats-less rewrite must not carry old bounds forward")
-    assert(bySeqAtLeast(500).select("k").collect().map(_.getLong(0)).toSet
-      === Set(5L), "stat-less partition must be kept by the range read")
-    // deletes carry stale-WIDE bounds (a safe superset)
-    ManifestStore.deleteKeys(root, Seq("k"), Seq("bucket"))(
-      Seq((1L, 0)).toDF("k", "bucket"))
-    val m4 = ManifestStore.readManifest(fs(root), root).get
-    assert(m4.stats("bucket=0")("seq") === ("2", "99"),
-      "post-delete bounds stay as recorded (superset, still safe)")
-    assert(bySeqAtLeast(5).select("k").collect().map(_.getLong(0)).toSet
-      === Set(3L, 4L, 5L))
-  }
-
-  test("file-level zone maps: clustered layout + per-file bounds skip " +
-    "files inside a partition") {
-    val sp = spark
-    import sp.implicits._
-    import org.apache.spark.sql.functions.col
-    val root = ScratchDirs.create("mstore_fzm")
-    // one partition, 30 keys, range-clustered into 3 files of ~10 seqs
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      statsCols = Seq("seq"),
-      layout = df => df.repartitionByRange(3, col("seq"))
-        .sortWithinPartitions("seq"))(
-      (1L to 30L).map(i => (i, i, s"v$i", 0)).toDF("k", "seq", "v", "bucket"))
-    val m = ManifestStore.readManifest(fs(root), root).get
-    val files = m.fileStats("bucket=0")
-    assert(files.size === 3, s"expected 3 clustered files, got $files")
-    // per-file bounds cover disjoint ranges and agree with the
-    // partition-level bounds at the envelope
-    val ranges = files.values.map(_("seq")).map {
-      case (lo, hi) => (lo.toLong, hi.toLong) }.toSeq.sortBy(_._1)
-    assert(ranges.sliding(2).forall {
-      case Seq((_, h1), (l2, _)) => h1 < l2; case _ => true },
-      s"clustered files must cover disjoint seq ranges: $ranges")
-    assert(m.stats("bucket=0")("seq") === ("1", "30"))
-    // a seq >= 25 read keeps the partition but lists ONLY the top file
-    val pruned = ManifestStore.readSkipping(spark, root) { (_, st) =>
-      st.get("seq").forall { case (_, hi) => hi.toLong >= 25 }
-    }.filter(col("seq") >= 25)
-    assert(pruned.select("k").collect().map(_.getLong(0)).toSet ===
-      (25L to 30L).toSet)
-    val allFiles = files.keySet
-    val readFiles = pruned.inputFiles.map(f =>
-      f.substring(f.indexOf("_gen/"))).toSet
-    assert(readFiles.subsetOf(allFiles) && readFiles.size < allFiles.size,
-      s"file-level skipping must read a strict subset: $readFiles")
-    // a delete rewrite drops the (now-invalid) file stats but keeps
-    // the partition bounds; the ranged read still answers correctly
-    ManifestStore.deleteKeys(root, Seq("k"), Seq("bucket"))(
-      Seq((30L, 0)).toDF("k", "bucket"))
-    val m2 = ManifestStore.readManifest(fs(root), root).get
-    assert(!m2.fileStats.contains("bucket=0"),
-      "rewritten partition must not carry stale file stats")
-    assert(m2.stats("bucket=0")("seq") === ("1", "30"))
-    val after = ManifestStore.readSkipping(spark, root) { (_, st) =>
-      st.get("seq").forall { case (_, hi) => hi.toLong >= 25 }
-    }.filter(col("seq") >= 25)
-    assert(after.select("k").collect().map(_.getLong(0)).toSet ===
-      (25L to 29L).toSet)
-  }
-
-  test("file zone maps survive partition values that URI-encode (spaces)") {
-    // input_file_name() returns a percent-encoded URI; the stored file
-    // key must be the DECODED on-disk path or no read can resolve it
-    val sp = spark
-    import sp.implicits._
-    import org.apache.spark.sql.functions.col
-    val root = ScratchDirs.create("mstore_uri")
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      statsCols = Seq("seq"))(
-      Seq((1L, 1L, "a b"), (2L, 9L, "a b"), (3L, 5L, "plain"))
-        .toDF("k", "seq", "bucket"))
-    val m = ManifestStore.readManifest(fs(root), root).get
-    val spacedKey = m.entries.keys.find(_.contains("a b")).getOrElse(
-      fail(s"expected a decoded 'bucket=a b' entry, got ${m.entries.keys}"))
-    assert(m.fileStats(spacedKey).keys.forall(f =>
-      f.contains("bucket=a b") && !f.contains("%20")),
-      s"file keys must be decoded paths: ${m.fileStats(spacedKey).keys}")
-    val pruned = ManifestStore.readSkipping(spark, root) { (_, st) =>
-      st.get("seq").forall { case (_, hi) => hi.toLong >= 8 }
-    }.filter(col("seq") >= 8)
-    assert(pruned.select("k").collect().map(_.getLong(0)).toSet === Set(2L))
-  }
-
-  test("stats read pins the schema: string partitions '0' and '00' stay distinct") {
-    // the unpinned-read trap Runner documents: type inference would
-    // re-type both dirs to int 0, collapse their stats keys, and either
-    // drop stats silently or misattribute file lists across partitions
-    val sp = spark
-    import sp.implicits._
-    val root = ScratchDirs.create("mstore_pin")
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      statsCols = Seq("seq"))(
-      Seq((1L, 10L, "0"), (2L, 20L, "00")).toDF("k", "seq", "bucket"))
-    val m = ManifestStore.readManifest(fs(root), root).get
-    assert(m.stats.keySet === Set("bucket=0", "bucket=00"))
-    assert(m.stats("bucket=0")("seq") === ("10", "10"))
-    assert(m.stats("bucket=00")("seq") === ("20", "20"))
-    assert(m.fileStats("bucket=0").keys.forall(_.contains("bucket=0/")))
-    assert(m.fileStats("bucket=00").keys.forall(_.contains("bucket=00/")))
-  }
-
   test("schema in the manifest: repeat upserts on '00'-style string " +
     "partitions, and a full purge leaves a readable empty table") {
     val sp = spark
@@ -222,7 +77,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(ManifestStore.read(spark, root).schema("bucket").dataType
       === org.apache.spark.sql.types.StringType)
     // full right-to-be-forgotten purge: the table becomes EMPTY, not
-    // broken — read and compact still work off the recorded schema
+    // broken — the read still works off the recorded schema
     ManifestStore.deleteKeys(root, Seq("k"), Seq("bucket"))(
       Seq((1L, "00"), (2L, "7")).toDF("k", "bucket"))
     val purged = ManifestStore.read(spark, root)
@@ -259,86 +114,52 @@ class ManifestStoreSpec extends AnyFunSuite {
       s"column v must survive the narrow batch, got $rows")
   }
 
-  test("readWhere prunes at the manifest: only kept directories are opened") {
-    val sp = spark
-    import sp.implicits._
-    val root = ScratchDirs.create("mstore_rw")
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1), (3L, 1L, "c", 2), (4L, 1L, "d", 2))
-        .toDF("k", "seq", "v", "bucket"))
-    // second generation rewrites bucket 0 only — the pruned read must
-    // resolve bucket 2 through the OLD generation's directory
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((1L, 5L, "A", 0)).toDF("k", "seq", "v", "bucket"))
-    val pruned = ManifestStore.readWhere(spark, root)(
-      pv => pv("bucket") == "2")
-    assert(pruned.select("k").collect().map(_.getLong(0)).toSet ===
-      Set(3L, 4L))
-    // structural proof of pruning: every input file of the pruned plan
-    // lives under bucket=2 — the other partitions' directories are not
-    // even part of the scan's file index
-    val files = pruned.inputFiles
-    assert(files.nonEmpty && files.forall(_.contains("bucket=2")),
-      s"pruned read must only index bucket=2 files, got: ${files.toSeq}")
-    // cross-generation pruning: bucket 0 resolves via generation 2
-    val b0 = ManifestStore.readWhere(spark, root)(_("bucket") == "0")
-    assert(b0.select("k", "v").collect().map(r =>
-      (r.getLong(0), r.getString(1))).toSet === Set((1L, "A")))
-    assert(b0.inputFiles.forall(f =>
-      f.contains("_gen/g00000002-") && f.contains("bucket=0")))
-    // nothing kept: empty frame with the supplied schema, no files
-    val none = ManifestStore.readWhere(spark, root,
-      Some(pruned.schema))(_ => false)
-    assert(none.isEmpty && none.schema === pruned.schema)
-    // nothing kept, no caller schema: the MANIFEST's recorded schema
-    // shapes the empty result (the commit log knows the table's shape)
-    val none2 = ManifestStore.readWhere(spark, root)(_ => false)
-    assert(none2.isEmpty && none2.schema.fieldNames.toSet ===
-      Set("k", "seq", "v", "bucket"))
-  }
-
   // THE crash test the old dynamic-overwrite upsert could not pass: the
   // writer dies after staging some (or all) of the new generation's
   // partition directories but before the manifest commit. In the old
   // scheme those were live per-partition commits and a reader saw a mix;
   // here the reader must stay pinned to the previous snapshot, and the
-  // replayed batch must converge.
+  // replayed batch must converge. An unpartitioned table (its one
+  // partition keyed "") commits through the same protocol.
   test("writer killed between partition writes and commit: readers see the old snapshot") {
     val sp = spark
     import sp.implicits._
-    val root = ScratchDirs.create("mstore_crash")
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1), (3L, 1L, "c", 2))
-        .toDF("k", "seq", "v", "bucket"))
-    val before = snapshot(root)
+    for (parts <- Seq(Seq("bucket"), Nil)) {
+      val root = ScratchDirs.create("mstore_crash")
+      ManifestStore.upsert(root, Seq("k"), "seq", Nil, parts)(
+        Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1), (3L, 1L, "c", 2))
+          .toDF("k", "seq", "v", "bucket"))
+      val before = snapshot(root)
 
-    // simulated kill #1: a PARTIAL generation — only one of the two
-    // touched partition dirs got written before the crash
-    val partialGen = s"$root/_gen/g00000002"
-    Seq((1L, 9L, "APARTIAL", 0)).toDF("k", "seq", "v", "bucket")
-      .write.partitionBy("bucket").parquet(partialGen)
-    assert(snapshot(root) === before,
-      "a half-staged generation must be invisible to readers")
+      // simulated kill #1: a PARTIAL generation — only part of the
+      // touched rows got written before the crash
+      val partialGen = s"$root/_gen/g00000002"
+      Seq((1L, 9L, "APARTIAL", 0)).toDF("k", "seq", "v", "bucket")
+        .write.partitionBy(parts: _*).parquet(partialGen)
+      assert(snapshot(root) === before,
+        s"a half-staged generation must be invisible to readers ($parts)")
 
-    // simulated kill #2: the FULL generation staged, manifest not yet
-    // committed (stageGeneration without publish = dying one instruction
-    // before the rename)
-    val staged = ManifestStore.stageGeneration(root, Seq("bucket"),
-      Seq((1L, 9L, "A", 0), (2L, 9L, "B", 1)).toDF("k", "seq", "v", "bucket"),
-      version = 2L)
-    assert(staged.keySet === Set("bucket=0", "bucket=1"))
-    assert(snapshot(root) === before,
-      "a fully-staged but uncommitted generation must be invisible")
-    assert(ManifestStore.readManifest(fs(root), root).get.version === 1L)
+      // simulated kill #2: the FULL generation staged, manifest not yet
+      // committed (stageGeneration without publish = dying one
+      // instruction before the rename)
+      val staged = ManifestStore.stageGeneration(root, parts,
+        Seq((1L, 9L, "A", 0), (2L, 9L, "B", 1)).toDF("k", "seq", "v", "bucket"),
+        version = 2L)
+      assert(staged.keySet ===
+        (if (parts.isEmpty) Set("") else Set("bucket=0", "bucket=1")))
+      assert(snapshot(root) === before,
+        s"a fully-staged but uncommitted generation must be invisible ($parts)")
+      assert(ManifestStore.readManifest(fs(root), root).get.version === 1L)
 
-    // replay: the batch that "crashed" runs again end-to-end and must
-    // converge — the merge is idempotent and the orphan staging dir from
-    // the dead writer is simply overwritten
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((1L, 9L, "A", 0), (2L, 9L, "B", 1)).toDF("k", "seq", "v", "bucket"))
-    assert(snapshot(root) ===
-      Map(1L -> (9L, "A"), 2L -> (9L, "B"), 3L -> (1L, "c")))
-    assert(ManifestStore.readManifest(fs(root), root).get.version === 2L)
+      // replay: the batch that "crashed" runs again end-to-end and must
+      // converge — the merge is idempotent and the orphan staging dir
+      // from the dead writer is simply overwritten
+      ManifestStore.upsert(root, Seq("k"), "seq", Nil, parts)(
+        Seq((1L, 9L, "A", 0), (2L, 9L, "B", 1)).toDF("k", "seq", "v", "bucket"))
+      assert(snapshot(root) ===
+        Map(1L -> (9L, "A"), 2L -> (9L, "B"), 3L -> (1L, "c")))
+      assert(ManifestStore.readManifest(fs(root), root).get.version === 2L)
+    }
   }
 
   test("publish is the single atomic flip: old state before, new state after") {
@@ -352,8 +173,8 @@ class ManifestStoreSpec extends AnyFunSuite {
       Seq((1L, 7L, "A", 0), (2L, 7L, "B", 1)).toDF("k", "seq", "v", "bucket"),
       version = 2L)
     assert(snapshot(root) === Map(1L -> (1L, "a"), 2L -> (1L, "b")))
-    ManifestStore.publish(spark, root, 2L,
-      prev.get.entries ++ staged, prev)
+    ManifestStore.publish(spark, root,
+      prev.get.copy(entries = prev.get.entries ++ staged), prev)
     assert(snapshot(root) === Map(1L -> (7L, "A"), 2L -> (7L, "B")),
       "the manifest rename flips EVERY partition at once")
   }
@@ -378,11 +199,13 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(stagedA.values.toSet.intersect(stagedB.values.toSet).isEmpty,
       "concurrent stagings must land in disjoint generation dirs")
     // A commits first and wins
-    ManifestStore.publish(spark, root, 2L, prev.get.entries ++ stagedA, prev)
+    ManifestStore.publish(spark, root,
+      prev.get.copy(entries = prev.get.entries ++ stagedA), prev)
     assert(snapshot(root) === Map(1L -> (7L, "A"), 2L -> (7L, "A")))
     // B commits against the stale head and must FAIL LOUDLY
     val e = intercept[java.util.ConcurrentModificationException] {
-      ManifestStore.publish(spark, root, 2L, prev.get.entries ++ stagedB, prev)
+      ManifestStore.publish(spark, root,
+        prev.get.copy(entries = prev.get.entries ++ stagedB), prev)
     }
     assert(e.getMessage.contains("second writer"))
     // winner's state intact — B's bytes never became visible
@@ -563,112 +386,6 @@ class ManifestStoreSpec extends AnyFunSuite {
       "the loser's temp manifest must be cleaned up")
   }
 
-  test("stats/bloom key drift fails the upsert loudly instead of " +
-      "silently disabling the skipping layer") {
-    // reads stay correct with an absent bloom (= keep), so a
-    // key-convention regression between the collectors and
-    // stageGeneration would otherwise disable skipping with no signal
-    ManifestStore.requireKeysSubset("bloom",
-      Set("bucket=0"), Set("bucket=0", "bucket=1"), "t") // subset: fine
-    val e = intercept[IllegalStateException] {
-      ManifestStore.requireKeysSubset("bloom",
-        Set("bucket=0", "bucket=00"), Set("bucket=0"), "t")
-    }
-    assert(e.getMessage.contains("bucket=00") &&
-      e.getMessage.contains("drifted"))
-  }
-
-  test("bloom skipping: point lookups list only maybe-containing " +
-      "partitions; rewrites refresh, bloom-less rewrites drop") {
-    val sp = spark
-    import sp.implicits._
-    import graft.graph.BloomSkip
-    val root = ScratchDirs.create("mstore_bloom")
-    // 8 partitions × 40 distinct keys each, keys globally unique —
-    // range stats CANNOT skip (every partition spans the key range by
-    // bucket construction k%8), only the bloom can
-    val rows = (0 until 320).map(i => (i.toLong * 7 + 1, 1L, s"v$i", i % 8))
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      bloomCols = Seq("k"))(rows.toDF("k", "seq", "v", "bucket"))
-    val m = ManifestStore.readManifest(fs(root), root).get
-    assert(m.blooms.size === 8 && m.blooms.values.forall(_.contains("k")))
-
-    // point lookup: the needle's row comes back, and the scan listed
-    // only ONE partition directory (its own; false-positive partitions
-    // are possible but 7/7 passing would be a broken bloom)
-    val needle = 5L * 7 + 1 // k of i=5, lives in bucket 5
-    val hit = ManifestStore.readBloomEquals(spark, root, "k", needle)
-    assert(hit.select("v").collect().map(_.getString(0)).toSeq === Seq("v5"))
-    val listed = hit.inputFiles.map(f =>
-      f.split('/').find(_.startsWith("bucket=")).get).toSet
-    assert(listed.contains("bucket=5"))
-    assert(listed.size <= 2,
-      s"bloom must prune most partitions, listed $listed")
-    // absent key: usually ZERO partitions listed (false keeps allowed)
-    val miss = ManifestStore.readBloomEquals(spark, root, "k", 999999L)
-    assert(miss.isEmpty)
-
-    // rewrite bucket 0 WITH blooms: the new key must be findable (the
-    // bloom was refreshed, not carried stale-narrow)
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      bloomCols = Seq("k"))(Seq((500000L, 2L, "new", 0))
-      .toDF("k", "seq", "v", "bucket"))
-    assert(ManifestStore.readBloomEquals(spark, root, "k", 500000L)
-      .select("v").head().getString(0) === "new")
-
-    // rewrite bucket 1 WITHOUT blooms: its bloom must be DROPPED (a
-    // stale bloom would claim the new key absent → wrong skip), and the
-    // new key must still be findable via the keep-on-absent rule
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((600000L, 2L, "nb", 1)).toDF("k", "seq", "v", "bucket"))
-    val m2 = ManifestStore.readManifest(fs(root), root).get
-    assert(!m2.blooms.contains("bucket=1"),
-      "bloom-less rewrite must drop the partition's bloom")
-    assert(ManifestStore.readBloomEquals(spark, root, "k", 600000L)
-      .select("v").head().getString(0) === "nb")
-
-    // encoding round trip + definite-absence semantics
-    val enc = BloomSkip.pack(Seq(0, 63, 64, 8191))
-    assert(BloomSkip.mightContain(enc, Seq(0, 63, 64, 8191)))
-    assert(!BloomSkip.mightContain(enc, Seq(0, 1)))
-    assert(BloomSkip.mightContain("garbage", Seq(1)),
-      "malformed encoding must KEEP (stats safety direction)")
-    // a bloom recorded under DIFFERENT sizing is uncheckable — keep,
-    // never verdict (positions are mod this build's BITS; `p < m`
-    // against a smaller recorded m would read definite absence from
-    // garbage and silently lose rows)
-    val foreign = "4096:4:" + enc.split(":", 3)(2).take(100)
-    assert(BloomSkip.mightContain(foreign, Seq(5000)),
-      "parameter-mismatched bloom must KEEP, not exclude")
-  }
-
-  test("bloom survives schema evolution: re-typed column drops carried " +
-      "blooms instead of skipping with stale-typed hashes") {
-    val sp = spark
-    import sp.implicits._
-    val root = ScratchDirs.create("mstore_bloom_evo")
-    // k recorded as INT, blooms built from int-hashed positions
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      bloomCols = Seq("k"))(
-      Seq((7, 1L, "old", 0)).toDF("k", "seq", "v", "bucket"))
-    assert(ManifestStore.readManifest(fs(root), root).get
-      .blooms("bucket=0").contains("k"))
-    // a new batch re-types k to LONG, touching only a NEW partition —
-    // the old partition's bloom was built under the old type and must
-    // be DROPPED (xxhash64(int 7) != xxhash64(long 7): a carried bloom
-    // would claim "definitely absent" for a key the partition holds)
-    ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"),
-      bloomCols = Seq("k"))(
-      Seq((8L, 1L, "new", 1)).toDF("k", "seq", "v", "bucket"))
-    val m = ManifestStore.readManifest(fs(root), root).get
-    assert(!m.blooms.get("bucket=0").exists(_.contains("k")),
-      "re-typed column must drop the stale-typed carried bloom")
-    assert(m.blooms("bucket=1").contains("k"))
-    // and the old key is still FOUND via the keep-on-absent rule
-    assert(ManifestStore.readBloomEquals(spark, root, "k", 7)
-      .select("v").collect().map(_.getString(0)).toSeq === Seq("old"))
-  }
-
   test("foreign files in _manifest/ are ignored, not fatal") {
     val sp = spark
     import sp.implicits._
@@ -780,8 +497,9 @@ class ManifestStoreSpec extends AnyFunSuite {
       m1.deleteKeyCols === Seq("k"))
     assert(snapshot(root) ===
       Map(2L -> (1L, "b"), 3L -> (1L, "c"), 4L -> (1L, "d")))
-    // readWhere / bloom reads apply the vector too
-    assert(ManifestStore.readWhere(sp, root)(pv => pv("bucket") == "0")
+    // a filtered read of the deleting partition applies the vector too
+    assert(ManifestStore.read(sp, root)
+      .filter(org.apache.spark.sql.functions.col("bucket") === 0)
       .select("k").collect().map(_.getLong(0)).toSet === Set(2L))
     // accumulation: a second vector delete on the same partition unions
     ManifestStore.deleteKeysVector(root, Seq("k"), Seq("bucket"))(
@@ -807,9 +525,11 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(m3.deletes.keySet === Set("bucket=1"),
       "rewrite materializes and clears the touched partition's vector")
     assert(snapshot(root) === Map(4L -> (1L, "d"), 5L -> (1L, "e")))
-    // compact materializes ALL vectors: bucket=1 (fully deleted)
-    // vanishes, no vectors remain, data identical
-    ManifestStore.compact(root, Seq("bucket"))(sp)
+    // a copy-on-write delete materializes bucket=1's vector: the
+    // partition (fully deleted) vanishes, no vectors remain, data
+    // identical
+    ManifestStore.deleteKeys(root, Seq("k"), Seq("bucket"))(
+      Seq((3L, 1)).toDF("k", "bucket"))
     val m4 = ManifestStore.readManifest(fs(root), root).get
     assert(m4.deletes.isEmpty, "compaction forgets the deleted bytes")
     assert(!m4.entries.contains("bucket=1"),
@@ -891,90 +611,72 @@ class ManifestStoreSpec extends AnyFunSuite {
       "vectors only for live partitions")
   }
 
-  test("compact folds a scattered snapshot into one generation, atomically") {
-    val sp = spark
-    import sp.implicits._
-    val root = ScratchDirs.create("mstore_compact")
-    // three upserts each touching ONE bucket → snapshot scattered
-    // across three generations
-    for ((b, seq) <- Seq((0, 1L), (1, 2L), (2, 3L)))
-      ManifestStore.upsert(root, Seq("k"), "seq", Nil, Seq("bucket"))(
-        Seq((b.toLong * 10, seq, s"v$b", b)).toDF("k", "seq", "v", "bucket"))
-    val before = ManifestStore.readManifest(fs(root), root).get
-    assert(before.entries.values.map(_.split('/')(1)).toSet.size === 3,
-      "each bucket still lives in the generation that wrote it — " +
-        "referenced generations are never GC'd, so the snapshot scatters")
-    val snapBefore = ManifestStore.read(sp, root)
-      .select("k", "v").collect().map(r => r.getLong(0) -> r.getString(1)).toSet
-    ManifestStore.compact(root, Seq("bucket"))(sp)
-    val after = ManifestStore.readManifest(fs(root), root).get
-    assert(after.version === before.version + 1)
-    assert(after.entries.values.map(_.split('/')(1)).toSet.size === 1,
-      "every partition must live in the single compacted generation")
-    assert(after.entries.keySet === before.entries.keySet)
-    val snapAfter = ManifestStore.read(sp, root)
-      .select("k", "v").collect().map(r => r.getLong(0) -> r.getString(1)).toSet
-    assert(snapAfter === snapBefore, "compaction must not change the data")
-  }
-
   // Streaming foreachBatch upserts publish through the manifest too:
   // each micro-batch commits one generation, a second catch-up run
   // resumes from the checkpoint and keeps merging, and readers always
-  // resolve one complete snapshot. This is the WriteMode.Upsert +
-  // partitionCols streaming branch of Runner.runStreamingThenFull.
+  // resolve one complete snapshot. This is the WriteMode.Upsert
+  // streaming branch of Runner.runStreamingThenFull, with and without
+  // partitionCols.
   test("streaming partitioned upsert commits one generation per micro-batch") {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    import org.apache.spark.sql.functions.col
     val sp = spark
-    val staged = ScratchDirs.create("mstore_stream_src")
-    val out = ScratchDirs.create("mstore_stream_out")
-    var mtime = 1700000000000L
-    def land(rows: Seq[(Long, Long, String, Int)], name: String): Unit = {
-      val tmp = ScratchDirs.create("mstore_slice")
-      sp.createDataFrame(rows).toDF("k", "seq", "v", "bucket")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = JFiles.list(Paths.get(tmp)).toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet")).head
-      val dst = Paths.get(staged, name)
-      JFiles.move(Paths.get(part), dst, StandardCopyOption.REPLACE_EXISTING)
-      mtime += 60000L
-      JFiles.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
+    for (parts <- Seq(Seq("bucket"), Nil)) {
+      val staged = ScratchDirs.create("mstore_stream_src")
+      val out = ScratchDirs.create("mstore_stream_out")
+      var mtime = 1700000000000L
+      def land(rows: Seq[(Long, Long, String, Int)], name: String): Unit = {
+        val tmp = ScratchDirs.create("mstore_slice")
+        sp.createDataFrame(rows).toDF("k", "seq", "v", "bucket")
+          .coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = JFiles.list(Paths.get(tmp)).toArray.map(_.toString)
+          .filter(p => p.endsWith(".parquet")).head
+        val dst = Paths.get(staged, name)
+        JFiles.move(Paths.get(part), dst, StandardCopyOption.REPLACE_EXISTING)
+        mtime += 60000L
+        JFiles.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(mtime))
+      }
+      val ddl = "k bigint, seq bigint, v string, bucket int"
+      def runOnce(): Unit = {
+        val reg = new Registry(sp)
+        reg.source("feed", () => sp.read.schema(ddl).parquet(staged))
+        reg.register(TableDef("latest", Seq("feed"), { case Seq(f) => f },
+          mode = Mode.Incremental, partitionCols = parts,
+          writeMode = WriteMode.Upsert(Seq("k"), "seq")))
+        Runner.runStreamingThenFull(sp, reg,
+          Map("feed" -> (() => sp.readStream.schema(ddl)
+            .option("maxFilesPerTrigger", "1").parquet(staged))),
+          out)
+      }
+      land(Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)), "s1.parquet")
+      land(Seq((1L, 5L, "A", 0)), "s2.parquet") // second micro-batch, bucket 0 only
+      runOnce()
+      val root = s"$out/latest"
+      assert(snapshot(root) === Map(1L -> (5L, "A"), 2L -> (1L, "b")))
+      val m1 = ManifestStore.readManifest(fs(root), root).get
+      assert(m1.version === 2L,
+        s"two micro-batches = two committed generations ($parts)")
+      if (parts.nonEmpty)
+        assert(m1.entries("bucket=1").startsWith("_gen/g00000001-"),
+          "bucket 1 untouched by batch 2 — carried forward by reference")
+      else
+        assert(m1.entries.keySet === Set("") &&
+          m1.entries("").startsWith("_gen/g00000002-"),
+          "the one partition of an unpartitioned table is rewritten")
+      // catch-up run 2: new file lands AFTER run 1 terminated; the merge
+      // must resume from the checkpoint (only the new file processed)
+      land(Seq((2L, 9L, "B2", 1), (3L, 1L, "c", 0)), "s3.parquet")
+      runOnce()
+      assert(snapshot(root) ===
+        Map(1L -> (5L, "A"), 2L -> (9L, "B2"), 3L -> (1L, "c")))
+      assert(ManifestStore.readManifest(fs(root), root).get.version === 3L,
+        s"run 2 processed exactly the one new file = one more generation ($parts)")
     }
-    val ddl = "k bigint, seq bigint, v string, bucket int"
-    def runOnce(): Unit = {
-      val reg = new Registry(sp)
-      reg.source("feed", () => sp.read.schema(ddl).parquet(staged))
-      reg.register(TableDef("latest", Seq("feed"), { case Seq(f) => f },
-        mode = Mode.Incremental, partitionCols = Seq("bucket"),
-        writeMode = WriteMode.Upsert(Seq("k"), "seq")))
-      Runner.runStreamingThenFull(sp, reg,
-        Map("feed" -> (() => sp.readStream.schema(ddl)
-          .option("maxFilesPerTrigger", "1").parquet(staged))),
-        out)
-    }
-    land(Seq((1L, 1L, "a", 0), (2L, 1L, "b", 1)), "s1.parquet")
-    land(Seq((1L, 5L, "A", 0)), "s2.parquet") // second micro-batch, bucket 0 only
-    runOnce()
-    val root = s"$out/latest"
-    assert(snapshot(root) === Map(1L -> (5L, "A"), 2L -> (1L, "b")))
-    val m1 = ManifestStore.readManifest(fs(root), root).get
-    assert(m1.version === 2L, "two micro-batches = two committed generations")
-    assert(m1.entries("bucket=1").startsWith("_gen/g00000001-"),
-      "bucket 1 untouched by batch 2 — carried forward by reference")
-    // catch-up run 2: new file lands AFTER run 1 terminated; the merge
-    // must resume from the checkpoint (only the new file processed)
-    land(Seq((2L, 9L, "B2", 1), (3L, 1L, "c", 0)), "s3.parquet")
-    runOnce()
-    assert(snapshot(root) ===
-      Map(1L -> (5L, "A"), 2L -> (9L, "B2"), 3L -> (1L, "c")))
-    assert(ManifestStore.readManifest(fs(root), root).get.version === 3L,
-      "run 2 processed exactly the one new file = one more generation")
   }
 
   // End-to-end through the DAG runner: a partitioned Upsert table is
   // published via the manifest and its downstream consumer reads the
-  // committed snapshot through the shadow loader.
+  // committed snapshot through Runner.read.
   test("Runner materializes partitioned upsert tables behind the manifest") {
     val sp = spark
     import sp.implicits._

@@ -122,7 +122,7 @@ class NioLocalFsSpec extends AnyFunSuite {
       Runner.runStreamingThenFull(sp, reg,
         Map("feed" -> (() => sp.readStream.schema(schema).parquet(s"$dir/feed"))),
         s"$dir/out")
-      assert(sp.read.parquet(s"$dir/out/counts").count() === 5)
+      assert(ManifestStore.read(sp, s"$dir/out/counts").count() === 5)
       rec.stop()
       val dump = Paths.get(s"$dir/spawns.jfr")
       rec.dump(dump)

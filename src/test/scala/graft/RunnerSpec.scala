@@ -216,7 +216,7 @@ class RunnerSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // newer seq wins, older loses, new key inserts; replay is idempotent
     Runner.runBatch(reg(Seq((1L, 5L, "A"), (2L, 0L, "stale"), (3L, 1L, "c"))), out)
     Runner.runBatch(reg(Seq((1L, 5L, "A"), (2L, 0L, "stale"), (3L, 1L, "c"))), out)
-    val got = sp.read.parquet(s"$out/latest")
+    val got = ManifestStore.read(sp, s"$out/latest")
       .select("k", "v").as[(Long, String)].collect().toSet
     assert(got === Set(1L -> "A", 2L -> "b", 3L -> "c"))
   }
@@ -290,48 +290,31 @@ class RunnerSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(n === 3L, "summary must count keys {1,2,3}, not just run 2's {3}")
   }
 
-  // Crash window of the generation swap: target deleted, backup intact.
-  // The next merge must restore the backup and converge, not treat the
-  // table as empty.
-  test("upsertParquet recovers the backup generation after a crashed swap") {
-    val sp = spark
-    import sp.implicits._
-    val out = ScratchDirs.create("runner_upsert_crash")
-    val path = s"$out/latest"
-    Runner.upsertParquet(path, Seq("k"), "seq")(
-      Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("k", "seq", "v"))
-    // simulate the crash point between the two renames: the old
-    // generation sits at .old, the target is gone
-    Files.move(java.nio.file.Path.of(path), java.nio.file.Path.of(path + ".old"))
-    Runner.upsertParquet(path, Seq("k"), "seq")(
-      Seq((2L, 5L, "B")).toDF("k", "seq", "v"))
-    val got = sp.read.parquet(path)
-      .select("k", "v").as[(Long, String)].collect().toSet
-    assert(got === Set(1L -> "a", 2L -> "B"),
-      "key 1 must survive via the restored backup generation")
-  }
-
   // Pruned rewrite + schema evolution: a batch missing a column that
   // exists on disk must not erase that column from untouched keys in the
-  // partitions it rewrites. (Partitioned upserts publish through the
-  // manifest store since round 11 — readers resolve the manifest.)
+  // partitions it rewrites — for a partitioned table and for an
+  // unpartitioned one (its single partition is always rewritten).
   test("pruned upsert keeps on-disk columns absent from the batch") {
     val sp = spark
     import sp.implicits._
-    val out = ScratchDirs.create("runner_upsert_evo")
-    val path = s"$out/latest"
-    ManifestStore.upsert(path, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((1L, 1L, "a", "x1", 0), (3L, 1L, "c", "x3", 0))
-        .toDF("k", "seq", "v", "extra", "bucket"))
-    // later producer drops 'extra'; batch touches bucket 0 via key 1 only
-    ManifestStore.upsert(path, Seq("k"), "seq", Nil, Seq("bucket"))(
-      Seq((1L, 5L, "A", 0)).toDF("k", "seq", "v", "bucket"))
-    val rows = ManifestStore.read(sp, path)
-      .select("k", "v", "extra").collect()
-      .map(r => r.getLong(0) -> (r.getString(1),
-        if (r.isNullAt(2)) null else r.getString(2))).toMap
-    assert(rows(1L) === ("A", null), "updated key takes the batch's shape")
-    assert(rows(3L) === ("c", "x3"),
-      "untouched key in the rewritten partition keeps its extra column")
+    for (parts <- Seq(Seq("bucket"), Nil)) {
+      val out = ScratchDirs.create("runner_upsert_evo")
+      val path = s"$out/latest"
+      ManifestStore.upsert(path, Seq("k"), "seq", Nil, parts)(
+        Seq((1L, 1L, "a", "x1", 0), (3L, 1L, "c", "x3", 0))
+          .toDF("k", "seq", "v", "extra", "bucket"))
+      // later producer drops 'extra'; batch touches bucket 0 via key 1 only
+      ManifestStore.upsert(path, Seq("k"), "seq", Nil, parts)(
+        Seq((1L, 5L, "A", 0)).toDF("k", "seq", "v", "bucket"))
+      val rows = ManifestStore.read(sp, path)
+        .select("k", "v", "extra").collect()
+        .map(r => r.getLong(0) -> (r.getString(1),
+          if (r.isNullAt(2)) null else r.getString(2))).toMap
+      assert(rows(1L) === ("A", null),
+        s"updated key takes the batch's shape (partitionCols=$parts)")
+      assert(rows(3L) === ("c", "x3"),
+        s"untouched key in the rewritten partition keeps its extra column " +
+          s"(partitionCols=$parts)")
+    }
   }
 }

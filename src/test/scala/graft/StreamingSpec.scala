@@ -385,7 +385,8 @@ class StreamingSpec extends AnyFunSuite {
   // be). The final table must equal the watermark-aware batch recompute.
   test("runScheduled: out-of-order data across trigger boundaries follows the watermark budget") {
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    import graft.graph.{Mode, Registry, Runner, TableDef, WriteMode}
+    import graft.graph.{ManifestStore, Mode, Registry, Runner, TableDef,
+      WriteMode}
     val sp = spark
     val staged = ScratchDirs.create("sched_src_")
     val out = ScratchDirs.create("sched_out_")
@@ -443,7 +444,7 @@ class StreamingSpec extends AnyFunSuite {
         land(Seq(("2024-01-01 12:10:00", 16.0)), "h12.parquet")
     }
 
-    val got = sp.read.parquet(s"$out/hourly")
+    val got = ManifestStore.read(sp, s"$out/hourly")
       .select(hour(col("hour_ts")).as("h"), col("n"), col("s")).collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(got === Map(
@@ -464,7 +465,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   // An Upsert boundary's foreachBatch runs several actions per
-  // micro-batch (emptiness probe, touched-partition collect, merge).
+  // micro-batch (emptiness probe, a partitioned table's touched-partition
+  // collect, merge).
   // Each action over an unpersisted batch re-runs the stateful stage,
   // and the operator's numRowsUpdated counts every key once per run.
   // One run per micro-batch means numRowsUpdated = keys updated.
@@ -505,7 +507,7 @@ class StreamingSpec extends AnyFunSuite {
       while (updated.size < 2 && System.nanoTime < deadline) Thread.sleep(50)
     } finally sp.streams.removeListener(listener)
     assert(updated.asScala.toSeq.sorted === Seq(5L, 10L))
-    assert(sp.read.parquet(s"$dir/out/plain").count() === 5)
+    assert(ManifestStore.read(sp, s"$dir/out/plain").count() === 5)
     assert(ManifestStore.read(sp, s"$dir/out/parted").count() === 10)
   }
 
