@@ -115,24 +115,6 @@ object Relational {
     * (zetadex-serving-v2.py:352–355 `concat_ws("#", unix_ts, asset)`). */
   def kvSortKey(cols: Column*): Column = concat_ws("#", cols: _*)
 
-  /** Top-k rows per group by `order` (deterministic if `order` is a total
-    * order) — the reference's top-1-per-key idiom
-    * (zetadex-transactions-helius-pipeline.py:1941–1945).
-    *
-    * This window form shuffles every row to its group before ranking;
-    * when the payload reduces to a (double ord, long id) pair, prefer
-    * the bounded aggregate [[graft.expressions.BoundedTopK]]
-    * (`graft_topk`, q81) — map-side combine bounds the shuffle at k rows
-    * per task per group, which is the difference that matters at 100 TB
-    * (see q31/q73, whose ANN top-5 uses it). */
-  def topKPerGroup(keys: Seq[String], order: Seq[Column], k: Int)(
-      df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-  }
-
   /** Fixed-point decode: on-chain u64 → double via a power-of-ten factor
     * (PRICE_FACTOR/SIZE_FACTOR, zetadex-transactions-helius-pipeline.py:20–21,
     * applied :487–488, :690–694). */
@@ -228,16 +210,6 @@ object Relational {
           .cast(LongType))
       .drop("__bin")
   }
-
-  /** Cumulative window (unbounded preceding → current row) over a total
-    * order — deposit cumsum idiom (zetadex-transactions-helius-pipeline.py:
-    * 1000–1004). */
-  def cumulativeWindow(keys: Seq[String], order: Seq[Column])
-      : org.apache.spark.sql.expressions.WindowSpec =
-    Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
   /** 2-D skyline (Pareto frontier): rows not dominated by any other —
     * dominance = `minCol` ≤ and `maxCol` ≥ with at least one strict.

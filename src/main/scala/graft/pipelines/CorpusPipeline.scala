@@ -233,7 +233,7 @@ object CorpusPipeline {
     * (lang, docId) so a training reader fetches one language stream in
     * pack order, `weighted_sample` keyed by rank. Returns the two served
     * frames (camelCased, unix timestamps — the sink contract). */
-  def serve(reg: Registry, sink: graft.serving.KVSink)
+  def serve(reg: Registry, sink: graft.serving.EmbeddedKVSink)
       : (DataFrame, DataFrame) = {
     val packed = graft.serving.ServingJobs.serveTable(
       reg.resolve("packed"), sink, "corpus_packed",

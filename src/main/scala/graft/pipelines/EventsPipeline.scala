@@ -79,10 +79,11 @@ object EventsPipeline {
 
   /** Run the full DAG and serve the leaf table through a KV sink. */
   def serve(spark: SparkSession, sfDir: String,
-            sink: graft.serving.KVSink): DataFrame = {
+            sink: graft.serving.EmbeddedKVSink): DataFrame = {
     val reg = build(spark, sfDir)
     val out = reg.resolve("serving_events")
-    sink.write(sink.servingProjection(out), "serving_events",
+    sink.write(graft.serving.ServingJobs.servingProjection(out),
+      "serving_events",
       hashKey = "eventType", rangeKey = Some("sortKey"))
     out
   }

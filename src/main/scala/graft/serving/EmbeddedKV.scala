@@ -3,7 +3,7 @@ package graft.serving
 import java.util.concurrent.ConcurrentSkipListMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Embedded KV DATA PLANE — the store the round-11 verdict asked for:
@@ -28,13 +28,12 @@ import org.apache.spark.sql.functions.col
   *    NUMERICALLY, string keys lexicographically, binary keys bytewise,
   *    exactly DynamoDB's sort-key ordering rules.
   *
-  * Scale honesty: this store is a single-JVM stand-in — correct under
-  * local[n] because Spark executors share the process. On a real
-  * cluster the store object would be a NETWORK CLIENT to the actual KV
-  * service; everything the executors do ([[EmbeddedKVSink]]'s
-  * per-partition chunk-into-25-and-write loop) is the production data
-  * plane verbatim, which is why the sink, not the store, carries the
-  * Spark-side logic.
+  * Scale honesty: this store is a single-JVM stand-in, reached from the
+  * driver. Its one writer is the `graft-kv` commit
+  * ([[graft.sources.KVBatchWrite]]), which runs on the driver after
+  * every task of a serving job succeeded; on a real cluster that commit
+  * would hold a NETWORK CLIENT to the actual KV service, and the tasks'
+  * staging would be unchanged.
   */
 object EmbeddedKVStore {
   /** DynamoDB BatchWriteItem hard limit (SV:200). */
@@ -43,8 +42,8 @@ object EmbeddedKVStore {
   private val stores =
     new java.util.concurrent.ConcurrentHashMap[String, EmbeddedKVStore]()
 
-  /** Store registry by id — how executor-side tasks reach the same
-    * store instance in local mode (a cluster impl would dial a service
+  /** Store registry by id — how the `graft-kv` commit and the readers
+    * reach the same store instance (a cluster impl would dial a service
     * endpoint here instead). */
   def apply(id: String): EmbeddedKVStore =
     stores.computeIfAbsent(id, _ => new EmbeddedKVStore)
@@ -164,26 +163,13 @@ final class EmbeddedKVStore private[serving] () {
     t
   }
 
-  private def keyOf(spec: KVTableSpec, item: Map[String, Any]): ItemKey =
-    EmbeddedKVStore.keyOf(spec, item)
-
-  /** Key validation WITHOUT side effects — extracts the item's primary
-    * key exactly as a put would (missing attribute / null / non-scalar
-    * key all throw here). Lets a transactional loader front-load every
-    * data-dependent failure before its first put, so a driver-side
-    * commit is all-or-nothing rather than partially applied. */
-  def validateItem(table: String, item: Map[String, Any]): Unit = {
-    val t = state(table)
-    keyOf(t.spec, item); ()
-  }
-
   /** Data plane: one BatchWriteItem request — at most [[EmbeddedKVStore.MAX_BATCH]]
     * items, PutItem upsert semantics per item. `token`, when supplied,
-    * makes the request-COUNTING idempotent: a Spark task retry or
-    * speculative duplicate re-issues the same batches (the puts
-    * themselves are upserts, harmlessly re-applied), and without the
-    * token the WCU-accounting counters would over-report — breaking the
-    * very ceil(n/25) arithmetic these counters exist to measure. */
+    * makes the request-COUNTING idempotent: a replayed commit re-issues
+    * the same batches (the puts themselves are upserts, harmlessly
+    * re-applied), and without the token the WCU-accounting counters
+    * would over-report — breaking the very ceil(n/25) arithmetic these
+    * counters exist to measure. */
   def batchWrite(table: String, items: Seq[Map[String, Any]],
                  token: Option[String] = None): Unit = {
     if (items.size > MAX_BATCH)
@@ -228,47 +214,22 @@ final class EmbeddedKVStore private[serving] () {
   def tableNames: Set[String] = tables.keySet().asScala.toSet
 }
 
-/** KV sink writing through [[EmbeddedKVStore]] — the executor-side data
-  * plane the parquet stand-in never exercised: each partition chunks its
-  * rows into ≤25-item batches and issues batchWrite per chunk, exactly
-  * the reference's bulk-push loop (SV:200: `batch_writer` chunking at
-  * the BatchWriteItem limit). The `repartition(hashKey)` keeps one hash
-  * key's items flowing through one task — write locality that matters on
-  * a provisioned store (a hot key's writes serialize anyway; spreading
-  * them buys nothing and fragments batches).
+/** The serving write: a `graft-kv` bulk load (sources/KVWriteSource)
+  * into the store `storeId`. Each task stages its rows; the driver
+  * commit validates every key, (re)creates the table and applies the
+  * rows in ≤25-item batches (SV:200: `batch_writer` chunking at the
+  * BatchWriteItem limit), only after every task succeeded, so a failed
+  * serving job leaves the previously served table as it was. The
+  * `repartition(hashKey)` keeps one hash key's items in one task: the
+  * batches chunk per task, as a provisioned store's writes would (a hot
+  * key's writes serialize anyway; spreading them fragments batches).
   */
-final class EmbeddedKVSink(storeId: String) extends KVSink {
-
-  private def store = EmbeddedKVStore(storeId)
-
-  override def write(df: DataFrame, table: String, hashKey: String,
-                     rangeKey: Option[String] = None): Unit =
-    writeWithSpec(df, KVTableSpec(table, hashKey, rangeKey))
-
-  /** Spec-driven write: create (control plane), then bulk-push
-    * (data plane). Returns the rendered create-table params, same
-    * contract as the parquet sink. */
-  def writeWithSpec(df: DataFrame, spec: KVTableSpec): String = {
-    val params = spec.createTableParams(df.schema) // validates
-    store.createTable(spec, df.schema)
-    val id = storeId
-    val names = df.schema.fieldNames
-    df.repartition(col(spec.hashKey)).foreachPartition {
-      (rows: Iterator[Row]) =>
-        val client = EmbeddedKVStore(id) // executor-side client handle
-        // (partition, chunk ordinal) is stable across task retries and
-        // speculative duplicates — the idempotency token that keeps the
-        // store's request counters exact under re-execution
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        rows.grouped(EmbeddedKVStore.MAX_BATCH).zipWithIndex
-          .foreach { case (chunk, ci) =>
-            client.batchWrite(spec.table, chunk.map { r =>
-              names.iterator.zipWithIndex.map { case (n, i) =>
-                n -> r.get(i)
-              }.toMap
-            }, token = Some(s"$pid:$ci"))
-          }
-    }
-    params
-  }
+final class EmbeddedKVSink(storeId: String) {
+  def write(df: DataFrame, table: String, hashKey: String,
+            rangeKey: Option[String] = None): Unit =
+    df.repartition(col(hashKey)).write.format("graft-kv")
+      .option("store", storeId).option("table", table)
+      .option("hashKey", hashKey)
+      .options(rangeKey.map("rangeKey" -> _).toMap)
+      .mode("append").save()
 }

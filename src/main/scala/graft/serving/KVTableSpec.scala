@@ -17,12 +17,9 @@ import org.apache.spark.sql.types._
   * non-key-typed BEFORE any write, [[KVTableSpec.createTableParams]]
   * renders the exact create-table request shape (deduplicated attribute
   * definitions, nested key schemas, the INCLUDE-requires-attributes
-  * rule), and [[ParquetKVSink.writeWithSpec]] materializes the physical
-  * analog of every index: the main table partitioned by hash key and
-  * sorted by (hash, range); each LSI as a co-partitioned re-sort (same
-  * hash key — DynamoDB's locality rule); each GSI as its own
-  * re-partitioned, projection-pruned dataset (a GSI IS a second table
-  * maintained from the first).
+  * rule). [[graft.serving.EmbeddedKVStore.createTable]] validates the
+  * hash/range spec of every served table; secondary indexes are
+  * modeled in the request, not materialized.
   */
 object KVTableSpec {
 
@@ -60,7 +57,7 @@ final case class KVTableSpec(
     gsis: Seq[KVTableSpec.Gsi] = Nil,
     billing: KVTableSpec.Billing = KVTableSpec.PayPerRequest,
     /** TTL attribute (unix seconds), wired through
-      * [[KVSink.servingProjection]]'s `ttl` column convention. */
+      * [[ServingJobs.servingProjection]]'s `ttl` column convention. */
     ttlAttribute: Option[String] = None) {
   import KVTableSpec._
 
@@ -166,17 +163,5 @@ final case class KVTableSpec(
       ttlAttribute.map(t =>
         s""""TimeToLiveSpecification":{"AttributeName":"$t","Enabled":true}""").toSeq
     parts.mkString("{", ",", "}")
-  }
-
-  /** Columns an index projection carries (table keys + index keys always
-    * ride along, as in DynamoDB). */
-  private[serving] def projectedColumns(indexKeys: Seq[String], p: Projection,
-                                        all: Seq[String]): Seq[String] = {
-    val keys = (Seq(hashKey) ++ rangeKey ++ indexKeys).distinct
-    p match {
-      case ProjectAll => all
-      case ProjectKeysOnly => all.filter(keys.contains)
-      case ProjectInclude(attrs) => all.filter(c => keys.contains(c) || attrs.contains(c))
-    }
   }
 }

@@ -8,16 +8,33 @@ import graft.ops.Relational
 /** The serving notebooks re-expressed (zetadex-serving-v2.py, SURVEY.md
   * §3.3): snapshot a gold table at the as-of hour, reshape for KV access
   * (rollup totals, wide→long unpivot, camelCase, composite sort key,
-  * TTL), and push through a [[KVSink]].
+  * TTL), and push through an [[EmbeddedKVSink]]. The reshape is pure
+  * DataFrame code, so the correctness gate exercises it
+  * (q49_serving_reshape).
   */
 object ServingJobs {
+
+  /** Serving projection applied before a write (zetadex-serving.py:
+    * 212–221): timestamps → unix seconds, optional TTL. */
+  def servingProjection(df: DataFrame, ttlFrom: Option[String] = None,
+                        ttl: String = "14 days"): DataFrame = {
+    val tsConverted = df.schema.fields.foldLeft(df) { (acc, f) =>
+      if (f.dataType == org.apache.spark.sql.types.TimestampType)
+        acc.withColumn(f.name, unix_timestamp(col(f.name)))
+      else acc
+    }
+    ttlFrom.fold(tsConverted) { c =>
+      tsConverted.withColumn("ttl",
+        unix_timestamp(col(c).cast("timestamp") + expr(s"interval $ttl")))
+    }
+  }
 
   /** Leaderboard-style serving (S2:416–568): snapshot the hour at
     * `conf.asOf − lag`, add an ALL sentinel rollup over `dim`, unpivot
     * the metric columns, camelCase, and write keyed by (metric,
     * sortKey). Returns the served frame. */
   def serveSnapshot(gold: DataFrame, tsCol: String, dim: String,
-                    metrics: Seq[String], conf: Conf, sink: KVSink,
+                    metrics: Seq[String], conf: Conf, sink: EmbeddedKVSink,
                     table: String, lagHours: Int = 2): DataFrame = {
     val snapshot = gold.filter(col(tsCol) ===
       date_trunc("hour", conf.asOfTs - expr(s"interval $lagHours hours")))
@@ -30,7 +47,7 @@ object ServingJobs {
         Relational.kvSortKey(col("metric"), col(dim)))
     val served = Relational.camelCaseAll(
       long.withColumn("snapshot_ts", conf.asOfTs))
-    sink.write(sink.servingProjection(served, ttlFrom = Some("snapshotTs")),
+    sink.write(servingProjection(served, ttlFrom = Some("snapshotTs")),
       table, hashKey = "metric", rangeKey = Some("sortKey"))
     served
   }
@@ -39,14 +56,14 @@ object ServingJobs {
     * `asOf − 2h` (the reference's watermark-lag delay), add the
     * `timestamp#asset` composite sort key, camelCase, write keyed by
     * margin account / authority. */
-  def serveFunding(gold: DataFrame, conf: Conf, sink: KVSink,
+  def serveFunding(gold: DataFrame, conf: Conf, sink: EmbeddedKVSink,
                    table: String, lagHours: Int = 2): DataFrame = {
     val served = Relational.camelCaseAll(
       gold.filter(col("timestamp") ===
           date_trunc("hour", conf.asOfTs - expr(s"interval $lagHours hours")))
         .withColumn("timestamp#asset", Relational.kvSortKey(
           unix_timestamp(col("timestamp")).cast("string"), col("asset"))))
-    sink.write(sink.servingProjection(served), table,
+    sink.write(servingProjection(served), table,
       hashKey = "authority", rangeKey = Some("timestamp#asset"))
     served
   }
@@ -61,7 +78,7 @@ object ServingJobs {
     * roi#alltime) is exploded per input row, so the plan has a single
     * scan and NO Union node (asserted in ServingJobsSpec).
     */
-  def serveLeaderboard(gold: DataFrame, conf: Conf, sink: KVSink,
+  def serveLeaderboard(gold: DataFrame, conf: Conf, sink: EmbeddedKVSink,
                        table: String,
                        idCols: Seq[String] = Seq("user_id")): DataFrame = {
     val periodMap = Seq("24h" -> "TWENTY_FOUR_HOURS", "7d" -> "SEVEN_DAYS",
@@ -89,7 +106,7 @@ object ServingJobs {
       .select(ids :+ explode(array(combos: _*)).as("p"): _*)
       .select(ids :+ col("p.*"): _*)
     val served = Relational.camelCaseAll(long)
-    sink.write(sink.servingProjection(served), table,
+    sink.write(servingProjection(served), table,
       hashKey = "metric#timePeriod", rangeKey = Some("rank"))
     served
   }
@@ -103,8 +120,8 @@ object ServingJobs {
     * history is retained). The daily filter runs on the SAME served
     * frame, exactly like the reference reuses `df` for both writes.
     * Returns the hourly served frame. */
-  def servePnlSnapshots(cleanedPnl: DataFrame, conf: Conf, sink: KVSink,
-                        table: String,
+  def servePnlSnapshots(cleanedPnl: DataFrame, conf: Conf,
+                        sink: EmbeddedKVSink, table: String,
                         idCols: Seq[String] = Seq("authority")): DataFrame = {
     val snapshot = cleanedPnl.filter(col("timestamp") ===
       date_trunc("hour", conf.asOfTs))
@@ -113,10 +130,10 @@ object ServingJobs {
     val served = Relational.camelCaseAll(snapshot.select(cols.map(col): _*))
     val account = served.columns(1) // camelCased idCols.head (after timestamp)
     sink.write(
-      sink.servingProjection(served, ttlFrom = Some("timestamp")),
+      servingProjection(served, ttlFrom = Some("timestamp")),
       s"${table}_hourly_v2", hashKey = account, rangeKey = Some("timestamp"))
     sink.write(
-      sink.servingProjection(served.filter(hour(col("timestamp")) === 0)),
+      servingProjection(served.filter(hour(col("timestamp")) === 0)),
       s"${table}_daily_v2", hashKey = account, rangeKey = Some("timestamp"))
     served
   }
@@ -126,10 +143,10 @@ object ServingJobs {
     * rewards pushes (S2:692–721, present but commented out — same
     * shape) serve the full gold table keyed by account with a numeric
     * epoch/timestamp sort key. */
-  def serveTable(gold: DataFrame, sink: KVSink, table: String,
+  def serveTable(gold: DataFrame, sink: EmbeddedKVSink, table: String,
                  hashKey: String, rangeKey: Option[String]): DataFrame = {
     val served = Relational.camelCaseAll(gold)
-    sink.write(sink.servingProjection(served), table, hashKey, rangeKey)
+    sink.write(servingProjection(served), table, hashKey, rangeKey)
     served
   }
 
@@ -137,7 +154,7 @@ object ServingJobs {
     * (S2:628–649: V1_VOLUME / v1_TRADE_COUNT added to the totals). */
   def serveAllTimeStats(hourly: DataFrame, volumeCol: String,
                         countCol: String, baseVolume: Double,
-                        baseCount: Long, sink: KVSink,
+                        baseCount: Long, sink: EmbeddedKVSink,
                         table: String): DataFrame = {
     val totals = hourly.agg(
         (sum(col(volumeCol).cast(graft.queries.QH.DEC))

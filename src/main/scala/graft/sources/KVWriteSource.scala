@@ -11,7 +11,9 @@ import graft.serving.{EmbeddedKVStore, KVTableSpec}
 
 /** The WRITE half of the DataSourceV2 story (TicksProvider is the read
   * half): a transactional bulk load into the serving KV store via the
-  * V2 commit protocol, written the way a cluster sink has to be —
+  * V2 commit protocol, written the way a cluster sink has to be. It is
+  * the one serving data plane: [[graft.serving.EmbeddedKVSink]] and so
+  * every serving job write through it —
   *
   *   spark.range(...).write.format("graft-kv")
   *     .option("store", id).option("table", t).option("hashKey", k)
@@ -23,12 +25,12 @@ import graft.serving.{EmbeddedKVStore, KVTableSpec}
   *    object handle, not rows — the manifest pattern of every
   *    transactional file sink; the protocol shape is identical.)
   *  - [[BatchWrite.commit]] runs ONCE on the driver only after EVERY
-  *    task succeeded, creates the table idempotently, and applies the
-  *    staged items through the store's 25-item batch API with one
-  *    idempotency token per (task, batch) — so a partially failed job
-  *    leaves the store UNTOUCHED (abort is a no-op because nothing was
-  *    applied), the exactly-once contract the foreachBatch path cannot
-  *    give without external bookkeeping.
+  *    task succeeded, validates every staged key, (re)creates the
+  *    table (a serving push is a full rewrite) and applies the staged
+  *    items through the store's 25-item batch API with one idempotency
+  *    token per (task, batch) — so a partially failed job leaves the
+  *    store UNTOUCHED, including a table an earlier push served (abort
+  *    is a no-op because nothing was applied).
   */
 class KVWriteProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -65,7 +67,7 @@ class KVWriteTable(writeSchema: StructType, store: String, kvTable: String,
 }
 
 /** One task's staged rows. Bounded by contract (a serving load is
-  * projection-sized — KVSink.servingProjection — not fact-sized) AND by
+  * projection-sized — ServingJobs.servingProjection — not fact-sized) AND by
   * enforcement: [[KVDataWriterFactory.MaxStagedRowsPerTask]], because
   * staged rows travel through WriterCommitMessages to the driver and an
   * unbounded load would fail opaquely on spark.driver.maxResultSize or

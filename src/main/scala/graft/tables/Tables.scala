@@ -47,10 +47,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every table as a temp view (the engine's "catalog"),
-    * mirroring the reference's `spark.table(...)` reads (SURVEY.md §2.1 S2).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -100,22 +100,25 @@ class CorpusPipelineSpec extends AnyFunSuite {
   }
 
   test("corpus products serve through the KV layer like the trading gold") {
-    val out = ScratchDirs.create("corpus_kv")
+    import graft.serving.{EmbeddedKVSink, EmbeddedKVStore}
+    EmbeddedKVStore.remove("kv_corpus")
     val reg = CorpusPipeline.build(spark, () => fixture)
     val (packed, sample) =
-      CorpusPipeline.serve(reg, new graft.serving.ParquetKVSink(out))
+      CorpusPipeline.serve(reg, new EmbeddedKVSink("kv_corpus"))
+    val store = EmbeddedKVStore("kv_corpus")
     // the sink contract applied: camelCase, keys present
     assert(packed.columns.toSeq ===
       Seq("lang", "docId", "tokenCnt", "startOff", "packFirst", "packLast"))
     // served frame row-matches the DAG output it was built from
-    val backP = spark.read.parquet(s"$out/corpus_packed")
     val dag = reg.resolve("packed")
-    assert(backP.count() === dag.count())
-    assert(backP.select("docId", "startOff").exceptAll(
-      dag.select(col("doc_id"), col("start_off"))).count() === 0)
-    val backS = spark.read.parquet(s"$out/corpus_sample")
-    assert(backS.count() === sample.count())
-    assert(backS.orderBy("rk").collect().map(_.getAs[Long]("docId")).toSeq
+    assert(store.itemCount("corpus_packed") === dag.count())
+    dag.select("lang", "doc_id", "start_off").collect().foreach { r =>
+      assert(store.get("corpus_packed", r.getString(0), Some(r.getLong(1)))
+        .get.apply("startOff") === r.getLong(2))
+    }
+    assert(store.itemCount("corpus_sample") === sample.count())
+    val ranks = sample.select("rk").collect().map(_.getInt(0)).sorted.toSeq
+    assert(ranks.map(rk => store.get("corpus_sample", rk).get.apply("docId"))
       === reg.resolve("weighted_sample").orderBy("rk")
         .collect().map(_.getLong(1)).toSeq)
   }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipelines.EventsPipeline
-import graft.serving.ParquetKVSink
+import graft.serving.{EmbeddedKVSink, EmbeddedKVStore}
 import graft.sources.JsonSource
 import graft.core.ScratchDirs
 
@@ -26,16 +26,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(bad === 0)
   }
 
-  test("serving_events writes through the parquet KV sink with unix timestamps") {
-    val out = ScratchDirs.create("kvsink")
-    val served = EventsPipeline.serve(spark, d, new ParquetKVSink(out))
+  test("serving_events writes through the KV sink with unix timestamps") {
+    EmbeddedKVStore.remove("kv_serving_events")
+    val served = EventsPipeline.serve(spark, d,
+      new EmbeddedKVSink("kv_serving_events"))
     assert(served.columns.contains("sortKey"))
-    val back = spark.read.parquet(s"$out/serving_events")
-    assert(back.count() === served.count())
+    val store = EmbeddedKVStore("kv_serving_events")
+    assert(store.itemCount("serving_events") === served.count())
+    val r = served.head()
+    val item = store.get("serving_events", r.getAs[String]("eventType"),
+      Some(r.getAs[String]("sortKey"))).get
     // timestamps converted to unix seconds (long), camelCase applied
-    assert(back.schema("timestamp").dataType ===
-      org.apache.spark.sql.types.LongType)
-    assert(back.columns.toSet.contains("eventCount24h"))
+    assert(item("timestamp") === r.getAs[java.sql.Timestamp]("timestamp")
+      .getTime / 1000)
+    assert(item.contains("eventCount24h"))
   }
 
   test("JsonSource discovers hive-partitioned landing-zone columns") {
@@ -187,70 +191,5 @@ class PipelineSpec extends AnyFunSuite {
       "...but the raw text survives in the rescue map")
     assert(byId(3L).isNullAt(1) && byId(3L).isNullAt(2),
       "explicit JSON null is a legitimate value, nothing rescued")
-  }
-
-  test("IncrementalIngest processes each landing-zone file exactly once") {
-    import graft.sources.{DirectoryListing, IncrementalIngest, NotifiedFiles}
-    val zone = ScratchDirs.create("ingestzone")
-    val ledger = s"$zone/_ledger/processed.txt"
-    Files.writeString(java.nio.file.Path.of(s"$zone/a.json"), """{"id":1}""")
-    Files.writeString(java.nio.file.Path.of(s"$zone/b.json"), """{"id":2}""")
-    val listing = new DirectoryListing(zone)
-    var seen = Vector.empty[Long]
-    def ingest(): Seq[String] =
-      IncrementalIngest.runOnce(spark, listing, "id bigint", ledger) { df =>
-        seen ++= df.collect().map(_.getLong(0))
-      }
-    assert(ingest().size === 2)
-    assert(seen.sorted === Vector(1L, 2L))
-    // nothing new → write not called
-    assert(ingest().isEmpty && seen.size === 2)
-    // a new file arrives: ONLY it is read (O(new), not a re-read)
-    Files.writeString(java.nio.file.Path.of(s"$zone/c.json"), """{"id":3}""")
-    assert(ingest() === Seq(s"$zone/c.json"))
-    assert(seen.sorted === Vector(1L, 2L, 3L))
-    // the notification-driven implementation plugs into the same seam:
-    // discovery cost is O(drained paths), independent of zone size
-    val buf = scala.collection.mutable.Queue[String](s"$zone/a.json")
-    val notified = new NotifiedFiles(() => buf.dequeueAll(_ => true).toSeq)
-    val ledger2 = s"$zone/_ledger2/processed.txt"
-    var n = 0L
-    IncrementalIngest.runOnce(spark, notified, "id bigint", ledger2) { df =>
-      n = df.count()
-    }
-    assert(n === 1L)
-    // queue drained → next trigger sees nothing, no listing ever happens
-    assert(IncrementalIngest.runOnce(spark, notified, "id bigint", ledger2)(
-      _ => fail("write must not be called with no new files")).isEmpty)
-  }
-
-  test("IncrementalIngest re-delivers a notified batch whose write crashed") {
-    import graft.sources.{IncrementalIngest, NotifiedFiles}
-    val zone = ScratchDirs.create("ingestcrash")
-    val ledger = s"$zone/_ledger/processed.txt"
-    Files.writeString(java.nio.file.Path.of(s"$zone/a.json"), """{"id":1}""")
-    Files.writeString(java.nio.file.Path.of(s"$zone/b.json"), """{"id":2}""")
-    // one-shot queue: the drain destroys the paths — exactly the case
-    // where a crashed write used to lose files silently
-    val buf = scala.collection.mutable.Queue[String](
-      s"$zone/a.json", s"$zone/b.json")
-    val notified = new NotifiedFiles(() => buf.dequeueAll(_ => true).toSeq)
-    intercept[RuntimeException] {
-      IncrementalIngest.runOnce(spark, notified, "id bigint", ledger) { _ =>
-        throw new RuntimeException("sink down")
-      }
-    }
-    assert(buf.isEmpty, "queue really is drained — no re-notification")
-    // next trigger: the pending journal re-delivers both paths
-    var seen = Vector.empty[Long]
-    val redelivered =
-      IncrementalIngest.runOnce(spark, notified, "id bigint", ledger) { df =>
-        seen = df.collect().map(_.getLong(0)).toVector.sorted
-      }
-    assert(redelivered.map(_.split('/').last).sorted === Seq("a.json", "b.json"))
-    assert(seen === Vector(1L, 2L))
-    // and once ledgered, a third trigger is a no-op
-    assert(IncrementalIngest.runOnce(spark, notified, "id bigint", ledger)(
-      _ => fail("must not reprocess")).isEmpty)
   }
 }

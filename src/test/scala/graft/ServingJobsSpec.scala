@@ -3,12 +3,18 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{Conf, ScratchDirs}
-import graft.serving.{ParquetKVSink, ServingJobs}
+import graft.core.Conf
+import graft.serving.{EmbeddedKVSink, EmbeddedKVStore, ServingJobs}
 
 class ServingJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** A sink over a fresh store named `id`, and that store. */
+  private def freshStore(id: String): (EmbeddedKVSink, EmbeddedKVStore) = {
+    EmbeddedKVStore.remove(id)
+    (new EmbeddedKVSink(id), EmbeddedKVStore(id))
+  }
 
   test("serveSnapshot: as-of hour filter, ALL rollup, unpivot, KV write") {
     val sp = spark
@@ -19,9 +25,9 @@ class ServingJobsSpec extends AnyFunSuite {
       (ts("2024-01-30 09:00:00"), "SOL", 999.0, 99.0)) // wrong hour, dropped
       .toDF("timestamp", "asset", "volume", "fees")
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = ScratchDirs.create("servejobs")
+    val (sink, store) = freshStore("kv_servejobs")
     val served = ServingJobs.serveSnapshot(gold, "timestamp", "asset",
-      Seq("volume", "fees"), conf, new ParquetKVSink(out), "leaderboard")
+      Seq("volume", "fees"), conf, sink, "leaderboard")
     val rows = served.collect()
       .map(r => (r.getAs[String]("asset"), r.getAs[String]("metric")) ->
         r.getAs[Double]("value")).toMap
@@ -29,12 +35,12 @@ class ServingJobsSpec extends AnyFunSuite {
     assert(rows(("ALL", "volume")) === 150.0)
     assert(rows(("ALL", "fees")) === 15.0)
     assert(rows.size === 6) // 3 asset buckets x 2 metrics
-    val back = spark.read.parquet(s"$out/leaderboard")
-    assert(back.count() === 6)
-    assert(back.columns.contains("ttl"))
+    assert(store.itemCount("leaderboard") === 6)
+    val back = store.query("leaderboard", "volume")
+    assert(back.forall(_.contains("ttl")))
     // ttl = snapshot + 14 days in unix seconds
     val snapSecs = Instant.parse("2024-01-30T12:00:00Z").getEpochSecond
-    assert(back.select("ttl").head().getLong(0) === snapSecs + 14 * 86400)
+    assert(back.head("ttl") === snapSecs + 14 * 86400)
   }
 
   test("serveFunding snapshots asOf-2h with the composite sort key") {
@@ -45,14 +51,14 @@ class ServingJobsSpec extends AnyFunSuite {
       (ts("2024-01-30 09:00:00"), "SOL", "authA", 9.9)) // wrong hour
       .toDF("timestamp", "asset", "authority", "balance_change")
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = ScratchDirs.create("servefund")
-    val served = ServingJobs.serveFunding(gold, conf,
-      new ParquetKVSink(out), "funding")
+    val (sink, store) = freshStore("kv_servefund")
+    val served = ServingJobs.serveFunding(gold, conf, sink, "funding")
     val rows = served.collect()
     assert(rows.length === 1)
     assert(rows.head.getAs[String]("timestamp#asset")
       === s"${ts("2024-01-30 10:00:00").getTime / 1000}#SOL")
     assert(rows.head.getAs[Double]("balanceChange") === 1.5)
+    assert(store.itemCount("funding") === 1)
   }
 
   test("serveLeaderboard: one-pass 11-way period unpivot, no Union in plan") {
@@ -91,9 +97,9 @@ class ServingJobsSpec extends AnyFunSuite {
     val gold = sp.createDataFrame(
       java.util.List.of(org.apache.spark.sql.Row(row: _*)), schema)
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = ScratchDirs.create("serveleader")
-    val served = ServingJobs.serveLeaderboard(gold, conf,
-      new ParquetKVSink(out), "leaderboard_v2")
+    val (sink, store) = freshStore("kv_serveleader")
+    val served = ServingJobs.serveLeaderboard(gold, conf, sink,
+      "leaderboard_v2")
     val rows = served.collect()
     assert(rows.length === 11, "3 metrics x 4 periods minus roi#alltime")
     val byKey = rows.map(r =>
@@ -108,6 +114,9 @@ class ServingJobsSpec extends AnyFunSuite {
     // produce a plan without any Union node
     val plan = served.queryExecution.executedPlan.toString
     assert(!plan.contains("Union"), "one pass, not a union loop")
+    assert(store.itemCount("leaderboard_v2") === 11)
+    assert(store.get("leaderboard_v2", "PNL#ALL_TIME", Some(4)).get
+      .get("roi").isEmpty, "a null attribute is not stored")
   }
 
   test("servePnlSnapshots: hourly with 2-week TTL, daily keeps midnight only " +
@@ -122,27 +131,26 @@ class ServingJobsSpec extends AnyFunSuite {
       .toDF("timestamp", "authority", "balance", "unrealized_pnl",
         "equity", "cumulative_pnl")
     val conf = Conf(Instant.parse("2024-01-30T12:00:00Z"))
-    val out = ScratchDirs.create("servepnl")
-    val served = ServingJobs.servePnlSnapshots(pnl, conf,
-      new ParquetKVSink(out), "cleaned_pnl")
+    val (sink, store) = freshStore("kv_servepnl")
+    val served = ServingJobs.servePnlSnapshots(pnl, conf, sink,
+      "cleaned_pnl")
     // snapshot = the as-of hour only
     assert(served.collect().map(_.getAs[String]("authority")).sorted
       === Array("authA", "authB"))
     assert(served.columns.toSeq === Seq("timestamp", "authority", "balance",
       "unrealizedPnl", "equity", "cumulativePnl"))
-    val hourly = spark.read.parquet(s"$out/cleaned_pnl_hourly_v2")
-    assert(hourly.count() === 2)
+    assert(store.itemCount("cleaned_pnl_hourly_v2") === 2)
     val snapSecs = ts("2024-01-30 12:00:00").getTime / 1000
-    assert(hourly.select("ttl").head().getLong(0) === snapSecs + 14 * 86400)
+    assert(store.get("cleaned_pnl_hourly_v2", "authA", Some(snapSecs)).get
+      .apply("ttl") === snapSecs + 14 * 86400)
     // daily keeps only hour-0 snapshots: the 12:00 as-of hour has none
-    val daily = spark.read.parquet(s"$out/cleaned_pnl_daily_v2")
-    assert(daily.count() === 0)
-    assert(!daily.columns.contains("ttl"), "daily history never expires")
+    assert(store.itemCount("cleaned_pnl_daily_v2") === 0)
     // at midnight as-of, the daily table retains the row
     val confMidnight = Conf(Instant.parse("2024-01-30T00:00:00Z"))
-    ServingJobs.servePnlSnapshots(pnl, confMidnight,
-      new ParquetKVSink(out), "cleaned_pnl")
-    assert(spark.read.parquet(s"$out/cleaned_pnl_daily_v2").count() === 1)
+    ServingJobs.servePnlSnapshots(pnl, confMidnight, sink, "cleaned_pnl")
+    val daily = store.query("cleaned_pnl_daily_v2", "authA")
+    assert(daily.size === 1)
+    assert(!daily.head.contains("ttl"), "daily history never expires")
   }
 
   test("serveTable: whole-table camelCase push (fee_tiers / referral rewards)") {
@@ -150,15 +158,15 @@ class ServingJobsSpec extends AnyFunSuite {
     import sp.implicits._
     val tiers = Seq(("authA", ts("2024-01-30 10:00:00"), 123456.0, 1))
       .toDF("authority", "block_time", "volume_30d", "fee_tier")
-    val out = ScratchDirs.create("servetable")
-    val served = ServingJobs.serveTable(tiers, new ParquetKVSink(out),
+    val (sink, store) = freshStore("kv_servetable")
+    val served = ServingJobs.serveTable(tiers, sink,
       "fee_tiers", hashKey = "authority", rangeKey = Some("blockTime"))
     assert(served.columns.toSeq ===
       Seq("authority", "blockTime", "volume30d", "feeTier"))
-    val back = spark.read.parquet(s"$out/fee_tiers")
     // timestamps serve as unix seconds (numeric sort key)
-    assert(back.select("blockTime").head().getLong(0)
-      === ts("2024-01-30 10:00:00").getTime / 1000)
+    val blockSecs = ts("2024-01-30 10:00:00").getTime / 1000
+    assert(store.get("fee_tiers", "authA", Some(blockSecs)).get
+      .apply("blockTime") === blockSecs)
   }
 
   test("serveAllTimeStats folds in the historical backfill constants") {
@@ -166,13 +174,14 @@ class ServingJobsSpec extends AnyFunSuite {
     import sp.implicits._
     val hourly = Seq(("SOL", 10.0, 2L), ("ETH", 5.0, 1L))
       .toDF("asset", "volume", "trade_count")
-    val out = ScratchDirs.create("servestats")
+    val (sink, store) = freshStore("kv_servestats")
     val served = ServingJobs.serveAllTimeStats(hourly, "volume",
       "trade_count", baseVolume = 455316870.8536678, baseCount = 200322L,
-      new ParquetKVSink(out), "stats")
+      sink, "stats")
     val r = served.head()
     assert(r.getAs[Double]("totalVolume") === 455316870.8536678 + 15.0)
     assert(r.getAs[Long]("totalCount") === 200325L)
+    assert(store.get("stats", "ALL").get.apply("totalCount") === 200325L)
   }
 
   // ---- KV control plane (KVTableSpec — zetadex-serving.py:40–175) ----
@@ -232,33 +241,27 @@ class ServingJobsSpec extends AnyFunSuite {
         gsis = Seq(Gsi("g", "id", projection = ProjectInclude(Nil))))
         .validate(df.schema))
     // ...and after servingProjection the temporal key becomes valid
-    val projected = new ParquetKVSink("/tmp/unused").servingProjection(df)
+    val projected = ServingJobs.servingProjection(df)
     KVTableSpec("t", "id", rangeKey = Some("observed_at"))
       .validate(projected.schema)
   }
 
-  test("writeWithSpec materializes the table and every index dataset") {
+  test("a failed serve leaves the previously served table as it was") {
+    import org.apache.spark.sql.functions._
     val sp = spark
-    import sp.implicits._
-    import graft.serving.KVTableSpec
-    import graft.serving.KVTableSpec._
-    val base = ScratchDirs.create("kvspec")
-    val df = Seq(
-      (1L, 10L, "us", 5L, 1.5), (1L, 20L, "eu", 3L, 2.5),
-      (2L, 10L, "us", 9L, 3.5)).toDF("id", "timestamp", "region", "score", "v")
-    val spec = KVTableSpec("served", "id", Some("timestamp"),
-      lsis = Seq(Lsi("byScore", "score", ProjectKeysOnly)),
-      gsis = Seq(Gsi("byRegion", "region", Some("timestamp"),
-        ProjectInclude(Seq("v")))))
-    new ParquetKVSink(base).writeWithSpec(df, spec)
-    assert(sp.read.parquet(s"$base/served").count() === 3)
-    // LSI: keys-only projection = table keys + index range key
-    val lsi = sp.read.parquet(s"$base/served__lsi_byScore")
-    assert(lsi.columns.toSet === Set("id", "timestamp", "score"))
-    // GSI: INCLUDE projection = table keys + index keys + named attrs
-    val gsi = sp.read.parquet(s"$base/served__gsi_byRegion")
-    assert(gsi.columns.toSet === Set("id", "timestamp", "region", "v"))
-    assert(gsi.count() === 3)
+    val (sink, store) = freshStore("kv_failed_serve")
+    val first = sp.range(0, 100, 1, 4).select(col("id"), (col("id") * 2).as("v"))
+    ServingJobs.serveTable(first, sink, "t", hashKey = "id", rangeKey = None)
+    assert(store.itemCount("t") === 100L)
+    // the second push fails in one task (ANSI division by zero)
+    val failing = sp.range(0, 100, 1, 4).select(col("id"),
+      when(col("id") === 77L, (lit(1) / lit(0)).cast("long"))
+        .otherwise(col("id") * 3).as("v"))
+    intercept[Exception] {
+      ServingJobs.serveTable(failing, sink, "t", hashKey = "id", rangeKey = None)
+    }
+    assert(store.itemCount("t") === 100L)
+    (0L until 100L).foreach(i => assert(store.get("t", i).get("v") === i * 2))
   }
 
   // ---- Embedded KV data plane (round-12: the last unexercised

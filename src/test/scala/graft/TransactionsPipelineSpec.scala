@@ -299,6 +299,30 @@ class TransactionsPipelineSpec extends AnyFunSuite {
     assert(sol.getAs[Double]("volume_24h") === 8.4)
   }
 
+  // The reference densifies the rolling table as spine × assets (TX:840–
+  // 842): a condition-free cross join with the small asset dim
+  // broadcast, which Spark plans as a BroadcastNestedLoopJoin. It is the
+  // DAG's only nested-loop join; any other one would be a theta join
+  // planned quadratically by mistake.
+  test("the spine × assets densify is the DAG's only nested-loop join") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val reg = registry
+    val bnlj = reg.tableNames.map { t =>
+      val df = reg.resolve(t)
+      df.collect()
+      t -> nodes(df.queryExecution.executedPlan)
+        .count(_.isInstanceOf[BroadcastNestedLoopJoinExec])
+    }.filter(_._2 > 0).toMap
+    assert(bnlj === Map("agg_ix_trade_asset_24h_rolling" -> 1))
+  }
+
   // Spark's generated-class cache must hold the DAG's working set: the
   // hourly cadence re-runs the same plans, so a second run recompiles only
   // classes whose inlined literals changed. With Spark's default 100-entry

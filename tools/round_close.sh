@@ -8,7 +8,7 @@
 # a round ends with `git status` clean.
 #
 # Usage: tools/round_close.sh <round-number> [extra files...]
-#   e.g. tools/round_close.sh 15 PLANAUDIT_r15.txt
+#   e.g. tools/round_close.sh 16 OPTIMIZATION_r16.md
 #
 # It does NOT run the bench itself — run the bench/verify first and
 # copy bench_full_latest.json to bench_full_r<N>.json; this script only
@@ -30,7 +30,7 @@ stage_if_exists() {
 
 # the session's canonical records for THIS round
 stage_if_exists "BENCH_r${N}.json" "CORRECTNESS_r${N}.json" \
-  "bench_full_r${N}.json" "PLANAUDIT_r${N}.txt"
+  "bench_full_r${N}.json"
 # rolling artifacts the driver/judge rewrite every round
 stage_if_exists LEAKCHECK.json COPYCHECK.json bench_full_latest.json \
   BENCH_sf1_subset.json BENCH_sf10_subset.json BENCH_sf1_full.json
