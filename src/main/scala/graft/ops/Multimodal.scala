@@ -234,34 +234,6 @@ object Multimodal {
     }(Encoders.row(schema))
   }
 
-  /** Per-partition batched payload "resize": re-encode each binary
-    * payload to a target size by deterministic nearest-byte resampling —
-    * the payload-plumbing contract (schema, per-partition streaming,
-    * bounded memory) of a decode → rescale → re-encode stage. For a REAL
-    * pixel-space resize over the formats this engine decodes, compose
-    * [[ImageCodec.decode]] → [[ImageCodec.resizeNearest]] →
-    * [[ImageCodec.encodeBmp]] in the same mapPartitions shape (that path
-    * is oracle-gated via the q224/q231 18×16 resize-target contract).
-    * Output schema: (id long, payload binary, n_bytes int). */
-  def resizePayloads(df: DataFrame, idCol: String, binCol: String,
-                     targetBytes: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false),
-      StructField("n_bytes", IntegerType, nullable = false)))
-    val input = df.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-    input.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val out = Array.tabulate(targetBytes) { i =>
-          if (bytes.isEmpty) 0.toByte
-          else bytes((i.toLong * bytes.length / targetBytes).toInt)
-        }
-        Row(r.getLong(0), out, out.length)
-      }
-    }(Encoders.row(schema))
-  }
-
   /** Deterministic content-hash featurizer — the DEFAULT decoder when no
     * model is injected: hash-derived features in [-1, 1), stable across
     * partitionings and retries. Useful as a cheap content fingerprint

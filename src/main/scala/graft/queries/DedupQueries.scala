@@ -1239,7 +1239,13 @@ object DedupQueries {
   // on the BOUNDED doc-level frame (one row per document), never on
   // characters. The oracle sorts the same suffixes directly
   // (ORDER BY SUBSTRING) — an independent O(n^2)-comparison engine
-  // agreeing with the O(n log n) one on the first 500 array slots.
+  // agreeing with the O(n log n) one on the first 500 array slots. It
+  // sorts only the suffixes whose 64-character prefix is at most the
+  // 500th smallest such prefix: a suffix that sorts before another has
+  // a prefix no larger, so that set holds the 500 smallest suffixes
+  // and everything that sorts before each of them, and their ranks
+  // within it are their ranks among all suffixes
+  // (tools/q279_oracle_forms.py checks both forms agree).
   private lazy val q279 = Q("q279_suffix_array",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
@@ -1278,10 +1284,15 @@ object DedupQueries {
       pos AS (
         SELECT UNNEST(GENERATE_SERIES(0, LENGTH(s) - 1)) AS i
         FROM corpus),
+      pre AS (
+        SELECT i, SUBSTRING(corpus.s, CAST(i + 1 AS INT), 64) AS p
+        FROM pos, corpus),
+      cut AS (
+        SELECT MAX(p) AS c FROM (SELECT p FROM pre ORDER BY p LIMIT 500)),
       ranked AS (
         SELECT i, ROW_NUMBER() OVER (ORDER BY
           SUBSTRING(corpus.s, CAST(i + 1 AS INT))) - 1 AS rank
-        FROM pos, corpus)
+        FROM pre, cut, corpus WHERE pre.p <= cut.c)
       SELECT rank, i AS pos FROM ranked
       WHERE rank < 500 ORDER BY rank"""))
 }

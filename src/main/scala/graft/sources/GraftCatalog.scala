@@ -2,13 +2,12 @@ package graft.sources
 
 import java.util
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.graph.ManifestStore
 
@@ -33,10 +32,12 @@ import graft.graph.ManifestStore
   * one layout difference: entries are keyed per FILE (`file=<name>` →
   * generation-relative path) instead of per hive partition tuple, and
   * every file carries write-time zone maps + null counts in
-  * `fileStats` (see [[GraftParquetIO]]). The partitioned-upsert /
-  * deletion-vector surface stays on the Scala API where its partition
-  * discipline lives; `CREATE TABLE ... PARTITIONED BY` is rejected
-  * loudly rather than half-supported.
+  * `fileStats` (see [[FileStats]]). Files are read and written by
+  * Spark's own parquet reader and writer, as ManifestStore's are; the
+  * catalog adds the manifest, the zone maps and the V2 surface. The
+  * partitioned-upsert / deletion-vector surface stays on the Scala API
+  * where its partition discipline lives; `CREATE TABLE ... PARTITIONED
+  * BY` is rejected loudly rather than half-supported.
   *
   * Scale shape: every metadata decision (file pruning, metadata-only
   * delete, truncate) is a driver-side scan of |files| manifest
@@ -258,33 +259,23 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 object GraftCatalog {
   private val NAME_RE = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  /** CREATE TABLE gate: flat schemas over the types [[GraftParquetIO]]
-    * can write, with names that can never collide with the stats
-    * pseudo-columns (`__rows`, `<col>:nulls`) or the `_file` metadata
-    * column. Fails at DDL time, not first INSERT. */
+  /** The column types [[FileStats]] and [[GraftPrune]] know. */
+  val ColumnTypes: Set[DataType] =
+    Set(LongType, IntegerType, DoubleType, StringType, BooleanType, DateType)
+
+  /** CREATE TABLE gate: flat schemas over [[ColumnTypes]], with names that
+    * can never collide with the stats pseudo-columns (`__rows`,
+    * `<col>:nulls`) or the `_file` metadata column. Fails at DDL time,
+    * not first INSERT. */
   def validateSchema(schema: StructType): Unit = {
     require(schema.nonEmpty, "graft catalog tables need at least one column")
     schema.fields.foreach { f =>
       require(NAME_RE.matches(f.name) && f.name != "_file",
         s"graft catalog column name '${f.name}' must match " +
           "[A-Za-z_][A-Za-z0-9_]* and not be the _file metadata column")
+      if (!ColumnTypes.contains(f.dataType))
+        throw new IllegalArgumentException(
+          s"graft catalog cannot store column '${f.name}' of ${f.dataType}")
     }
-    GraftParquetIO.messageType(schema) // throws on unsupported types
-  }
-}
-
-/** Hadoop conf that survives task serialization (the catalog's tasks
-  * open parquet files on whatever filesystem the table root lives on,
-  * so they need the DRIVER's fs configuration, not executor defaults). */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
   }
 }

@@ -65,7 +65,7 @@ object GraftProcedures {
 
   private[sources] def rowsOf(m: ManifestStore.Manifest): Long =
     m.fileStats.values.flatMap(_.values)
-      .flatMap(_.get(GraftParquetIO.ROWS_KEY)).map(_._1.toLong).sum
+      .flatMap(_.get(FileStats.ROWS_KEY)).map(_._1.toLong).sum
 
   private[sources] def genDirs(spark: SparkSession, root: String): Long = {
     val gen = new HPath(s"$root/_gen")

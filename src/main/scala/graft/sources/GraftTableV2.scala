@@ -2,6 +2,10 @@ package graft.sources
 
 import java.util
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -9,9 +13,14 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import graft.graph.ManifestStore
 
 /** One graft-catalog table (see [[GraftCatalog]]): a file-keyed
@@ -21,12 +30,14 @@ import graft.graph.ManifestStore
   * prunes FILES driver-side against the write-time zone maps + null
   * counts in `fileStats` (the pruning is advisory — every filter is
   * also returned residual and re-evaluated by Spark per row, the same
-  * contract as parquet row-group skipping), projects columns into the
-  * parquet read, and plans one [[InputPartition]] per surviving file.
+  * contract as parquet row-group skipping), and plans one file
+  * partition per surviving file, read by Spark's own parquet reader
+  * with the column projection.
   *
-  * Write path: each task streams rows into its own parquet file inside
-  * a nonce'd staging generation dir, accumulating the file's zone maps
-  * as it writes (footer-stats style); the driver-side commit assembles
+  * Write path: each task streams rows through Spark's own parquet
+  * writer into its own file inside a nonce'd staging generation dir,
+  * accumulating the file's zone maps as it writes ([[FileStats]],
+  * footer-stats style); the driver-side commit assembles
   * manifest entries from the tasks' [[WriterCommitMessage]]s and
   * publishes through [[ManifestStore.publish]] — OCC head-check +
   * atomic rename, so a racing writer loses loudly and a crash leaves
@@ -199,6 +210,49 @@ object GraftTableOps {
       props = m.props ++ extraProps), Some(m))
   }
 
+  /** A write's nonce'd staging generation, named for the head at STAGE
+    * time (cosmetic — the nonce is what prevents clobber; entries point
+    * at actual paths). */
+  def stageGen(spark: SparkSession, root: String): String = {
+    val guess = ManifestStore.currentVersion(
+      new HPath(root).getFileSystem(spark.sessionState.newHadoopConf()),
+      root).getOrElse(0L) + 1
+    f"_gen/g$guess%08d-${java.util.UUID.randomUUID().toString.take(8)}"
+  }
+
+  /** The data columns a write carries: `writeSchema` may carry row-level
+    * metadata attrs (e.g. _file), which are projected away; every table
+    * column must be present (the catalog pins schemas, no partial
+    * inserts). Returns the projection (None when it is the identity) and
+    * the written schema. */
+  def dataColumns(kind: String, writeSchema: StructType,
+                  tableSchema: StructType): (Option[Array[Int]], StructType) = {
+    val idx = writeSchema.fields.zipWithIndex
+      .filter { case (f, _) => tableSchema.fieldNames.contains(f.name) }
+      .map(_._2)
+    require(idx.length == tableSchema.length,
+      s"$kind schema ${writeSchema.fieldNames.mkString(",")} does not " +
+        s"cover table columns ${tableSchema.fieldNames.mkString(",")}")
+    (if (idx.length == writeSchema.length) None else Some(idx),
+      StructType(idx.map(writeSchema.fields(_))))
+  }
+
+  /** The task-side writer for files under `genDirAbs`: Spark's parquet
+    * [[OutputWriterFactory]], prepared on the driver by the call
+    * `ParquetFileFormat` makes, and the job conf it set up. */
+  def writerFactory(spark: SparkSession, genDirAbs: String,
+                    dataSchema: StructType,
+                    projIdx: Option[Array[Int]]): GraftDataWriterFactory = {
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    // all-optional fields, as Spark writes every parquet file
+    val output = ParquetUtils.prepareWrite(sqlConf, job,
+      StructType(dataSchema.map(_.copy(nullable = true))),
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    GraftDataWriterFactory(genDirAbs, dataSchema, projIdx, output,
+      new SerializableConfiguration(job.getConfiguration))
+  }
+
   /** Best-effort removal of an uncommitted staging dir (abort path /
     * empty append). Losing the race to delete is fine — an orphaned
     * stage is exactly what publish-time grace-window GC collects. */
@@ -243,11 +297,9 @@ class GraftScanBuilder(root: String, tableSchema: StructType,
     new GraftScan(root, tableSchema, required, usedForPruning, rowLevel, asOf)
 }
 
-case class GraftFilePartition(absPath: String, relPath: String,
-                              tableJson: String, projJson: String,
-                              emitFile: Boolean)
-    extends InputPartition
-
+/** The catalog's scan: the manifest decides which files are read (one
+  * snapshot, zone-map pruning, the runtime group filter); Spark's
+  * parquet reader reads them. */
 class GraftScan(root: String, tableSchema: StructType,
                 required: StructType, pruneFilters: Array[Filter],
                 rowLevel: Option[GraftRowLevelOperation],
@@ -317,23 +369,60 @@ class GraftScan(root: String, tableSchema: StructType,
           "scan stays unnarrowed (correct but O(table) rewrite)")
   }
 
+  /** One [[FilePartition]] per live file, its split the whole file:
+    * the manifest records no file lengths and the driver lists nothing,
+    * so the split is `[0, Long.MaxValue)`, which holds every row group's
+    * midpoint; the reader opens the footer itself. A requested `_file`
+    * is the file's partition value, appended by Spark's reader the way
+    * it appends any partition column. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val parts = live.map { case (_, rel) =>
-      GraftFilePartition(s"$root/$rel", rel, tableSchema.json,
-        dataProjection.json, emitFile): InputPartition
+    val parts = live.zipWithIndex.map { case ((_, rel), i) =>
+      val value =
+        if (emitFile) InternalRow(UTF8String.fromString(rel)) else InternalRow.empty
+      FilePartition(i, Array(PartitionedFile(value,
+        SparkPath.fromPathString(s"$root/$rel"), 0L, Long.MaxValue,
+        Array.empty[String]))): InputPartition
     }.toArray
     // the row-level write replaces EXACTLY the files this scan planned
     rowLevel.foreach(_.recordScanned(live.map(_._1).toSet))
     parts
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+  /** Spark's own parquet reader, its Hadoop conf set up as
+    * `ParquetScan.createReaderFactory` sets it up. No filters are
+    * pushed into the reader: file pruning is the manifest's, and Spark
+    * re-filters every row. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataProjection.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, dataProjection.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+      sqlConf.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+      sqlConf.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+      sqlConf.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+      sqlConf.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+    ParquetPartitionReaderFactory(sqlConf,
+      spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
+      tableSchema, dataProjection,
+      StructType(required.fields.drop(dataProjection.length)),
+      Array.empty, None, new ParquetOptions(Map.empty[String, String], sqlConf))
+  }
 
   override def estimateStatistics(): Statistics = {
     val rows = live.map { case (k, _) =>
-      GraftTableOps.statsOf(m, k).get(GraftParquetIO.ROWS_KEY)
+      GraftTableOps.statsOf(m, k).get(FileStats.ROWS_KEY)
         .map(_._1.toLong).getOrElse(0L)
     }.sum
     val width = required.fields.map(_.dataType match {
@@ -347,32 +436,6 @@ class GraftScan(root: String, tableSchema: StructType,
         java.util.OptionalLong.of(rows)
     }
   }
-}
-
-class GraftReaderFactory(conf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  // the catalog scan is columnar only (GraftParquetIO.ColumnarReader
-  // says why)
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftFilePartition]
-    val proj = DataType.fromJson(p.projJson).asInstanceOf[StructType]
-    val table = DataType.fromJson(p.tableJson).asInstanceOf[StructType]
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private val reader = new GraftParquetIO.ColumnarReader(p.absPath,
-        table, proj, conf.value, if (p.emitFile) Some(p.relPath) else None)
-      private var cur: org.apache.spark.sql.vectorized.ColumnarBatch = _
-      override def next(): Boolean = { cur = reader.nextBatch(); cur != null }
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = cur
-      override def close(): Unit = reader.close()
-    }
-  }
-
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    throw new UnsupportedOperationException("graft catalog scans are columnar")
 }
 
 // =====================================================================
@@ -409,31 +472,13 @@ class GraftBatchWrite(root: String, tableSchema: StructType,
                       rowLevel: Option[GraftRowLevelOperation])
     extends BatchWrite {
   private def spark: SparkSession = SparkSession.active
-  // nonce'd staging dir, named for the head at STAGE time (cosmetic —
-  // the nonce is what prevents clobber; entries point at actual paths)
-  private val genRel = {
-    val guess = ManifestStore.currentVersion(
-      new HPath(root).getFileSystem(spark.sessionState.newHadoopConf()),
-      root).getOrElse(0L) + 1
-    f"_gen/g$guess%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-  }
-
-  // the data columns actually written: writeSchema may carry row-level
-  // metadata attrs (e.g. _file) — project them away; every table column
-  // must be present (the catalog pins schemas, no partial inserts)
-  private val dataIdx: Array[Int] = writeSchema.fields.zipWithIndex
-    .filter { case (f, _) => tableSchema.fieldNames.contains(f.name) }
-    .map(_._2)
-  require(dataIdx.length == tableSchema.length,
-    s"write schema ${writeSchema.fieldNames.mkString(",")} does not cover " +
-      s"table columns ${tableSchema.fieldNames.mkString(",")}")
-  private val dataSchema = StructType(dataIdx.map(writeSchema.fields(_)))
+  private val genRel = GraftTableOps.stageGen(spark, root)
+  private val (projIdx, dataSchema) =
+    GraftTableOps.dataColumns("write", writeSchema, tableSchema)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    new GraftDataWriterFactory(s"$root/$genRel", dataSchema,
-      if (dataIdx.length == writeSchema.length) None else Some(dataIdx),
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+    GraftTableOps.writerFactory(spark, s"$root/$genRel", dataSchema, projIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.collect {
@@ -484,34 +529,21 @@ class GraftStreamingWrite(root: String, tableSchema: StructType,
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
   private def spark: SparkSession = SparkSession.active
-  private val genBase = {
-    val guess = ManifestStore.currentVersion(
-      new HPath(root).getFileSystem(spark.sessionState.newHadoopConf()),
-      root).getOrElse(0L) + 1
-    f"_gen/g$guess%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-  }
+  private val genBase = GraftTableOps.stageGen(spark, root)
   private def genRel(epochId: Long) = s"$genBase-e$epochId"
   private val epochKey = s"graft.lastEpoch.$queryId"
-
-  private val dataIdx: Array[Int] = writeSchema.fields.zipWithIndex
-    .filter { case (f, _) => tableSchema.fieldNames.contains(f.name) }
-    .map(_._2)
-  require(dataIdx.length == tableSchema.length,
-    s"stream schema ${writeSchema.fieldNames.mkString(",")} does not " +
-      s"cover table columns ${tableSchema.fieldNames.mkString(",")}")
-  private val dataSchema = StructType(dataIdx.map(writeSchema.fields(_)))
+  private val (projIdx, dataSchema) =
+    GraftTableOps.dataColumns("stream", writeSchema, tableSchema)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val proj =
-      if (dataIdx.length == writeSchema.length) None else Some(dataIdx)
-    val rootC = root; val baseC = genBase; val schemaC = dataSchema
+    val factory = GraftTableOps.writerFactory(spark, s"$root/$genBase",
+      dataSchema, projIdx)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
                                 epochId: Long): DataWriter[InternalRow] =
-        new GraftDataWriterFactory(s"$rootC/$baseC-e$epochId", schemaC,
-          proj, conf).createWriter(partitionId, taskId)
+        factory.copy(genDirAbs = s"${factory.genDirAbs}-e$epochId")
+          .createWriter(partitionId, taskId)
     }
   }
 
@@ -537,21 +569,26 @@ class GraftStreamingWrite(root: String, tableSchema: StructType,
     GraftTableOps.cleanupStage(spark, root, genRel(epochId))
 }
 
-class GraftDataWriterFactory(genDirAbs: String, dataSchema: StructType,
-                             projIdx: Option[Array[Int]],
-                             conf: SerializableHadoopConf)
+/** Task side of every catalog write: each task writes one parquet file
+  * through Spark's own parquet writer, feeding each row to [[FileStats]]
+  * first. */
+case class GraftDataWriterFactory(genDirAbs: String, dataSchema: StructType,
+                                  projIdx: Option[Array[Int]],
+                                  output: OutputWriterFactory,
+                                  conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] = new DataWriter[InternalRow] {
     private val name = f"part-$partitionId%05d-$taskId.parquet"
-    private var writer: GraftParquetIO.Writer = _
+    private var writer: OutputWriter = _
+    private val stats = new FileStats(dataSchema)
     private var rows = 0L
     private val reuse = projIdx.map(_ => new GenericInternalRow(dataSchema.length))
 
     override def write(record: InternalRow): Unit = {
       if (writer == null) // lazy: an empty task stages no file at all
-        writer = new GraftParquetIO.Writer(s"$genDirAbs/$name", dataSchema,
-          conf.value)
+        writer = output.newInstance(s"$genDirAbs/$name", dataSchema,
+          new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
       val row = projIdx match {
         case None => record
         case Some(idx) =>
@@ -565,12 +602,13 @@ class GraftDataWriterFactory(genDirAbs: String, dataSchema: StructType,
           }
           r
       }
+      stats.observe(row)
       writer.write(row)
       rows += 1
     }
     override def commit(): WriterCommitMessage =
       if (writer == null) GraftFileCommit(name, 0L, Map.empty)
-      else GraftFileCommit(name, rows, writer.close())
+      else { writer.close(); GraftFileCommit(name, rows, stats.result()) }
     // a failed/superseded ATTEMPT deletes its own bytes: the staging
     // dir may become a LIVE generation at job commit, and an orphan
     // file inside a referenced generation is never GC'd (generation GC
@@ -578,7 +616,7 @@ class GraftDataWriterFactory(genDirAbs: String, dataSchema: StructType,
     override def abort(): Unit = if (writer != null) {
       writer.close()
       try {
-        val p = new org.apache.hadoop.fs.Path(s"$genDirAbs/$name")
+        val p = new HPath(s"$genDirAbs/$name")
         p.getFileSystem(conf.value).delete(p, false)
       } catch { case _: Exception => () }
     }
@@ -789,8 +827,8 @@ object GraftPrune {
   private def nullness(c: String, stats: Map[String, (String, String)])
       : Option[(Long, Long)] =
     for {
-      n <- stats.get(GraftParquetIO.nullsKey(c))
-      r <- stats.get(GraftParquetIO.ROWS_KEY)
+      n <- stats.get(FileStats.nullsKey(c))
+      r <- stats.get(FileStats.ROWS_KEY)
     } yield (n._1.toLong, r._1.toLong)
 
   /** Resolve (lo, hi, value) into one comparable domain per type and
@@ -853,4 +891,85 @@ object GraftPrune {
       }
     case other => throw new IllegalStateException(s"unreachable $other")
   }).asInstanceOf[Ordering[Any]]
+}
+
+// =====================================================================
+// Write-time file statistics
+// =====================================================================
+
+/** One file's write-time statistics, exactly as they land in the
+  * manifest: data columns' (min, max) plus the `__rows` /
+  * `<col>:nulls` pseudo-entries. Columns that were all-null have no
+  * (min, max) entry — absent bounds must KEEP (GraftPrune classifies
+  * such a column Mixed). */
+final class FileStats(schema: StructType) extends Serializable {
+  import FileStats.{ROWS_KEY, nullsKey}
+  private val n = schema.length
+  private var rows = 0L
+  private val nulls = new Array[Long](n)
+  private val mins = new Array[Any](n)
+  private val maxs = new Array[Any](n)
+
+  def observe(row: InternalRow): Unit = {
+    rows += 1
+    var i = 0
+    while (i < n) {
+      if (row.isNullAt(i)) nulls(i) += 1
+      else {
+        schema.fields(i).dataType match {
+          case LongType => obs(i, row.getLong(i))(_ < _)
+          case IntegerType => obs(i, row.getInt(i))(_ < _)
+          // total order (java.lang.Double.compare), NOT IEEE `<`:
+          // NaN compares false both ways under `<` (a NaN row would
+          // either poison or silently escape the bounds) and
+          // -0.0 < 0.0 is false — while GraftPrune classifies with
+          // Ordering.Double.TotalOrdering and Spark treats NaN as
+          // the largest double, so bounds accumulated under IEEE `<`
+          // could prune a file that holds matching rows
+          case DoubleType =>
+            obs(i, row.getDouble(i))(java.lang.Double.compare(_, _) < 0)
+          case BooleanType => obs(i, row.getBoolean(i))(_ < _)
+          case StringType =>
+            // copy: Spark reuses UnsafeRow-backed UTF8String buffers
+            obs(i, row.getUTF8String(i).clone())(_.compareTo(_) < 0)
+          case DateType => obs(i, row.getInt(i))(_ < _)
+          case dt => throw new IllegalStateException(s"unreachable $dt")
+        }
+      }
+      i += 1
+    }
+  }
+  private def obs[T](i: Int, v: T)(lt: (T, T) => Boolean): Unit = {
+    if (mins(i) == null || lt(v, mins(i).asInstanceOf[T])) mins(i) = v
+    if (maxs(i) == null || lt(maxs(i).asInstanceOf[T], v)) maxs(i) = v
+  }
+
+  def result(): Map[String, (String, String)] = {
+    val b = Map.newBuilder[String, (String, String)]
+    b += ROWS_KEY -> (rows.toString, rows.toString)
+    var i = 0
+    while (i < n) {
+      val c = schema.fields(i).name
+      b += nullsKey(c) -> (nulls(i).toString, nulls(i).toString)
+      if (mins(i) != null)
+        b += c -> (mins(i).toString, maxs(i).toString)
+      i += 1
+    }
+    b.result()
+  }
+}
+
+/** The stats map's pseudo-entries. Canonicalization (the format's
+  * cross-layer contract): integers and dates (epoch days) as decimal
+  * strings, doubles via Double.toString, strings raw, booleans
+  * "false"/"true". String ordering is UTF8-binary (Spark's) — min/max
+  * track [[UTF8String]] comparisons, NOT java.lang.String collation, so
+  * a pruning decision made from the manifest agrees with what a Spark
+  * filter would keep. Null counts ride along as the pseudo-column
+  * `<col>:nulls` and the row count as `__rows` (the manifest's
+  * fileStats value is a col → (min, max) map; the pseudo-entries keep
+  * the format unchanged). */
+object FileStats {
+  val ROWS_KEY = "__rows"
+  def nullsKey(col: String): String = s"$col:nulls"
 }

@@ -33,13 +33,6 @@ object JsonSource {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .json(path)
 
-  /** Derive `date_` / `hour_` partition columns from an event-time column
-    * (the reference's silver-layer partitioning convention,
-    * transactions:356–357). */
-  def withDatePartitions(df: DataFrame, ts: String): DataFrame =
-    df.withColumn("date_", to_date(col(ts)))
-      .withColumn("hour_", date_format(col(ts), "HH"))
-
   /** Batch read that QUARANTINES malformed records instead of nulling
     * them silently (PERMISSIVE default) or dying on the first bad byte
     * (FAILFAST): returns (clean rows, corrupt raw lines). At a 100 TB
@@ -76,56 +69,5 @@ object JsonSource {
       .filter(col("r").isNull || col("r._cr").isNotNull)
       .select(col("raw_line"))
     (clean, corrupt)
-  }
-
-  /** Additive schema evolution for the landing zone (the reference reads
-    * its evolving bronze table with `mergeSchema`, transactions:983): the
-    * declared DDL stays authoritative — old readers see exactly their
-    * declared columns — while data that cannot land in them is captured
-    * into a `map<string,string>` rescue column instead of being silently
-    * dropped (Auto Loader's `rescuedDataColumn` semantics). Three rescue
-    * classes:
-    *
-    *  - an UNDECLARED top-level field a producer starts emitting;
-    *  - a DECLARED field whose value fails its declared type (PERMISSIVE
-    *    parsing nulls the field — the raw text is kept under the field's
-    *    name, so the value is never lost);
-    *  - a line that is not parseable JSON at all, kept whole under the
-    *    reserved `_raw` key (compose with [[batchWithQuarantine]] when
-    *    malformed lines should be split out for replay instead).
-    *
-    * Promoting a rescued field is then a DDL change, not a backfill: the
-    * next read with the widened DDL parses it natively and it disappears
-    * from the rescue map.
-    *
-    * Reads the zone as text (like [[batchWithQuarantine]]); hive
-    * partition discovery does not apply on this path. Nested-object
-    * values are rescued as their JSON text. */
-  def batchWithRescue(spark: SparkSession, path: String, ddl: String,
-                      rescuedCol: String = "_rescued"): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val declared = StructType.fromDDL(ddl).fieldNames.toSeq
-    val emptyMap = map().cast("map<string,string>")
-    val parsed = spark.read.text(path).select(
-      col("value"),
-      from_json(col("value"), StructType.fromDDL(ddl)).as("r"),
-      // a second parse of the same line into map<string,string> sees every
-      // top-level key as raw text, independent of the declared types
-      from_json(col("value"), org.apache.spark.sql.types.DataType
-        .fromDDL("map<string,string>")).as("m"))
-    val m = coalesce(col("m"), emptyMap)
-    val undeclared = map_filter(m, (k, _) => !k.isin(declared.map(lit): _*))
-    // declared fields whose parse came back null while the raw key holds a
-    // value: the type-mismatch case PERMISSIVE mode would silently null
-    val failedDeclared = declared.map { f =>
-      when(col("r").getField(f).isNull && m.getItem(f).isNotNull,
-        map(lit(f), m.getItem(f))).otherwise(emptyMap)
-    }
-    val rescued = (undeclared +: failedDeclared).reduce(map_concat(_, _))
-    parsed.select(col("r.*"),
-      when(col("r").isNull || col("m").isNull,
-          map(lit("_raw"), col("value")))
-        .when(size(map_keys(rescued)) > 0, rescued)
-        .as(rescuedCol))
   }
 }

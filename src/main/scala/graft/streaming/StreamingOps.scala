@@ -150,19 +150,6 @@ object StreamingOps {
       .select(col("__row.*"))
   }
 
-  /** Watermarked hourly aggregation (transactions:781–792: 5-min
-    * watermark, `date_trunc('hour')` bucket — the reference deliberately
-    * uses date_trunc over `F.window`, TX:783). Update-mode streaming agg;
-    * batch recompute of the same expression must equal the final
-    * streaming state (verified in StreamingSpec).
-    */
-  def watermarkedHourlyAgg(ts: String, watermark: String, dims: Seq[String],
-                           aggs: Seq[Column])(df: DataFrame): DataFrame =
-    df.withWatermark(ts, watermark)
-      .groupBy((date_trunc("hour", col(ts)).as("hour_ts") +:
-        dims.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
-
   /** Streaming dedup bounded by watermark (zetaflex-pipeline.py:86–88;
     * the un-watermarked variant was the reference's "super RAM intensive"
     * cliff, transactions:354 — the watermark bounds state). */

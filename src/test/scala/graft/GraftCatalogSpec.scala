@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{Path => HPath}
 import graft.graph.ManifestStore
-import graft.sources.{GraftParquetIO, GraftPrune}
+import graft.sources.{FileStats, GraftPrune}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import graft.core.ScratchDirs
@@ -338,8 +338,8 @@ class GraftCatalogSpec extends AnyFunSuite {
       StructField("d", DoubleType)))
     def st(lo: Long, hi: Long, nulls: Long, rows: Long) = Map(
       "k" -> (lo.toString, hi.toString),
-      GraftParquetIO.nullsKey("k") -> (nulls.toString, nulls.toString),
-      GraftParquetIO.ROWS_KEY -> (rows.toString, rows.toString))
+      FileStats.nullsKey("k") -> (nulls.toString, nulls.toString),
+      FileStats.ROWS_KEY -> (rows.toString, rows.toString))
     import GraftPrune._
     // range exclusion / inclusion / mixed
     assert(classify(Seq(GreaterThan("k", 100L)), schema, st(1, 50, 0, 10))
@@ -355,8 +355,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(classify(Seq(IsNotNull("k")), schema, st(1, 5, 0, 10)) == AllMatch)
     // all-null column: bounds absent, value predicates match nothing
     val allNull = Map(
-      GraftParquetIO.nullsKey("k") -> ("10", "10"),
-      GraftParquetIO.ROWS_KEY -> ("10", "10"))
+      FileStats.nullsKey("k") -> ("10", "10"),
+      FileStats.ROWS_KEY -> ("10", "10"))
     assert(classify(Seq(EqualTo("k", 5L)), schema, allNull) == NoneMatch)
     assert(classify(Seq(IsNull("k")), schema, allNull) == AllMatch)
     // conjunction: any NoneMatch wins; Or needs both sides
@@ -383,8 +383,8 @@ class GraftCatalogSpec extends AnyFunSuite {
       StructField("k", LongType), StructField("s", StringType)))
     def st(lo: Long, hi: Long, nulls: Long, rows: Long) = Map(
       "k" -> (lo.toString, hi.toString),
-      GraftParquetIO.nullsKey("k") -> (nulls.toString, nulls.toString),
-      GraftParquetIO.ROWS_KEY -> (rows.toString, rows.toString))
+      FileStats.nullsKey("k") -> (nulls.toString, nulls.toString),
+      FileStats.ROWS_KEY -> (rows.toString, rows.toString))
     import GraftPrune._
     // the ADVICE case: `NOT (k = 5)` over a file whose non-null values
     // all avoid 5 but which holds NULLs — a NULL row satisfies NEITHER
@@ -399,8 +399,8 @@ class GraftCatalogSpec extends AnyFunSuite {
     // null-aware shapes negate exactly even with nulls present
     assert(one_(Not(IsNull("k")), schema, st(10, 20, 3, 10)) == Mixed)
     assert(one_(Not(IsNull("k")), schema,
-      Map(GraftParquetIO.nullsKey("k") -> ("0", "0"),
-        GraftParquetIO.ROWS_KEY -> ("10", "10"),
+      Map(FileStats.nullsKey("k") -> ("0", "0"),
+        FileStats.ROWS_KEY -> ("10", "10"),
         "k" -> ("1", "2"))) == AllMatch)
     // <=> matches nulls to neither side of a non-null literal, so
     // NOT(k <=> 5) IS satisfied by NULL rows: AllMatch stands
@@ -414,7 +414,7 @@ class GraftCatalogSpec extends AnyFunSuite {
   test("double zone-map bounds use the total order: NaN is the largest " +
       "value and -0.0 sorts below 0.0 (IEEE `<` would mis-prune)") {
     val schema = StructType(Seq(StructField("d", DoubleType)))
-    val stats = new GraftParquetIO.FileStats(schema)
+    val stats = new FileStats(schema)
     val row = new org.apache.spark.sql.catalyst.expressions
       .GenericInternalRow(1)
     for (v <- Seq(1.0, Double.NaN, -0.0, 0.0, 2.5)) {
@@ -431,7 +431,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(GraftPrune.classify(Seq(GreaterThan("d", 1e9)), schema,
       r) != NoneMatch)
     // and a file really containing only finite values still prunes
-    val fin = new GraftParquetIO.FileStats(schema)
+    val fin = new FileStats(schema)
     for (v <- Seq(1.0, 2.5)) { row.update(0, v); fin.observe(row) }
     assert(GraftPrune.classify(Seq(GreaterThan("d", 1e9)), schema,
       fin.result()) == NoneMatch)
@@ -448,7 +448,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       val m = manifest(root, "t")
       graft.sources.GraftTableOps.publishStaged(spark, path, m, gen,
         Seq(graft.sources.GraftFileCommit("part-00000-0.parquet", 1L,
-          Map(GraftParquetIO.ROWS_KEY -> ("1", "1")))),
+          Map(FileStats.ROWS_KEY -> ("1", "1")))),
         replaced = Set.empty, extraProps = Map.empty)
     }
     stage("_gen/g00000002-aaaaaaaa")
@@ -490,6 +490,53 @@ class GraftCatalogSpec extends AnyFunSuite {
       schema, Array.empty, rowLevel = None)
     scan.filter(Array[Filter](EqualTo("_file", oneRel)))
     assert(scan.toBatch.planInputPartitions().length == 1)
+  }
+
+  test("a file in the earlier hand-built layout (all-optional fields, no " +
+      "Spark row metadata) reads: rows, _file groups and COUNT(*)") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val (cat, root) = fresh("oldfmt")
+    spark.sql(s"CREATE TABLE $cat.ns.t (k BIGINT, i INT, d DOUBLE, " +
+      "s STRING, b BOOLEAN, dt DATE)")
+    val path = s"$root/ns/t"
+    val gen = "_gen/g00000002-0ldf0rma"
+    val mt = MessageTypeParser.parseMessageType("""message graft {
+      optional int64 k; optional int32 i; optional double d;
+      optional binary s (STRING); optional boolean b;
+      optional int32 dt (DATE); }""")
+    val conf = spark.sessionState.newHadoopConf()
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new HPath(s"$path/$gen/part-00000-0.parquet"), conf))
+      .withType(mt).withConf(conf).build()
+    val day = java.time.LocalDate.of(2024, 1, 1)
+    val g = new SimpleGroupFactory(mt)
+    // row 2 is null in five types, row 3 in the sixth (k)
+    w.write(g.newGroup().append("k", 1L).append("i", 10).append("d", 1.5)
+      .append("s", "a").append("b", true).append("dt", day.toEpochDay.toInt))
+    w.write(g.newGroup().append("k", 2L))
+    w.write(g.newGroup().append("i", 30).append("d", 3.5).append("s", "c")
+      .append("b", false).append("dt", day.plusDays(2).toEpochDay.toInt))
+    w.close()
+    graft.sources.GraftTableOps.publishStaged(spark, path,
+      manifest(root, "t"), gen,
+      Seq(graft.sources.GraftFileCommit("part-00000-0.parquet", 3L,
+        Map("__rows" -> ("3", "3")))),
+      replaced = Set.empty, extraProps = Map.empty)
+
+    val rows = spark.sql(s"SELECT * FROM $cat.ns.t ORDER BY k NULLS FIRST")
+      .collect().map(_.toSeq).toSeq
+    assert(rows == Seq(
+      Seq(null, 30, 3.5, "c", false, java.sql.Date.valueOf(day.plusDays(2))),
+      Seq(1L, 10, 1.5, "a", true, java.sql.Date.valueOf(day)),
+      Seq(2L, null, null, null, null, null)))
+    assert(spark.sql(s"SELECT _file, count(*) FROM $cat.ns.t GROUP BY 1")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      == Seq((s"$gen/part-00000-0.parquet", 3L)))
+    assert(spark.sql(s"SELECT COUNT(*) FROM $cat.ns.t")
+      .collect().head.getLong(0) == 3L)
   }
 
   test("renameTable is exclusive (destination exists → loud failure) " +

@@ -90,19 +90,6 @@ class OpsScaleSpec extends AnyFunSuite {
       v.forall(x => x >= -1.0f && x < 1.0f)))
   }
 
-  test("resizePayloads produces fixed-size deterministic payloads") {
-    val sp = spark
-    import sp.implicits._
-    val df = Seq((1L, "abcdefghij"), (2L, "xy"), (3L, ""))
-      .toDF("id", "bin")
-    val out = Multimodal.resizePayloads(df, "id", "bin", targetBytes = 4)
-      .collect().map(r => r.getLong(0) ->
-        new String(r.getAs[Array[Byte]](1), "UTF-8")).toMap
-    assert(out(1L) === "acfh") // byte-sampled down
-    assert(out(2L) === "xxyy") // upsampled by repetition
-    assert(out(3L).forall(_ == '\u0000') && out(3L).length === 4)
-  }
-
   test("extractFeatures runs decoder setup once per partition, not per row") {
     val sp = spark
     import sp.implicits._

@@ -64,9 +64,6 @@ class PipelineSpec extends AnyFunSuite {
     val ddl = "id bigint, ts timestamp, v double"
     val b = JsonSource.batch(spark, dir, ddl)
     assert(b.count() === 2)
-    val withParts = JsonSource.withDatePartitions(b, "ts")
-    assert(withParts.select("hour_").collect().map(_.getString(0)).toSet
-      === Set("10", "11"))
     // streaming read over the same landing zone
     val st = JsonSource.stream(spark, dir, ddl, maxFilesPerTrigger = 1)
     assert(st.isStreaming)
@@ -136,60 +133,5 @@ class PipelineSpec extends AnyFunSuite {
     assert(bad.exists(_.contains("not json at all")))
     assert(bad.contains("") && bad.contains("null"),
       "null-struct lines quarantine instead of passing as all-null rows")
-  }
-
-  test("JsonSource rescues undeclared fields instead of dropping them") {
-    val dir = ScratchDirs.create("jsonrescue")
-    // producer starts emitting `extra` (scalar) and `meta` (object) fields
-    // the declared DDL knows nothing about
-    Files.writeString(java.nio.file.Path.of(s"$dir/evolved.json"),
-      """{"id":1,"v":1.5}
-        |{"id":2,"v":2.5,"extra":"x2","meta":{"k":7}}
-        |{"id":3,"v":3.5,"extra":"x3"}""".stripMargin)
-    val df = JsonSource.batchWithRescue(spark, dir, "id bigint, v double")
-    assert(df.columns.toSeq === Seq("id", "v", "_rescued"))
-    val rows = df.orderBy("id").collect()
-    // old readers: declared columns parse exactly as before
-    assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
-    // row 1 has no undeclared fields → rescue column is null, not {}
-    assert(rows(0).isNullAt(2))
-    val r2 = rows(1).getMap[String, String](2)
-    assert(r2("extra") === "x2")
-    assert(r2("meta").contains("7"), "nested objects rescued as JSON text")
-    assert(rows(2).getMap[String, String](2).keySet === Set("extra"))
-    // promoting a rescued field = widening the DDL; it leaves the map
-    val widened = JsonSource.batchWithRescue(
-      spark, dir, "id bigint, v double, extra string")
-    val w = widened.orderBy("id").collect()
-    assert(w(2).getString(2) === "x3")
-    assert(w(1).getMap[String, String](3).keySet === Set("meta"))
-    assert(w(2).isNullAt(3), "promoted field no longer rescued")
-  }
-
-  test("JsonSource rescues declared-field type mismatches and raw lines") {
-    val dir = ScratchDirs.create("jsonrescue2")
-    // row 2: declared `v double` arrives as a non-numeric string —
-    // PERMISSIVE parsing nulls the field; the raw text must survive in
-    // the rescue map instead of vanishing. row 3: legitimate JSON null
-    // is NOT a mismatch. row 4: unparseable line → whole line under _raw.
-    Files.writeString(java.nio.file.Path.of(s"$dir/drift.json"),
-      """{"id":1,"v":1.5}
-        |{"id":2,"v":"oops"}
-        |{"id":3,"v":null}
-        |garbage line""".stripMargin)
-    val rows = JsonSource.batchWithRescue(spark, dir, "id bigint, v double")
-      .orderBy("id").collect()
-    assert(rows.length === 4)
-    // nulls-first ascending: rows(0) is the unparseable line
-    assert(rows(0).isNullAt(0))
-    assert(rows(0).getMap[String, String](2)("_raw") === "garbage line")
-    val byId = rows.filter(!_.isNullAt(0)).map(r => r.getLong(0) -> r).toMap
-    assert(byId(1L).getDouble(1) === 1.5 && byId(1L).isNullAt(2),
-      "clean row: nothing rescued")
-    assert(byId(2L).isNullAt(1), "type mismatch nulls the declared field")
-    assert(byId(2L).getMap[String, String](2)("v") === "oops",
-      "...but the raw text survives in the rescue map")
-    assert(byId(3L).isNullAt(1) && byId(3L).isNullAt(2),
-      "explicit JSON null is a legitimate value, nothing rescued")
   }
 }

@@ -42,43 +42,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("watermarkedHourlyAgg: streaming result matches batch recompute") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val mem = MemoryStream[TsEv]
-    val agg = StreamingOps.watermarkedHourlyAgg(
-      "ts", "5 minutes", Seq("user"),
-      Seq(count(lit(1)).as("n"), sum($"value").as("s")))(mem.toDF())
-    val q = agg.writeStream.format("memory").queryName("whagg")
-      .outputMode("update").start()
-    try {
-      val rows = Seq(
-        TsEv(ts("2024-01-01 10:05:00"), "u1", 1.0),
-        TsEv(ts("2024-01-01 10:55:00"), "u1", 2.0),
-        TsEv(ts("2024-01-01 10:30:00"), "u2", 4.0), // out of order within hour
-        TsEv(ts("2024-01-01 11:10:00"), "u1", 8.0))
-      mem.addData(rows.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(2): _*)
-      q.processAllAvailable()
-      // update mode emits one row per state revision; the final state per
-      // key is the one with the highest running count
-      val streaming = sp.sql(
-        "SELECT hour_ts, user, n, s FROM whagg").collect()
-        .map(r => (r.getTimestamp(0), r.getString(1)) ->
-          (r.getLong(2), r.getDouble(3)))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
-      val batch = rows.toDF()
-        .groupBy(date_trunc("hour", $"ts").as("hour_ts"), $"user")
-        .agg(count(lit(1)).as("n"), sum($"value").as("s"))
-        .collect()
-        .map(r => (r.getTimestamp(0), r.getString(1)) ->
-          (r.getLong(2), r.getDouble(3))).toMap
-      assert(streaming === batch)
-    } finally q.stop()
-  }
-
   test("streamDedup drops duplicate keys within the watermark") {
     val sp = spark
     import sp.implicits._
