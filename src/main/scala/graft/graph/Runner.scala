@@ -1,8 +1,7 @@
 package graft.graph
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future, Promise}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{Executors, LinkedBlockingQueue}
+import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
@@ -71,43 +70,70 @@ object Runner {
     * another table's lineage, and every source is scanned once per
     * consumer table, not once per downstream path.
     *
-    * Each table is one future that starts when its deps' futures finish,
-    * on a pool of `defaultParallelism` threads: independent tables run
-    * at the same time. A failed table's consumers are never written; the
-    * other tables finish, then the first failure in `tables` order — the
-    * failed table's own exception — is rethrown. Returns each written
-    * table's read-back loader. */
+    * A table starts once its deps are written, on a pool of
+    * `defaultParallelism` threads: independent tables run at the same
+    * time. When more tables are ready than threads are free, the one
+    * heading the longest chain of tables below it starts first, ties in
+    * `tables` order — a consumer-less leaf never holds a thread the
+    * critical path is waiting for. A failed table's consumers are never
+    * written; the other tables finish, then the first failure in
+    * `tables` order — the failed table's own exception — is rethrown.
+    * Returns each written table's read-back loader. */
   private def materialize(spark: SparkSession, tables: Seq[TableDef],
                           inputs: Map[String, () => DataFrame],
                           outDir: String): Map[String, () => DataFrame] = {
-    val pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val index = tables.map(_.name).zipWithIndex.toMap
+    val consumers = tables.flatMap(t => t.deps.filter(index.contains).map(_ -> t))
+      .groupMap(_._1)(_._2)
+    // tables on the longest chain from a table to one nothing here reads
+    val chain = tables.foldRight(Map.empty[String, Int]) { (t, m) =>
+      m + (t.name -> (1 + consumers.getOrElse(t.name, Nil).map(c => m(c.name))
+        .maxOption.getOrElse(0)))
+    }
+    val ready = mutable.PriorityQueue.empty[TableDef](
+      Ordering.by((t: TableDef) => (chain(t.name), -index(t.name))))
+    val unwritten = mutable.Map(tables.map(t => t.name -> t.deps.count(index.contains)): _*)
+    val done = mutable.Map.empty[String, Try[() => DataFrame]]
+    val finished = new LinkedBlockingQueue[(TableDef, Try[() => DataFrame])]()
+    def complete(t: TableDef, result: Try[() => DataFrame]): Unit = {
+      done(t.name) = result
+      consumers.getOrElse(t.name, Nil).foreach { c =>
+        unwritten(c.name) -= 1
+        if (unwritten(c.name) == 0) ready.enqueue(c)
+      }
+    }
     def write(t: TableDef, deps: Seq[() => DataFrame]): () => DataFrame = {
       val df = t.transform(deps.map(_()))
       val path = s"$outDir/${t.name}"
       writeTable(df, t, path)
       () => read(spark, t, path, Some(df.schema))
     }
+    val threads = spark.sparkContext.defaultParallelism
+    val pool = Executors.newFixedThreadPool(threads)
     try {
-      val done = tables.foldLeft(Map.empty[String, Future[() => DataFrame]]) {
-        (done, t) =>
-          val deps = t.deps.map(d => done.getOrElse(d, Future.fromTry(Try(
-            inputs.getOrElse(d, throw new NoSuchElementException(s"unknown table $d"))))))
-          // a Promise, not Future.map: map leaves its future incomplete
-          // on a fatal error (a StackOverflowError planning a deep tree),
-          // which would hang the wait below
-          val p = Promise[() => DataFrame]()
-          Future.sequence(deps).onComplete {
-            case Success(loaders) =>
-              p.complete(try Success(write(t, loaders)) catch {
-                case e: Throwable => Failure(e)
-              })
-            case Failure(e) => p.failure(e)
+      tables.filter(t => unwritten(t.name) == 0).foreach(ready.enqueue(_))
+      var running = 0
+      while (ready.nonEmpty || running > 0) {
+        while (ready.nonEmpty && running < threads) {
+          val t = ready.dequeue()
+          Try(t.deps.map(d => done.getOrElse(d, Try(inputs.getOrElse(d,
+            throw new NoSuchElementException(s"unknown table $d")))).get)) match {
+            case Failure(e) => complete(t, Failure(e))
+            case Success(deps) =>
+              running += 1
+              // Throwable, not NonFatal: a StackOverflowError planning a
+              // deep tree must fail its table, not hang this loop
+              pool.execute(() => finished.put(t -> (try Success(write(t, deps))
+                catch { case e: Throwable => Failure(e) })))
           }
-          done + (t.name -> p.future)
+        }
+        if (running > 0) {
+          val (t, result) = finished.take()
+          running -= 1
+          complete(t, result)
+        }
       }
-      tables.foreach(t => Await.ready(done(t.name), Duration.Inf))
-      tables.map(t => t.name -> done(t.name).value.get.get).toMap
+      tables.map(t => t.name -> done(t.name).get).toMap
     } finally pool.shutdown()
   }
 

@@ -111,6 +111,18 @@ object Relational {
     df.select(df.columns.map(c => col(s"`$c`").as(toCamel(c))).toIndexedSeq: _*)
   }
 
+  /** `withColumn` for several columns in one `select`: a column of `df`
+    * named in `cols` is replaced in place, the others are appended in
+    * `cols` order. Every expression sees `df`'s columns, not each
+    * other's — one select per dependency level, and one analysis pass
+    * instead of one per column. */
+  def setColumns(df: DataFrame, cols: (String, Column)*): DataFrame = {
+    val set = cols.toMap
+    val names = df.columns.toSeq
+    df.select(names.map(c => set.get(c).fold(col(s"`$c`"))(_.as(c))) ++
+      cols.filterNot(c => names.contains(c._1)).map { case (n, e) => e.as(n) }: _*)
+  }
+
   /** Composite KV sort key `a#b#c` for key-value serving
     * (zetadex-serving-v2.py:352–355 `concat_ws("#", unix_ts, asset)`). */
   def kvSortKey(cols: Column*): Column = concat_ws("#", cols: _*)

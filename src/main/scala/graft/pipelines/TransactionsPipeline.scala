@@ -345,10 +345,14 @@ object TransactionsPipeline {
       case Seq(raw, dep, wd) =>
         val wCum = Window.partitionBy("authority").orderBy(col("timestamp"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        raw.filter(col("underlying").isNull) // V2 filter (TX:1011)
-          .withColumn("authority",
-            coalesce(col("authority"), col("owner_pub_key")))
-          .withColumn("timestamp", date_trunc("hour", col("timestamp")))
+        val snapshots = Relational.setColumns(
+          raw.filter(col("underlying").isNull), // V2 filter (TX:1011)
+          "authority" -> coalesce(col("authority"), col("owner_pub_key")),
+          "timestamp" -> date_trunc("hour", col("timestamp")))
+        // one exchange on authority serves both the hourly aggregate and
+        // the cumulative window; a (timestamp, authority) exchange for the
+        // aggregate would need a second one on authority for the window
+        val joined = snapshots.repartition(col("authority"))
           .groupBy("timestamp", "authority")
           .agg(sum(col("balance")).as("balance"),
             sum(col("unrealized_pnl")).as("unrealized_pnl"))
@@ -364,18 +368,18 @@ object TransactionsPipeline {
               col("timestamp") === col("w_ts") + expr("interval 1 hour"),
             "left")
           .drop("w_auth", "w_ts", "withdraw_count")
-          .withColumn("deposit_amount", coalesce(col("deposit_amount"), lit(0.0)))
-          .withColumn("withdraw_amount", coalesce(col("withdraw_amount"), lit(0.0)))
-          .withColumn("net_inflow",
-            col("deposit_amount") - col("withdraw_amount"))
-          .withColumn("deposit_amount_cumsum",
-            sum(col("deposit_amount")).over(wCum))
-          .withColumn("withdraw_amount_cumsum",
-            sum(col("withdraw_amount")).over(wCum))
-          .withColumn("equity", col("balance") + col("unrealized_pnl"))
-          .withColumn("cumulative_pnl", col("equity")
-            - (col("deposit_amount_cumsum") - col("withdraw_amount_cumsum")))
-          .withColumn("date_", date_trunc("day", col("timestamp")))
+        val flows = Relational.setColumns(joined,
+          "deposit_amount" -> coalesce(col("deposit_amount"), lit(0.0)),
+          "withdraw_amount" -> coalesce(col("withdraw_amount"), lit(0.0)))
+        val sums = Relational.setColumns(flows,
+          "net_inflow" -> (col("deposit_amount") - col("withdraw_amount")),
+          "deposit_amount_cumsum" -> sum(col("deposit_amount")).over(wCum),
+          "withdraw_amount_cumsum" -> sum(col("withdraw_amount")).over(wCum),
+          "equity" -> (col("balance") + col("unrealized_pnl")))
+        Relational.setColumns(sums,
+          "cumulative_pnl" -> (col("equity")
+            - (col("deposit_amount_cumsum") - col("withdraw_amount_cumsum"))),
+          "date_" -> date_trunc("day", col("timestamp")))
     }, mode = Mode.Full))
 
     // leaderboard gold (transactions:1486–1878, compact form): MM
@@ -403,61 +407,52 @@ object TransactionsPipeline {
       def rankW(order: org.apache.spark.sql.Column*) =
         Window.partitionBy("timestamp").orderBy(order: _*)
       val nowH = unix_timestamp(date_trunc("hour", conf.asOfTs))
-      val base = cp.withColumn("t", unix_timestamp(col("timestamp")))
-        .withColumn("cum_lag_24h", first(col("cumulative_pnl")).over(w24))
-        .withColumn("cum_lag_7d", first(col("cumulative_pnl")).over(w7d))
-        .withColumn("cum_lag_30d", first(col("cumulative_pnl")).over(w30))
-        .withColumn("cum_lag_alltime", first(col("cumulative_pnl")).over(wAll))
-        .withColumn("equity_lag_24h", first(col("equity")).over(w24))
-        .withColumn("equity_lag_7d", first(col("equity")).over(w7d))
-        .withColumn("equity_lag_30d", first(col("equity")).over(w30))
-        .withColumn("dw_24h", sum(col("deposit_amount")
-          * ((nowH - col("t")) / 86400.0)).over(excl(86400L)))
-        .withColumn("dw_7d", sum(col("deposit_amount")
-          * ((nowH - col("t")) / 604800.0)).over(excl(604800L)))
-        .withColumn("dw_30d", sum(col("deposit_amount")
+      val withT = Relational.setColumns(cp, "t" -> unix_timestamp(col("timestamp")))
+      val lags = Relational.setColumns(withT,
+        "cum_lag_24h" -> first(col("cumulative_pnl")).over(w24),
+        "cum_lag_7d" -> first(col("cumulative_pnl")).over(w7d),
+        "cum_lag_30d" -> first(col("cumulative_pnl")).over(w30),
+        "cum_lag_alltime" -> first(col("cumulative_pnl")).over(wAll),
+        "equity_lag_24h" -> first(col("equity")).over(w24),
+        "equity_lag_7d" -> first(col("equity")).over(w7d),
+        "equity_lag_30d" -> first(col("equity")).over(w30),
+        "dw_24h" -> sum(col("deposit_amount")
+          * ((nowH - col("t")) / 86400.0)).over(excl(86400L)),
+        "dw_7d" -> sum(col("deposit_amount")
+          * ((nowH - col("t")) / 604800.0)).over(excl(604800L)),
+        "dw_30d" -> sum(col("deposit_amount")
           * ((nowH - col("t")) / 2592000.0)).over(excl(2592000L)))
-        .withColumn("pnl_24h", col("cumulative_pnl") - col("cum_lag_24h"))
-        .withColumn("pnl_7d", col("cumulative_pnl") - col("cum_lag_7d"))
-        .withColumn("pnl_30d", col("cumulative_pnl") - col("cum_lag_30d"))
-        .withColumn("pnl_alltime",
-          col("cumulative_pnl") - col("cum_lag_alltime"))
-        .withColumn("roi_24h", when(col("pnl_24h") === 0, lit(0.0)).otherwise(
-          col("pnl_24h") / (lit(100.0) + col("equity_lag_24h") + col("dw_24h"))))
-        .withColumn("roi_7d", when(col("pnl_7d") === 0, lit(0.0)).otherwise(
-          col("pnl_7d") / (lit(100.0) + col("equity_lag_7d") + col("dw_7d"))))
-        .withColumn("roi_30d", when(col("pnl_30d") === 0, lit(0.0)).otherwise(
-          col("pnl_30d") / (lit(100.0) + col("equity_lag_30d") + col("dw_30d"))))
-      base
-        .withColumn("pnl_24h_rank", rank().over(
-          rankW(col("pnl_24h").desc, col("roi_24h").desc, col("authority"))))
-        .withColumn("pnl_7d_rank", rank().over(
-          rankW(col("pnl_7d").desc, col("roi_7d").desc, col("authority"))))
-        .withColumn("pnl_30d_rank", rank().over(
-          rankW(col("pnl_30d").desc, col("roi_30d").desc, col("authority"))))
-        .withColumn("pnl_alltime_rank", rank().over(
-          rankW(col("pnl_alltime").desc, col("authority"))))
-        .withColumn("roi_24h_rank", rank().over(
-          rankW(col("roi_24h").desc, col("pnl_24h").desc, col("authority"))))
-        .withColumn("roi_7d_rank", rank().over(
-          rankW(col("roi_7d").desc, col("pnl_7d").desc, col("authority"))))
-        .withColumn("roi_30d_rank", rank().over(
+      val pnl = Relational.setColumns(lags,
+        "pnl_24h" -> (col("cumulative_pnl") - col("cum_lag_24h")),
+        "pnl_7d" -> (col("cumulative_pnl") - col("cum_lag_7d")),
+        "pnl_30d" -> (col("cumulative_pnl") - col("cum_lag_30d")),
+        "pnl_alltime" -> (col("cumulative_pnl") - col("cum_lag_alltime")))
+      def roi(p: String) = when(col(s"pnl_$p") === 0, lit(0.0)).otherwise(
+        col(s"pnl_$p") / (lit(100.0) + col(s"equity_lag_$p") + col(s"dw_$p")))
+      val base = Relational.setColumns(pnl,
+        "roi_24h" -> roi("24h"), "roi_7d" -> roi("7d"), "roi_30d" -> roi("30d"))
+      val ranked = Relational.setColumns(base,
+        "pnl_24h_rank" -> rank().over(
+          rankW(col("pnl_24h").desc, col("roi_24h").desc, col("authority"))),
+        "pnl_7d_rank" -> rank().over(
+          rankW(col("pnl_7d").desc, col("roi_7d").desc, col("authority"))),
+        "pnl_30d_rank" -> rank().over(
+          rankW(col("pnl_30d").desc, col("roi_30d").desc, col("authority"))),
+        "pnl_alltime_rank" -> rank().over(
+          rankW(col("pnl_alltime").desc, col("authority"))),
+        "roi_24h_rank" -> rank().over(
+          rankW(col("roi_24h").desc, col("pnl_24h").desc, col("authority"))),
+        "roi_7d_rank" -> rank().over(
+          rankW(col("roi_7d").desc, col("pnl_7d").desc, col("authority"))),
+        "roi_30d_rank" -> rank().over(
           rankW(col("roi_30d").desc, col("pnl_30d").desc, col("authority"))))
-        .withColumn("pnl_24h_rank_change",
-          -(col("pnl_24h_rank") - first(col("pnl_24h_rank")).over(w24)))
-        .withColumn("pnl_7d_rank_change",
-          -(col("pnl_7d_rank") - first(col("pnl_7d_rank")).over(w7d)))
-        .withColumn("pnl_30d_rank_change",
-          -(col("pnl_30d_rank") - first(col("pnl_30d_rank")).over(w30)))
-        .withColumn("pnl_alltime_rank_change",
-          -(col("pnl_alltime_rank") - first(col("pnl_alltime_rank")).over(wAll)))
-        .withColumn("roi_24h_rank_change",
-          -(col("roi_24h_rank") - first(col("roi_24h_rank")).over(w24)))
-        .withColumn("roi_7d_rank_change",
-          -(col("roi_7d_rank") - first(col("roi_7d_rank")).over(w7d)))
-        .withColumn("roi_30d_rank_change",
-          -(col("roi_30d_rank") - first(col("roi_30d_rank")).over(w30)))
-        .withColumn("date_", date_trunc("day", col("timestamp")))
+      def change(r: String, w: org.apache.spark.sql.expressions.WindowSpec) =
+        s"${r}_rank_change" -> -(col(s"${r}_rank") - first(col(s"${r}_rank")).over(w))
+      Relational.setColumns(ranked,
+        change("pnl_24h", w24), change("pnl_7d", w7d), change("pnl_30d", w30),
+        change("pnl_alltime", wAll), change("roi_24h", w24),
+        change("roi_7d", w7d), change("roi_30d", w30),
+        "date_" -> date_trunc("day", col("timestamp")))
         .drop("t", "cum_lag_24h", "cum_lag_7d", "cum_lag_30d",
           "cum_lag_alltime", "dw_24h", "dw_7d", "dw_30d")
     }, mode = Mode.Full))

@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentSkipListMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Embedded KV DATA PLANE — the store the round-11 verdict asked for:
   * an in-process sorted-map KV honoring the serving contract's
@@ -219,15 +218,15 @@ final class EmbeddedKVStore private[serving] () {
   * commit validates every key, (re)creates the table and applies the
   * rows in ≤25-item batches (SV:200: `batch_writer` chunking at the
   * BatchWriteItem limit), only after every task succeeded, so a failed
-  * serving job leaves the previously served table as it was. The
-  * `repartition(hashKey)` keeps one hash key's items in one task: the
-  * batches chunk per task, as a provisioned store's writes would (a hot
-  * key's writes serialize anyway; spreading them fragments batches).
+  * serving job leaves the previously served table as it was. The frame
+  * is written as it is partitioned: the commit holds every staged row
+  * and chunks them all together, so no shuffle is needed to fill the
+  * batches.
   */
 final class EmbeddedKVSink(storeId: String) {
   def write(df: DataFrame, table: String, hashKey: String,
             rangeKey: Option[String] = None): Unit =
-    df.repartition(col(hashKey)).write.format("graft-kv")
+    df.write.format("graft-kv")
       .option("store", storeId).option("table", table)
       .option("hashKey", hashKey)
       .options(rangeKey.map("rangeKey" -> _).toMap)

@@ -15,18 +15,19 @@ import graft.ops.Relational
 object ServingJobs {
 
   /** Serving projection applied before a write (zetadex-serving.py:
-    * 212–221): timestamps → unix seconds, optional TTL. */
+    * 212–221): timestamps → unix seconds, optional TTL counted from the
+    * converted `ttlFrom` column. One `select`, like
+    * [[Relational.camelCaseAll]]. */
   def servingProjection(df: DataFrame, ttlFrom: Option[String] = None,
                         ttl: String = "14 days"): DataFrame = {
-    val tsConverted = df.schema.fields.foldLeft(df) { (acc, f) =>
-      if (f.dataType == org.apache.spark.sql.types.TimestampType)
-        acc.withColumn(f.name, unix_timestamp(col(f.name)))
-      else acc
+    val seconds = df.schema.fields.toSeq
+      .filter(_.dataType == org.apache.spark.sql.types.TimestampType)
+      .map(f => f.name -> unix_timestamp(col(s"`${f.name}`")))
+    val ttlCol = ttlFrom.map { c =>
+      val from = seconds.toMap.getOrElse(c, col(s"`$c`"))
+      "ttl" -> unix_timestamp(from.cast("timestamp") + expr(s"interval $ttl"))
     }
-    ttlFrom.fold(tsConverted) { c =>
-      tsConverted.withColumn("ttl",
-        unix_timestamp(col(c).cast("timestamp") + expr(s"interval $ttl")))
-    }
+    Relational.setColumns(df, seconds ++ ttlCol: _*)
   }
 
   /** Leaderboard-style serving (S2:416–568): snapshot the hour at

@@ -27,10 +27,11 @@ import graft.serving.{EmbeddedKVStore, KVTableSpec}
   *  - [[BatchWrite.commit]] runs ONCE on the driver only after EVERY
   *    task succeeded, validates every staged key, (re)creates the
   *    table (a serving push is a full rewrite) and applies the staged
-  *    items through the store's 25-item batch API with one idempotency
-  *    token per (task, batch) — so a partially failed job leaves the
-  *    store UNTOUCHED, including a table an earlier push served (abort
-  *    is a no-op because nothing was applied).
+  *    items of all tasks, in task order, through the store's 25-item
+  *    batch API with one idempotency token per batch — so the job needs
+  *    no shuffle to fill its batches, and a partially failed job leaves
+  *    the store UNTOUCHED, including a table an earlier push served
+  *    (abort is a no-op because nothing was applied).
   */
 class KVWriteProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -98,12 +99,11 @@ class KVBatchWrite(schema: StructType, store: String, kvTable: String,
     staged.foreach(_.rows.foreach(EmbeddedKVStore.keyOf(spec, _)))
     val kv = EmbeddedKVStore(store)
     kv.createTable(spec, schema)
-    staged.foreach { case KVStagedRows(taskId, rows) =>
-      rows.grouped(EmbeddedKVStore.MAX_BATCH).zipWithIndex.foreach {
-        case (batch, i) =>
-          kv.batchWrite(kvTable, batch, Some(s"t$taskId-b$i"))
+    // every task's rows in one stream, so only the last batch is partial
+    staged.iterator.flatMap(_.rows).grouped(EmbeddedKVStore.MAX_BATCH)
+      .zipWithIndex.foreach { case (batch, i) =>
+        kv.batchWrite(kvTable, batch, Some(s"b$i"))
       }
-    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()

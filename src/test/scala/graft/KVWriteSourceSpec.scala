@@ -32,6 +32,45 @@ class KVWriteSourceSpec extends AnyFunSuite {
     } finally EmbeddedKVStore.remove(sid)
   }
 
+  test("the commit chunks every task's rows together: 60 rows over 4 " +
+      "tasks are ceil(60/25) = 3 batches, not one partial batch per task") {
+    val sp = spark
+    import sp.implicits._
+    val sid = "kvw_chunks"
+    try {
+      val df = (0 until 60).map(i => (i.toLong, s"u$i")).toDF("id", "name")
+        .repartition(4)
+      assert(df.rdd.getNumPartitions === 4)
+      df.write.format("graft-kv")
+        .option("store", sid).option("table", "users")
+        .option("hashKey", "id")
+        .mode("append").save()
+      val kv = EmbeddedKVStore(sid)
+      assert(kv.itemCount("users") === 60L)
+      assert(kv.itemWriteCount("users") === 60L)
+      assert(kv.batchWriteCount("users") === 3L)
+    } finally EmbeddedKVStore.remove(sid)
+  }
+
+  test("a replayed commit counts no batch twice") {
+    import graft.sources.{KVBatchWrite, KVStagedRows}
+    import org.apache.spark.sql.connector.write.WriterCommitMessage
+    import org.apache.spark.sql.types._
+    val sid = "kvw_replay"
+    try {
+      val schema = StructType(Seq(StructField("id", LongType)))
+      val w = new KVBatchWrite(schema, sid, "t", "id", None)
+      val tasks: Array[WriterCommitMessage] = (0 until 4).map(t => KVStagedRows(
+        t.toLong, (0 until 15).map(i => Map[String, Any]("id" -> (t * 15L + i))))).toArray
+      w.commit(tasks)
+      w.commit(tasks)
+      val kv = EmbeddedKVStore(sid)
+      assert(kv.itemCount("t") === 60L)
+      assert(kv.itemWriteCount("t") === 60L)
+      assert(kv.batchWriteCount("t") === 3L)
+    } finally EmbeddedKVStore.remove(sid)
+  }
+
   test("hash+range table preserves both key parts") {
     val sp = spark
     import sp.implicits._

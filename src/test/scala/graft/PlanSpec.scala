@@ -31,6 +31,17 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"))
   }
 
+  // Brute-force kNN scores every (query, vector) pair: a condition-free
+  // cross join (only `query_id != vec_id`) with the 10 query vectors
+  // broadcast. It is the one nested-loop join the benchmark's query_mix
+  // runs (its traced `plans.bnlj_joins` 1), as the spine × assets densify
+  // is tx_hourly's (TransactionsPipelineSpec).
+  test("q30: brute-force kNN is query_mix's one nested-loop join, query side broadcast") {
+    val p = plan("q30_knn_bruteforce")
+    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size === 1)
+    assert(p.contains("BroadcastNestedLoopJoin BuildLeft, Cross"), p)
+  }
+
   test("q59: binned range join is an equi join, not a nested loop") {
     val p = plan("q59_interval_overlap")
     assert(!p.contains("BroadcastNestedLoopJoin"),

@@ -156,6 +156,36 @@ class RunnerSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(sp.read.parquet(paths("b")).count() === 2L)
   }
 
+  // More ready tables than pool threads: the head of a 3-deep chain is
+  // registered after 2× the pool of consumer-less leaves, and every leaf
+  // waits for the head to have started. A runner that starts ready
+  // tables in registration order fills the pool with leaves, so they
+  // time out before the head gets a thread.
+  test("runBatch starts the head of the longest chain before leaves registered ahead of it") {
+    val sp = spark
+    import sp.implicits._
+    val out = ScratchDirs.create("runner_priority")
+    val headStarted = new CountDownLatch(1)
+    val late = new ConcurrentLinkedQueue[String]()
+    val r = new Registry(sp)
+    r.source("feed", () => Seq(1L, 2L).toDF("k"))
+    val leaves = (1 to 2 * sp.sparkContext.defaultParallelism).map(i => s"leaf$i")
+    leaves.foreach { n =>
+      r.register(TableDef(n, Seq("feed"), { case Seq(f) =>
+        if (!headStarted.await(5, TimeUnit.SECONDS)) late.add(n)
+        f
+      }))
+    }
+    r.register(TableDef("head", Seq("feed"), { case Seq(f) =>
+      headStarted.countDown(); f
+    }))
+    r.register(TableDef("mid", Seq("head"), { case Seq(h) => h }))
+    r.register(TableDef("tail", Seq("mid"), { case Seq(m) => m }))
+    val paths = Runner.runBatch(r, out)
+    assert(late.isEmpty, s"leaves started before the chain's head: ${late.asScala.mkString(", ")}")
+    (leaves :+ "tail").foreach(t => assert(sp.read.parquet(paths(t)).count() === 2L))
+  }
+
   test("a failing table rethrows its own exception and leaves its consumers unwritten") {
     val sp = spark
     import sp.implicits._

@@ -2,11 +2,12 @@ package graft
 
 import java.sql.Timestamp
 import java.time.Instant
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Conf
 import graft.serving.{EmbeddedKVSink, EmbeddedKVStore, ServingJobs}
 
-class ServingJobsSpec extends AnyFunSuite {
+class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -169,6 +170,35 @@ class ServingJobsSpec extends AnyFunSuite {
       .apply("blockTime") === blockSecs)
   }
 
+  // The graft-kv commit chunks every task's rows together, so a serving
+  // write runs as its frame is partitioned: no exchange, no map stage.
+  test("serveTable's write runs without a shuffle exchange") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sp = spark
+    val (sink, store) = freshStore("kv_shufflefree")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.logical.toString.contains("graft_kv(kv_shufflefree/"))
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sp.listenerManager.register(listener)
+    try {
+      ServingJobs.serveTable(sp.range(0, 100, 1, 4).select(col("id"),
+        (col("id") * 2).as("v")), sink, "t", hashKey = "id", rangeKey = None)
+      ListenerBusDrain(sp.sparkContext)
+    } finally sp.listenerManager.unregister(listener)
+    assert(store.itemCount("t") === 100L)
+    assert(writes.size === 1)
+    assert(find(writes.peek)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty,
+      writes.peek.toString)
+  }
+
   test("serveAllTimeStats folds in the historical backfill constants") {
     val sp = spark
     import sp.implicits._
@@ -273,8 +303,8 @@ class ServingJobsSpec extends AnyFunSuite {
     import graft.serving.{EmbeddedKVSink, EmbeddedKVStore}
     val id = "kv_batch25"
     EmbeddedKVStore.remove(id)
-    // ONE hash key → one task writes all rows → request count is
-    // exactly ceil(103/25) = 5 (multi-key writes chunk per task)
+    // the commit chunks all staged rows together → request count is
+    // exactly ceil(103/25) = 5
     val n = 103
     val df = (1 to n).map(i => ("acct", i.toLong, i * 1.5))
       .toDF("account", "seq", "value")

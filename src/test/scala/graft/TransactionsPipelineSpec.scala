@@ -218,6 +218,31 @@ class TransactionsPipelineSpec extends AnyFunSuite {
     assert(b.getAs[Double]("roi_24h") === 0.0)
   }
 
+  // The pnl tables' schemas as the hourly DAG writes and serves them:
+  // column names, types, nullability and order.
+  test("cleaned_pnl and agg_pnl keep their exact schemas") {
+    val reg = registry
+    def ddl(t: String) = reg.resolve(t).schema.toDDL
+    assert(ddl("cleaned_pnl") === "timestamp TIMESTAMP,authority STRING," +
+      "balance DOUBLE,unrealized_pnl DOUBLE,deposit_amount DOUBLE NOT NULL," +
+      "withdraw_amount DOUBLE NOT NULL,net_inflow DOUBLE NOT NULL," +
+      "deposit_amount_cumsum DOUBLE,withdraw_amount_cumsum DOUBLE,equity DOUBLE," +
+      "cumulative_pnl DOUBLE,date_ TIMESTAMP")
+    assert(ddl("agg_pnl") === "timestamp TIMESTAMP,authority STRING," +
+      "balance DOUBLE,unrealized_pnl DOUBLE,deposit_amount DOUBLE NOT NULL," +
+      "withdraw_amount DOUBLE NOT NULL,net_inflow DOUBLE NOT NULL," +
+      "deposit_amount_cumsum DOUBLE,withdraw_amount_cumsum DOUBLE,equity DOUBLE," +
+      "cumulative_pnl DOUBLE,date_ TIMESTAMP,equity_lag_24h DOUBLE," +
+      "equity_lag_7d DOUBLE,equity_lag_30d DOUBLE,pnl_24h DOUBLE,pnl_7d DOUBLE," +
+      "pnl_30d DOUBLE,pnl_alltime DOUBLE,roi_24h DOUBLE,roi_7d DOUBLE,roi_30d DOUBLE," +
+      "pnl_24h_rank INT NOT NULL,pnl_7d_rank INT NOT NULL,pnl_30d_rank INT NOT NULL," +
+      "pnl_alltime_rank INT NOT NULL,roi_24h_rank INT NOT NULL," +
+      "roi_7d_rank INT NOT NULL,roi_30d_rank INT NOT NULL," +
+      "pnl_24h_rank_change INT,pnl_7d_rank_change INT,pnl_30d_rank_change INT," +
+      "pnl_alltime_rank_change INT,roi_24h_rank_change INT," +
+      "roi_7d_rank_change INT,roi_30d_rank_change INT")
+  }
+
   test("agg_pnl excludes labeled MM accounts before ranking (TX:1556–1560)") {
     val sp = spark
     import sp.implicits._
