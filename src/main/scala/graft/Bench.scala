@@ -86,7 +86,7 @@ object Bench {
     // timed query isn't charged session startup
     try {
       import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      graft.tables.Tables.load(spark, sfDir, "lineitem")
         .groupBy("l_returnflag").count().count()
       spark.range(1000000L).select(sum(col("id"))).count()
     } catch { case _: Throwable => () }

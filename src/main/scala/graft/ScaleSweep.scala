@@ -46,7 +46,7 @@ object ScaleSweep {
     * sf10 probe (round-13 verdict item 2) reuses it verbatim at 100. */
   def deriveSf1(spark: SparkSession, srcDir: String, dstDir: String,
                 shards: Int = 10): Unit = {
-    def src(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
+    def src(t: String) = graft.tables.Tables.load(spark, srcDir, t)
     // single-FILE layout, exactly like the driver's testdata: several
     // queries stage/stream `<dir>/<t>.parquet` with file-glob options
     // that a directory-of-parts layout would break

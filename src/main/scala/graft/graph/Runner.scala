@@ -46,21 +46,22 @@ object Runner {
     }
   }
 
-  /** Read back a table this runner wrote at `path`: an Upsert table
-    * lives behind a [[ManifestStore]] manifest (a reader must resolve
-    * the committed generation — a raw path read would see no data, by
-    * design); everything else is a plain parquet read. Consumers inside
-    * a run pass the PLAN's schema: a read without it re-types partition
-    * columns from directory names (string "00" → int 0) and reorders
-    * them to the end, silently changing what consumers see. An Append
-    * or Upsert table on disk also holds state beyond this run's plan
-    * (earlier partitions, merged history), which is exactly what its
-    * consumers must see. */
+  /** Read back a table this runner wrote at `path`, with `schema`, the
+    * schema the run planned for it: an Upsert table lives behind a
+    * [[ManifestStore]] manifest (a reader must resolve the committed
+    * generation — a raw path read would see no data, by design);
+    * everything else is a parquet read. The schema is required: a read
+    * without it starts a Spark job to infer one from the file footers,
+    * re-types partition columns from directory names (string "00" → int
+    * 0) and reorders them to the end, silently changing what consumers
+    * see. An Append or Upsert table on disk also holds state beyond this
+    * run's plan (earlier partitions, merged history), which is exactly
+    * what its consumers must see. */
   def read(spark: SparkSession, t: TableDef, path: String,
-           schema: Option[StructType] = None): DataFrame =
+           schema: StructType): DataFrame =
     t.writeMode match {
-      case _: WriteMode.Upsert => ManifestStore.read(spark, path, schema)
-      case _ => schema.fold(spark.read)(spark.read.schema).parquet(path)
+      case _: WriteMode.Upsert => ManifestStore.read(spark, path, Some(schema))
+      case _ => spark.read.schema(schema).parquet(path)
     }
 
   /** Materialize `tables` (in topological order) under `outDir`. Each
@@ -106,7 +107,7 @@ object Runner {
       val df = t.transform(deps.map(_()))
       val path = s"$outDir/${t.name}"
       writeTable(df, t, path)
-      () => read(spark, t, path, Some(df.schema))
+      () => read(spark, t, path, df.schema)
     }
     val threads = spark.sparkContext.defaultParallelism
     val pool = Executors.newFixedThreadPool(threads)
@@ -203,11 +204,23 @@ object Runner {
     *
     * `streamSources` must map every source name to a streaming DataFrame
     * factory; transforms are reused untouched — the engine's transforms
-    * are mode-agnostic by construction.
+    * are mode-agnostic by construction. Returns the paths of the
+    * materialized tables; [[runStreamingThenRead]] returns their
+    * loaders.
     */
   def runStreamingThenFull(spark: SparkSession, reg: Registry,
                            streamSources: Map[String, () => DataFrame],
-                           outDir: String): Map[String, String] = {
+                           outDir: String): Map[String, String] =
+    runStreamingThenRead(spark, reg, streamSources, outDir).map {
+      case (name, _) => name -> s"$outDir/$name"
+    }
+
+  /** [[runStreamingThenFull]], returning each materialized table's
+    * read-back loader instead of its path: [[read]] with the schema the
+    * run planned for the table. */
+  def runStreamingThenRead(spark: SparkSession, reg: Registry,
+                           streamSources: Map[String, () => DataFrame],
+                           outDir: String): Map[String, () => DataFrame] = {
     val defs = reg.topoOrder.flatMap(reg.describe)
     // a table is streamed when any of its inputs is
     val streamedNames = defs.foldLeft(streamSources.keySet) { (s, t) =>
@@ -269,7 +282,7 @@ object Runner {
       q.awaitTermination()
       // the boundary's PLAN schema, for the same reason as runBatch:
       // consumers must not see directory-inference re-typing
-      t.name -> (() => read(spark, t, path, Some(resolved.schema)))
+      t.name -> (() => read(spark, t, path, resolved.schema))
     }.toMap
     // A terminated query's state-store providers stay loaded in the
     // executor cache (in-memory version maps + a maintenance thread
@@ -287,7 +300,7 @@ object Runner {
     // Full tables batch-read the materialized tables; sources keep their
     // batch loaders
     val full = streamed.filter(_.mode == Mode.Full)
-    materialize(spark, full, reg.sourceLoaders ++ staticOut ++ streamedOut, outDir)
-    (static ++ boundaries ++ full).map(t => t.name -> s"$outDir/${t.name}").toMap
+    staticOut ++ streamedOut ++
+      materialize(spark, full, reg.sourceLoaders ++ staticOut ++ streamedOut, outDir)
   }
 }

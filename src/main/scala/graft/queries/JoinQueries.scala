@@ -478,16 +478,12 @@ object JoinQueries {
     // over the unpartitioned table — layout must never change results.
     Q("q267_dynamic_partition_pruning",
       (s, d) => {
-        val dir = dppStaged.computeIfAbsent(d, _ => {
-          val out = graft.core.ScratchDirs.create("q267_")
-          t(s, d, "lineitem")
-            .select(col("l_orderkey"), col("l_extendedprice"),
-              col("l_discount"),
-              date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
-            .write.mode("overwrite").partitionBy("ship_month").parquet(out)
-          out
-        })
-        val fact = s.read.parquet(dir)
+        val staged = StreamRig.stage(d, "q267", t(s, d, "lineitem")
+          .select(col("l_orderkey"), col("l_extendedprice"),
+            col("l_discount"),
+            date_format(col("l_shipdate"), "yyyy-MM").as("ship_month")),
+          "ship_month")
+        val fact = s.read.schema(staged.schema).parquet(staged.dir)
         val months = t(s, d, "orders")
           .filter(col("o_orderpriority") === "1-URGENT" &&
             year(col("o_orderdate")) === 1996)
@@ -514,10 +510,4 @@ object JoinQueries {
         JOIN months ON strftime(l_shipdate, '%Y-%m') = month
         GROUP BY 1 ORDER BY 1"""))
   )
-
-  /** q267's one-time partitioned layout, per (sfDir) and JVM — same
-    * rationale as StreamRig.stageSlices: the layout is rig, the
-    * pruned join is the operator under test. */
-  private val dppStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -27,11 +27,6 @@ import QH._
   */
 object MultimodalQueries {
 
-  /** q240's per-JVM staging cache, keyed by sfDir (same device as
-    * StreamRig.stageSlices / DedupQueries.q105Stage). */
-  private val q240Stage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private val payloadSchema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("payload", BinaryType, nullable = false)))
@@ -1221,13 +1216,8 @@ object MultimodalQueries {
         // into a replayable feed), not the operator under test, so the
         // bench's warm-up stages it and timed reps measure the streaming
         // plan, not a repeated parquet dump (the q104/q105 rule —
-        // StreamRig.stageSlices). Verify runs each query once.
-        val staged = q240Stage.computeIfAbsent(d, _ => {
-          val sd = graft.core.ScratchDirs.create("q240_src_")
-          incrDocs.write.mode("overwrite").parquet(sd)
-          sd
-        })
-        val schema = s.read.parquet(staged).schema
+        // StreamRig.stage). Verify runs each query once.
+        val staged = StreamRig.stage(d, "q240", incrDocs)
 
         val reg = new graft.graph.Registry(s)
         reg.source("video_history", () => histDocs)
@@ -1261,12 +1251,9 @@ object MultimodalQueries {
         reg.register(graft.graph.TableDef("video_incr_dups",
           Seq("video_incr_matches"),
           { case Seq(m) => m.distinct() }, mode = graft.graph.Mode.Full))
-        val out = graft.core.ScratchDirs.create("q240_")
-        graft.graph.Runner.runStreamingThenFull(s, reg,
-          Map("video_feed" -> (() =>
-            s.readStream.schema(schema).parquet(staged))),
-          out)
-        s.read.parquet(s"$out/video_incr_dups")
+        StreamRig.run(s, reg, Map("video_feed" -> (() =>
+            s.readStream.schema(staged.schema).parquet(staged.dir))),
+          "video_incr_dups")
           .orderBy("doc_new", "doc_hist")
       },
       Some("""

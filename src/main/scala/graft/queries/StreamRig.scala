@@ -4,12 +4,13 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import graft.core.ScratchDirs
 import graft.graph.{Registry, Runner, TableDef}
 import graft.tables.Tables
 
 /** The run scaffold shared by the streaming queries: a DAG is run as one
-  * `Trigger.AvailableNow` catch-up job through [[Runner.runStreamingThenFull]]
+  * `Trigger.AvailableNow` catch-up job through [[Runner.runStreamingThenRead]]
   * (the reference's hourly Auto Loader cadence, SURVEY.md §2.11) into a
   * scratch directory, and the query reads the materialized table back.
   */
@@ -31,8 +32,8 @@ object StreamRig {
   }
 
   /** Run `reg` with `feeds` as its streamed sources into a fresh scratch
-    * directory and return the materialized `table`, read back with
-    * [[Runner.read]].
+    * directory and return the materialized `table`, read back with the
+    * schema the run planned for it ([[Runner.runStreamingThenRead]]).
     *
     * The run uses 4 shuffle partitions (= state-store partitions). A
     * catch-up job over a bounded backlog wants FEW: each one is a
@@ -51,10 +52,10 @@ object StreamRig {
     val out = ScratchDirs.create(s"${table}_")
     val confs = Seq("spark.sql.shuffle.partitions" -> "4") ++
       (if (rocksDb) Seq(ProviderKey -> RocksDbProvider) else Nil)
-    val paths = withConfs(s, confs: _*) {
-      Runner.runStreamingThenFull(s, reg, feeds, out)
+    val loaders = withConfs(s, confs: _*) {
+      Runner.runStreamingThenRead(s, reg, feeds, out)
     }
-    Runner.read(s, reg.describe(table).get, paths(table))
+    loaders(table)()
   }
 
   /** Run the one-node DAG `t` over `events_feed`, whose batch twin is the
@@ -64,14 +65,12 @@ object StreamRig {
     run(s, new Registry(s).source("events_feed", () => Tables.events(s, d))
       .register(t), Map("events_feed" -> feed), t.name, rocksDb)
 
-  /** The corpus's events table as a file stream, normalized like the
-    * batch read. The file source needs a directory, so a glob picks the
-    * one table out of the corpus dir. */
-  def eventsFeed(s: SparkSession, d: String): () => DataFrame = {
-    val schema = s.read.parquet(s"$d/events.parquet").schema
-    () => Tables.normalize("events", s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d))
-  }
+  /** The corpus's events table as a file stream with its declared
+    * schema. The file source needs a directory, so a glob picks the one
+    * table out of the corpus dir. */
+  def eventsFeed(s: SparkSession, d: String): () => DataFrame =
+    () => s.readStream.schema(Tables.schemas("events"))
+      .option("pathGlobFilter", "events.parquet").parquet(d)
 
   /** A registry holding the batch twins of the click and purchase feeds:
     * the events table filtered to each event type. */
@@ -81,30 +80,49 @@ object StreamRig {
       .source("purchases_feed", () =>
         Tables.events(s, d).filter(col("event_type") === "purchase"))
 
-  /** Per-JVM staging cache, keyed by (tag, corpus, slice layout). A
-    * staged layout is test-rig scaffolding, not the operator under test,
-    * so the bench's untimed warm-up stages it once and every timed rep
-    * reuses the directory. The timed region then measures the streaming
-    * plan (micro-batch execution, state store, watermark machinery), not
-    * a sort + partitioned-parquet write + mtime stamping repeated per
-    * rep (round-12's q104 was 2.3× inflated by exactly that). Verify runs
+  /** Files staged for a stream to replay: their directory and the
+    * schema of the frame written there, which a stream over them reads
+    * instead of inferring one. */
+  final case class Staged(dir: String, schema: StructType)
+
+  /** Per-JVM staging cache, keyed by (layout, corpus). A staged layout
+    * is test-rig scaffolding, not the operator under test, so the bench's
+    * untimed warm-up stages it once and every timed rep reuses the
+    * directory. The timed region then measures the streaming plan
+    * (micro-batch execution, state store, watermark machinery), not a
+    * sort + partitioned-parquet write + mtime stamping repeated per rep
+    * (round-12's q104 was 2.3× inflated by exactly that). Verify runs
     * each query once, so correctness runs see no change. */
   private val staged =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, String), String]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Staged]()
+
+  /** Stage `frame` of corpus `d` as parquet files, partitioned by
+    * `partitionBy`, once per JVM and `tag`. */
+  def stage(d: String, tag: String, frame: DataFrame,
+            partitionBy: String*): Staged =
+    stageOnce(d, tag, tag, frame)(
+      frame.write.mode("overwrite").partitionBy(partitionBy: _*).parquet)
+
+  private def stageOnce(d: String, tag: String, layout: String, frame: DataFrame)(
+      write: String => Unit): Staged =
+    staged.computeIfAbsent((layout, d), _ => {
+      val dir = ScratchDirs.create(s"${tag}_src_")
+      write(dir)
+      Staged(dir, frame.schema)
+    })
 
   /** Stage the events table as `n` parquet slices, slice `b` holding the
     * rows whose `slice` value is `b` (one file each), and stamp slice
     * `b`'s files with mtime base + `b` minutes. FileStreamSource replays
     * in (mtime, path) order, so with `maxFilesPerTrigger = 1` (see
     * [[slicesFeed]]) each slice is one micro-batch, in slice order;
-    * same-ms writes would leave that order unstable. Returns the staged
-    * dir; callers sharing a `tag` and layout share one staging. */
+    * same-ms writes would leave that order unstable. Callers sharing a
+    * `tag` and layout share one staging. */
   def stageSlices(s: SparkSession, d: String, tag: String, n: Int)(
-      slice: Column): String =
-    staged.computeIfAbsent((tag, d, n, slice.toString), _ => {
-      val dir = ScratchDirs.create(s"${tag}_src_")
-      Tables.events(s, d).withColumn("batch_", slice.cast("int"))
-        .repartition(n, col("batch_"))
+      slice: Column): Staged = {
+    val frame = Tables.events(s, d).withColumn("batch_", slice.cast("int"))
+    stageOnce(d, tag, s"$tag/$n/$slice", frame) { dir =>
+      frame.repartition(n, col("batch_"))
         .write.mode("overwrite").partitionBy("batch_").parquet(dir)
       for (b <- 0 until n) {
         val sliceDir = Paths.get(dir, s"batch_=$b")
@@ -116,22 +134,19 @@ object StreamRig {
           finally ls.close()
         }
       }
-      dir
-    })
-
-  /** A stream replaying the staged slices in `dir` one slice per
-    * micro-batch. */
-  def slicesFeed(s: SparkSession, dir: String): () => DataFrame = {
-    val schema = s.read.parquet(dir).schema
-    () => s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(dir).drop("batch_")
+    }
   }
+
+  /** A stream replaying the staged slices one slice per micro-batch. */
+  def slicesFeed(s: SparkSession, slices: Staged): () => DataFrame =
+    () => s.readStream.schema(slices.schema).option("maxFilesPerTrigger", "1")
+      .parquet(slices.dir).drop("batch_")
 
   /** The click and purchase feeds of [[clicksAndPurchases]], each
     * streamed from the staged slices. */
-  def clickPurchaseFeeds(s: SparkSession, dir: String)
+  def clickPurchaseFeeds(s: SparkSession, slices: Staged)
       : Map[String, () => DataFrame] = {
-    val all = slicesFeed(s, dir)
+    val all = slicesFeed(s, slices)
     def feed(tp: String) = () => all().filter(col("event_type") === tp)
     Map("clicks_feed" -> feed("click"), "purchases_feed" -> feed("purchase"))
   }

@@ -1,50 +1,51 @@
 package graft.tables
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the engine's test corpus (TPC-H-ish star schema plus an
   * event stream, documents, and embeddings — see TESTDATA.md).
   *
   * Mirrors the reference's source surface (SURVEY.md §2.1): parquet scans
-  * stand in for the Delta/Auto-Loader bronze reads. Filters and column
-  * selection applied downstream reach the scan via Catalyst pushdown, so
-  * loaders stay bare `spark.read.parquet`.
+  * stand in for the Delta/Auto-Loader bronze reads, and like the
+  * reference's sources (SURVEY.md §1.2) every table's schema is declared,
+  * never inferred. A read with a declared schema opens the table without
+  * a Spark job: an inferring `spark.read.parquet` starts one to read the
+  * file footers before the query computes anything. Filters and column
+  * selection applied downstream reach the scan via Catalyst pushdown.
   */
 object Tables {
 
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** The corpus contract: each table's schema, as Spark reads the
+    * generated files under [[graft.core.GraftSession]]'s conf (timestamps
+    * are session-UTC `TIMESTAMP`). TablesSpec checks it against the
+    * files' own schemas. */
+  val schemas: ListMap[String, StructType] = ListMap(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
 
-  /** Parquet scan + schema normalization. The events table declares
-    * TIMESTAMP(NANOS), which Spark's vectorized reader rejects — with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` (set by GraftSession /
-    * Verify / Bench) it surfaces as nanos-since-epoch LongType, which we
-    * floor-divide to micros (`div` = integer division: a double round-trip
-    * would lose precision above 2^53). Matches the oracle's
-    * `CAST(ts AS TIMESTAMP)` ns→us truncation. */
+  val names: Seq[String] = schemas.keys.toSeq
+
+  /** Parquet scan of corpus table `name` with its declared schema. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalize(name, spark.read.parquet(s"$dir/$name.parquet"))
+    spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
 
-  /** ns-long → micros-timestamp conversion for the events feed; works on
-    * batch and streaming frames alike. */
-  def normalize(name: String, df: DataFrame): DataFrame =
-    if (name == "events" &&
-      df.schema.exists(f => f.name == "ts" &&
-        f.dataType == org.apache.spark.sql.types.LongType))
-      df.withColumn("ts",
-        org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-    else df
-
-  def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
-  def customer(s: SparkSession, d: String): DataFrame   = load(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame   = load(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame       = load(s, d, "part")
-  def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
-  def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
-  def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
-  def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+  def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")
 }

@@ -30,15 +30,9 @@ class RunnerSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
     val batchOut = Runner.runBatch(reg, batchDir)
 
-    // stream the same parquet through a file-stream source;
-    // the source needs a directory, so glob down to the one table
+    // stream the same parquet through a file-stream source
     val streamOut = Runner.runStreamingThenFull(spark, reg,
-      Map("raw_events" -> (() =>
-        graft.tables.Tables.normalize("events",
-          spark.readStream.schema(
-            spark.read.parquet(s"$d/events.parquet").schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(d)))),
+      Map("raw_events" -> graft.queries.StreamRig.eventsFeed(spark, d)),
       streamDir)
 
     for (tbl <- Seq("agg_events_24h_rolling", "serving_events")) {
