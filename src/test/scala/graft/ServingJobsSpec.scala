@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Conf
 import graft.serving.{EmbeddedKVSink, EmbeddedKVStore, ServingJobs}
+import graft.TestSpark.jobsIn
 
 class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -170,10 +171,10 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .apply("blockTime") === blockSecs)
   }
 
-  // The graft-kv commit chunks every task's rows together, so a serving
-  // write runs as its frame is partitioned: no exchange, no map stage.
+  // The sink collects the frame once and chunks every row on the driver,
+  // so a serving write is one job over the frame as it is partitioned: no
+  // exchange, no map stage.
   test("serveTable's write runs without a shuffle exchange") {
-    import org.apache.spark.ListenerBusDrain
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.functions.col
@@ -183,20 +184,36 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (qe.logical.toString.contains("graft_kv(kv_shufflefree/"))
-          writes.add(qe.executedPlan)
+        if (f == "collect") writes.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     sp.listenerManager.register(listener)
-    try {
+    val jobs = try jobsIn {
       ServingJobs.serveTable(sp.range(0, 100, 1, 4).select(col("id"),
         (col("id") * 2).as("v")), sink, "t", hashKey = "id", rangeKey = None)
-      ListenerBusDrain(sp.sparkContext)
     } finally sp.listenerManager.unregister(listener)
+    assert(jobs === 1)
     assert(store.itemCount("t") === 100L)
     assert(writes.size === 1)
     assert(find(writes.peek)(_.isInstanceOf[ShuffleExchangeExec]).isEmpty,
       writes.peek.toString)
+  }
+
+  test("a column the store cannot serve fails before any Spark job") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val sp = spark
+    val (sink, store) = freshStore("kv_unservable")
+    sink.write(sp.range(0, 10, 1, 2).toDF("id"), "t", "id")
+    val df = sp.range(0, 10, 1, 2)
+      .select(col("id"), lit(BigDecimal("1.5")).as("price"))
+    var err: Throwable = null
+    assert(jobsIn {
+      err = intercept[IllegalArgumentException](sink.write(df, "t", "id"))
+    } === 0)
+    assert(err.getMessage.contains("'price'"), err.getMessage)
+    assert(store.tableNames === Set("t"))
+    assert(store.itemCount("t") === 10L)
+    assert(store.get("t", 3L).get === Map("id" -> 3L))
   }
 
   test("serveAllTimeStats folds in the historical backfill constants") {
@@ -214,47 +231,14 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(store.get("stats", "ALL").get.apply("totalCount") === 200325L)
   }
 
-  // ---- KV control plane (KVTableSpec — zetadex-serving.py:40–175) ----
-
-  test("KVTableSpec renders the reference create-table request shape") {
-    val sp = spark
-    import sp.implicits._
-    import graft.serving.KVTableSpec
-    import graft.serving.KVTableSpec._
-    val df = Seq((1L, 100L, "a", 5L, 1.5))
-      .toDF("id", "timestamp", "gsi_hash_key", "lsi_range_key", "v")
-    val spec = KVTableSpec("served", hashKey = "id",
-      rangeKey = Some("timestamp"),
-      lsis = Seq(Lsi("LSIName", "lsi_range_key")),
-      gsis = Seq(Gsi("GSIName", "gsi_hash_key", Some("timestamp"),
-        readCapacityUnits = Some(5), writeCapacityUnits = Some(5))),
-      ttlAttribute = Some("timestamp"))
-    val json = spec.createTableParams(df.schema)
-    // attribute types derive from the ACTUAL schema; definitions are
-    // deduplicated in first-reference order (the reference assembles
-    // the same list imperatively, zetadex-serving.py:63–139)
-    assert(json.contains(
-      """"AttributeDefinitions":[{"AttributeName":"id","AttributeType":"N"},""" +
-        """{"AttributeName":"timestamp","AttributeType":"N"},""" +
-        """{"AttributeName":"lsi_range_key","AttributeType":"N"},""" +
-        """{"AttributeName":"gsi_hash_key","AttributeType":"S"}]"""))
-    assert(json.contains(
-      """"KeySchema":[{"AttributeName":"id","KeyType":"HASH"},{"AttributeName":"timestamp","KeyType":"RANGE"}]"""))
-    assert(json.contains(""""BillingMode":"PAY_PER_REQUEST""""))
-    assert(json.contains(""""IndexName":"LSIName""""))
-    assert(json.contains(
-      """"ProvisionedThroughput":{"ReadCapacityUnits":5,"WriteCapacityUnits":5}"""))
-    assert(json.contains(
-      """"TimeToLiveSpecification":{"AttributeName":"timestamp","Enabled":true}"""))
-  }
+  // ---- KV key schema (KVTableSpec — zetadex-serving.py:40–175) ----
 
   test("KVTableSpec validation fails fast on bad key schemas") {
     val sp = spark
     import sp.implicits._
     import graft.serving.KVTableSpec
-    import graft.serving.KVTableSpec._
-    val df = Seq((1L, ts("2024-01-01 00:00:00"), Seq(1, 2)))
-      .toDF("id", "observed_at", "tags")
+    val df = Seq((1L, ts("2024-01-01 00:00:00"), Seq(1, 2), BigDecimal(2)))
+      .toDF("id", "observed_at", "tags", "amount")
     // missing column
     assertThrows[IllegalArgumentException](
       KVTableSpec("t", "nope").validate(df.schema))
@@ -265,13 +249,11 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // non-scalar key
     assertThrows[IllegalArgumentException](
       KVTableSpec("t", "tags").validate(df.schema))
-    // INCLUDE without attributes — the reference raises KeyError here
+    // a DECIMAL key: the store serves no decimal values
     assertThrows[IllegalArgumentException](
-      KVTableSpec("t", "id",
-        gsis = Seq(Gsi("g", "id", projection = ProjectInclude(Nil))))
-        .validate(df.schema))
+      KVTableSpec("t", "amount").validate(df.schema))
     // ...and after servingProjection the temporal key becomes valid
-    val projected = ServingJobs.servingProjection(df)
+    val projected = ServingJobs.servingProjection(df.drop("tags", "amount"))
     KVTableSpec("t", "id", rangeKey = Some("observed_at"))
       .validate(projected.schema)
   }
@@ -279,7 +261,12 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a failed serve leaves the previously served table as it was") {
     import org.apache.spark.sql.functions._
     val sp = spark
+    import sp.implicits._
     val (sink, store) = freshStore("kv_failed_serve")
+    // a null hash key fails after the job: nothing applied, no table made
+    val nullKey = Seq((Some(1L), 2L), (None, 4L)).toDF("id", "v")
+    intercept[IllegalArgumentException](sink.write(nullKey, "t", "id"))
+    assert(store.tableNames.isEmpty)
     val first = sp.range(0, 100, 1, 4).select(col("id"), (col("id") * 2).as("v"))
     ServingJobs.serveTable(first, sink, "t", hashKey = "id", rangeKey = None)
     assert(store.itemCount("t") === 100L)
@@ -290,8 +277,20 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     intercept[Exception] {
       ServingJobs.serveTable(failing, sink, "t", hashKey = "id", rangeKey = None)
     }
-    assert(store.itemCount("t") === 100L)
-    (0L until 100L).foreach(i => assert(store.get("t", i).get("v") === i * 2))
+    def unchanged(): Unit = {
+      assert(store.itemCount("t") === 100L)
+      (0L until 100L).foreach(i => assert(store.get("t", i).get("v") === i * 2))
+    }
+    unchanged()
+    // a bad key in one row of an otherwise valid push
+    intercept[IllegalArgumentException](sink.write(nullKey, "t", "id"))
+    unchanged()
+    // a push over the row bound
+    val over = sp.range(0, EmbeddedKVSink.MaxRows + 1L, 1, 4)
+      .select(col("id"), lit(0L).as("v"))
+    val e = intercept[IllegalStateException](sink.write(over, "t", "id"))
+    assert(e.getMessage.contains("projection-sized"))
+    unchanged()
   }
 
   // ---- Embedded KV data plane (round-12: the last unexercised
@@ -314,6 +313,16 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(store.itemWriteCount("pnl") === n.toLong)
     assert(store.batchWriteCount("pnl") === ((n + 24) / 25).toLong,
       "bulk push must chunk at the BatchWriteItem limit of 25")
+    // rows of every partition are chunked together: 60 rows over 4
+    // partitions are ceil(60/25) = 3 batches, not one partial per partition
+    val users = (0 until 60).map(i => (i.toLong, s"u$i", i * 1.5))
+      .toDF("id", "name", "score").repartition(4)
+    assert(users.rdd.getNumPartitions === 4)
+    new EmbeddedKVSink(id).write(users, "users", "id")
+    assert(store.itemCount("users") === 60L)
+    assert(store.itemWriteCount("users") === 60L)
+    assert(store.batchWriteCount("users") === 3L)
+    assert(store.get("users", 17L).get === Map("id" -> 17L, "name" -> "u17", "score" -> 25.5))
     // the store itself enforces the limit (the client must chunk)
     val over = (1 to 26).map(i => Map[String, Any](
       "account" -> "x", "seq" -> i.toLong)).toSeq
@@ -360,6 +369,8 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val hist = EmbeddedKVStore("kv_numsort").query("hist", "acct")
     assert(hist.map(_("tag")) === Seq("early", "late"),
       "number range keys must sort numerically, not lexicographically")
+    assert(EmbeddedKVStore("kv_numsort").get("hist", "acct", Some(10L)).get("tag")
+      === "late")
   }
 
   test("embedded KV: PutItem upsert is last-write-wins; lookups " +
@@ -370,8 +381,11 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val id = "kv_upsert"
     EmbeddedKVStore.remove(id)
     val store = EmbeddedKVStore(id)
-    val df = Seq(("a", 1L, "v1")).toDF("h", "r", "payload")
+    val at = ts("2024-01-30 10:00:00")
+    val df = Seq(("a", 1L, "v1", at)).toDF("h", "r", "payload", "at")
     new EmbeddedKVSink(id).write(df, "t", "h", Some("r"))
+    // a timestamp column serves as epoch microseconds
+    assert(store.get("t", "a", Some(1L)).get("at") === at.getTime * 1000L)
     store.batchWrite("t", Seq(Map("h" -> "a", "r" -> 1L, "payload" -> "v2")))
     assert(store.get("t", "a", Some(1L)).get("payload") === "v2",
       "re-putting a key must replace the item")
@@ -381,29 +395,5 @@ class ServingJobsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     intercept[IllegalStateException] { store.get("nope", "a", Some(1L)) }
     // int 1 and long 1 are the same NUMBER key, like DynamoDB's N type
     assert(store.get("t", "a", Some(1)).isDefined)
-  }
-
-  test("embedded KV: task-retry replays with the same token count once") {
-    import graft.serving.{EmbeddedKVSink, EmbeddedKVStore}
-    val sp = spark
-    import sp.implicits._
-    val id = "kv_retry"
-    EmbeddedKVStore.remove(id)
-    new EmbeddedKVSink(id).write(
-      Seq(("a", 1L, "v")).toDF("h", "r", "p"), "t", "h", Some("r"))
-    val store = EmbeddedKVStore(id)
-    val before = store.batchWriteCount("t")
-    // a retried/speculative task re-issues the SAME (partition, chunk)
-    // token: puts re-apply (idempotent upserts) but the WCU counters
-    // must not inflate — they exist to measure ceil(n/25)
-    val item = Map[String, Any]("h" -> "b", "r" -> 2L, "p" -> "w")
-    store.batchWrite("t", Seq(item), token = Some("9:0"))
-    store.batchWrite("t", Seq(item), token = Some("9:0")) // the retry
-    assert(store.batchWriteCount("t") === before + 1,
-      "same-token replay must not double-count requests")
-    assert(store.get("t", "b", Some(2L)).isDefined)
-    // tokenless calls (ad-hoc client writes) always count
-    store.batchWrite("t", Seq(item))
-    assert(store.batchWriteCount("t") === before + 2)
   }
 }

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.StreamRig
+import graft.TestSpark.jobsIn
 import graft.tables.Tables
 
 /** The corpus contract: every table opens with its declared schema, which
@@ -13,21 +11,6 @@ import graft.tables.Tables
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.sf0001
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsIn(body: => Any): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
 
   // An inferring read of each file is the reference: a generator that
   // changes a column's type fails here, not deep inside a query.
