@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.serving.EmbeddedKVStore
+import graft.serving.{EmbeddedKVSink, EmbeddedKVStore}
 
-/** Contract pins for the graft-kv DataSourceV2 WRITER: items land
-  * exactly once through the 25-item batch API, retries cannot
-  * double-count, and a failed job leaves the store untouched (staging
-  * in commit messages, applying only at driver commit).
+/** Contract pins for the KV serving WRITE ([[EmbeddedKVSink]]): items
+  * land exactly once through the 25-item batch API, rows of every
+  * partition are chunked together, and a failed job, a bad key or an
+  * over-bound write leaves the store untouched (the frame is collected
+  * and every item key-checked before the first put).
   */
 class KVWriteSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -17,15 +18,13 @@ class KVWriteSourceSpec extends AnyFunSuite {
     import sp.implicits._
     val sid = "kvw_ok"
     try {
-      (0 until 60).map(i => (i.toLong, s"u$i", i * 1.5))
+      val df = (0 until 60).map(i => (i.toLong, s"u$i", i * 1.5))
         .toDF("id", "name", "score")
         .repartition(4)
-        .write.format("graft-kv")
-        .option("store", sid).option("table", "users")
-        .option("hashKey", "id")
-        .mode("append").save()
+      new EmbeddedKVSink(sid).write(df, "users", "id")
       val kv = EmbeddedKVStore(sid)
       assert(kv.itemCount("users") === 60L)
+      assert(kv.itemWriteCount("users") === 60L)
       val got = kv.get("users", 17L).get
       assert(got("name") === "u17")
       assert(got("score") === 25.5)
@@ -41,33 +40,11 @@ class KVWriteSourceSpec extends AnyFunSuite {
       val df = (0 until 60).map(i => (i.toLong, s"u$i")).toDF("id", "name")
         .repartition(4)
       assert(df.rdd.getNumPartitions === 4)
-      df.write.format("graft-kv")
-        .option("store", sid).option("table", "users")
-        .option("hashKey", "id")
-        .mode("append").save()
+      new EmbeddedKVSink(sid).write(df, "users", "id")
       val kv = EmbeddedKVStore(sid)
       assert(kv.itemCount("users") === 60L)
       assert(kv.itemWriteCount("users") === 60L)
       assert(kv.batchWriteCount("users") === 3L)
-    } finally EmbeddedKVStore.remove(sid)
-  }
-
-  test("a replayed commit counts no batch twice") {
-    import graft.sources.{KVBatchWrite, KVStagedRows}
-    import org.apache.spark.sql.connector.write.WriterCommitMessage
-    import org.apache.spark.sql.types._
-    val sid = "kvw_replay"
-    try {
-      val schema = StructType(Seq(StructField("id", LongType)))
-      val w = new KVBatchWrite(schema, sid, "t", "id", None)
-      val tasks: Array[WriterCommitMessage] = (0 until 4).map(t => KVStagedRows(
-        t.toLong, (0 until 15).map(i => Map[String, Any]("id" -> (t * 15L + i))))).toArray
-      w.commit(tasks)
-      w.commit(tasks)
-      val kv = EmbeddedKVStore(sid)
-      assert(kv.itemCount("t") === 60L)
-      assert(kv.itemWriteCount("t") === 60L)
-      assert(kv.batchWriteCount("t") === 3L)
     } finally EmbeddedKVStore.remove(sid)
   }
 
@@ -76,12 +53,9 @@ class KVWriteSourceSpec extends AnyFunSuite {
     import sp.implicits._
     val sid = "kvw_range"
     try {
-      Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 10L, "c"))
+      val df = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 10L, "c"))
         .toDF("uid", "ts", "v")
-        .write.format("graft-kv")
-        .option("store", sid).option("table", "tl")
-        .option("hashKey", "uid").option("rangeKey", "ts")
-        .mode("append").save()
+      new EmbeddedKVSink(sid).write(df, "tl", "uid", Some("ts"))
       val kv = EmbeddedKVStore(sid)
       assert(kv.itemCount("tl") === 3L)
       assert(kv.get("tl", 1L, Some(20L)).get("v") === "b")
@@ -91,7 +65,6 @@ class KVWriteSourceSpec extends AnyFunSuite {
 
   test("a failing task leaves the store COMPLETELY untouched") {
     val sp = spark
-    import sp.implicits._
     val sid = "kvw_abort"
     try {
       val df = sp.range(0, 100, 1, 4)
@@ -99,44 +72,37 @@ class KVWriteSourceSpec extends AnyFunSuite {
           when(col("id") === 77L,
             (lit(1) / lit(0)).cast("long")) // runtime error in one task
             .otherwise(col("id")).as("v"))
-      // ANSI division by zero fails the job after the task stages rows
+      // ANSI division by zero fails the job; the other tasks' rows were
+      // never applied
       intercept[Exception] {
-        df.write.format("graft-kv")
-          .option("store", sid).option("table", "t")
-          .option("hashKey", "id")
-          .mode("append").save()
+        new EmbeddedKVSink(sid).write(df, "t", "id")
       }
-      // nothing was applied: commit never ran
       intercept[IllegalStateException] {
         EmbeddedKVStore(sid).itemCount("t")
       }
+      assert(EmbeddedKVStore(sid).tableNames.isEmpty)
     } finally EmbeddedKVStore.remove(sid)
   }
 
   test("a bad row that only surfaces at DRIVER commit leaves the store " +
       "untouched too — keys validate before the first put") {
-    // Null hash key passes every task stage (staging doesn't interpret
-    // keys) and historically failed MID-commit, leaving earlier tasks'
-    // rows applied. The commit now key-validates every staged item
-    // before its first put, so the failed job applies NOTHING.
-    import graft.sources.{KVBatchWrite, KVStagedRows}
-    import org.apache.spark.sql.types._
+    // A null hash key passes every task (tasks don't interpret keys) and
+    // surfaces only on the driver. Every item is key-validated before the
+    // table is created and before its first put, so the write applies
+    // NOTHING.
+    val sp = spark
+    import sp.implicits._
     val sid = "kvw_commit_atomic"
     try {
-      val schema = StructType(Seq(StructField("id", LongType),
-        StructField("v", StringType)))
-      val w = new KVBatchWrite(schema, sid, "t", "id", None)
-      val good = KVStagedRows(0L,
-        (0 until 30).map(i => Map[String, Any]("id" -> i.toLong, "v" -> "x")))
-      val bad = KVStagedRows(1L,
-        Seq(Map[String, Any]("v" -> "missing-hash-key")))
+      val good = (0 until 30).map(i => (Option(i.toLong), "x"))
+      val df = (good :+ ((None: Option[Long]) -> "missing-hash-key"))
+        .toDF("id", "v").repartition(2)
       intercept[IllegalArgumentException] {
-        w.commit(Array(good, bad))
+        new EmbeddedKVSink(sid).write(df, "t", "id")
       }
       // all-or-nothing INCLUDING the control plane: validation runs
-      // before createTable, so the failed commit did not apply task
-      // 0's 30 valid rows AND did not leave a newly created empty
-      // table behind either
+      // before createTable, so the failed write did not apply the 30
+      // valid rows AND did not leave a newly created empty table behind
       val e = intercept[IllegalStateException] {
         EmbeddedKVStore(sid).itemCount("t")
       }
@@ -146,18 +112,22 @@ class KVWriteSourceSpec extends AnyFunSuite {
 
   test("a task staging beyond the per-task cap fails with a clear " +
       "message, not a driver OOM") {
-    import graft.sources.KVDataWriterFactory
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", LongType)))
-    val writer = new KVDataWriterFactory(schema).createWriter(0, 0L)
-    var i = 0L
-    while (i < KVDataWriterFactory.MaxStagedRowsPerTask) {
-      writer.write(InternalRow(i)); i += 1
-    }
-    val e = intercept[IllegalStateException] {
-      writer.write(InternalRow(i))
-    }
-    assert(e.getMessage.contains("projection-sized"))
+    // The cap bounds the whole write (EmbeddedKVSink.MaxRows rows): a frame
+    // over it is a missing aggregate or filter, named in the error, and the
+    // table already served stays as it was.
+    val sp = spark
+    val sid = "kvw_cap"
+    try {
+      val sink = new EmbeddedKVSink(sid)
+      sink.write(sp.range(0, 10, 1, 2).select(col("id"), (col("id") * 2).as("v")),
+        "t", "id")
+      val over = sp.range(0, EmbeddedKVSink.MaxRows + 1L, 1, 4)
+        .select(col("id"), lit(0L).as("v"))
+      val e = intercept[IllegalStateException](sink.write(over, "t", "id"))
+      assert(e.getMessage.contains("projection-sized"))
+      val kv = EmbeddedKVStore(sid)
+      assert(kv.itemCount("t") === 10L)
+      (0L until 10L).foreach(i => assert(kv.get("t", i).get("v") === i * 2))
+    } finally EmbeddedKVStore.remove(sid)
   }
 }
