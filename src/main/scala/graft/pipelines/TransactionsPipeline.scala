@@ -1,10 +1,13 @@
 package graft.pipelines
 
+import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Conf
 import graft.graph.{Mode, Registry, TableDef}
 import graft.ops.Relational
+import graft.queries.QH.decSum
 
 /** The reference's flagship pipeline re-expressed Spark-first: Solana
   * transactions → per-instruction silver tables → hourly gold aggregates
@@ -47,7 +50,7 @@ object TransactionsPipeline {
             rawBurnEvents: Option[() => DataFrame] = None,
             zpassNfts: Option[() => DataFrame] = None,
             pubkeyLabel: Option[() => DataFrame] = None,
-            conf: graft.core.Conf = graft.core.Conf.ForTests): Registry = {
+            conf: Conf = Conf.ForTests): Registry = {
     val sp = spark
     import sp.implicits._
     val reg = new Registry(spark)
@@ -310,7 +313,7 @@ object TransactionsPipeline {
             col("timestamp").as("start_timestamp"),
             expr("timestamp + INTERVAL 1 HOURS * duration")
               .as("end_timestamp"))
-          .filter(col("signature") =!= graft.core.Conf.ExcludedBurnSignature)
+          .filter(col("signature") =!= Conf.ExcludedBurnSignature)
     }, mode = Mode.Incremental))
 
     reg.register(TableDef("agg_compressed_nft_burn_events_hourly",
@@ -382,80 +385,7 @@ object TransactionsPipeline {
           "date_" -> date_trunc("day", col("timestamp")))
     }, mode = Mode.Full))
 
-    // leaderboard gold (transactions:1486–1878, compact form): MM
-    // left-anti exclusion (transactions:1556–1560: labeled accounts
-    // never enter the ranks — removing them AFTER ranking would leave
-    // holes in the rank sequence), then trailing anchors, exclusive-
-    // start Dietz flows, PnL/ROI, 7 tie-broken ranks + rank changes,
-    // all on one shared (authority, t) partitioning. The full-width
-    // composite with the z-score/volume/dim-join stages is the
-    // oracle-verified q68 (graft.queries.AggPnlQueries).
-    reg.register(TableDef("agg_pnl", Seq("cleaned_pnl", "pubkey_label"), {
-      case Seq(cpRaw, mm) =>
-      // label table is a genuine dimension (hand-curated account list)
-      // → broadcast is the right call at any scale
-      val cp = cpRaw.join(broadcast(mm),
-        cpRaw("authority") === mm("pub_key"), "left_anti")
-      def trail(sec: Long) = Window.partitionBy("authority")
-        .orderBy(col("t")).rangeBetween(-sec, 0)
-      def excl(sec: Long) = Window.partitionBy("authority")
-        .orderBy(col("t")).rangeBetween(-sec + 3600L, 0)
-      val w24 = trail(86400L); val w7d = trail(604800L)
-      val w30 = trail(2592000L)
-      val wAll = Window.partitionBy("authority").orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def rankW(order: org.apache.spark.sql.Column*) =
-        Window.partitionBy("timestamp").orderBy(order: _*)
-      val nowH = unix_timestamp(date_trunc("hour", conf.asOfTs))
-      val withT = Relational.setColumns(cp, "t" -> unix_timestamp(col("timestamp")))
-      val lags = Relational.setColumns(withT,
-        "cum_lag_24h" -> first(col("cumulative_pnl")).over(w24),
-        "cum_lag_7d" -> first(col("cumulative_pnl")).over(w7d),
-        "cum_lag_30d" -> first(col("cumulative_pnl")).over(w30),
-        "cum_lag_alltime" -> first(col("cumulative_pnl")).over(wAll),
-        "equity_lag_24h" -> first(col("equity")).over(w24),
-        "equity_lag_7d" -> first(col("equity")).over(w7d),
-        "equity_lag_30d" -> first(col("equity")).over(w30),
-        "dw_24h" -> sum(col("deposit_amount")
-          * ((nowH - col("t")) / 86400.0)).over(excl(86400L)),
-        "dw_7d" -> sum(col("deposit_amount")
-          * ((nowH - col("t")) / 604800.0)).over(excl(604800L)),
-        "dw_30d" -> sum(col("deposit_amount")
-          * ((nowH - col("t")) / 2592000.0)).over(excl(2592000L)))
-      val pnl = Relational.setColumns(lags,
-        "pnl_24h" -> (col("cumulative_pnl") - col("cum_lag_24h")),
-        "pnl_7d" -> (col("cumulative_pnl") - col("cum_lag_7d")),
-        "pnl_30d" -> (col("cumulative_pnl") - col("cum_lag_30d")),
-        "pnl_alltime" -> (col("cumulative_pnl") - col("cum_lag_alltime")))
-      def roi(p: String) = when(col(s"pnl_$p") === 0, lit(0.0)).otherwise(
-        col(s"pnl_$p") / (lit(100.0) + col(s"equity_lag_$p") + col(s"dw_$p")))
-      val base = Relational.setColumns(pnl,
-        "roi_24h" -> roi("24h"), "roi_7d" -> roi("7d"), "roi_30d" -> roi("30d"))
-      val ranked = Relational.setColumns(base,
-        "pnl_24h_rank" -> rank().over(
-          rankW(col("pnl_24h").desc, col("roi_24h").desc, col("authority"))),
-        "pnl_7d_rank" -> rank().over(
-          rankW(col("pnl_7d").desc, col("roi_7d").desc, col("authority"))),
-        "pnl_30d_rank" -> rank().over(
-          rankW(col("pnl_30d").desc, col("roi_30d").desc, col("authority"))),
-        "pnl_alltime_rank" -> rank().over(
-          rankW(col("pnl_alltime").desc, col("authority"))),
-        "roi_24h_rank" -> rank().over(
-          rankW(col("roi_24h").desc, col("pnl_24h").desc, col("authority"))),
-        "roi_7d_rank" -> rank().over(
-          rankW(col("roi_7d").desc, col("pnl_7d").desc, col("authority"))),
-        "roi_30d_rank" -> rank().over(
-          rankW(col("roi_30d").desc, col("pnl_30d").desc, col("authority"))))
-      def change(r: String, w: org.apache.spark.sql.expressions.WindowSpec) =
-        s"${r}_rank_change" -> -(col(s"${r}_rank") - first(col(s"${r}_rank")).over(w))
-      Relational.setColumns(ranked,
-        change("pnl_24h", w24), change("pnl_7d", w7d), change("pnl_30d", w30),
-        change("pnl_alltime", wAll), change("roi_24h", w24),
-        change("roi_7d", w7d), change("roi_30d", w30),
-        "date_" -> date_trunc("day", col("timestamp")))
-        .drop("t", "cum_lag_24h", "cum_lag_7d", "cum_lag_30d",
-          "cum_lag_alltime", "dw_24h", "dw_7d", "dw_30d")
-    }, mode = Mode.Full))
+    reg.register(aggPnl(conf))
 
     // 30d-volume fee tiers, latest per user (transactions:1882–1947)
     reg.register(TableDef("fee_tiers", Seq("cleaned_ix_trade"), {
@@ -463,9 +393,7 @@ object TransactionsPipeline {
         val w30 = Relational.trailingWindow(Seq("authority"),
           col("block_time"), 30L * 86400L)
         val tiers = tr.filter(col("is_taker"))
-          .withColumn("volume_30d",
-            sum(col("volume").cast(graft.queries.QH.DEC)).over(w30)
-              .cast("string").cast("double"))
+          .withColumn("volume_30d", decSum(col("volume"), w30))
           .withColumn("fee_tier",
             when(col("volume_30d") >= 50000000.0, 7)
               .when(col("volume_30d") >= 10000000.0, 6)
@@ -506,5 +434,95 @@ object TransactionsPipeline {
       }, mode = Mode.Full))
 
     reg
+  }
+
+  /** Rebase epoch of the Dietz time axis (2024-01-01 UTC): keeps Σ v·t
+    * small enough to accumulate exactly in decimal(28,6). */
+  private val T0 = 1704067200L
+
+  /** Leaderboard gold (transactions:1486–1878), the engine's one
+    * `agg_pnl` body: [[build]] registers it over `cleaned_pnl`, and q68
+    * ([[graft.queries.AggPnlQueries]]) applies it to its events-derived
+    * hourly frame before adding the volume, z-score and dim-join stages.
+    * MM left-anti exclusion (transactions:1556–1560: labeled accounts
+    * never enter the ranks — removing them AFTER ranking would leave
+    * holes in the rank sequence), then trailing anchors, exclusive-start
+    * Dietz flows, PnL/ROI, 7 tie-broken ranks + rank changes, all on one
+    * shared (authority, t) partitioning.
+    *
+    * The reference's `current_timestamp()` Dietz weights (TX:1581–1601)
+    * use the injectable [[graft.core.Conf.asOf]] hour N₀, and the
+    * weighted flow Σ v·(N₀−t)/period is decomposed into two decimal-exact
+    * window sums, Σ v and Σ v·t, so it does not depend on accumulation
+    * order and q68 hash-matches its oracle. */
+  def aggPnl(conf: Conf): TableDef = {
+    // the as-of hour on the rebased axis
+    val n0 = conf.asOf.truncatedTo(ChronoUnit.HOURS).getEpochSecond - T0
+    TableDef("agg_pnl", Seq("cleaned_pnl", "pubkey_label"), {
+      case Seq(cpRaw, mm) =>
+        // label table is a genuine dimension (hand-curated account list)
+        // → broadcast is the right call at any scale
+        val cp = cpRaw.join(broadcast(mm),
+          cpRaw("authority") === mm("pub_key"), "left_anti")
+        def trail(sec: Long) = Window.partitionBy("authority")
+          .orderBy(col("t")).rangeBetween(-sec, 0)
+        def excl(sec: Long) = Window.partitionBy("authority")
+          .orderBy(col("t")).rangeBetween(-sec + 3600L, 0)
+        val w24 = trail(86400L); val w7d = trail(604800L)
+        val w30 = trail(2592000L)
+        val wAll = Window.partitionBy("authority").orderBy(col("t"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        def rankW(order: org.apache.spark.sql.Column*) =
+          Window.partitionBy("timestamp").orderBy(order: _*)
+        val withT = Relational.setColumns(cp,
+          "t" -> (unix_timestamp(col("timestamp")) - lit(T0)))
+        def dw(sec: Long) = {
+          val w = excl(sec)
+          (lit(n0) * decSum(col("deposit_amount"), w)
+            - decSum(col("deposit_amount") * col("t"), w)) / sec.toDouble
+        }
+        val lags = Relational.setColumns(withT,
+          "cum_lag_24h" -> first(col("cumulative_pnl")).over(w24),
+          "cum_lag_7d" -> first(col("cumulative_pnl")).over(w7d),
+          "cum_lag_30d" -> first(col("cumulative_pnl")).over(w30),
+          "cum_lag_alltime" -> first(col("cumulative_pnl")).over(wAll),
+          "equity_lag_24h" -> first(col("equity")).over(w24),
+          "equity_lag_7d" -> first(col("equity")).over(w7d),
+          "equity_lag_30d" -> first(col("equity")).over(w30),
+          "dw_24h" -> dw(86400L), "dw_7d" -> dw(604800L), "dw_30d" -> dw(2592000L))
+        val pnl = Relational.setColumns(lags,
+          "pnl_24h" -> (col("cumulative_pnl") - col("cum_lag_24h")),
+          "pnl_7d" -> (col("cumulative_pnl") - col("cum_lag_7d")),
+          "pnl_30d" -> (col("cumulative_pnl") - col("cum_lag_30d")),
+          "pnl_alltime" -> (col("cumulative_pnl") - col("cum_lag_alltime")))
+        def roi(p: String) = when(col(s"pnl_$p") === 0, lit(0.0)).otherwise(
+          col(s"pnl_$p") / (lit(100.0) + col(s"equity_lag_$p") + col(s"dw_$p")))
+        val base = Relational.setColumns(pnl,
+          "roi_24h" -> roi("24h"), "roi_7d" -> roi("7d"), "roi_30d" -> roi("30d"))
+        val ranked = Relational.setColumns(base,
+          "pnl_24h_rank" -> rank().over(
+            rankW(col("pnl_24h").desc, col("roi_24h").desc, col("authority"))),
+          "pnl_7d_rank" -> rank().over(
+            rankW(col("pnl_7d").desc, col("roi_7d").desc, col("authority"))),
+          "pnl_30d_rank" -> rank().over(
+            rankW(col("pnl_30d").desc, col("roi_30d").desc, col("authority"))),
+          "pnl_alltime_rank" -> rank().over(
+            rankW(col("pnl_alltime").desc, col("authority"))),
+          "roi_24h_rank" -> rank().over(
+            rankW(col("roi_24h").desc, col("pnl_24h").desc, col("authority"))),
+          "roi_7d_rank" -> rank().over(
+            rankW(col("roi_7d").desc, col("pnl_7d").desc, col("authority"))),
+          "roi_30d_rank" -> rank().over(
+            rankW(col("roi_30d").desc, col("pnl_30d").desc, col("authority"))))
+        def change(r: String, w: org.apache.spark.sql.expressions.WindowSpec) =
+          s"${r}_rank_change" -> -(col(s"${r}_rank") - first(col(s"${r}_rank")).over(w))
+        Relational.setColumns(ranked,
+          change("pnl_24h", w24), change("pnl_7d", w7d), change("pnl_30d", w30),
+          change("pnl_alltime", wAll), change("roi_24h", w24),
+          change("roi_7d", w7d), change("roi_30d", w30),
+          "date_" -> date_trunc("day", col("timestamp")))
+          .drop("t", "cum_lag_24h", "cum_lag_7d", "cum_lag_30d",
+            "cum_lag_alltime", "dw_24h", "dw_7d", "dw_30d")
+    }, mode = Mode.Full)
   }
 }

@@ -3,51 +3,49 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import graft.core.Conf
+import graft.pipelines.TransactionsPipeline
 import QH._
 
 /** The reference's heaviest gold table at full width: `agg_pnl`
   * (zetadex-transactions-helius-pipeline.py:1486–1878), re-expressed
-  * over the events corpus. Structure mirrors the reference stage for
-  * stage:
+  * over the events corpus. The leaderboard body is the pipeline's own
+  * `agg_pnl` TableDef ([[TransactionsPipeline.aggPnl]]: trailing
+  * anchors, Modified-Dietz flows, PnL/ROI, 7 tie-broken ranks and their
+  * changes), applied to an events-derived hourly frame, the way q75
+  * resolves RewardsPipeline. Around it q68 adds the stages the compact
+  * table lacks, mirroring the reference stage for stage:
   *
-  *   hourly snapshots → cumulative equity / flow cumsums (W6) →
-  *   24h/7d/30d/alltime first()-anchors (W4/W8) → Modified-Dietz
-  *   weighted flows over exclusive-start windows (W5, TX:1508–1523) →
-  *   period PnL + ROI with the $100 fudge (TX:1619–1655) → 7 tie-broken
-  *   leaderboard ranks (W1, TX:1656–1663) → rank-change vs trailing
-  *   window (W9, TX:1664–1694) → offset-hour trades join (J5,
+  *   hourly snapshots → cumulative equity / deposit cumsums (W6) →
+  *   the `agg_pnl` TableDef → offset-hour trades join (J5,
   *   TX:1736–1742) + nft-multiplier / campaign left joins (J11,
   *   TX:1743–1744) → z-score formula (TX:1750–1763) → windowed
   *   volume / multiplier / z-score sums + 4 z-score ranks and changes
   *   (TX:1764–1816) → 53-column projection (TX:1817–1877).
   *
   * Shuffle economy: every trailing/cumulative window shares one
-  * partitioning (user_id, ordered by epoch-seconds), every leaderboard
-  * rank shares one partitioning (timestamp), and the three dimension
-  * joins broadcast — the whole composite is 6 shuffle exchanges
-  * (asserted in PlanSpec), independent of how many of the ~30 window
-  * columns are computed.
+  * partitioning per user family and every rank one partitioning on
+  * timestamp, so the ~30 window columns add no exchanges of their own.
+  * PlanSpec bounds the physical plan at 10 hash/range exchanges and
+  * asserts that the optimized plan force-broadcasts no join side; the
+  * plan has exactly 10 at sf0.001.
   *
-  * Determinism: the reference's `current_timestamp()` Dietz weights
-  * (TX:1581–1601) become the injectable [[graft.core.Conf.asOf]] clock;
-  * the weighted-flow sum Σ v·(T₀−t)/period is decomposed into two
-  * decimal-exact window sums (Σ v·t and Σ v, the q63 pattern) so it is
-  * accumulation-order-insensitive and hash-matches the oracle.
+  * Determinism: the TableDef runs on the [[Conf.ForTests]] clock, and
+  * every double sum is decimal-accumulated ([[QH.decSum]]), so the
+  * output does not depend on accumulation order and hash-matches the
+  * oracle.
   */
 object AggPnlQueries {
-
-  private val T0 = 1704067200L // rebase epoch (2024-01-01), q63 pattern
-  // unix seconds of date_trunc('hour', Conf.ForTests.asOf) − T0
-  private val N0 = 1706616000L - T0
 
   val qs: Seq[Q] = Seq(
     Q("q68_agg_pnl",
       (s, d) => {
+        import s.implicits._
         val ev = t(s, d, "events")
 
         // Hourly snapshot frame (cleaned_pnl analog): one conditional
         // aggregate per flow kind (purchase=deposit flow, click=taker
-        // volume, view=maker volume).
+        // volume, view=maker volume), then the cumulative series.
         val base = ev
           .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("timestamp"))
           .agg(
@@ -58,89 +56,32 @@ object AggPnlQueries {
               .otherwise(0.0)).as("taker_volume_raw"),
             decSum(when(col("event_type") === "view", col("value"))
               .otherwise(0.0)).as("maker_volume_raw"))
-          .withColumn("t", unix_timestamp(col("timestamp")) - lit(T0))
+        val wCum = Window.partitionBy("user_id").orderBy(col("timestamp"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val hourly = base
+          .withColumn("equity", decSum(col("value_delta"), wCum))
+          .withColumn("deposit_cumsum", decSum(col("deposit_amount"), wCum))
+          .withColumn("cumulative_pnl", col("equity") - col("deposit_cumsum"))
 
-        // Shared window specs — one (user_id, t) partitioning serves all
-        // trailing/cumulative/exclusive frames; the planner emits a
-        // single exchange + sort for the whole family.
+        // Stages 1–2: the pipeline's leaderboard body. No account is
+        // labeled a market maker, and the anti join against the empty
+        // label frame optimizes away.
+        val emptyLabels = Seq.empty[(Long, String)].toDF("pub_key", "label")
+        val f2 = TransactionsPipeline.aggPnl(Conf.ForTests)
+          .transform(Seq(hourly.withColumnRenamed("user_id", "authority"), emptyLabels))
+          .withColumnRenamed("authority", "user_id")
+          .withColumn("t", unix_timestamp(col("timestamp")))
+
+        // Window specs of stages 4–5: one (user_id, t) partitioning
+        // serves all trailing/cumulative frames.
         def trail(sec: Long): WindowSpec = Window.partitionBy("user_id")
           .orderBy(col("t")).rangeBetween(-sec, 0)
-        def excl(sec: Long): WindowSpec = Window.partitionBy("user_id")
-          .orderBy(col("t")).rangeBetween(-sec + 3600L, 0)
         val w24 = trail(86400L); val w7d = trail(604800L)
         val w30 = trail(2592000L)
         val wAll = Window.partitionBy("user_id").orderBy(col("t"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val w24x = excl(86400L); val w7dx = excl(604800L)
-        val w30x = excl(2592000L)
         def rankW(order: Column*): WindowSpec =
           Window.partitionBy("timestamp").orderBy(order: _*)
-        def wsum(c: Column, w: WindowSpec): Column =
-          sum(c.cast(DEC)).over(w).cast("string").cast("double")
-
-        // Stage 1: cumulative series + anchors + Dietz decomposition.
-        val f1 = base
-          .withColumn("equity", wsum(col("value_delta"), wAll))
-          .withColumn("deposit_cumsum", wsum(col("deposit_amount"), wAll))
-          .withColumn("cumulative_pnl", col("equity") - col("deposit_cumsum"))
-          .withColumn("cum_lag_24h", first(col("cumulative_pnl")).over(w24))
-          .withColumn("cum_lag_7d", first(col("cumulative_pnl")).over(w7d))
-          .withColumn("cum_lag_30d", first(col("cumulative_pnl")).over(w30))
-          .withColumn("cum_lag_alltime", first(col("cumulative_pnl")).over(wAll))
-          .withColumn("equity_lag_24h", first(col("equity")).over(w24))
-          .withColumn("equity_lag_7d", first(col("equity")).over(w7d))
-          .withColumn("equity_lag_30d", first(col("equity")).over(w30))
-          .withColumn("s0_24", wsum(col("deposit_amount"), w24x))
-          .withColumn("s1_24", wsum(col("deposit_amount") * col("t"), w24x))
-          .withColumn("s0_7", wsum(col("deposit_amount"), w7dx))
-          .withColumn("s1_7", wsum(col("deposit_amount") * col("t"), w7dx))
-          .withColumn("s0_30", wsum(col("deposit_amount"), w30x))
-          .withColumn("s1_30", wsum(col("deposit_amount") * col("t"), w30x))
-          .withColumn("dw_24h", (lit(N0) * col("s0_24") - col("s1_24")) / 86400.0)
-          .withColumn("dw_7d", (lit(N0) * col("s0_7") - col("s1_7")) / 604800.0)
-          .withColumn("dw_30d", (lit(N0) * col("s0_30") - col("s1_30")) / 2592000.0)
-          .withColumn("pnl_24h", col("cumulative_pnl") - col("cum_lag_24h"))
-          .withColumn("pnl_7d", col("cumulative_pnl") - col("cum_lag_7d"))
-          .withColumn("pnl_30d", col("cumulative_pnl") - col("cum_lag_30d"))
-          .withColumn("pnl_alltime", col("cumulative_pnl") - col("cum_lag_alltime"))
-          .withColumn("roi_24h", when(col("pnl_24h") === 0.0, lit(0.0)).otherwise(
-            col("pnl_24h") / (lit(100.0) + col("equity_lag_24h") + col("dw_24h"))))
-          .withColumn("roi_7d", when(col("pnl_7d") === 0.0, lit(0.0)).otherwise(
-            col("pnl_7d") / (lit(100.0) + col("equity_lag_7d") + col("dw_7d"))))
-          .withColumn("roi_30d", when(col("pnl_30d") === 0.0, lit(0.0)).otherwise(
-            col("pnl_30d") / (lit(100.0) + col("equity_lag_30d") + col("dw_30d"))))
-
-        // Stage 2: 7 tie-broken leaderboard ranks (one timestamp
-        // exchange) + rank-change vs the trailing user windows.
-        val f2 = f1
-          .withColumn("pnl_24h_rank", rank().over(
-            rankW(col("pnl_24h").desc, col("roi_24h").desc, col("user_id"))))
-          .withColumn("pnl_7d_rank", rank().over(
-            rankW(col("pnl_7d").desc, col("roi_7d").desc, col("user_id"))))
-          .withColumn("pnl_30d_rank", rank().over(
-            rankW(col("pnl_30d").desc, col("roi_30d").desc, col("user_id"))))
-          .withColumn("pnl_alltime_rank", rank().over(
-            rankW(col("pnl_alltime").desc, col("user_id"))))
-          .withColumn("roi_24h_rank", rank().over(
-            rankW(col("roi_24h").desc, col("pnl_24h").desc, col("user_id"))))
-          .withColumn("roi_7d_rank", rank().over(
-            rankW(col("roi_7d").desc, col("pnl_7d").desc, col("user_id"))))
-          .withColumn("roi_30d_rank", rank().over(
-            rankW(col("roi_30d").desc, col("pnl_30d").desc, col("user_id"))))
-          .withColumn("pnl_24h_rank_change",
-            -(col("pnl_24h_rank") - first(col("pnl_24h_rank")).over(w24)))
-          .withColumn("pnl_7d_rank_change",
-            -(col("pnl_7d_rank") - first(col("pnl_7d_rank")).over(w7d)))
-          .withColumn("pnl_30d_rank_change",
-            -(col("pnl_30d_rank") - first(col("pnl_30d_rank")).over(w30)))
-          .withColumn("pnl_alltime_rank_change",
-            -(col("pnl_alltime_rank") - first(col("pnl_alltime_rank")).over(wAll)))
-          .withColumn("roi_24h_rank_change",
-            -(col("roi_24h_rank") - first(col("roi_24h_rank")).over(w24)))
-          .withColumn("roi_7d_rank_change",
-            -(col("roi_7d_rank") - first(col("roi_7d_rank")).over(w7d)))
-          .withColumn("roi_30d_rank_change",
-            -(col("roi_30d_rank") - first(col("roi_30d_rank")).over(w30)))
 
         // Stage 3: prior-hour trades (offset equi join, J5), nft
         // multiplier and campaign score joins. All three frames derive
@@ -188,25 +129,25 @@ object AggPnlQueries {
         // the shared user partitioning) then the 4 z-score ranks +
         // changes.
         val f4 = f3
-          .withColumn("maker_volume_24h", wsum(col("maker_volume"), w24))
-          .withColumn("maker_volume_7d", wsum(col("maker_volume"), w7d))
-          .withColumn("maker_volume_30d", wsum(col("maker_volume"), w30))
-          .withColumn("maker_volume_alltime", wsum(col("maker_volume"), wAll))
-          .withColumn("taker_volume_24h", wsum(col("taker_volume"), w24))
-          .withColumn("taker_volume_7d", wsum(col("taker_volume"), w7d))
-          .withColumn("taker_volume_30d", wsum(col("taker_volume"), w30))
-          .withColumn("taker_volume_alltime", wsum(col("taker_volume"), wAll))
+          .withColumn("maker_volume_24h", decSum(col("maker_volume"), w24))
+          .withColumn("maker_volume_7d", decSum(col("maker_volume"), w7d))
+          .withColumn("maker_volume_30d", decSum(col("maker_volume"), w30))
+          .withColumn("maker_volume_alltime", decSum(col("maker_volume"), wAll))
+          .withColumn("taker_volume_24h", decSum(col("taker_volume"), w24))
+          .withColumn("taker_volume_7d", decSum(col("taker_volume"), w7d))
+          .withColumn("taker_volume_30d", decSum(col("taker_volume"), w30))
+          .withColumn("taker_volume_alltime", decSum(col("taker_volume"), wAll))
           .withColumn("z_multiplier_24h", col("z_multiplier"))
           .withColumn("z_multiplier_7d",
-            wsum(col("z_multiplier"), w7d) / count(lit(1)).over(w7d))
+            decSum(col("z_multiplier"), w7d) / count(lit(1)).over(w7d))
           .withColumn("z_multiplier_30d",
-            wsum(col("z_multiplier"), w30) / count(lit(1)).over(w30))
+            decSum(col("z_multiplier"), w30) / count(lit(1)).over(w30))
           .withColumn("z_multiplier_alltime",
-            wsum(col("z_multiplier"), wAll) / count(lit(1)).over(wAll))
-          .withColumn("z_score_24h", wsum(col("z_score"), w24))
-          .withColumn("z_score_7d", wsum(col("z_score"), w7d))
-          .withColumn("z_score_30d", wsum(col("z_score"), w30))
-          .withColumn("z_score_alltime", wsum(col("z_score"), wAll))
+            decSum(col("z_multiplier"), wAll) / count(lit(1)).over(wAll))
+          .withColumn("z_score_24h", decSum(col("z_score"), w24))
+          .withColumn("z_score_7d", decSum(col("z_score"), w7d))
+          .withColumn("z_score_30d", decSum(col("z_score"), w30))
+          .withColumn("z_score_alltime", decSum(col("z_score"), wAll))
 
         val f5 = f4
           .withColumn("z_score_24h_rank", rank().over(
@@ -233,7 +174,6 @@ object AggPnlQueries {
               .when(col("taker_volume_30d") >= 600.0, 2)
               .when(col("taker_volume_30d") >= 300.0, 3)
               .otherwise(4))
-          .withColumn("date_", date_trunc("day", col("timestamp")))
 
         f5.select(
           col("timestamp"), col("user_id"),

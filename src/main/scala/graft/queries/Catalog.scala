@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 
 /** One verifiable query: a Spark-native implementation plus (where the
@@ -46,6 +47,11 @@ object QH {
     * would otherwise make hash-comparison against the oracle flaky. */
   def decSum(c: Column): Column =
     sum(c.cast(DEC)).cast("string").cast("double")
+
+  /** [[decSum]] over a window frame. Oracle mirror:
+    * `CAST(CAST(SUM(CAST(x AS DECIMAL(28,6))) OVER w AS VARCHAR) AS DOUBLE)`. */
+  def decSum(c: Column, w: WindowSpec): Column =
+    sum(c.cast(DEC)).over(w).cast("string").cast("double")
 
   /** Exact average built from decSum / count. */
   def decAvg(c: Column): Column = decSum(c) / count(lit(1))

@@ -205,7 +205,7 @@ object ExtendedQueries {
           .rangeBetween(-86400L + 3600L, 0L)
         t(s, d, "events")
           .select(col("event_id"),
-            sum(col("value").cast(DEC)).over(w).cast("string").cast("double").as("dietz_sum"))
+            decSum(col("value"), w).as("dietz_sum"))
           .orderBy("event_id")
       },
       Some("""
@@ -282,9 +282,9 @@ object ExtendedQueries {
           .rangeBetween(-86400L, 0L)
         t(s, d, "events")
           .withColumn("k", expr("cast(get_json_object(props, '$.k') AS int)"))
-          .withColumn("den", sum(col("k").cast(DEC)).over(w).cast("string").cast("double"))
+          .withColumn("den", decSum(col("k"), w))
           .withColumn("num",
-            sum((col("value") * col("k")).cast(DEC)).over(w).cast("string").cast("double"))
+            decSum(col("value") * col("k"), w))
           .select(col("event_id"),
             when(col("den") > 0, col("num") / col("den")).as("wavg_24h"))
           .orderBy("event_id")
@@ -387,7 +387,7 @@ object ExtendedQueries {
           .rangeBetween(-86400L, 0L)
         val equityed = t(s, d, "events")
           .withColumn("equity",
-            sum(col("value").cast(DEC)).over(wCum).cast("string").cast("double"))
+            decSum(col("value"), wCum))
         val withAnchor = equityed
           .withColumn("equity_24h_ago", first(col("equity")).over(w24))
           .withColumn("pnl_24h", col("equity") - col("equity_24h_ago"))
@@ -447,13 +447,13 @@ object ExtendedQueries {
           .withColumn("t",
             unix_timestamp(col("ts")) - lit(1704067200L))
           .withColumn("equity",
-            sum(col("value").cast(DEC)).over(wCum).cast("string").cast("double"))
+            decSum(col("value"), wCum))
           .withColumn("equity_24h_ago", first(col("equity")).over(w24))
           .withColumn("pnl_24h", col("equity") - col("equity_24h_ago"))
           .withColumn("s1",
-            sum((col("value") * col("t")).cast(DEC)).over(w24).cast("string").cast("double"))
+            decSum(col("value") * col("t"), w24))
           .withColumn("s0",
-            sum(col("value").cast(DEC)).over(w24).cast("string").cast("double"))
+            decSum(col("value"), w24))
           .withColumn("weighted_flows",
             (col("s1") + (lit(86400.0) - col("t")) * col("s0")) / 86400.0)
           .withColumn("dietz_denom",

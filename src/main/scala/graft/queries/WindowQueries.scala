@@ -65,7 +65,7 @@ object WindowQueries {
           .rangeBetween(-86400L, 0L)
         t(s, d, "events")
           .select(col("event_id"),
-            sum(col("value").cast(DEC)).over(w).cast("string").cast("double").as("rolling_24h"))
+            decSum(col("value"), w).as("rolling_24h"))
           .orderBy("event_id")
       },
       Some("""
@@ -83,7 +83,7 @@ object WindowQueries {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         t(s, d, "events")
           .select(col("event_id"),
-            sum(col("value").cast(DEC)).over(w).cast("string").cast("double").as("cum_value"))
+            decSum(col("value"), w).as("cum_value"))
           .orderBy("event_id")
       },
       Some("""
@@ -104,7 +104,7 @@ object WindowQueries {
         val w = Window.partitionBy("event_type")
         t(s, d, "events")
           .select(col("event_id"),
-            (col("value") / sum(col("value").cast(DEC)).over(w).cast("string").cast("double"))
+            (col("value") / decSum(col("value"), w))
               .as("share"))
           .orderBy("event_id")
       },

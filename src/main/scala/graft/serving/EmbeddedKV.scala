@@ -25,8 +25,8 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   *    write units).
   *  - `get(hash, range)` is the point lookup; `query(hash)` returns the
   *    item collection sorted by range key — number keys sort
-  *    NUMERICALLY, string keys lexicographically, binary keys bytewise,
-  *    exactly DynamoDB's sort-key ordering rules.
+  *    NUMERICALLY, string keys lexicographically, exactly DynamoDB's
+  *    sort-key ordering rules.
   *
   * Scale honesty: this store is a single-JVM stand-in, reached from the
   * driver. Its one writer is [[EmbeddedKVSink]], which collects the
@@ -59,8 +59,6 @@ object EmbeddedKVStore {
     override def compareTo(o: KeyVal): Int = (this, o) match {
       case (SKey(a), SKey(b)) => a.compareTo(b)
       case (NKey(a), NKey(b)) => a.compareTo(b)
-      case (BKey(a), BKey(b)) =>
-        java.util.Arrays.compareUnsigned(a, b)
       case _ => Integer.compare(rank, o.rank)
     }
   }
@@ -73,31 +71,18 @@ object EmbeddedKVStore {
     }
     override def hashCode(): Int = n.stripTrailingZeros().hashCode()
   }
-  final case class BKey(b: Array[Byte]) extends KeyVal {
-    val rank = 2
-    override def equals(o: Any): Boolean = o match {
-      case BKey(c) => java.util.Arrays.equals(b, c)
-      case _ => false
-    }
-    override def hashCode(): Int = java.util.Arrays.hashCode(b)
-  }
 
   /** JVM value → key value; null and non-scalar keys are rejected, as
     * DynamoDB rejects them. */
   def toKeyVal(v: Any): KeyVal = v match {
     case null => throw new IllegalArgumentException("null key attribute")
     case s: String => SKey(s)
-    case b: Array[Byte] => BKey(b)
-    case n: java.math.BigDecimal => NKey(n)
-    case n: scala.math.BigDecimal => NKey(n.bigDecimal)
-    case n: Byte => NKey(java.math.BigDecimal.valueOf(n.toLong))
-    case n: Short => NKey(java.math.BigDecimal.valueOf(n.toLong))
     case n: Int => NKey(java.math.BigDecimal.valueOf(n.toLong))
     case n: Long => NKey(java.math.BigDecimal.valueOf(n))
     case n: Float => NKey(new java.math.BigDecimal(n.toString))
     case n: Double => NKey(java.math.BigDecimal.valueOf(n))
     case other => throw new IllegalArgumentException(
-      s"key attribute must be string/number/binary, got ${other.getClass}")
+      s"key attribute must be string/number, got ${other.getClass}")
   }
 
   final case class ItemKey(hash: KeyVal, range: Option[KeyVal])

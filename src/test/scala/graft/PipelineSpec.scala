@@ -110,28 +110,4 @@ class PipelineSpec extends AnyFunSuite {
       assert(spark.sql("SELECT sum(id) FROM jsongz_t").head().getLong(0) === 6L)
     } finally q.stop()
   }
-
-  test("JsonSource quarantines malformed records with the raw line intact") {
-    val dir = ScratchDirs.create("jsonbad")
-    // BROKEN and "not json" set the corrupt-record slot; the blank line
-    // and the literal `null` parse to a NULL struct with NO _cr flag —
-    // they must quarantine too, not land as all-null clean rows
-    Files.writeString(java.nio.file.Path.of(s"$dir/mixed.json"),
-      """{"id":1,"v":1.5}
-        |{"id":2,"v":BROKEN
-        |{"id":3,"v":3.5}
-        |
-        |null
-        |not json at all""".stripMargin)
-    val (clean, corrupt) = JsonSource.batchWithQuarantine(
-      spark, dir, "id bigint, v double")
-    assert(clean.orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 3L))
-    assert(!clean.columns.contains("_corrupt_record"))
-    val bad = corrupt.collect().map(_.getString(0)).sorted
-    assert(bad.length === 4)
-    assert(bad.exists(_.contains("BROKEN")), "raw line preserved for replay")
-    assert(bad.exists(_.contains("not json at all")))
-    assert(bad.contains("") && bad.contains("null"),
-      "null-struct lines quarantine instead of passing as all-null rows")
-  }
 }

@@ -216,6 +216,13 @@ class TransactionsPipelineSpec extends AnyFunSuite {
     assert(a.getAs[Int]("pnl_24h_rank_change") === -1)
     // zero pnl pins roi to 0 (the reference's safe-div convention)
     assert(b.getAs[Double]("roi_24h") === 0.0)
+    // authA's 1.5 deposit lands on this hour, inside the exclusive 24h
+    // Dietz frame. It is 602 h (25 d 2 h) before the 2024-01-30 12:00
+    // as-of hour, so dw_24h = 1.5 · 602/24 = 37.625, and
+    // roi_24h = pnl_24h / (100 + equity_lag_24h + dw_24h)
+    //         = −1.5 / (100 + 105 + 37.625)
+    assert(a.getAs[Double]("equity_lag_24h") === 105.0)
+    assert(a.getAs[Double]("roi_24h") === -1.5 / 242.625)
   }
 
   // The pnl tables' schemas as the hourly DAG writes and serves them:
